@@ -235,10 +235,29 @@ def highlight_terms_for_row(row) -> list[str]:
         raw = ts[0] if len(ts) == 1 else None
     if raw is None:
         return []
+    return sorted(positive_leaf_terms(as_tree(raw)))
+
+
+def as_tree(raw) -> dict:
+    """A query tree from a tree dict, its JSON string, or the string
+    grammar."""
     if isinstance(raw, str):
-        t = raw.strip()
-        raw = json.loads(t) if t.startswith("{") else parse(t)
-    return sorted(positive_leaf_terms(raw))
+        s = raw.strip()
+        return json.loads(s) if s.startswith("{") else parse(s)
+    return raw
+
+
+def with_negations(tree: dict, negs) -> dict:
+    """`tree` minus the docs containing any of `negs` (Lucene must_not) —
+    a `not` wrapper over an OR of term leaves; `tree` itself when negs is
+    empty."""
+    nl = [{"kind": "term", "term": t, "boost": 1.0} for t in dict.fromkeys(negs)]
+    if not nl:
+        return tree
+    negative = nl[0] if len(nl) == 1 else {"kind": "or", "clauses": nl}
+    return {"kind": "not", "positive": tree, "negative": negative}
+
+
 def _children(node: dict):
     k = node["kind"]
     if k in ("and", "or"):
@@ -272,7 +291,7 @@ def has_positional(node: dict) -> bool:
 
 def expand_leaves(node: dict, expand_prefix, expand_fuzzy) -> dict:
     """Rewrite prefix/fuzzy leaves into OR-of-term-leaves using the caller's
-    dictionary expanders (exec.expand_prefix_terms / LocalIndex.expand_*;
+    dictionary expanders (plan.Dictionary.expand_prefixes / expand_fuzzy;
     the TooManyClauses cap lives in those). An expansion with no dictionary
     match becomes a term leaf that matches nothing (tid -1 downstream)."""
     k = node["kind"]
@@ -333,13 +352,7 @@ def normalize_query(
     on a fielded index, qualify bare leaves across all fields BEFORE
     dictionary expansion (prefix/fuzzy then expand against the
     field-qualified keys); expand prefix/fuzzy leaves."""
-    t = tree_or_string
-    if isinstance(t, str):
-        ts = t.strip()
-        if ts.startswith("{"):
-            t = json.loads(ts)
-        else:
-            t = parse(ts)
+    t = as_tree(tree_or_string)
     if analyzer and (analyzer.get("stopwords") or analyzer.get("stem")):
         analyzed = analyze_tree_leaves(
             t, tuple(analyzer.get("stopwords") or ()), analyzer.get("stem"),
@@ -554,18 +567,9 @@ def flat_row_to_tree(row) -> dict:
                 if mm > 1:
                     base["min_match"] = mm
     negs = _get("neg_terms")
-    if isinstance(negs, (list, tuple)) or (
-        negs is not None and hasattr(negs, "__len__") and not isinstance(negs, str)
-    ):
-        negs = [t for t in negs]
-        if negs:
-            nl = [{"kind": "term", "term": t, "boost": 1.0} for t in dict.fromkeys(negs)]
-            base = {
-                "kind": "not",
-                "positive": base,
-                "negative": nl[0] if len(nl) == 1 else {"kind": "or", "clauses": nl},
-            }
-    return base
+    if negs is None or isinstance(negs, str) or not hasattr(negs, "__len__"):
+        return base
+    return with_negations(base, negs)
 
 
 def auto_fielded_rows(queries):
@@ -678,7 +682,10 @@ def rewrite_fielded_rows(queries, field_stats: dict, synonyms: dict | None = Non
     a fielded_tree in `tree`. Returns a frame without the `fields` column.
     `synonyms` expand inside the tree for AND rows (apply_synonyms_rows
     skips fielded AND rows so this rewrite can qualify the forms; fielded
-    OR rows arrive with their term lists already expanded)."""
+    OR rows arrive with their term lists already expanded). A row's bare
+    `neg_terms` stay in their column: plan.normalize folds every BOOL
+    row's into its tree (with_negations), where they qualify across fields
+    like any bare leaf."""
     import pandas as pd
 
     if "fields" not in queries.columns:

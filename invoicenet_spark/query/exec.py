@@ -2,41 +2,46 @@
 
 Plan shape for a batch of queries:
 
-  queries(query_id, terms, mode, k)
-    explode → (query_id, term)                      [tiny]
-    ⋈ broadcast terms-dictionary → idf per term     [broadcast hash join]
-    ⋈ postings on term                              [pushed-down term filter]
-    ⋈ broadcast shard doc_len arrays                [per-shard forward index]
-    groupBy(query_id, shard) applyInPandas kernel   [WAND / gallop / exhaustive]
+  queries(query_id, terms, mode, k, …)              [collected, tiny]
+    plan.normalize + query_specs (driver)           [the one query planner]
+    → (query_id, term_id) pairs                     [tiny]
+    postings ⋈ broadcast pairs on term_id           [pushed-down IN filter]
+    groupBy(query_id, shard) applyInPandas          [kernels.run_shard]
     window top-k by (score desc, doc_id asc)        [global merge, tiny]
-    ⋈ docs → url                                    [result materialization]
+    docs ⋈ broadcast top-k → url                    [result materialization]
+
+Query normalization (analyzer chain, synonyms, fielded rewrite, dictionary
+expansion, BOOL trees) is query/plan.py and per-shard kernel routing is
+kernels.run_shard — both shared with the serving path (query/local.py), so
+the two paths give the same answers by construction.
 
 Every (query_id, shard) task is independent — the shard axis is the same
 docID-range partitioning the build used, so cross-shard skew cannot occur
 and the global merge touches only per-shard top-k rows (≤ k · n_shards).
 
-The term filter (`postings.term IN (...)`) reaches the parquet scan as a
-pushed filter; postings files are laid out sorted by term within each shard
-so row-group min/max statistics skip non-matching row groups — the Iceberg
-metadata-pruning analog under the plain-parquet fallback.
+The term filter reaches the parquet scan as a pushed filter; postings files
+are laid out sorted by term_id within each shard so row-group min/max
+statistics skip non-matching row groups — the Iceberg metadata-pruning
+analog under the plain-parquet fallback.
 """
 
 from __future__ import annotations
 
 import json
+import operator
 from dataclasses import dataclass
+from functools import reduce
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from invoicenet_spark.index import bm25
 from invoicenet_spark.index.build import IndexPaths, read_postings
-from invoicenet_spark.query import booltree, kernels, qparse
+from invoicenet_spark.query import plan
 
 
 @dataclass
-class Index:
+class Index(plan.Dictionary):
     paths: IndexPaths
     postings: DataFrame
     terms: DataFrame
@@ -98,24 +103,37 @@ class Index:
                 )
         return self._deleted_bc
 
-    def fuzzy_vocab(self) -> "np.ndarray":
-        """Hot dictionary as ONE fixed-width numpy unicode array, converted
-        once per Index handle — the conversion is O(vocab x maxlen) and must
-        not be paid per FUZZY query row."""
-        if self._fuzzy_vocab is None:
-            self._fuzzy_vocab = np.asarray(self.local_dict().index, dtype=str)
-        return self._fuzzy_vocab
-
-    def local_dict(self, max_terms: int = 5_000_000) -> "pd.DataFrame | None":
+    def hot_dict(self) -> "pd.DataFrame | None":
         """Driver-side term → (term_id, df) cache for low-latency lookups —
         what a serving node holds hot. Skipped when the vocabulary exceeds
-        max_terms (then the lookup stays a pushed-filter dictionary scan)."""
+        plan.MAX_HOT_TERMS (then lookups stay pushed-filter dictionary
+        scans)."""
         if self._local_dict is None:
-            n_terms = self.terms.count()
-            if n_terms > max_terms:
+            if self.terms.count() > plan.MAX_HOT_TERMS:
                 return None
             self._local_dict = self.terms.toPandas().set_index("term")
         return self._local_dict
+
+    def _scan_terms(self, kind, patterns, max_edits, limit) -> set[str]:
+        """Big-vocab expansion: the match pushed into a JVM dictionary scan
+        (Java regex dialect for 'regex', F.levenshtein for 'fuzzy')."""
+        cond = {
+            "prefix": lambda p: F.col("term").startswith(p),
+            "regex": lambda p: F.col("term").rlike(f"^(?:{p})$"),
+            "fuzzy": lambda t: F.levenshtein("term", F.lit(t)) <= int(max_edits),
+        }[kind]
+        rows = (
+            self.terms.where(reduce(operator.or_, map(cond, patterns)))
+            .select("term").limit(limit).collect()
+        )
+        return {r["term"] for r in rows}
+
+    def _scan_info(self, needed) -> dict[str, tuple[int, int]]:
+        rows = (
+            self.terms.where(F.col("term").isin(needed))
+            .select("term", "term_id", "df").collect()
+        )
+        return {r["term"]: (int(r["term_id"]), int(r["df"])) for r in rows}
 
 
 def load_index(spark: SparkSession, root: str) -> Index:
@@ -138,122 +156,12 @@ def load_index(spark: SparkSession, root: str) -> Index:
 
 RESULT_SCHEMA = "query_id long, doc_id long, score double"
 
-MAX_PREFIX_EXPANSIONS = qparse.MAX_PREFIX_EXPANSIONS
 
-
-def expand_prefix_terms(
-    index: Index, prefixes: list[str], max_expansions: int = MAX_PREFIX_EXPANSIONS
-) -> list[str]:
-    """PREFIX query rewrite: dictionary terms matching any prefix, in
-    deterministic lexicographic order. Raises past max_expansions (the
-    BooleanQuery.TooManyClauses analog) — at web-scale vocabularies an
-    unbounded prefix is a dictionary scan plus an arbitrarily hot OR, so
-    the cap is part of the query contract, not a tuning knob."""
-    if not prefixes:
-        return []
-    out: set[str] = set()
-    local = index.local_dict()
-    if local is not None:
-        idx = local.index
-        for p in prefixes:
-            out |= set(idx[idx.str.startswith(p)])
-    else:
-        from functools import reduce
-
-        cond = reduce(
-            lambda a, b: a | b, [F.col("term").startswith(p) for p in prefixes]
-        )
-        rows = (
-            index.terms.where(cond)
-            .select("term")
-            .limit(max_expansions + 1)
-            .collect()
-        )
-        out = {r["term"] for r in rows}
-    return qparse.cap_prefix_expansion(out, prefixes, max_expansions)
-
-
-def expand_regex_terms(
-    index: Index,
-    patterns: list[str],
-    max_expansions: int = MAX_PREFIX_EXPANSIONS,
-) -> list[str]:
-    """REGEX/WILDCARD query rewrite (Lucene RegexpQuery/WildcardQuery
-    analog): dictionary terms FULLY matching any anchored pattern, capped
-    like PREFIX (a leading-wildcard pattern is a full dictionary scan — the
-    scan is dictionary-sized and driver/JVM-side, but the resulting OR is
-    still clause-capped). WILDCARD rows translate `*`/`?` to regex first
-    (qparse.wildcard_to_regex)."""
-    import re
-
-    if not patterns:
-        return []
-    out: set[str] = set()
-    local = index.local_dict()
-    if local is not None:
-        # compile first (same re.error surface), then match VECTORIZED —
-        # pandas str.fullmatch is the identical `re` engine without a
-        # per-term Python loop over the whole vocabulary (round 6).
-        # NOTE (documented v1 trade): the >max_terms fallback below matches
-        # with JVM rlike — Java regex dialect; patterns must stick to the
-        # common subset (no \p{...}, lookbehind, or inline flags) to expand
-        # identically on both branches.
-        [re.compile(p) for p in patterns]
-        idx = local.index
-        for p in patterns:
-            out |= set(idx[idx.str.fullmatch(p)])
-    else:
-        from functools import reduce
-
-        cond = reduce(
-            lambda a, b: a | b,
-            [F.col("term").rlike(f"^(?:{p})$") for p in patterns],
-        )
-        rows = (
-            index.terms.where(cond).select("term").limit(max_expansions + 1).collect()
-        )
-        out = {r["term"] for r in rows}
-    return qparse.cap_prefix_expansion(out, patterns, max_expansions, kind="regex")
-
-
-def expand_fuzzy_terms(
-    index: Index,
-    terms: list[str],
-    max_edits: int = 1,
-    max_expansions: int = MAX_PREFIX_EXPANSIONS,
-) -> list[str]:
-    """FUZZY query rewrite: dictionary terms within max_edits Levenshtein
-    edits of ANY query term (FuzzyQuery analog), capped like PREFIX. Hot
-    dictionary → vectorized numpy DP (query/fuzzy.py); big-vocab fallback →
-    F.levenshtein pushed into a JVM dictionary scan."""
-    from invoicenet_spark.query.fuzzy import levenshtein_within
-
-    if not terms:
-        return []
-    out: set[str] = set()
-    local = index.local_dict()
-    if local is not None:
-        vocab = index.fuzzy_vocab()
-        for t in terms:
-            out |= set(levenshtein_within(vocab, t, max_edits))
-    else:
-        from functools import reduce
-
-        cond = reduce(
-            lambda a, b: a | b,
-            [
-                F.levenshtein(F.col("term"), F.lit(t)) <= F.lit(int(max_edits))
-                for t in terms
-            ],
-        )
-        rows = (
-            index.terms.where(cond)
-            .select("term")
-            .limit(max_expansions + 1)
-            .collect()
-        )
-        out = {r["term"] for r in rows}
-    return qparse.cap_prefix_expansion(out, terms, max_expansions, kind="fuzzy")
+# PREFIX / REGEX+WILDCARD / FUZZY dictionary rewrites (plan.Dictionary),
+# callable as functions of the Index: expand_prefix_terms(index, prefixes)
+expand_prefix_terms = plan.Dictionary.expand_prefixes
+expand_regex_terms = plan.Dictionary.expand_regex
+expand_fuzzy_terms = plan.Dictionary.expand_fuzzy
 
 
 def facet_counts(results: DataFrame, meta: DataFrame, field: str) -> DataFrame:
@@ -402,117 +310,6 @@ def _merge_mask_frames(a: DataFrame, b: DataFrame) -> DataFrame:
     )
 
 
-def _sanitize_optional_columns(qpd: pd.DataFrame) -> pd.DataFrame:
-    """Multi-query pandas batches where only SOME rows carry an optional
-    field arrive with NaN holes (pandas fills missing dict keys) — normalize
-    them so downstream len()/iteration/createDataFrame inference never sees
-    a float where a list or int belongs. after_score/after_doc keep NaN
-    (= no cursor)."""
-    touched = set(qpd.columns) & {"neg_terms", "min_match", "slop", "ordered"}
-    if not touched:
-        return qpd
-    qpd = qpd.copy()
-    if "neg_terms" in touched:
-        qpd["neg_terms"] = [
-            list(x) if isinstance(x, (list, tuple, np.ndarray)) else []
-            for x in qpd["neg_terms"]
-        ]
-    for c in ("min_match", "slop"):
-        if c in touched:
-            qpd[c] = (
-                pd.to_numeric(qpd[c], errors="coerce").fillna(0).astype("int64")
-            )
-    if "ordered" in touched:
-        qpd["ordered"] = [
-            bool(x) if x is not None and not pd.isna(x) else True
-            for x in qpd["ordered"]
-        ]
-    return qpd
-
-
-def parse_term_boosts(qpd: pd.DataFrame) -> pd.DataFrame:
-    """Lucene `term^2.5` boost syntax: strip the suffix from `terms` and
-    attach a per-query {term: boost} map (column `boost_map`), grammar in
-    qparse.parse_boost_terms (shared with the serving path): additive
-    clauses, so `spark^2 spark` ≡ 3.0 and `spark^2 spark^3` ≡ 5.0; terms
-    never boosted keep plain OR-dedupe semantics. No-op when no term
-    carries a boost."""
-    if not any("^" in t for ts in qpd["terms"] for t in ts):
-        return qpd
-    qpd = qpd.copy()
-    new_terms, keys, vals = [], [], []
-    for ts in qpd["terms"]:
-        base_terms, bmap = qparse.parse_boost_terms(ts)
-        new_terms.append(base_terms)
-        # parallel arrays, not a dict: createDataFrame infers python dicts
-        # as STRUCT; search() rebuilds the MapType via map_from_arrays
-        keys.append(list(bmap))
-        vals.append([bmap[k] for k in bmap])
-    qpd["terms"] = new_terms
-    qpd["boost_keys"] = keys
-    qpd["boost_vals"] = vals
-    return qpd
-
-
-def _normalize_bool_rows(index: Index, qpd: pd.DataFrame) -> tuple[pd.DataFrame, bool]:
-    """Driver-side rewrite of mode='BOOL' rows: parse the query (string
-    grammar, tree dict, or JSON string — `tree` column wins over a single-
-    string `terms` entry), expand prefix/fuzzy leaves against the
-    dictionary, resolve leaf term_ids, and serialize the resolved tree into
-    a JSON `tree` column the shard kernel evaluates. `terms` becomes the
-    sorted leaf-term list so the tree's postings ride the standard
-    explode → dictionary → pruned-probe plan unchanged.
-
-    Returns (rewritten frame, any-tree-has-positional-leaves)."""
-    mask = qpd["mode"] == "BOOL"
-    if not mask.any():
-        return qpd, False
-    qpd = qpd.copy()
-    if "tree" not in qpd.columns:
-        qpd["tree"] = None
-    expanded: dict[int, dict] = {}
-    for i in qpd.index[mask]:
-        raw = qpd.at[i, "tree"]
-        if raw is None or (isinstance(raw, float) and pd.isna(raw)):
-            ts = qpd.at[i, "terms"]
-            if len(ts) != 1:
-                raise ValueError(
-                    "mode='BOOL' needs a `tree` (dict/JSON) or a single "
-                    "query string in `terms`"
-                )
-            raw = ts[0]
-        expanded[i] = booltree.attach_field_stats(
-            booltree.normalize_query(
-                raw,
-                lambda ps: expand_prefix_terms(index, ps),
-                lambda ts_, e: expand_fuzzy_terms(index, ts_, e),
-                field_stats=index.stats.get("fields") or {},
-                analyzer=index.stats,
-            ),
-            index.stats.get("fields") or {},
-        )
-    needed = set().union(*(booltree.leaf_terms(t) for t in expanded.values()))
-    local = index.local_dict()
-    if local is not None:
-        present = needed & set(local.index)
-        mapping = {
-            t: int(local.at[t, "term_id"]) for t in present
-        }
-    else:
-        rows = (
-            index.terms.where(F.col("term").isin(sorted(needed)))
-            .select("term", "term_id")
-            .collect()
-        )
-        mapping = {r["term"]: int(r["term_id"]) for r in rows}
-    positional = False
-    for i, tree in expanded.items():
-        positional |= booltree.has_positional(tree)
-        qpd.at[i, "tree"] = json.dumps(booltree.resolve_tids(tree, mapping))
-        qpd.at[i, "terms"] = sorted(booltree.leaf_terms(tree))
-    return qpd, positional
-
-
 def _empty_results(spark: SparkSession, with_url: bool) -> DataFrame:
     schema = "query_id long, rank int, doc_id long, score double"
     if with_url:
@@ -520,186 +317,39 @@ def _empty_results(spark: SparkSession, with_url: bool) -> DataFrame:
     return spark.createDataFrame([], schema=schema)
 
 
-def _count_matches_shard(
-    mode: str, pdf: pd.DataFrame, plists, deleted, tree_json: str | None
-) -> int:
-    """One (query, shard) group's match count — parameter extraction around
-    the shared kernels.count_matches_shard (serving path uses it too)."""
+def _shard_group(specs: list, stats: dict, kernel: str, deleted_bc=None, count: bool = False):
+    """applyInPandas body for one (query_id, shard) group: the group's
+    posting rows go through the query's QuerySpec to kernels.run_shard.
+    The specs ride the closure (query batches are tiny by contract), so
+    the shuffled rows carry only (query_id, term_id) beside the postings.
+    deleted_bc: a broadcast {shard: sorted tombstoned doc_ids} or None —
+    each group masks with ITS shard's slice only. count: emit ONE row per
+    group whose doc_id column carries the shard's match COUNT (summed by
+    the caller — the track_total_hits analog). `run` is deliberately
+    unannotated: PySpark then takes the grouped-map eval type as given,
+    while a partial annotation made it warn on every call."""
+    by_qid = {s.query_id: s for s in specs}
 
-    def _opt(col, default, cast):
-        if col in pdf.columns and pd.notna(pdf[col].iloc[0]):
-            return cast(pdf[col].iloc[0])
-        return default
-
-    return kernels.count_matches_shard(
-        mode,
-        plists,
-        deleted=deleted,
-        tree=json.loads(tree_json) if tree_json is not None else None,
-        slop=_opt("slop", 0, int),
-        ordered=_opt("ordered", True, bool),
-        min_match=_opt("min_match", 0, int),
-    )
-
-
-def _shard_kernel(stats: dict, kernel: str, deleted_bc=None, count_mode: bool = False):
-    """applyInPandas body for one (query_id, shard) group. deleted_bc: a
-    broadcast {shard: sorted tombstoned doc_ids} or None — each group masks
-    with ITS shard's slice only. count_mode: emit ONE row per group whose
-    doc_id column carries the shard's match COUNT (summed by the caller —
-    the track_total_hits analog)."""
-    k1, b = stats["k1"], stats["b"]
-    avgdl, N = stats["avgdl"], stats["N"]
-
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        query_id = int(key[0])
+    def run(key, pdf):
+        qid, shard = int(key[0]), int(key[1])
+        deleted = None
         if deleted_bc is not None:
-            deleted = deleted_bc.value.get(int(key[1]))
+            deleted = deleted_bc.value.get(shard)
         elif "_deleted" in pdf.columns:
             # big-tombstone-set regime: this shard's ids arrived as a joined
             # column (same array on every row of the group) — see
             # Index.deleted_mask_source
             val = pdf["_deleted"].iloc[0]
-            deleted = (
-                np.asarray(val, dtype=np.int64)
-                if val is not None and not (isinstance(val, float) and pd.isna(val)) and len(val)
-                else None
-            )
+            if isinstance(val, (list, np.ndarray)) and len(val):
+                deleted = np.asarray(val, dtype=np.int64)
             pdf = pdf.drop(columns=["_deleted"])  # keep row dicts lean
-        else:
-            deleted = None
-        mode = pdf["mode"].iloc[0]
-        k = int(pdf["k"].iloc[0])
-        n_query_terms = int(pdf["n_query_terms"].iloc[0])
-        min_match = 0
-        if "min_match" in pdf.columns and pd.notna(pdf["min_match"].iloc[0]):
-            min_match = int(pdf["min_match"].iloc[0])
-        after = None
-        if "after_score" in pdf.columns and pd.notna(pdf["after_score"].iloc[0]):
-            after = (
-                float(pdf["after_score"].iloc[0]),
-                int(pdf["after_doc"].iloc[0]),
-            )
-        empty = pd.DataFrame({"query_id": [], "doc_id": [], "score": []}).astype(
-            {"query_id": np.int64, "doc_id": np.int64, "score": np.float64}
+        rows = {int(r["term_id"]): r for r in pdf.to_dict("records")}
+        res = by_qid[qid].run_shard(
+            rows, stats, kernel=kernel, deleted=deleted, count=count
         )
-        if "is_neg" in pdf.columns and pdf["is_neg"].any():
-            # negated terms: this shard's docs containing any of them join
-            # the exclusion mask — the same sorted-array masking the
-            # tombstone path uses (fuzz-pinned sound under block-max
-            # pruning), so NOT costs one doc-stream decode per neg term.
-            neg_rows = pdf[pdf["is_neg"]].to_dict("records")
-            pdf = pdf[~pdf["is_neg"]]
-            excl = np.unique(
-                np.concatenate(
-                    [kernels.decode_posting_list(r)[0] for r in neg_rows]
-                )
-            ).astype(np.int64)
-            deleted = excl if deleted is None else np.union1d(deleted, excl)
-        if len(pdf) == 0 or (mode in ("AND", "PHRASE", "NEAR") and len(pdf) < n_query_terms):
-            return empty
-        if count_mode:
-            if mode != "BOOL":
-                pdf = pdf.sort_values(
-                    "qpos" if mode in ("PHRASE", "NEAR") else "term_id"
-                ).reset_index(drop=True)
-            plists = [
-                kernels.TermPostings(row, idf=row["idf"], avgdl=avgdl, k1=k1, b=b)
-                for row in pdf.to_dict("records")
-            ]
-            tree_json = pdf["tree"].iloc[0] if mode == "BOOL" else None
-            n = _count_matches_shard(mode, pdf, plists, deleted, tree_json)
-            return pd.DataFrame(
-                {"query_id": np.array([query_id], dtype=np.int64),
-                 "doc_id": np.array([n], dtype=np.int64),
-                 "score": np.array([0.0])}
-            )
-        if mode == "BOOL":
-            # boolean tree: ONE routing front door shared with the serving
-            # path (booltree.evaluate_shard_topk) over this shard's posting
-            # rows — pure-disjunction trees (incl. every bare/fielded OR
-            # rewrite) get block-max MaxScore pruning; other shapes take the
-            # exhaustive evaluator with root masking / cursor / top-k
-            import json as _json
-
-            tree = _json.loads(pdf["tree"].iloc[0])
-            by_tid = {
-                int(row["term_id"]): kernels.TermPostings(
-                    row, idf=row["idf"], avgdl=avgdl, k1=k1, b=b
-                )
-                for row in pdf.to_dict("records")
-            }
-            from invoicenet_spark.query import booltree as _bt
-
-            docs, scores = _bt.evaluate_shard_topk(
-                tree, by_tid, k, deleted=deleted, after=after, kernel=kernel
-            )
-            return pd.DataFrame(
-                {"query_id": np.full(docs.size, query_id, dtype=np.int64),
-                 "doc_id": docs.astype(np.int64),
-                 "score": scores.astype(np.float64)}
-            )
-        sort_col = "qpos" if mode in ("PHRASE", "NEAR") else "term_id"
-        pdf = pdf.sort_values(sort_col).reset_index(drop=True)
-        plists = [
-            kernels.TermPostings(row, idf=row["idf"], avgdl=avgdl, k1=k1, b=b)
-            for row in pdf.to_dict("records")
-        ]
-        if mode == "PHRASE":
-            docs, scores = kernels.score_phrase(plists, k, deleted=deleted, after=after)
-        elif mode == "NEAR":
-            slop = (
-                int(pdf["slop"].iloc[0])
-                if "slop" in pdf.columns and pd.notna(pdf["slop"].iloc[0])
-                else 0
-            )
-            ordered = (
-                bool(pdf["ordered"].iloc[0])
-                if "ordered" in pdf.columns and pd.notna(pdf["ordered"].iloc[0])
-                else True
-            )
-            docs, scores = kernels.score_near(
-                plists, k, slop, deleted=deleted, after=after, ordered=ordered
-            )
-        elif mode == "AND" and kernel != "exhaustive":
-            # conjunctive block-probe kernel: seed candidates from the
-            # smallest list, probe the others block-granularly — `rare AND
-            # stopword` never decodes the bulk of the stopword list. Exact
-            # (every match scored) and bit-identical to score_exhaustive's
-            # AND floats (fuzz-pinned), so cursors compose directly.
-            docs, scores = kernels.score_and_groups(
-                [[tp] for tp in plists], k, deleted=deleted, after=after
-            )
-        elif mode == "OR" and min_match > 1 and kernel != "exhaustive":
-            # minimumNumberShouldMatch via pigeonhole structural pruning:
-            # candidates seed from the union of the n-m+1 smallest lists,
-            # only the m-1 largest are membership-probed — exact, and
-            # bit-identical to the exhaustive min_match floats
-            docs, scores = kernels.score_and_groups(
-                [[tp] for tp in plists], k, deleted=deleted, after=after,
-                min_groups=min_match,
-            )
-        elif mode == "AND" or kernel == "exhaustive" or min_match > 1:
-            docs, scores = kernels.score_exhaustive(
-                plists, k, mode, deleted=deleted, min_match=min_match, after=after
-            )
-        else:
-            # auto (and the "wand" alias) → block-max pruned MaxScore
-            # (rank-identical to exhaustive, fuzz-pinned). Control loop is
-            # per segment chunk, never per candidate; on flat score
-            # distributions it detects that pruning isn't biting and bails
-            # to the exhaustive kernel, so the worst case stays within a
-            # small constant of exhaustive while skewed corpora (stopword +
-            # rare term) skip decoding most of the hot list. The per-pivot
-            # Python WAND kernel was retired in round 3 (see kernels.py) —
-            # it never beat this kernel on any fixture. Cursors ride the
-            # pruned kernel too (round 6): theta seeds from after-filtered
-            # seed scores, so page 2+ of a stopword OR stays pruned.
-            docs, scores = kernels.score_blockmax(
-                plists, k, deleted=deleted, after=after
-            )
+        docs, scores = (np.array([res]), np.zeros(1)) if count else res
         return pd.DataFrame(
-            {"query_id": np.full(docs.size, query_id, dtype=np.int64),
+            {"query_id": np.full(docs.size, qid, dtype=np.int64),
              "doc_id": docs.astype(np.int64),
              "score": scores.astype(np.float64)}
         )
@@ -758,266 +408,40 @@ def search(
 
     Returns (query_id, rank, doc_id, score[, url]) sorted by query_id, rank.
     """
-    qpd = None
-    if isinstance(queries, pd.DataFrame):
-        qpd = queries
-    else:
-        qdf = queries
-        # ONE tiny job answers every data-dependent question about a
-        # Spark-frame batch (PREFIX/boost rewrites need rows driver-side;
-        # the positional check below needs the mode set; the modifier flags
-        # below decide which optional columns the plan carries at all) —
-        # query batches are tiny by contract
-        qcols = set(qdf.columns)
-        flag_rows = qdf.select(
-            "mode",
-            F.exists("terms", lambda t: t.contains("^")).alias("has_boost"),
-            (
-                (F.size(F.coalesce(F.col("neg_terms"), F.array().cast("array<string>"))) > 0)
-                if "neg_terms" in qcols
-                else F.lit(False)
-            ).alias("has_neg"),
-            (
-                (F.coalesce(F.col("min_match"), F.lit(0)) > 0)
-                if "min_match" in qcols
-                else F.lit(False)
-            ).alias("has_mm"),
-            (
-                F.col("after_score").isNotNull()
-                if "after_score" in qcols
-                else F.lit(False)
-            ).alias("has_after"),
-        ).collect()
-        spark_modes = {r["mode"] for r in flag_rows}
-        if (
-            spark_modes & {"PREFIX", "FUZZY", "BOOL", "WILDCARD", "REGEX"}
-            or "fields" in qcols
-            or index.stats.get("fields")  # fielded index: tree rewrite path
-            or index.stats.get("stopwords")  # analyzer chain: driver-side
-            or index.stats.get("stem")  # query-term rewrite
-            or synonyms  # synonym rewrite is driver-side too
-            or any(r["has_boost"] for r in flag_rows)
-        ):
-            qpd = qdf.toPandas()
-        else:
-            has_neg = any(r["has_neg"] for r in flag_rows)
-            need_mm = any(r["has_mm"] for r in flag_rows)
-            need_after = any(r["has_after"] for r in flag_rows)
-            need_slop = "slop" in qcols and bool(spark_modes & {"NEAR"})
-            need_ordered = "ordered" in qcols and bool(spark_modes & {"NEAR"})
-            need_tree = False
-            bool_positional = False
-    if qpd is not None:
-        field_stats = index.stats.get("fields") or {}
-        # analyzer chain first: flat terms stop/stem BEFORE any fielded
-        # qualification or expansion (BOOL rows analyze leaf-wise inside
-        # normalize_query; PREFIX/FUZZY never analyze); synonyms expand on
-        # the analyzed forms
-        qpd = qparse.analyze_query_rows(qpd, index.stats)
-        qpd = qparse.apply_synonyms_rows(qpd, synonyms)
-        qpd = booltree.rewrite_fielded_rows(qpd, field_stats, synonyms=synonyms)
-        if field_stats:
-            if qpd["mode"].isin(["WILDCARD", "REGEX"]).any():
-                raise ValueError(
-                    "WILDCARD/REGEX modes are not supported on fielded "
-                    "indexes (v1) — query one field with an explicit "
-                    "field-qualified pattern via expand_regex_terms + OR"
-                )
-            # fielded index is a query-time drop-in: every remaining flat
-            # row becomes a bare-leaf tree that qualifies across all fields
-            # (PREFIX/FUZZY expansion then runs against the field-qualified
-            # dictionary inside the tree pipeline)
-            qpd = booltree.auto_fielded_rows(qpd)
-        else:
-            qpd = qparse.rewrite_expansion_rows(
-                qpd, "PREFIX", lambda ts, _e: expand_prefix_terms(index, ts)
-            )
-            qpd = qparse.rewrite_expansion_rows(
-                qpd, "FUZZY", lambda ts, e: expand_fuzzy_terms(index, ts, e)
-            )
-            qpd = qparse.rewrite_expansion_rows(
-                qpd, "WILDCARD",
-                lambda ts, _e: expand_regex_terms(
-                    index, [qparse.wildcard_to_regex(t) for t in ts]
-                ),
-            )
-            qpd = qparse.rewrite_expansion_rows(
-                qpd, "REGEX", lambda ts, _e: expand_regex_terms(index, ts)
-            )
-        qpd, bool_positional = _normalize_bool_rows(index, qpd)
-        qpd = qpd.drop(columns=[c for c in ("max_edits",) if c in qpd.columns])
-        qpd = _sanitize_optional_columns(parse_term_boosts(qpd))
-        # Modifier columns whose every row is "off" are DROPPED before the
-        # frame goes to Spark: an all-empty array (or all-null cursor)
-        # column defeats createDataFrame type inference, and any always-off
-        # column would ride the explode → broadcast join → shuffle →
-        # applyInPandas chain for nothing. The shard kernel treats a missing
-        # column as the modifier's default, so the common plain-AND/OR batch
-        # runs the exact round-2 plan shape.
-        to_df = qpd
-        if "neg_terms" in to_df.columns and all(
-            len(x) == 0 for x in to_df["neg_terms"]
-        ):
-            to_df = to_df.drop(columns=["neg_terms"])
-        for c in ("min_match", "slop"):
-            if c in to_df.columns and (to_df[c] == 0).all():
-                to_df = to_df.drop(columns=[c])
-        if "ordered" in to_df.columns and to_df["ordered"].all():
-            to_df = to_df.drop(columns=["ordered"])  # all-ordered = default
-        for c in ("after_score", "after_doc"):
-            if c in to_df.columns and to_df[c].isna().all():
-                to_df = to_df.drop(columns=[c])
-        if "tree" in to_df.columns and to_df["tree"].isna().all():
-            to_df = to_df.drop(columns=["tree"])
-        qdf = spark.createDataFrame(to_df)
-        has_neg = "neg_terms" in to_df.columns
-        need_mm = "min_match" in to_df.columns
-        need_slop = "slop" in to_df.columns
-        need_ordered = "ordered" in to_df.columns
-        need_after = "after_score" in to_df.columns
-        need_tree = "tree" in to_df.columns
-    if need_after and "after_doc" not in qdf.columns:
-        qdf = qdf.withColumn("after_doc", F.lit(None).cast("long"))
-    if "boost_keys" in qdf.columns:
-        qdf = qdf.withColumn(
-            "boost_map", F.map_from_arrays("boost_keys", "boost_vals")
-        ).drop("boost_keys", "boost_vals")
+    if count_only and matches_only:
+        raise ValueError("count_only and matches_only are mutually exclusive")
+    # a Spark-frame batch is collected like a pandas one: query batches are
+    # tiny by contract, and normalization is driver-side for every row
+    qpd = queries if isinstance(queries, pd.DataFrame) else queries.toPandas()
+    qpd, needed, positional = plan.normalize(index, qpd, index.stats, synonyms)
+    specs = plan.query_specs(qpd, index.term_info(needed), index.stats)
     if matches_only:
-        if count_only:
-            raise ValueError("count_only and matches_only are mutually exclusive")
         # k bounds each kernel's per-shard output; the full match set means
         # no bound (2^62 is unreachable by any shard's doc count)
-        qdf = qdf.withColumn("k", F.lit(1 << 62).cast("long"))
-    if not index.stats.get("with_positions", False):
-        # validate on BOTH input shapes — a Spark-frame query batch must not
-        # sail past the check and die executor-side on an empty pos_blob
-        has_phrase = (
-            qpd["mode"].isin(["PHRASE", "NEAR"]).any() or bool_positional
-            if qpd is not None
-            else bool(spark_modes & {"PHRASE", "NEAR"})
-        )
-        if has_phrase:
-            raise ValueError(
-                "PHRASE/NEAR queries require a positional index "
-                "(build with EngineConfig(with_positions=True) / --with-positions)"
-            )
-    # PHRASE keeps the ordered term sequence (slot index qpos); AND/OR
-    # dedupe (duplicate terms must not double-count in the BM25 sum).
-    # Negated terms explode with is_neg=true (qpos -1, outside phrase
-    # slots): their postings ride the same pruned probe and each shard
-    # kernel folds its slice into the exclusion mask. Modifier columns the
-    # batch doesn't use are not selected at all (and the neg union branch
-    # only exists when some row actually negates a term).
-    qarr = F.when(
-        F.col("mode").isin("PHRASE", "NEAR"), F.col("terms")
-    ).otherwise(F.array_distinct("terms"))
-    opt_cols = []
-    if need_mm:
-        opt_cols.append("min_match")
-    if need_slop:
-        opt_cols.append("slop")
-    if need_ordered:
-        opt_cols.append("ordered")
-    if need_tree:
-        opt_cols.append("tree")
-    if need_after:
-        opt_cols += ["after_score", "after_doc"]
-    if "boost_map" in qdf.columns:
-        opt_cols.append("boost_map")
-    qterms = qdf.select(
-        "query_id",
-        "mode",
-        "k",
-        *opt_cols,
-        F.size(qarr).alias("n_query_terms"),
-        F.posexplode(qarr).alias("qpos", "term"),
-        *([F.lit(False).alias("is_neg")] if has_neg else []),
+        for spec in specs:
+            spec.k = 1 << 62
+    pairs = pd.DataFrame(
+        [(s.query_id, t) for s in specs for t in sorted(s.term_ids())],
+        columns=["query_id", "term_id"], dtype="int64",
     )
-    if has_neg:
-        narr = F.array_distinct(
-            F.coalesce(F.col("neg_terms"), F.array().cast("array<string>"))
-        )
-        qterms_neg = (
-            qdf.where(F.size(narr) > 0)
-            .select(
-                "query_id",
-                "mode",
-                "k",
-                *opt_cols,
-                F.size(qarr).alias("n_query_terms"),
-                F.posexplode(narr).alias("qpos", "term"),
-                F.lit(True).alias("is_neg"),
-            )
-            .withColumn("qpos", F.lit(-1))
-        )
-        qterms = qterms.unionByName(qterms_neg)
+    qids = pd.DataFrame({"query_id": [s.query_id for s in specs]}, dtype="int64")
+    if count_only:
+        zero = spark.createDataFrame(qids).withColumn("total_hits", F.lit(0).cast("long"))
+    if pairs.empty:
+        return zero.orderBy("query_id") if count_only else _empty_results(spark, with_url)
 
-    # dictionary lookup: term → (term_id, df, idf). Served from the driver-
-    # side dictionary cache when the vocabulary fits (a serving node holds
-    # the dictionary hot); otherwise a pushed-filter dictionary scan.
-    N = index.N
-    local = index.local_dict()
-    if local is not None:
-        if qpd is not None:  # driver already has the terms — no Spark job
-            needed = {t for ts in qpd["terms"] for t in ts}
-            if "neg_terms" in qpd.columns:
-                needed |= {t for ts in qpd["neg_terms"] for t in ts}
-        else:
-            needed = {r["term"] for r in qterms.select("term").distinct().collect()}
-        hit = local.loc[sorted(needed & set(local.index))].reset_index()
-        if len(hit) == 0:
-            if count_only:
-                return (
-                    qdf.select("query_id").distinct()
-                    .withColumn("total_hits", F.lit(0).cast("long"))
-                    .orderBy("query_id")
-                )
-            return _empty_results(spark, with_url)
-        hit["idf"] = np.log((N - hit["df"] + 0.5) / (hit["df"] + 0.5) + 1.0)
-        t = spark.createDataFrame(hit[["term", "term_id", "idf"]])
-        term_ids = [int(x) for x in hit["term_id"]]
-    else:
-        t = index.terms.join(F.broadcast(qterms.select("term").distinct()), "term")
-        t = t.withColumn(
-            "idf",
-            F.log((F.lit(N) - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5)) + F.lit(1.0)),
-        ).select("term", "term_id", "idf")
-        term_ids = [int(r["term_id"]) for r in t.select("term_id").distinct().collect()]
-        if not term_ids:
-            if count_only:
-                return (
-                    qdf.select("query_id").distinct()
-                    .withColumn("total_hits", F.lit(0).cast("long"))
-                    .orderBy("query_id")
-                )
-            return _empty_results(spark, with_url)
-
-    q = qterms.join(F.broadcast(t), "term")
-    if "boost_map" in qdf.columns:
-        # boost scales the term's idf — linear in the BM25 sum, so the
-        # kernels are untouched; absent map entries default to 1.0
-        q = q.withColumn(
-            "idf",
-            F.col("idf")
-            * F.coalesce(F.element_at("boost_map", F.col("term")), F.lit(1.0)),
-        ).drop("boost_map")
     # postings probe on term_id. A broadcast join alone would SCAN the whole
     # postings table and filter in the join — at web scale that reads the
-    # entire index. Collecting the (tiny) query term_ids and injecting an
-    # explicit IN-filter pushes the predicate into the parquet scan:
-    # `PushedFilters: [In(term_id, …)]` + row-group min/max skipping on the
-    # term_id-sorted files turn the probe into a near-point lookup.
-    probe = index.postings.where(F.col("term_id").isin(term_ids))
-    # column pruning: the position stream is the fattest column and only
-    # PHRASE queries decode it — drop it from the scan when the batch has
-    # none (known for free on pandas query batches)
-    if qpd is not None and not (
-        qpd["mode"].isin(["PHRASE", "NEAR"]).any() or bool_positional
-    ):
+    # entire index. The explicit IN-filter on the (tiny) batch's term_ids
+    # pushes the predicate into the parquet scan: `PushedFilters: [In(term_id,
+    # …)]` + row-group min/max skipping on the term_id-sorted files turn the
+    # probe into a near-point lookup. Posting rows are self-contained
+    # (per-posting doc_len stream), so it is the only scan.
+    probe = index.postings.where(F.col("term_id").isin(sorted(set(pairs["term_id"]))))
+    if not positional:
+        # the position stream is the fattest column; only proximity reads it
         probe = probe.drop("pos_blob", "block_pos_off")
-    cand = probe.join(F.broadcast(q.drop("term")), "term_id")
-    # no forward-index join: posting rows are self-contained (per-posting
-    # doc_len stream in dl_blob) — the only scan is the pruned postings probe
+    cand = probe.join(F.broadcast(spark.createDataFrame(pairs)), "term_id")
 
     mask_kind, mask_payload = index.deleted_mask_source(spark)
     if doc_filter is not None:
@@ -1045,9 +469,9 @@ def search(
         # ids via this equi-join — no full-set broadcast anywhere
         cand = cand.join(mask_payload, "shard", "left")
     out = cand.groupBy("query_id", "shard").applyInPandas(
-        _shard_kernel(
-            index.stats, kernel, mask_payload if mask_kind == "bc" else None,
-            count_mode=count_only,
+        _shard_group(
+            specs, index.stats, kernel, mask_payload if mask_kind == "bc" else None,
+            count=count_only,
         ),
         schema=RESULT_SCHEMA,
     )
@@ -1057,7 +481,7 @@ def search(
         )
         # zero-match queries still report 0 (track_total_hits contract)
         return (
-            qdf.select("query_id").distinct()
+            zero.drop("total_hits")
             .join(counts, "query_id", "left")
             .select(
                 "query_id",
@@ -1070,23 +494,22 @@ def search(
         # this straight into facet_counts / top_by_field
         return out
 
+    ks = qids.assign(k=[s.k for s in specs])
     w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("doc_id").asc())
     topk = (
         out.withColumn("rank", F.row_number().over(w))
-        .join(qdf.select("query_id", "k"), "query_id")
+        .join(F.broadcast(spark.createDataFrame(ks)), "query_id")
         .where(F.col("rank") <= F.col("k"))
         .select("query_id", "rank", "doc_id", "score")
     )
     if with_url:
         # broadcast the SMALL side: topk is ≤ k·n_queries rows by contract,
-        # docs is corpus-sized — the previous left join made the planner
-        # broadcast docs (fine at bench scale, impossible past the 8 GB
-        # broadcast cap at web scale, and an SMJ there would shuffle the
-        # docs table per query batch). A right join with the topk side
-        # hinted streams the docs scan against a tiny built table instead.
+        # docs is corpus-sized, so the docs scan streams against the tiny
+        # built top-k table (BroadcastHashJoin BuildRight over the scan).
+        # Inner join: every posting doc_id has a docs row.
         topk = (
             index.docs.select("doc_id", "url")
-            .join(F.broadcast(topk), "doc_id", "right")
+            .join(F.broadcast(topk), "doc_id")
             .select("query_id", "rank", "doc_id", "url", "score")
         )
     return topk.orderBy("query_id", "rank")

@@ -451,19 +451,16 @@ def search_local_federated(
         else 0.0
     )
     # dfs phase: union df for every dictionary key the batch can touch, per
-    # segment. The term set comes from the SAME canonicalization search_local
-    # itself runs (normalize_local_queries: fielded auto-qualification,
-    # PREFIX/FUZZY expansion against each segment's dictionary, BOOL leaf
-    # terms) — any probe/scoring divergence would silently score a term with
-    # its segment-local df instead of the union's.
-    from invoicenet_spark.query.local import normalize_local_queries
+    # segment. The term set comes from the SAME planner search_local itself
+    # runs (plan.normalize: fielded auto-qualification, PREFIX/FUZZY
+    # expansion against each segment's dictionary, BOOL leaf terms) — any
+    # probe/scoring divergence would silently score a term with its
+    # segment-local df instead of the union's.
+    from invoicenet_spark.query import plan
 
     probe: set[str] = set()
     for i in live:
-        _, terms_i, _ = normalize_local_queries(
-            lis[i], queries.copy(), lis[i].stats
-        )
-        probe |= terms_i
+        probe |= plan.normalize(lis[i], queries, lis[i].stats)[1]
     df_union: dict[str, int] = {}
     for i in live:
         for t, (_tid, df) in lis[i].term_info(set(probe)).items():

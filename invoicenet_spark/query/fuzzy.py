@@ -13,7 +13,7 @@ view, no per-string Python. Lucene uses Levenshtein automata for the same
 job; at the dictionary sizes a serving node holds hot (<= 5M terms) the
 vectorized DP is a few hundred ms worst-case and has no automaton-
 construction complexity. The Spark batch path's big-vocab fallback pushes
-F.levenshtein into a JVM dictionary scan instead (exec.expand_fuzzy_terms).
+F.levenshtein into a JVM dictionary scan instead (exec.Index._scan_terms).
 """
 
 from __future__ import annotations

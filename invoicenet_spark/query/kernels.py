@@ -1,6 +1,7 @@
 """Pure numpy query kernels: gallop intersection, exhaustive scoring, and
-block-max WAND. No Spark imports — unit-testable standalone; exec.py wraps
-them in applyInPandas.
+block-max WAND. No Spark imports — unit-testable standalone. run_shard is
+the one per-(query, shard) router both query paths call (the Spark path
+inside applyInPandas, the serving path in its per-query loop).
 
 Reference analog (SURVEY.md §2.6 J4, §2.7 A1, §2.8 K1): the query-term ∩
 candidate intersection is the reference's memory-mask (model.py:124-125);
@@ -15,6 +16,8 @@ candidate* (already pruned), all decode/score math inside is vectorized.
 """
 
 from __future__ import annotations
+
+from functools import cached_property
 
 import numpy as np
 
@@ -87,16 +90,24 @@ class TermPostings:
         self.k1, self.b = k1, b
         self.block_last = np.asarray(row["block_last"], dtype=np.int64)
         self.n_blocks = self.block_last.size
-        # list-level upper bound = max over block bounds
-        self.block_ub = bm25.block_upper_bound(
+
+    @cached_property
+    def block_ub(self) -> np.ndarray:
+        """Per-block score upper bounds — computed on first use: only the
+        pruned disjunctive kernels read them."""
+        return bm25.block_upper_bound(
             self.idf,
-            np.asarray(row["block_max_tf"], dtype=np.float64),
-            np.asarray(row["block_min_dl"], dtype=np.float64),
-            avgdl,
-            k1,
-            b,
+            np.asarray(self.row["block_max_tf"], dtype=np.float64),
+            np.asarray(self.row["block_min_dl"], dtype=np.float64),
+            self.avgdl,
+            self.k1,
+            self.b,
         )
-        self.list_ub = float(self.block_ub.max())
+
+    @cached_property
+    def list_ub(self) -> float:
+        """List-level upper bound = max over block bounds."""
+        return float(self.block_ub.max())
 
     def decode_all(self) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
         return decode_posting_list(self.row)
@@ -946,6 +957,82 @@ def count_matches_shard(
         cnt = np.bincount(inv, minlength=uniq.size)
         uniq = uniq[cnt >= min_match]
     return int(drop_deleted(uniq, deleted).sum()) if uniq.size else 0
+
+
+_ALL_TERMS_MODES = ("AND", "PHRASE", "NEAR")
+
+
+def run_shard(
+    mode: str,
+    plists: list,
+    k: int,
+    *,
+    kernel: str = "auto",
+    deleted: np.ndarray | None = None,
+    neg=(),
+    after: tuple[float, int] | None = None,
+    min_match: int = 0,
+    slop: int = 0,
+    ordered: bool = True,
+    tree: dict | None = None,
+    count: bool = False,
+):
+    """The ONE per-(query, shard) router: the Spark applyInPandas body and
+    the serving loop both score every query through it.
+
+    plists: one TermPostings per query slot (slot order for PHRASE/NEAR),
+    None where the slot's term has no postings in this shard — an
+    AND/PHRASE/NEAR query then matches nothing here, OR/BOOL skip it. neg:
+    posting rows of must_not terms; their docs join the `deleted` mask (the
+    tombstone mechanism, fuzz-pinned sound under block-max pruning). tree:
+    the resolved BOOL tree. Returns the shard's top-k (docs, scores), or
+    its match count when count=True (track_total_hits: exhaustive, no
+    scoring, cursor ignored).
+
+    Routes: BOOL → booltree.evaluate_shard_topk; PHRASE/NEAR → proximity
+    kernels; kernel='exhaustive' → score_exhaustive; AND and min_match>1 OR
+    → score_and_groups (exact structural pruning, bit-identical floats to
+    exhaustive); plain OR → score_blockmax (MaxScore with block-granular
+    probes, rank-identical to exhaustive, cursors included)."""
+    if len(neg):
+        excl = np.unique(
+            np.concatenate([decode_posting_list(r)[0] for r in neg])
+        ).astype(np.int64)
+        deleted = excl if deleted is None else np.union1d(deleted, excl)
+    present = [tp for tp in plists if tp is not None]
+    if not present or (mode in _ALL_TERMS_MODES and len(present) < len(plists)):
+        return 0 if count else (np.zeros(0, dtype=np.int64), np.zeros(0))
+    if mode in ("AND", "OR"):
+        # deterministic float accumulation order on every path
+        present.sort(key=lambda tp: int(tp.row["term_id"]))
+    if count:
+        return count_matches_shard(
+            mode, present, deleted=deleted, tree=tree, slop=slop,
+            ordered=ordered, min_match=min_match,
+        )
+    if mode == "BOOL":
+        from invoicenet_spark.query import booltree
+
+        by_tid = {int(tp.row["term_id"]): tp for tp in present}
+        return booltree.evaluate_shard_topk(
+            tree, by_tid, k, deleted=deleted, after=after, kernel=kernel
+        )
+    if mode == "PHRASE":
+        return score_phrase(present, k, deleted=deleted, after=after)
+    if mode == "NEAR":
+        return score_near(
+            present, k, slop, deleted=deleted, after=after, ordered=ordered
+        )
+    if kernel == "exhaustive":
+        return score_exhaustive(
+            present, k, mode, deleted=deleted, min_match=min_match, after=after
+        )
+    if mode == "AND" or min_match > 1:
+        return score_and_groups(
+            [[tp] for tp in present], k, deleted=deleted, after=after,
+            min_groups=min_match if mode == "OR" else None,
+        )
+    return score_blockmax(present, k, deleted=deleted, after=after)
 
 
 # score_wand (document-at-a-time block-max WAND with a per-pivot Python

@@ -29,8 +29,11 @@ the probed term_ids' row groups, and nothing here involves the driver of a
 build cluster — it is a client of the index files. Query batches share ONE
 postings read (the union of the batch's term_ids) and then run the
 per-query kernels serially — measured faster than both a thread pool
-(small GIL-bound numpy calls) and the Spark batch path at 100 queries;
-n_threads opts into a pool for heavy queries.
+(small GIL-bound numpy calls) and the Spark batch path at 100 queries.
+
+Queries normalize through the one planner (query/plan.py: LocalIndex is
+its pyarrow dictionary adapter) and score per shard through the one router
+(kernels.run_shard), exactly as exec.search does.
 """
 
 from __future__ import annotations
@@ -43,9 +46,8 @@ import numpy as np
 import pandas as pd
 import pyarrow.dataset as ds
 
-from invoicenet_spark.index import bm25
 from invoicenet_spark.index.build import IndexPaths, committed_postings_files
-from invoicenet_spark.query import booltree, kernels, qparse
+from invoicenet_spark.query import kernels, plan
 
 
 _INT64_MIN, _INT64_MAX = -(1 << 63), (1 << 63) - 1
@@ -189,7 +191,7 @@ def _generation(root: str) -> tuple[int, int]:
     return (st.st_mtime_ns, st.st_size)
 
 
-class LocalIndex:
+class LocalIndex(plan.Dictionary):
     """Spark-free serving handle over one index directory at one generation.
 
     Holds the pieces a query replica keeps hot: corpus stats, the term
@@ -197,8 +199,6 @@ class LocalIndex:
     dataset for url materialization. Everything is read via pyarrow from
     the COMMITTED file set; no SparkSession is involved anywhere.
     """
-
-    MAX_HOT_TERMS = 5_000_000
 
     def __init__(self, root: str):
         self.root = os.path.realpath(root)
@@ -211,7 +211,6 @@ class LocalIndex:
         self._terms_ds = None
         self._dict: pd.DataFrame | None = None
         self._dict_too_big = False
-        self._fuzzy_vocab: "np.ndarray | None" = None
         self._deleted_by_shard: dict | None = None
 
     def deleted_by_shard(self) -> dict:
@@ -245,126 +244,39 @@ class LocalIndex:
             self._terms_ds = ds.dataset(self.paths.terms, format="parquet")
         return self._terms_ds
 
-    def term_info(self, needed: set[str]) -> dict[str, tuple[int, int]]:
-        """term → (term_id, df) for the requested terms. The dictionary is
-        held hot when it fits (a serving node's hot dictionary — the common
-        case pays NO dataset/filesystem work per query); above
-        MAX_HOT_TERMS the lookup stays a pushed-filter parquet read."""
+    def hot_dict(self) -> "pd.DataFrame | None":
+        """The dictionary held hot when it fits (a serving node's hot
+        dictionary — the common case pays NO dataset/filesystem work per
+        query); above plan.MAX_HOT_TERMS lookups stay pushed-filter parquet
+        reads."""
         if self._dict is None and not self._dict_too_big:
             tds = self._terms_dataset()
-            if tds.count_rows() > self.MAX_HOT_TERMS:  # metadata-only count
+            if tds.count_rows() > plan.MAX_HOT_TERMS:  # metadata-only count
                 self._dict_too_big = True
             else:
                 tbl = tds.to_table(columns=["term", "term_id", "df"])
                 self._dict = tbl.to_pandas().set_index("term")
-        if self._dict is not None:
-            hit = self._dict.loc[sorted(needed & set(self._dict.index))]
-            return {t: (int(r["term_id"]), int(r["df"])) for t, r in hit.iterrows()}
-        if not needed:
-            # isin([]) builds a null-typed Arrow value set and raises — an
-            # empty lookup is just empty
-            return {}
+        return self._dict
+
+    def _scan_terms(self, kind, patterns, max_edits, limit) -> set[str]:
+        """Big-vocab expansion: STREAM the term column in record batches —
+        never materialize a >MAX_HOT_TERMS dictionary as one padded numpy
+        array (that is exactly what the hot-dictionary cap avoids)."""
+        out: set[str] = set()
+        for batch in self._terms_dataset().to_batches(columns=["term"]):
+            col = batch.column("term")
+            vocab = np.asarray(col, dtype=str) if kind == "fuzzy" else col.to_pandas()
+            out |= plan.match_terms(kind, vocab, patterns, max_edits)
+        return out
+
+    def _scan_info(self, needed) -> dict[str, tuple[int, int]]:
         tbl = self._terms_dataset().to_table(
-            columns=["term", "term_id", "df"],
-            filter=ds.field("term").isin(sorted(needed)),
+            columns=["term", "term_id", "df"], filter=ds.field("term").isin(needed)
         )
-        return {
-            t: (int(i), int(d))
-            for t, i, d in zip(
-                tbl.column("term").to_pylist(),
-                tbl.column("term_id").to_pylist(),
-                tbl.column("df").to_pylist(),
-            )
-        }
-
-    def expand_prefixes(
-        self,
-        prefixes: list[str],
-        max_expansions: int = qparse.MAX_PREFIX_EXPANSIONS,
-    ) -> list[str]:
-        """PREFIX rewrite against the serving dictionary — same contract as
-        exec.expand_prefix_terms (shared cap/ordering via qparse). With a
-        hot dictionary this is a vectorized startswith over the in-memory
-        index; the big-vocab fallback scans the term column once."""
-        self.term_info(set())  # ensure the hot dictionary decision is made
-        if self._dict is not None:
-            idx = self._dict.index
-            out: set[str] = set()
-            for p in prefixes:
-                out |= set(idx[idx.str.startswith(p)])
-        else:
-            terms = (
-                self._terms_dataset().to_table(columns=["term"]).column("term").to_pandas()
-            )
-            out = set()
-            for p in prefixes:
-                out |= set(terms[terms.str.startswith(p)])
-        return qparse.cap_prefix_expansion(out, prefixes, max_expansions)
-
-    def expand_regex(
-        self,
-        patterns: list[str],
-        max_expansions: int = qparse.MAX_PREFIX_EXPANSIONS,
-    ) -> list[str]:
-        """REGEX/WILDCARD rewrite against the serving dictionary — full-
-        match per pattern, same cap contract as exec.expand_regex_terms."""
-        import re
-
-        if not patterns:
-            return []
-        self.term_info(set())
-        # compile first (surfaces bad patterns as the same re.error as the
-        # per-term loop did), then match VECTORIZED — str.fullmatch is the
-        # same Python `re` engine without the per-term Python loop
-        # (round 6: a leading-wildcard pattern is a full dictionary scan,
-        # so the scan itself must be C-speed)
-        [re.compile(p) for p in patterns]
-        out: set[str] = set()
-        if self._dict is not None:
-            idx = self._dict.index
-            for p in patterns:
-                out |= set(idx[idx.str.fullmatch(p)])
-        else:
-            terms = (
-                self._terms_dataset().to_table(columns=["term"]).column("term").to_pandas()
-            )
-            for p in patterns:
-                out |= set(terms[terms.str.fullmatch(p)])
-        return qparse.cap_prefix_expansion(out, patterns, max_expansions, kind="regex")
-
-    def expand_fuzzy(
-        self,
-        terms: list[str],
-        max_edits: int = 1,
-        max_expansions: int = qparse.MAX_PREFIX_EXPANSIONS,
-    ) -> list[str]:
-        """FUZZY rewrite against the serving dictionary — vectorized numpy
-        Levenshtein (query/fuzzy.py) over the hot dictionary, full term-
-        column scan fallback for big vocabularies; same cap contract as
-        exec.expand_fuzzy_terms."""
-        from invoicenet_spark.query.fuzzy import levenshtein_within
-
-        if not terms:
-            return []
-        self.term_info(set())
-        out: set[str] = set()
-        if self._dict is not None:
-            if self._fuzzy_vocab is None:
-                # one conversion per handle/generation — O(vocab x maxlen)
-                self._fuzzy_vocab = np.asarray(self._dict.index, dtype=str)
-            for t in terms:
-                out |= set(levenshtein_within(self._fuzzy_vocab, t, max_edits))
-        else:
-            # big-vocab fallback: STREAM the term column in record batches —
-            # never materialize a >MAX_HOT_TERMS dictionary as one padded
-            # numpy array (that is exactly what the hot-dict cap avoids)
-            for batch in self._terms_dataset().to_batches(columns=["term"]):
-                if batch.num_rows == 0:
-                    continue
-                vocab = np.asarray(batch.column("term"), dtype=str)
-                for t in terms:
-                    out |= set(levenshtein_within(vocab, t, max_edits))
-        return qparse.cap_prefix_expansion(out, terms, max_expansions, kind="fuzzy")
+        return dict(zip(
+            tbl.column("term").to_pylist(),
+            zip(tbl.column("term_id").to_pylist(), tbl.column("df").to_pylist()),
+        ))
 
     def urls_for(self, doc_ids: list[int]) -> dict[int, str]:
         tbl = self.docs_dataset().to_table(
@@ -412,331 +324,9 @@ def invalidate_local_index(root: str) -> None:
 
 
 # ----------------------------------------------------------------- querying --
-def _run_one_query(
-    q,
-    term_info: dict,
-    by_tid_shard: dict,
-    shards_by_tid: dict,
-    stats: dict,
-    kernel: str,
-    deleted_by_shard: dict | None = None,
-    count_only: bool = False,
-) -> list[tuple]:
-    """Score one query against the pre-fetched posting rows. Pure numpy —
-    safe to run from a thread pool (kernels release the GIL in the heavy
-    ops); semantics identical to exec._shard_kernel + the global merge."""
-    k1, b, avgdl, N = stats["k1"], stats["b"], stats["avgdl"], stats["N"]
-    qid, mode, k = int(q["query_id"]), q["mode"], int(q["k"])
-    if mode == "BOOL":
-        return _run_bool_query(
-            q, term_info, by_tid_shard, shards_by_tid, stats, deleted_by_shard,
-            count_only=count_only, kernel=kernel,
-        )
-    neg_raw = q.get("neg_terms")
-    neg_terms = (
-        list(dict.fromkeys(neg_raw))
-        if isinstance(neg_raw, (list, tuple, np.ndarray))
-        else []
-    )
-    neg_tids = [term_info[t][0] for t in neg_terms if t in term_info]
-    mm_raw = q.get("min_match")
-    min_match = int(mm_raw) if mm_raw is not None and not pd.isna(mm_raw) else 0
-    a_s, a_d = q.get("after_score"), q.get("after_doc")
-    after = (
-        (float(a_s), int(a_d))
-        if a_s is not None and not pd.isna(a_s)
-        else None
-    )
-    # `term^2.5` boost syntax — ONE grammar for both paths (qparse)
-    raw_terms, bmap = qparse.parse_boost_terms(q["terms"])
-    terms = raw_terms if mode in ("PHRASE", "NEAR") else list(dict.fromkeys(raw_terms))
-    infos = [term_info.get(t) for t in terms]
-    if any(i is None for i in infos) and mode in ("AND", "PHRASE", "NEAR"):
-        return []
-    infos_present = [(slot, i) for slot, i in enumerate(infos) if i is not None]
-    if not infos_present:
-        return []
-    # candidate shards: union (OR) / intersection (AND, PHRASE, NEAR)
-    shard_sets = [set(shards_by_tid.get(tid, ())) for _, (tid, _) in infos_present]
-    if mode in ("AND", "PHRASE", "NEAR"):
-        cand_shards = set.intersection(*shard_sets) if shard_sets else set()
-    else:
-        cand_shards = set.union(*shard_sets) if shard_sets else set()
-
-    docs_all, scores_all = [], []
-    for shard in sorted(cand_shards):
-        plists = []
-        ok = True
-        pairs = (
-            list(enumerate(infos))
-            if mode in ("PHRASE", "NEAR")
-            else infos_present
-        )
-        for slot, info in pairs:
-            tid, df = info
-            rec = by_tid_shard.get((tid, shard))
-            if rec is None:
-                if mode in ("AND", "PHRASE", "NEAR"):
-                    ok = False  # every term must be present in the shard
-                    break
-                continue  # OR: just skip the absent term
-            idf = bm25.idf(N, df) * bmap.get(terms[slot], 1.0)
-            plists.append(
-                kernels.TermPostings(rec, idf=idf, avgdl=avgdl, k1=k1, b=b)
-            )
-        if not ok or not plists:
-            continue
-        deleted = deleted_by_shard.get(shard) if deleted_by_shard else None
-        if neg_tids:
-            # negated terms: same exclusion-mask path as tombstones (and
-            # merged with them), one doc-stream decode per neg term present
-            neg_docs = [
-                kernels.decode_posting_list(by_tid_shard[(tid, shard)])[0]
-                for tid in neg_tids
-                if (tid, shard) in by_tid_shard
-            ]
-            if neg_docs:
-                excl = np.unique(np.concatenate(neg_docs)).astype(np.int64)
-                deleted = excl if deleted is None else np.union1d(deleted, excl)
-        if count_only:
-            slop_raw = q.get("slop")
-            o_raw = q.get("ordered")
-            docs_all.append(
-                kernels.count_matches_shard(
-                    mode,
-                    plists,
-                    deleted=deleted,
-                    slop=int(slop_raw) if slop_raw is not None and not pd.isna(slop_raw) else 0,
-                    ordered=bool(o_raw) if o_raw is not None and not pd.isna(o_raw) else True,
-                    min_match=min_match,
-                )
-            )
-            continue
-        if mode == "PHRASE":
-            d, s = kernels.score_phrase(plists, k, deleted=deleted, after=after)
-        elif mode == "NEAR":
-            slop_raw = q.get("slop")
-            slop = int(slop_raw) if slop_raw is not None and not pd.isna(slop_raw) else 0
-            o_raw = q.get("ordered")
-            ordered = bool(o_raw) if o_raw is not None and not pd.isna(o_raw) else True
-            d, s = kernels.score_near(
-                plists, k, slop, deleted=deleted, after=after, ordered=ordered
-            )
-        elif mode == "AND":
-            plists.sort(key=lambda tp: int(tp.row["term_id"]))
-            if kernel == "exhaustive":
-                d, s = kernels.score_exhaustive(
-                    plists, k, "AND", deleted=deleted, after=after
-                )
-            else:
-                # conjunctive block-probe (bit-identical floats to the
-                # exhaustive AND — see kernels.score_and_groups)
-                d, s = kernels.score_and_groups(
-                    [[tp] for tp in plists], k, deleted=deleted, after=after
-                )
-        else:
-            plists.sort(key=lambda tp: int(tp.row["term_id"]))
-            if kernel != "exhaustive" and min_match > 1:
-                # pigeonhole structural pruning (see exec._shard_kernel)
-                d, s = kernels.score_and_groups(
-                    [[tp] for tp in plists], k, deleted=deleted, after=after,
-                    min_groups=min_match,
-                )
-            elif kernel == "exhaustive" or min_match > 1:
-                d, s = kernels.score_exhaustive(
-                    plists, k, "OR", deleted=deleted, min_match=min_match, after=after
-                )
-            else:
-                # cursors keep the pruned kernel (round 6 — see
-                # kernels.score_blockmax's cursor-soundness note)
-                d, s = kernels.score_blockmax(plists, k, deleted=deleted, after=after)
-        docs_all.append(d)
-        scores_all.append(s)
-    if count_only:
-        return [(qid, int(sum(docs_all)))] if docs_all else [(qid, 0)]
-    if not docs_all:
-        return []
-    docs_cat = np.concatenate(docs_all)
-    scores_cat = np.concatenate(scores_all)
-    top_d, top_s = kernels.topk_select(docs_cat, scores_cat, k)
-    return [
-        (qid, rank, int(d), float(s))
-        for rank, (d, s) in enumerate(zip(top_d, top_s), start=1)
-    ]
-
-
-def _run_bool_query(
-    q,
-    term_info: dict,
-    by_tid_shard: dict,
-    shards_by_tid: dict,
-    stats: dict,
-    deleted_by_shard: dict | None = None,
-    count_only: bool = False,
-    kernel: str = "auto",
-) -> list[tuple]:
-    """mode='BOOL' serving twin: resolve the (already-expanded) tree's leaf
-    tids, evaluate booltree.evaluate_shard_topk per candidate shard — the
-    SAME routing front door the Spark kernel runs (block-max pruning for
-    pure disjunctions, exhaustive otherwise), so both paths are
-    float-identical — then global-merge exactly like the flat path."""
-    k1, b, avgdl, N = stats["k1"], stats["b"], stats["avgdl"], stats["N"]
-    qid, k = int(q["query_id"]), int(q["k"])
-    tree = booltree.resolve_tids(
-        q["tree"], {t: tid for t, (tid, _df) in term_info.items()}
-    )
-    df_by_tid = {tid: df for _t, (tid, df) in term_info.items()}
-    a_s, a_d = q.get("after_score"), q.get("after_doc")
-    after = (
-        (float(a_s), int(a_d)) if a_s is not None and not pd.isna(a_s) else None
-    )
-
-    def _tids(node):
-        kd = node["kind"]
-        if kd == "term":
-            return {node["tid"]}
-        if kd == "phrase":
-            return set(node["tids"])
-        out: set[int] = set()
-        for c in (
-            node["clauses"] if kd in ("and", "or")
-            else [node["positive"], node["negative"]]
-        ):
-            out |= _tids(c)
-        return out
-
-    tids = {t for t in _tids(tree) if t >= 0}
-    cand_shards = set().union(*(set(shards_by_tid.get(t, ())) for t in tids)) if tids else set()
-    docs_all, scores_all = [], []
-    for shard in sorted(cand_shards):
-        by_tid = {}
-        for tid in tids:
-            rec = by_tid_shard.get((tid, shard))
-            if rec is not None:
-                idf = bm25.idf(N, df_by_tid[tid])
-                by_tid[tid] = kernels.TermPostings(rec, idf=idf, avgdl=avgdl, k1=k1, b=b)
-        if not by_tid:
-            continue
-        deleted = deleted_by_shard.get(shard) if deleted_by_shard else None
-        if count_only:
-            d, _ = booltree.evaluate_shard(tree, by_tid)
-            docs_all.append(int(kernels.drop_deleted(d, deleted).sum()))
-            continue
-        d, s = booltree.evaluate_shard_topk(
-            tree, by_tid, k, deleted=deleted, after=after, kernel=kernel
-        )
-        docs_all.append(d)
-        scores_all.append(s)
-    if count_only:
-        return [(qid, int(sum(docs_all)))] if docs_all else [(qid, 0)]
-    if not docs_all:
-        return []
-    top_d, top_s = kernels.topk_select(
-        np.concatenate(docs_all), np.concatenate(scores_all), k
-    )
-    return [
-        (qid, rank, int(d), float(s))
-        for rank, (d, s) in enumerate(zip(top_d, top_s), start=1)
-    ]
-
-
-def normalize_local_queries(
-    li: LocalIndex, queries: pd.DataFrame, stats: dict,
-    synonyms: dict | None = None,
-) -> tuple[pd.DataFrame, set, bool]:
-    """Driver-side query canonicalization against ONE segment's dictionary:
-    fielded rewrite + bare-leaf auto-qualification, PREFIX/FUZZY expansion,
-    BOOL tree normalization (same normalize as the Spark path). Returns
-    (queries, needed_terms, bool_positional) where needed_terms is every
-    boost-stripped dictionary key the batch can touch.
-
-    Shared by search_local (whose postings read it feeds directly) and the
-    federation dfs probe (query/federate.py needs exactly this term set per
-    segment to build the union-df map BEFORE scoring — any divergence would
-    silently fall back to segment-local df)."""
-    if queries["mode"].isin(["PHRASE", "NEAR"]).any() and not stats.get(
-        "with_positions", False
-    ):
-        raise ValueError(
-            "PHRASE/NEAR queries require a positional index "
-            "(build with EngineConfig(with_positions=True) / --with-positions)"
-        )
-    field_stats = stats.get("fields") or {}
-    # analyzer chain first (same ordering as exec.search): flat terms
-    # stop/stem before fielded qualification; BOOL rows analyze leaf-wise
-    # inside normalize_query below
-    queries = qparse.analyze_query_rows(queries, stats)
-    queries = qparse.apply_synonyms_rows(queries, synonyms)
-    queries = booltree.rewrite_fielded_rows(queries, field_stats, synonyms=synonyms)
-    if field_stats:
-        if queries["mode"].isin(["WILDCARD", "REGEX"]).any():
-            raise ValueError(
-                "WILDCARD/REGEX modes are not supported on fielded "
-                "indexes (v1) — query one field with an explicit "
-                "field-qualified pattern via expand_regex + OR"
-            )
-        # fielded index = query-time drop-in: flat rows become bare-leaf
-        # trees that qualify across all fields in the normalize step
-        queries = booltree.auto_fielded_rows(queries)
-    else:
-        queries = qparse.rewrite_expansion_rows(
-            queries, "PREFIX", lambda ts, _e: li.expand_prefixes(ts)
-        )
-        queries = qparse.rewrite_expansion_rows(
-            queries, "FUZZY", lambda ts, e: li.expand_fuzzy(ts, e)
-        )
-        queries = qparse.rewrite_expansion_rows(
-            queries, "WILDCARD",
-            lambda ts, _e: li.expand_regex(
-                [qparse.wildcard_to_regex(t) for t in ts]
-            ),
-        )
-        queries = qparse.rewrite_expansion_rows(
-            queries, "REGEX", lambda ts, _e: li.expand_regex(ts)
-        )
-    bool_positional = False
-    if (queries["mode"] == "BOOL").any():
-        # boolean trees: parse/expand driver-side (same normalize as the
-        # Spark path), leaf terms ride the shared batch postings read;
-        # _run_one_query dispatches to the shared tree evaluator
-        queries = queries.copy()
-        if "tree" not in queries.columns:
-            queries["tree"] = None
-        for i in queries.index[queries["mode"] == "BOOL"]:
-            raw = queries.at[i, "tree"]
-            if raw is None or (isinstance(raw, float) and pd.isna(raw)):
-                ts = queries.at[i, "terms"]
-                if len(ts) != 1:
-                    raise ValueError(
-                        "mode='BOOL' needs a `tree` (dict/JSON) or a single "
-                        "query string in `terms`"
-                    )
-                raw = ts[0]
-            tree = booltree.attach_field_stats(
-                booltree.normalize_query(
-                    raw, li.expand_prefixes, lambda ts_, e: li.expand_fuzzy(ts_, e),
-                    field_stats=field_stats, analyzer=stats,
-                ),
-                field_stats,
-            )
-            queries.at[i, "tree"] = tree
-            queries.at[i, "terms"] = sorted(booltree.leaf_terms(tree))
-            bool_positional |= booltree.has_positional(tree)
-        if bool_positional and not stats.get("with_positions", False):
-            raise ValueError(
-                "phrase leaves in a BOOL query require a positional index "
-                "(build with EngineConfig(with_positions=True) / --with-positions)"
-            )
-
-    needed_terms = {t.partition("^")[0] for ts in queries["terms"] for t in ts}
-    if "neg_terms" in queries.columns:
-        needed_terms |= {
-            t
-            for ts in queries["neg_terms"]
-            if isinstance(ts, (list, tuple, np.ndarray))
-            for t in ts
-        }
-    return queries, needed_terms, bool_positional
+# the planner's normalize step under the serving path's name (the federated
+# dfs probe and benchmark traces address it here)
+normalize_local_queries = plan.normalize
 
 
 def search_local(
@@ -744,7 +334,6 @@ def search_local(
     queries: pd.DataFrame,
     kernel: str = "auto",
     with_url: bool = True,
-    n_threads: int | None = None,
     count_only: bool = False,
     excluded_ids: "np.ndarray | None" = None,
     stats_override: dict | None = None,
@@ -770,26 +359,23 @@ def search_local(
     resolved through the generation-keyed serving cache, so results always
     reflect the on-disk index (incl. docs appended by update_index).
 
-    Semantics mirror exec.search exactly: AND/OR dedupe terms, PHRASE keeps
-    slots; AND/PHRASE require every term present in a shard; per-shard
-    kernels produce local top-k; the global merge ranks by
-    (score desc, doc_id asc). Returns the same columns as exec.search.
+    Semantics are exec.search's by construction: the same planner
+    (plan.normalize + plan.query_specs) and the same per-shard router
+    (kernels.run_shard); the global merge ranks by (score desc, doc_id
+    asc). Returns the same columns as exec.search.
 
     Batches: the postings read is shared across the whole batch (one
     catalog probe for the union of term_ids), then the per-query kernels
-    run serially by default. Measured, 100-query batches: on a 100k-doc
-    index 0.8 s serial vs 1.5 s Spark batch vs 2.0 s with 8 threads; on a
-    1M-doc index 7.2 s serial vs 3.2 s Spark batch vs 37.7 s (!) with 8
-    threads — the kernels are many small GIL-bound numpy calls and thread
-    contention degrades superlinearly, so n_threads>1 is measured to never
-    help on this workload (kept for experimentation only). Division of
-    labor: this path owns interactive/single queries and small-corpus
-    batches; the Spark path owns large-corpus batch throughput (its 32
-    cores run kernels truly in parallel).
+    run serially. Measured, 100-query batches: on a 100k-doc index 0.8 s
+    serial vs 1.5 s Spark batch; on a 1M-doc index 7.2 s serial vs 3.2 s
+    Spark batch (a thread pool was slower still: many small GIL-bound numpy
+    calls). Division of labor: this path owns interactive/single queries
+    and small-corpus batches; the Spark path owns large-corpus batch
+    throughput (its cores run kernels truly in parallel).
     """
     li = local_index(index)
     stats = {**li.stats, **stats_override} if stats_override else li.stats
-    queries, needed_terms, bool_positional = normalize_local_queries(
+    queries, needed_terms, positional = normalize_local_queries(
         li, queries, stats, synonyms=synonyms
     )
     term_info = li.term_info(needed_terms)
@@ -798,24 +384,19 @@ def search_local(
             t: (tid, int(df_override.get(t, df)))
             for t, (tid, df) in term_info.items()
         }
+    specs = plan.query_specs(queries, term_info, stats)
 
     all_tids = sorted({tid for tid, _ in term_info.values()})
-    needs_positions = (
-        bool(queries["mode"].isin(["PHRASE", "NEAR"]).any()) or bool_positional
-    )
     rows = (
-        li.catalog().read(all_tids, with_positions=needs_positions)
+        li.catalog().read(all_tids, with_positions=positional)
         if all_tids
         else pd.DataFrame()
     )
-    by_tid_shard: dict[tuple[int, int], dict] = {}
+    # {shard: {term_id: posting row}}
+    by_shard: dict[int, dict[int, dict]] = {}
     for rec in rows.to_dict("records") if len(rows) else []:
-        by_tid_shard[(int(rec["term_id"]), int(rec["shard"]))] = rec
-    shards_by_tid: dict[int, list[int]] = {}
-    for tid, shard in by_tid_shard:
-        shards_by_tid.setdefault(tid, []).append(shard)
+        by_shard.setdefault(int(rec["shard"]), {})[int(rec["term_id"])] = rec
 
-    qlist = [q for _, q in queries.iterrows()]
     deleted_by_shard = li.deleted_by_shard()
     if excluded_ids is not None and len(excluded_ids):
         from invoicenet_spark.index.deletes import split_by_shard
@@ -826,36 +407,38 @@ def search_local(
             cur = merged.get(sh)
             merged[sh] = ids if cur is None else np.union1d(cur, ids)
         deleted_by_shard = merged
-    workers = n_threads if n_threads is not None else 1
-    if workers > 1 and len(qlist) > 1:
-        from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=workers) as ex:
-            per_query = list(
-                ex.map(
-                    lambda q: _run_one_query(
-                        q, term_info, by_tid_shard, shards_by_tid, stats, kernel,
-                        deleted_by_shard, count_only=count_only,
-                    ),
-                    qlist,
-                )
+    shards = sorted(by_shard.items())
+    out_rows, totals = [], []
+    for spec in specs:
+        slot_tids = {t for t, _ in spec.slots}
+        per_shard = [
+            spec.run_shard(
+                rows_, stats, kernel=kernel, deleted=deleted_by_shard.get(shard),
+                count=count_only,
             )
-    else:
-        per_query = [
-            _run_one_query(
-                q, term_info, by_tid_shard, shards_by_tid, stats, kernel,
-                deleted_by_shard, count_only=count_only,
-            )
-            for q in qlist
+            for shard, rows_ in shards
+            if not slot_tids.isdisjoint(rows_)
+        ]
+        if count_only:
+            totals.append(int(sum(per_shard)))
+            continue
+        if not per_shard:
+            continue
+        top_d, top_s = kernels.topk_select(
+            np.concatenate([d for d, _ in per_shard]),
+            np.concatenate([s for _, s in per_shard]),
+            spec.k,
+        )
+        out_rows += [
+            (spec.query_id, rank, int(d), float(s))
+            for rank, (d, s) in enumerate(zip(top_d, top_s), start=1)
         ]
     if count_only:
         # counts include zero-match queries (track_total_hits contract)
-        got = {int(qid): int(n) for rows_ in per_query for qid, n in rows_}
         return pd.DataFrame(
-            {"query_id": [int(q["query_id"]) for q in qlist],
-             "total_hits": [got.get(int(q["query_id"]), 0) for q in qlist]}
+            {"query_id": [s.query_id for s in specs], "total_hits": totals}
         )
-    out_rows = [row for rows_ in per_query for row in rows_]
 
     out = pd.DataFrame(out_rows, columns=["query_id", "rank", "doc_id", "score"])
     if with_url and len(out):

@@ -170,37 +170,12 @@ def apply_synonyms_rows(queries, synonyms: dict | None):
                     leaves[0] if len(leaves) == 1
                     else {"kind": "or", "clauses": leaves, "min_match": 0}
                 )
-            base = (
+            # the row's neg_terms fold into the tree with every other BOOL
+            # row's (plan.normalize)
+            queries.at[i, "tree"] = (
                 groups[0] if len(groups) == 1
                 else {"kind": "and", "clauses": groups}
             )
-            # fold the row's neg_terms into the tree (flat_row_to_tree's
-            # negs shape) and CLEAR the column: a BOOL row's neg_terms is
-            # never read by the serving path's _run_bool_query, so leaving
-            # it would silently stop excluding must_not docs there
-            negs = (
-                queries.at[i, "neg_terms"]
-                if "neg_terms" in queries.columns
-                else None
-            )
-            if (
-                negs is not None
-                and hasattr(negs, "__len__")
-                and not isinstance(negs, str)
-                and len(negs) > 0
-            ):
-                nl = [
-                    {"kind": "term", "term": t, "boost": 1.0}
-                    for t in dict.fromkeys(negs)
-                ]
-                base = {
-                    "kind": "not",
-                    "positive": base,
-                    "negative": nl[0] if len(nl) == 1
-                    else {"kind": "or", "clauses": nl},
-                }
-                queries.at[i, "neg_terms"] = []
-            queries.at[i, "tree"] = base
             queries.at[i, "mode"] = "BOOL"
     return queries
 

@@ -425,3 +425,26 @@ def test_fielded_and_with_synonyms(spark, fielded_idx):
     assert np.allclose(
         manual["score"].to_numpy(dtype=float), sp["score"].to_numpy(dtype=float)
     )
+
+
+@pytest.mark.parametrize(
+    "row",
+    [
+        {"terms": ["query"], "mode": "OR", "fields": {"title": 1.0, "body": 1.0}},
+        {"terms": ["query"], "mode": "AND", "fields": {"title": 2.0, "body": 1.0}},
+        {"terms": ["query"], "mode": "BOOL", "fields": None},
+    ],
+)
+def test_fielded_neg_terms_exclude_on_both_paths(spark, fielded_idx, row):
+    """neg_terms beside a `fields` map (or a BOOL query) on a fielded index
+    are bare terms: they must qualify across the fields like the positive
+    leaves and exclude their docs — not silently match no dictionary key.
+    Docs 0 and 1 carry `spark` (title or body), so only 2 and 5 remain."""
+    root, idx = fielded_idx
+    q = pd.DataFrame([{"query_id": 1, "k": BIG, "neg_terms": ["spark"], **row}])
+    want = {2, 5}
+    got = search(spark, idx, q).toPandas()
+    loc = search_local(root, q)
+    assert set(got["url"].astype(int)) == want
+    assert set(loc["url"].astype(int)) == want
+    np.testing.assert_array_equal(got["score"].to_numpy(), loc["score"].to_numpy())

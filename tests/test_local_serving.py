@@ -159,15 +159,6 @@ def test_serving_sees_incremental_update(spark, tmp_path):
     assert sorted(got) == sorted(want_t)
 
 
-def test_batch_serving_threads_match_serial(spark, pos_index):
-    """The threaded batch fan-out must be result-identical to the serial
-    path (each query is independent; determinism is per-query)."""
-    queries = gen_queries(40, seed=7)
-    serial = search_local(pos_index, queries, n_threads=1)
-    threaded = search_local(pos_index, queries, n_threads=8)
-    assert serial.equals(threaded)
-
-
 def test_local_facets_and_sort_match_spark_ops(spark, pos_index):
     """Round-5 serving parity: facet_counts_local / top_by_field_local are
     value- and rank-identical to the Spark ops over the same match set,
