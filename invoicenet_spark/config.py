@@ -60,9 +60,10 @@ class EngineConfig:
     # affecting: persisted in the index manifest like the analyzer knobs.
     extract_strategy: str = "strip_tags"
 
-    # Positional postings (phrase-query support). Opt-in: the build then
-    # streams token-level rows (with positions) through the encoder instead
-    # of pre-aggregated pairs — more Arrow traffic, bigger index (~+40%).
+    # Positional postings (phrase-query support). Opt-in: the build's token
+    # rows then keep their `pos` column through the range shuffle into the
+    # encoder, which writes a position stream beside doc/tf/dl — more
+    # shuffle and Arrow traffic, bigger index (~+40%).
     # Position semantics: 0-based ordinal in the analyzed token sequence
     # (the reference's token geometry analog, SURVEY.md §1.1 item 2).
     with_positions: bool = False

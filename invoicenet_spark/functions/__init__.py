@@ -1,4 +1,4 @@
-from invoicenet_spark.functions.analyzer import tokens_col, tokenize_pages
+from invoicenet_spark.functions.analyzer import tokens_col
 from invoicenet_spark.functions.extract import extract_text
 
-__all__ = ["tokens_col", "tokenize_pages", "extract_text"]
+__all__ = ["tokens_col", "extract_text"]

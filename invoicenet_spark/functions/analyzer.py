@@ -132,25 +132,6 @@ def analyze_terms(
     return out
 
 
-def tokenize_pages(df, text_col: str = "text", with_positions: bool = True):
-    """pages-like df → one row per token: (…, pos int, term string).
-
-    posexplode preserves reading order (reference analog: OCR emits words in
-    reading order, invoicenet/common/util.py:171-190). `doc_len` is computed
-    doc-side before the explode so no window/self-join is needed later.
-    """
-    toks = df.withColumn("_tokens", tokens_col(text_col)).withColumn(
-        "doc_len", F.size("_tokens")
-    )
-    if with_positions:
-        exploded = toks.select(
-            "*", F.posexplode("_tokens").alias("pos", "term")
-        ).drop("_tokens")
-    else:
-        exploded = toks.select("*", F.explode("_tokens").alias("term")).drop("_tokens")
-    return exploded
-
-
 def ngrams_col(text_col: str | Column = "text", n_max: int = 4) -> Column:
     """All 1..n_max-grams per document (reference T2: all 1..4-grams within a
     line, invoicenet/common/util.py:196). Built from the token array with

@@ -6,12 +6,16 @@ parallelized by a process pool (prepare_data.py:113-120). The engine re-plans
 it Spark-first:
 
   pages ──filter(lang)──> extract_text (Arrow UDF, narrow)
-        ──tokenize (JVM codegen)──> token rows (term, doc_id, shard, doc_len)
-        ──ONE shuffle: repartition(term, shard) + sortWithinPartitions──>
-        ──mapInPandas vectorized encoder──> postings rows
+        ──analyze ONCE (JVM codegen, persisted)──> token arrays per doc
+        ──posexplode──> token rows (term, doc_id, doc_len[, pos])
+        ──ONE shuffle: repartitionByRange(term_id, shard) + sortWithinPartitions──>
+        ──mapInArrow vectorized encoder (tf = run length)──> postings rows
         ──write parquet partitioned by shard (per-shard commit = lineage)
   terms dictionary + corpus stats aggregated FROM the committed postings
   (df = Σ df_shard), so the build is a single pass over the token stream.
+  Every index writer (build_index, update_index, build_index_range,
+  prepare_global_artifacts) goes through the same analyze step
+  (analyzed_pages) and the same token rows (_token_rows).
 
 Skew (north_rule): posting lists are sharded by docID range
 (shard = doc_id // shard_size), so a Zipfian head term's postings are spread
@@ -41,6 +45,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 import numpy as np
@@ -189,11 +194,6 @@ def vacuum_docs_dirs(paths: IndexPaths) -> list[str]:
             removed.append(full)
     return removed
 
-
-# Encode-pipeline shape switch (A/B-measured in round 6): True streams raw
-# token rows into the range shuffle (tf by run-length in the kernel); False
-# pre-aggregates (term, doc) pairs before the shuffle.
-_TOKEN_STREAM_ENCODE = True
 
 POSTINGS_SCHEMA = (
     "term_id long, shard long, df_shard long, "
@@ -344,15 +344,15 @@ def _encode_plists_arrow(
 
 
 def _encode_partition(batches, block_size: int, shard_size: int):
-    """mapInArrow kernel over sorted tf-pair rows:
-    (term_id long, doc_id long, doc_len int, tf long), sorted by
-    (term_id, doc_id) within the partition, hash-partitioned on
-    (term_id, doc_id // shard_size).
+    """mapInArrow kernel over sorted posting input rows, range-partitioned
+    on (term_id, doc_id // shard_size) and sorted by (term_id, doc_id[, pos])
+    within the partition: token rows (term_id long, doc_id long, doc_len
+    int[, pos]) from the build, or decoded pair rows carrying a `tf` column
+    from compaction (see _encode_rows).
 
     All-numeric row stream — no strings cross the Arrow boundary (the term
-    dictionary is joined in the JVM beforehand); measured several times
-    cheaper than either streaming raw tokens or collect_list group rows
-    (the latter GC-thrashed the JVM at 10^6 docs). The trailing incomplete
+    dictionary is joined in the JVM beforehand; collect_list group rows
+    GC-thrashed the JVM at 10^6 docs). The trailing incomplete
     (term_id, shard) group is carried across batch boundaries so groups are
     never split (SURVEY.md §4 custom pieces #1/#3).
     """
@@ -381,34 +381,31 @@ def _encode_partition(batches, block_size: int, shard_size: int):
 
 
 def _encode_rows(tbl: "pa.Table", block_size: int, shard_size: int) -> "pa.RecordBatch":
-    """Pair rows (term_id, doc_id, doc_len, tf) OR token rows
-    (term_id, doc_id, doc_len, pos) → grouped posting rows.
+    """Token rows (term_id, doc_id, doc_len[, pos]) OR pair rows
+    (term_id, doc_id, doc_len, tf) → grouped posting rows.
 
-    Token rows (positional index) arrive sorted by (term_id, doc_id, pos);
-    run-length over (term_id, doc_id) yields tf, and the pos column becomes
-    the per-posting position stream."""
+    Token rows — every build — arrive sorted by (term_id, doc_id[, pos]):
+    run-length over (term_id, doc_id) yields tf, and a pos column becomes
+    the per-posting position stream. Pair rows are compaction's decoded
+    non-positional postings (index/maintain.py), which carry tf already."""
     tids = tbl.column("term_id").to_numpy()
     docs = tbl.column("doc_id").to_numpy().astype(np.int64)
     dl = tbl.column("doc_len").to_numpy().astype(np.int64)
-    positional = "pos" in tbl.column_names
     n = tids.size
-    if positional or "tf" not in tbl.column_names:
-        # token rows (with or without a position stream), sorted by
-        # (term_id, doc_id[, pos]): run-length over (term_id, doc_id)
-        # yields tf — the non-positional token-stream build skips the
-        # (term, doc) pre-aggregation shuffle and derives tf here instead
-        pos_flat = (
-            tbl.column("pos").to_numpy().astype(np.int64) if positional else None
-        )
+    pos_flat = (
+        tbl.column("pos").to_numpy().astype(np.int64)
+        if "pos" in tbl.column_names
+        else None
+    )
+    if "tf" in tbl.column_names:
+        tf = tbl.column("tf").to_numpy().astype(np.int64)
+        tids_p, docs_p, dl_p = tids, docs, dl
+    else:
         new_posting = np.ones(n, dtype=bool)
         new_posting[1:] = (tids[1:] != tids[:-1]) | (docs[1:] != docs[:-1])
         p_start = np.flatnonzero(new_posting)
         tf = np.diff(np.append(p_start, n)).astype(np.int64)
         tids_p, docs_p, dl_p = tids[p_start], docs[p_start], dl[p_start]
-    else:
-        pos_flat = None
-        tf = tbl.column("tf").to_numpy().astype(np.int64)
-        tids_p, docs_p, dl_p = tids, docs, dl
     shards_p = docs_p // shard_size
     m = tids_p.size
     new_group = np.ones(m, dtype=bool)
@@ -455,8 +452,83 @@ def tokens_from_pages(pages: DataFrame, cfg: EngineConfig, use_stored_text: bool
     )
 
 
+def _toks_cols(cfg: EngineConfig) -> dict[str, str]:
+    """Text column → its analyzed token-array column: `text` → `_toks`, or
+    one `_toks_<field>` per field of a fielded index."""
+    if cfg.fields:
+        return {f: f"_toks_{f}" for f in cfg.fields}
+    return {"text": "_toks"}
+
+
+@contextmanager
+def analyzed_pages(pages_text: DataFrame, cfg: EngineConfig):
+    """The ONE analyze step every index writer goes through: pages_text
+    (tokens_from_pages output) → (url[, warc_ts][, stored text], token
+    arrays), persisted MEMORY_AND_DISK while the writer runs and dropped on
+    exit. Doc lengths (build_doc_table), the term dictionary and the encode
+    (_token_rows) only read the arrays, so extraction and the analyzer chain
+    run once per write. At 100 TB the equivalent is materializing extracted
+    text once as a snapshot (the use_stored_text path)."""
+    from pyspark.storagelevel import StorageLevel
+
+    toks = _toks_cols(cfg)
+    ts = ["warc_ts"] if "warc_ts" in pages_text.columns else []
+    stored = list(toks) if cfg.store_text else []
+    analyzed = pages_text.select(
+        "url",
+        *ts,
+        *stored,
+        *[
+            analyze_col(c, cfg.token_pattern, cfg.stopwords, cfg.stem).alias(t)
+            for c, t in toks.items()
+        ],
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        yield analyzed
+    finally:
+        analyzed.unpersist()
+
+
+def _token_rows(frame: DataFrame, cfg: EngineConfig, *carry: str) -> DataFrame:
+    """Columns (term, *carry, doc_len, pos): one row per analyzed token of a
+    frame holding the analyzed_pages token arrays. doc_len is the token
+    count the posting normalizes by (computed BEFORE the explode, so the
+    array never rides along with each token row) and pos the token's
+    0-based ordinal.
+
+    On a fielded index the term is the dictionary key `field:token`
+    (Lucene's per-field term dictionary), doc_len the FIELD length and pos
+    the per-field ordinal, so every posting row is self-contained for
+    per-field BM25 normalization with zero codec change, and proximity
+    never crosses a field boundary. All fields explode in ONE scan: a
+    union-of-selects would scan the frame (the pages ⋈ docs join) once per
+    field and double-fire its row-count Observation."""
+    if not cfg.fields:
+        return frame.select(
+            *carry, "_toks", F.size("_toks").alias("doc_len")
+        ).select(F.posexplode("_toks").alias("pos", "term"), *carry, "doc_len")
+
+    def _structs(f: str):
+        toks = F.col(f"_toks_{f}")
+        return F.transform(
+            toks,
+            lambda t, i: F.struct(
+                F.concat(F.lit(f + ":"), t).alias("term"),
+                F.size(toks).alias("doc_len"),
+                i.alias("pos"),
+            ),
+        )
+
+    return frame.select(
+        *carry,
+        F.explode(F.flatten(F.array(*[_structs(f) for f in cfg.fields]))).alias("x"),
+    ).select("x.term", *carry, "x.doc_len", "x.pos")
+
+
 def build_doc_table(pages_text: DataFrame, cfg: EngineConfig, id_offset: int = 0) -> DataFrame:
     """(doc_id, url, doc_len, shard): dense docIDs by url rank (ids.py).
+    pages_text is an analyzed_pages frame: doc_len is the size of its token
+    arrays, nothing is re-analyzed.
 
     id_offset: first docID to assign — incremental builds pass the next
     shard-aligned boundary so new docs land in fresh shards and committed
@@ -477,30 +549,15 @@ def build_doc_table(pages_text: DataFrame, cfg: EngineConfig, id_offset: int = 0
         if "warc_ts" in pages_text.columns
         else [F.lit(None).cast("timestamp").alias("warc_ts")]
     )
+    toks = _toks_cols(cfg)
+    stored = list(toks) if cfg.store_text else []
     if cfg.fields:
-        stored = list(cfg.fields) if cfg.store_text else []
-        dl_cols = [
-            F.size(analyze_col(f, cfg.token_pattern, cfg.stopwords, cfg.stem)).alias(f"dl_{f}")
-            for f in cfg.fields
-        ]
-        with_len = pages_text.select("url", *dl_cols, *ts_col, *stored).withColumn(
-            "doc_len",
-            sum(F.col(f"dl_{f}") for f in cfg.fields),
-        )
-    else:
-        stored = ["text"] if cfg.store_text else []
-        # a pre-analyzed frame (build_index's cached token arrays) carries
-        # `_toks`; doc_len is then just the array size — no re-tokenize
-        dl = (
-            F.size(F.col("_toks"))
-            if "_toks" in pages_text.columns
-            else F.size(analyze_col("text", cfg.token_pattern, cfg.stopwords, cfg.stem))
-        )
         with_len = pages_text.select(
-            "url",
-            dl.alias("doc_len"),
-            *ts_col,
-            *stored,
+            "url", *[F.size(t).alias(f"dl_{f}") for f, t in toks.items()], *ts_col, *stored
+        ).withColumn("doc_len", sum(F.col(f"dl_{f}") for f in cfg.fields))
+    else:
+        with_len = pages_text.select(
+            "url", F.size("_toks").alias("doc_len"), *ts_col, *stored
         )
     docs = assign_dense_ids(with_len, key="url", id_col="doc_id", num_partitions=cfg.build_partitions)
     if id_offset:
@@ -563,78 +620,51 @@ def build_index(
     if dedup_exact:
         pages_text = dedup_pages_exact(pages_text, cfg)
 
-    # Extraction + tokenization run ONCE per build (round 6, guide §2.4):
-    # phase 1 (doc_len) and phase 2 (the token explode) both consumed
-    # pages_text, so the Arrow-C++ extraction and the analyzer chain each
-    # executed twice per build. Cache the analyzed token arrays instead —
-    # doc_len becomes size(_toks) and phase 2 explodes the cached arrays.
-    # Non-fielded only (the fielded build derives per-field arrays inline).
-    # At 100 TB the equivalent is materializing extracted text once as a
-    # snapshot (the use_stored_text path); MEMORY_AND_DISK bounds the local
-    # cost, and the cache is dropped before finalize returns.
-    analyzed = None
-    if not cfg.fields:
-        from pyspark.storagelevel import StorageLevel
+    with analyzed_pages(pages_text, cfg) as analyzed:
+        # ---- phase 1: doc dictionary (committed once; reused on resume).
+        # Written partitioned by `segment` so incremental appends are
+        # per-segment directories — an aborted update is undone by removing
+        # one directory.
+        if resume and os.path.exists(paths.docs):
+            docs = spark.read.parquet(paths.docs)
+        else:
+            t0 = time.time()
+            build_doc_table(analyzed, cfg).withColumn(
+                "segment", F.lit("base")
+            ).write.mode("overwrite").partitionBy("segment").parquet(paths.docs)
+            docs = spark.read.parquet(paths.docs)
+            manifest["phase1_sec"] = round(time.time() - t0, 3)
+        # the stored `shard` column is advisory — derive it from the LAYOUT
+        # (manifest shard_size) so it can never go stale (compaction changes
+        # shard_size without rewriting the docs table)
+        docs = docs.withColumn(
+            "shard", (F.col("doc_id") / F.lit(cfg.shard_size)).cast("long")
+        )
 
-        stored = ["text"] if cfg.store_text else []
-        ts_cols = ["warc_ts"] if "warc_ts" in pages_text.columns else []
-        analyzed = pages_text.select(
-            "url",
-            *ts_cols,
-            *stored,
-            analyze_col("text", cfg.token_pattern, cfg.stopwords, cfg.stem).alias(
-                "_toks"
-            ),
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        pages_text = analyzed
+        all_shards = sorted(
+            int(r["shard"]) for r in docs.select("shard").distinct().collect()
+        )
+        done = log.committed()
+        pending = [s for s in all_shards if s not in done]
 
-    # ---- phase 1: doc dictionary (committed once; reused on resume).
-    # Written partitioned by `segment` so incremental appends are per-segment
-    # directories — an aborted update is undone by removing one directory.
-    if resume and os.path.exists(paths.docs):
-        docs = spark.read.parquet(paths.docs)
-    else:
+        # ---- phase 2: postings, committed per shard (lineage granularity)
         t0 = time.time()
-        build_doc_table(pages_text, cfg).withColumn(
-            "segment", F.lit("base")
-        ).write.mode("overwrite").partitionBy("segment").parquet(paths.docs)
-        docs = spark.read.parquet(paths.docs)
-        manifest["phase1_sec"] = round(time.time() - t0, 3)
-    # the stored `shard` column is advisory — derive it from the LAYOUT
-    # (manifest shard_size) so it can never go stale (compaction changes
-    # shard_size without rewriting the docs table)
-    docs = docs.withColumn(
-        "shard", (F.col("doc_id") / F.lit(cfg.shard_size)).cast("long")
-    )
-
-    all_shards = sorted(
-        int(r["shard"]) for r in docs.select("shard").distinct().collect()
-    )
-    done = log.committed()
-    pending = [s for s in all_shards if s not in done]
-
-    # ---- phase 2: postings, committed per shard (lineage granularity)
-    t0 = time.time()
-    observed = {"n_docs": 0, "posting_rows": 0, "n_postings": 0}
-    try:
+        observed = {"n_docs": 0, "posting_rows": 0, "n_postings": 0}
         if pending:
             docs_pending = docs.where(F.col("shard").isin(pending))
             observed = _encode_and_commit(
-                spark, pages_text, docs_pending, pending, cfg, paths, log,
+                spark, analyzed, docs_pending, pending, cfg, paths, log,
                 fail_after_shards,
             )
 
-        # ---- phase 3: terms dictionary + corpus stats + metrics
-        _finalize(spark, docs, cfg, paths, manifest, log, t0, observed)
-    finally:
-        if analyzed is not None:
-            analyzed.unpersist()
+    # ---- phase 3: terms dictionary + corpus stats + metrics
+    _finalize(spark, docs, cfg, paths, manifest, log, t0, observed)
     return paths
 
 
 def _encode_and_commit(
     spark,
-    pages_text: DataFrame,
+    analyzed: DataFrame,
     docs_pending: DataFrame,
     pending: list[int],
     cfg: EngineConfig,
@@ -642,143 +672,36 @@ def _encode_and_commit(
     log: ShardLog,
     fail_after_shards: int | None = None,
 ) -> dict:
-    """Token shuffle + vectorized encode + per-shard directory commit.
-    Returns {"n_docs", "posting_rows", "n_postings"} — all measured with
-    Observation (A6/A7: metrics ride the job's own actions instead of
-    re-aggregating with extra jobs)."""
+    """Token rows + one range shuffle + vectorized encode + per-shard
+    directory commit, over an analyzed_pages frame. Returns {"n_docs",
+    "posting_rows", "n_postings"} — all measured with Observation (A6/A7:
+    metrics ride the job's own actions instead of re-aggregating with extra
+    jobs)."""
     from pyspark.sql import Observation
-    from pyspark.storagelevel import StorageLevel
 
     obs_docs = Observation()
     obs_enc = Observation()
-    # join brings (doc_id, doc_len) onto the page text; on a fresh build
-    # this is the only wide op before the aggregation cascade. From here:
-    #   tokens --groupBy(term, doc_id)--> tf pairs    [JVM hash agg with
-    #       map-side partial combine: a doc's repeated terms never shuffle]
-    #   pairs --persist--> feeds BOTH the term dictionary and the encode
-    #   pairs ⋈ dictionary --repartition(term_id, shard) + sort--> kernel
-    # The Python boundary carries ALL-NUMERIC pair rows (term_id, doc_id,
-    # doc_len, tf). Alternatives measured and rejected: raw token rows
-    # (strings, 2x slower Arrow transfer), collect_list group rows (JVM
-    # object churn GC-thrashed at 10^6 docs). shard is an expression
-    # (doc_id // shard_size), never a shuffled column, and bounds every
-    # (term, shard) group at shard_size docs — no hot-term straggler.
-    # join only what the encode needs — docs may carry more columns (e.g.
-    # stored text when cfg.store_text), which must not shuffle here or
-    # shadow pages_text's own `text`
-    dl_cols = [f"dl_{f}" for f in cfg.fields] if cfg.fields else []
-    src = pages_text.join(
-        docs_pending.select("url", "doc_id", "doc_len", *dl_cols), "url"
-    ).observe(
+    # the join brings doc_id onto the token arrays; on a fresh build it is
+    # the only wide op before the encode's one exchange. From here:
+    #   token rows --distinct term--> term dictionary (appended segments)
+    #   token rows ⋈ dictionary --repartitionByRange(term_id, shard) + sort-->
+    #       mapInArrow kernel (tf = run length over (term_id, doc_id))
+    # The Python boundary carries all-numeric token rows (term_id, doc_id,
+    # doc_len[, pos]); pos is projected away before the exchange on a
+    # non-positional index. shard is an expression (doc_id // shard_size),
+    # never a shuffled column, and bounds every (term, shard) group at
+    # shard_size docs — no hot-term straggler. Only (url, doc_id) of docs
+    # joins: docs may carry stored text, which must not shuffle here.
+    src = analyzed.join(docs_pending.select("url", "doc_id"), "url").observe(
         obs_docs, F.count(F.lit(1)).alias("n_docs")
     )
-
-    def _field_tokens(positional: bool) -> DataFrame:
-        """Token rows for a FIELDED index, in ONE scan: each row builds a
-        flattened array of (term=`field:token`, doc_len=field length[, pos])
-        structs across all fields, then one explode. The dictionary key is
-        `field:term` (Lucene's per-field term dictionary) and doc_len is the
-        FIELD length — so every posting row is self-contained for per-field
-        BM25 normalization with zero codec change. Positions are per-field
-        ordinals (proximity never crosses a field boundary by construction).
-        A union-of-selects shape would scan src (the pages ⋈ docs join) once
-        PER FIELD and double-fire its row-count Observation."""
-        def _arr(f: str):
-            toks = analyze_col(f, cfg.token_pattern, cfg.stopwords, cfg.stem)
-            dl = F.col(f"dl_{f}").cast("int")
-            if positional:
-                return F.transform(
-                    toks,
-                    lambda t, i: F.struct(
-                        F.concat(F.lit(f + ":"), t).alias("term"),
-                        dl.alias("doc_len"),
-                        i.alias("pos"),
-                    ),
-                )
-            return F.transform(
-                toks,
-                lambda t: F.struct(
-                    F.concat(F.lit(f + ":"), t).alias("term"), dl.alias("doc_len")
-                ),
-            )
-
-        exploded = src.select(
-            "doc_id",
-            F.explode(F.flatten(F.array(*[_arr(f) for f in cfg.fields]))).alias("x"),
-        )
-        cols = ["x.term", "doc_id", "x.doc_len"] + (["x.pos"] if positional else [])
-        return exploded.select(*cols)
-
+    tokens = _token_rows(src, cfg, "doc_id")
+    term_dict = _term_dictionary(spark, tokens, cfg, paths)
+    sort_cols = ["term_id", "doc_id"] + (["pos"] if cfg.with_positions else [])
+    enc_input = tokens.join(term_dict, "term").select(
+        "term_id", "doc_id", "doc_len", *sort_cols[2:]
+    )
     shard_expr = (F.col("doc_id") / F.lit(cfg.shard_size)).cast("long")
-    # a pre-analyzed pages frame (build_index's cached `_toks` arrays) makes
-    # re-deriving the token stream from cache cheap — no second persist of
-    # the exploded rows is needed and (non-positional) the (term, doc_id)
-    # pre-aggregation EXCHANGE can be skipped entirely: token rows go
-    # straight into the ONE range shuffle and the encode kernel computes tf
-    # by run-length, exactly as the positional path always has (round 6,
-    # guide §2.4 — the encode pipeline is now one exchange end to end).
-    cached_toks = "_toks" in pages_text.columns and not cfg.fields
-    token_stream = cached_toks and _TOKEN_STREAM_ENCODE
-    if cfg.with_positions:
-        # positional index: token-level rows (term, doc, pos) stream through
-        # the encoder; tf computed by run-length in-kernel. More Arrow
-        # traffic than the pairs path — the documented cost of phrases.
-        tokens = (
-            _field_tokens(True)
-            if cfg.fields
-            else src.select(
-                F.posexplode(
-                    F.col("_toks")
-                    if cached_toks
-                    else analyze_col(
-                        "text", cfg.token_pattern, cfg.stopwords, cfg.stem
-                    )
-                ).alias("pos", "term"),
-                "doc_id",
-                F.col("doc_len").cast("int").alias("doc_len"),
-            )
-        )
-        if not cached_toks:
-            tokens = tokens.persist(StorageLevel.MEMORY_AND_DISK)
-        pairs = tokens  # dictionary source + unpersist handle
-        term_dict = _term_dictionary(spark, tokens, cfg, paths)
-        enc_input = tokens.join(term_dict, "term").select(
-            "term_id", "doc_id", "doc_len", "pos"
-        )
-        sort_cols = ["term_id", "doc_id", "pos"]
-    else:
-        tokens = (
-            _field_tokens(False)
-            if cfg.fields
-            else src.select(
-                F.explode(
-                    F.col("_toks")
-                    if cached_toks
-                    else analyze_col(
-                        "text", cfg.token_pattern, cfg.stopwords, cfg.stem
-                    )
-                ).alias("term"),
-                "doc_id",
-                F.col("doc_len").cast("int").alias("doc_len"),
-            )
-        )
-        if token_stream:
-            # token-stream encode: one exchange, run-length tf in-kernel
-            pairs = tokens  # unpersist handle (no-op: not persisted)
-            term_dict = _term_dictionary(spark, tokens, cfg, paths)
-            enc_input = tokens.join(term_dict, "term").select(
-                "term_id", "doc_id", "doc_len"
-            )
-        else:
-            pairs = tokens.groupBy("term", "doc_id", "doc_len").agg(
-                F.count("*").alias("tf")
-            )
-            pairs = pairs.persist(StorageLevel.MEMORY_AND_DISK)
-            term_dict = _term_dictionary(spark, pairs, cfg, paths)
-            enc_input = pairs.join(term_dict, "term").select(
-                "term_id", "doc_id", "doc_len", "tf"
-            )
-        sort_cols = ["term_id", "doc_id"]
     # RANGE partitioning on (term_id, shard) — not hash. Equal keys still
     # land in one partition (groups are never split, every (term, shard)
     # group stays ≤ shard_size docs = skew-free), but each output FILE now
@@ -826,10 +749,7 @@ def _encode_and_commit(
     # range matches (Lucene-segment-ish granularity; the sequential-scan
     # penalty of smaller groups is a few % and scans are not this table's
     # job).
-    try:
-        write_and_commit_postings(encoded, pending, paths, log, fail_after_shards)
-    finally:
-        pairs.unpersist()
+    write_and_commit_postings(encoded, pending, paths, log, fail_after_shards)
     enc = _obs_metrics(obs_enc)
     docs_m = _obs_metrics(obs_docs)
     return {
@@ -931,7 +851,7 @@ def _dict_next_term_id(dict_path: str) -> int:
     return mx + 1
 
 
-def _term_dictionary(spark, pairs: DataFrame, cfg: EngineConfig, paths: IndexPaths) -> DataFrame:
+def _term_dictionary(spark, tokens: DataFrame, cfg: EngineConfig, paths: IndexPaths) -> DataFrame:
     """term → term_id mapping, grown by APPENDING new-term segments.
 
     Existing terms keep their ids (committed posting segments reference
@@ -945,10 +865,10 @@ def _term_dictionary(spark, pairs: DataFrame, cfg: EngineConfig, paths: IndexPat
     half-applied append is self-healing on retry.
     """
     dict_path = os.path.join(paths.root, "term_dict")
-    pairs_terms = pairs.select("term").distinct()
+    terms = tokens.select("term").distinct()
     if os.path.exists(dict_path):
         old = spark.read.parquet(dict_path)
-        new_terms = pairs_terms.join(old.select("term"), "term", "left_anti")
+        new_terms = terms.join(old.select("term"), "term", "left_anti")
         offset = _dict_next_term_id(dict_path)
         new_ids = assign_dense_ids(
             new_terms, key="term", id_col="term_id", num_partitions=cfg.build_partitions
@@ -956,7 +876,7 @@ def _term_dictionary(spark, pairs: DataFrame, cfg: EngineConfig, paths: IndexPat
         new_ids.write.mode("append").parquet(dict_path)
     else:
         assign_dense_ids(
-            pairs_terms, key="term", id_col="term_id", num_partitions=cfg.build_partitions
+            terms, key="term", id_col="term_id", num_partitions=cfg.build_partitions
         ).write.mode("overwrite").parquet(dict_path)
     return spark.read.parquet(dict_path)
 
@@ -1130,13 +1050,11 @@ def prepare_global_artifacts(
     paths = IndexPaths(root)
     os.makedirs(root, exist_ok=True)
     pages_text = tokens_from_pages(pages, cfg, use_stored_text=use_stored_text)
-    build_doc_table(pages_text, cfg).withColumn("segment", F.lit("base")).write.mode(
-        "overwrite"
-    ).partitionBy("segment").parquet(paths.docs)
-    terms = pages_text.select(
-        F.explode(analyze_col("text", cfg.token_pattern, cfg.stopwords, cfg.stem)).alias("term")
-    )
-    _term_dictionary(spark, terms, cfg, paths)
+    with analyzed_pages(pages_text, cfg) as analyzed:
+        build_doc_table(analyzed, cfg).withColumn("segment", F.lit("base")).write.mode(
+            "overwrite"
+        ).partitionBy("segment").parquet(paths.docs)
+        _term_dictionary(spark, _token_rows(analyzed, cfg), cfg, paths)
     _save_manifest(paths, {"config": _cfg_dict(cfg)})
     return paths
 
@@ -1183,9 +1101,10 @@ def build_index_range(
     )
     pages_text = tokens_from_pages(pages, cfg, use_stored_text=use_stored_text)
     log = ShardLog(out_dir)
-    observed = _encode_and_commit(
-        spark, pages_text, docs_range, pending, cfg, paths, log
-    )
+    with analyzed_pages(pages_text, cfg) as analyzed:
+        observed = _encode_and_commit(
+            spark, analyzed, docs_range, pending, cfg, paths, log
+        )
     log.close()
     return {"shards": pending, **observed}
 

@@ -344,23 +344,14 @@ def normalize_query(
     expand_prefix,
     expand_fuzzy,
     field_stats: dict | None = None,
-    analyzer: dict | None = None,
 ) -> dict:
-    """One driver-side entry for both paths: accept a tree dict, a JSON
-    string of one, or the string grammar; apply the index's token-filter
-    chain to user-written leaves (analyzer = stats.json {stopwords, stem});
+    """One driver-side entry for both paths: accept an already-analyzed
+    tree dict, a JSON string of one, or the string grammar (query/plan.py
+    runs the index's token-filter chain over user-written leaves first);
     on a fielded index, qualify bare leaves across all fields BEFORE
     dictionary expansion (prefix/fuzzy then expand against the
     field-qualified keys); expand prefix/fuzzy leaves."""
     t = as_tree(tree_or_string)
-    if analyzer and (analyzer.get("stopwords") or analyzer.get("stem")):
-        analyzed = analyze_tree_leaves(
-            t, tuple(analyzer.get("stopwords") or ()), analyzer.get("stem"),
-            field_stats or {},
-        )
-        # every clause was a stopword → nothing can match; keep the original
-        # tree (its terms are absent from the dictionary by construction)
-        t = analyzed if analyzed is not None else t
     if field_stats:
         t = qualify_bare_leaves(t, field_stats)
         _reject_cross_field_phrases(t, field_stats)

@@ -69,7 +69,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from invoicenet_spark.query import exec as qexec
+from invoicenet_spark.query import exec as qexec, plan
 
 
 # per-segment after_doc sentinel for segments BEFORE the cursor's segment:
@@ -231,33 +231,33 @@ class FederatedIndex:
             )
             for ix in segs
         ]
-        # Batched term resolution (round 6): each handle's driver-side
-        # dictionary cache used to warm lazily — two small Spark jobs PER
-        # SEGMENT on the first query (Index.local_dict: count + toPandas),
-        # so a 36-segment federation paid 72 driver jobs before the main
-        # job. Resolve (term → term_id, union df) for ALL live segments in
-        # ONE union job here (the open/dfs phase, where the df union is
-        # already computed), guarded by the same 5M-term ceiling —
-        # oversized vocabularies keep the pushed-filter dictionary-scan
-        # path exactly as before.
-        from pyspark.sql import functions as _F
+        # Batched term resolution: resolve (term → term_id, union df) for
+        # every live segment in ONE union job here (the open/dfs phase,
+        # where the df union is already computed) instead of two small jobs
+        # per segment on the first query. The plan.MAX_HOT_TERMS ceiling
+        # applies PER SEGMENT, from parquet footer row counts (no Spark
+        # job): an oversized segment keeps the pushed-filter
+        # dictionary-scan path without turning the hot dictionary off for
+        # the others.
+        import pyarrow.dataset as pads
 
-        uni = reduce(
-            DataFrame.unionByName,
-            [
-                h.terms.select(
-                    _F.lit(i).alias("_seg"), "term", "term_id", "df"
-                )
-                for i, h in enumerate(out)
-            ],
-        )
-        pdf = uni.limit(5_000_001).toPandas()
-        if len(pdf) <= 5_000_000:
-            for i, h in enumerate(out):
-                h._local_dict = (
-                    pdf[pdf["_seg"] == i]
-                    .drop(columns=["_seg"])
-                    .set_index("term")
+        hot = [
+            i
+            for i, h in enumerate(out)
+            if pads.dataset(h.paths.terms, format="parquet").count_rows()
+            <= plan.MAX_HOT_TERMS
+        ]
+        if hot:
+            pdf = reduce(
+                DataFrame.unionByName,
+                [
+                    out[i].terms.select(F.lit(i).alias("_seg"), "term", "term_id", "df")
+                    for i in hot
+                ],
+            ).toPandas()
+            for i in hot:
+                out[i]._local_dict = (
+                    pdf[pdf["_seg"] == i].drop(columns=["_seg"]).set_index("term")
                 )
         self._global_cache[live] = out
         return out
@@ -456,8 +456,6 @@ def search_local_federated(
     # expansion against each segment's dictionary, BOOL leaf terms) — any
     # probe/scoring divergence would silently score a term with its
     # segment-local df instead of the union's.
-    from invoicenet_spark.query import plan
-
     probe: set[str] = set()
     for i in live:
         probe |= plan.normalize(lis[i], queries, lis[i].stats)[1]

@@ -8,15 +8,17 @@ the one router, kernels.run_shard.
 
 Pipeline (`normalize`), in this order:
 
-  analyze    the index's token-filter chain on flat rows (qparse)
+  analyze    the index's token-filter chain, ONCE per user-written term:
+             flat rows and neg_terms (qparse), user BOOL trees' leaves
+             (parsed here); no later step analyzes again
   synonyms   OR rows gain clauses, AND rows become BOOL trees (qparse)
   fielded    rows with a `fields` weight map become BOOL trees (booltree)
-  bool       every BOOL row's tree is parsed once; its `neg_terms` fold
-             into the tree as a `not` wrapper, so bare-leaf qualification
-             and dictionary lookup cover them like any other leaf
+  negations  every BOOL row's `neg_terms` fold into its tree as a `not`
+             wrapper, so bare-leaf qualification and dictionary lookup
+             cover them like any other leaf
   expand     fielded index: flat rows become bare-leaf trees; otherwise
              PREFIX/FUZZY/WILDCARD/REGEX rows expand against the dictionary
-  trees      BOOL trees analyze, qualify, expand and get field stats
+  trees      BOOL trees qualify, expand and get field stats
   needed     every dictionary key the batch can touch
 
 Dictionary access goes through the `Dictionary` adapter both index handles
@@ -134,19 +136,22 @@ def _term_list(v) -> list[str]:
     return []
 
 
-def _parse_bool_rows(queries: pd.DataFrame) -> pd.DataFrame:
-    """Parse every BOOL row's query (the `tree` column — dict or JSON — wins
-    over a single query string in `terms`) and fold its `neg_terms` into the
-    tree (booltree.with_negations), clearing the column: a BOOL row's
-    must_not then rides the tree on every path, and on a fielded index its
-    bare leaves qualify across fields like the positive ones."""
+def _parse_bool_rows(queries: pd.DataFrame, stats: dict) -> pd.DataFrame:
+    """Parse every user-written BOOL row's query (the `tree` column — dict
+    or JSON — wins over a single query string in `terms`) and run the
+    index's token-filter chain over its leaves (booltree.analyze_tree_leaves
+    — the tree half of qparse.analyze_query_rows). Together the two analyze
+    each user-written term exactly once: trees the later steps build come
+    from already-analyzed terms and are never analyzed again (a stem that
+    is itself a stopword, `ares` → `are`, would otherwise elide)."""
     mask = queries["mode"] == "BOOL"
     if not mask.any():
         return queries
     queries = queries.copy()
     if "tree" not in queries.columns:
         queries["tree"] = None
-    has_neg = "neg_terms" in queries.columns
+    stopwords = tuple(stats.get("stopwords") or ())
+    stem = stats.get("stem")
     for i in queries.index[mask]:
         raw = queries.at[i, "tree"]
         if _is_null(raw):
@@ -157,9 +162,30 @@ def _parse_bool_rows(queries: pd.DataFrame) -> pd.DataFrame:
                     "query string in `terms`"
                 )
             raw = ts[0]
-        negs = _term_list(queries.at[i, "neg_terms"]) if has_neg else []
-        queries.at[i, "tree"] = booltree.with_negations(booltree.as_tree(raw), negs)
+        tree = booltree.as_tree(raw)
+        if stopwords or stem:
+            # every clause a stopword → keep the original tree: its terms
+            # are absent from the dictionary, so it matches nothing
+            tree = booltree.analyze_tree_leaves(
+                tree, stopwords, stem, stats.get("fields") or {}
+            ) or tree
+        queries.at[i, "tree"] = tree
+    return queries
+
+
+def _fold_negations(queries: pd.DataFrame) -> pd.DataFrame:
+    """Fold every BOOL row's `neg_terms` into its tree
+    (booltree.with_negations), clearing the column: a BOOL row's must_not
+    then rides the tree on every path, and on a fielded index its bare
+    leaves qualify across fields like the positive ones."""
+    mask = queries["mode"] == "BOOL"
+    if not mask.any() or "neg_terms" not in queries.columns:
+        return queries
+    queries = queries.copy()
+    for i in queries.index[mask]:
+        negs = _term_list(queries.at[i, "neg_terms"])
         if negs:
+            queries.at[i, "tree"] = booltree.with_negations(queries.at[i, "tree"], negs)
             queries.at[i, "neg_terms"] = []
     return queries
 
@@ -175,9 +201,10 @@ def normalize(
     touch; positional says whether any row needs position streams."""
     field_stats = stats.get("fields") or {}
     queries = qparse.analyze_query_rows(queries, stats)
+    queries = _parse_bool_rows(queries, stats)
     queries = qparse.apply_synonyms_rows(queries, synonyms)
     queries = booltree.rewrite_fielded_rows(queries, field_stats, synonyms=synonyms)
-    queries = _parse_bool_rows(queries)
+    queries = _fold_negations(queries)
     if field_stats:
         if queries["mode"].isin(["WILDCARD", "REGEX"]).any():
             raise ValueError(
@@ -208,7 +235,7 @@ def normalize(
             tree = booltree.attach_field_stats(
                 booltree.normalize_query(
                     queries.at[i, "tree"], d.expand_prefixes, d.expand_fuzzy,
-                    field_stats=field_stats, analyzer=stats,
+                    field_stats=field_stats,
                 ),
                 field_stats,
             )

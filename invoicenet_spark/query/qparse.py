@@ -65,7 +65,7 @@ def analyze_query_rows(queries, stats: dict):
     they are absent from the dictionary by construction, so the row
     matches nothing (Lucene's match-no-docs for an all-stopword query).
     PREFIX/FUZZY rows are never analyzed (multi-term convention); BOOL
-    rows are handled leaf-wise in booltree.normalize_query. neg_terms
+    rows are analyzed leaf-wise by plan.normalize's BOOL parse. neg_terms
     analyze the same way (a stopword negation excludes nothing either
     way). No-op when the index has no chain."""
     import pandas as pd

@@ -43,6 +43,7 @@ from invoicenet_spark.index.build import (
     _finalize,
     _load_manifest,
     _save_manifest,
+    analyzed_pages,
     build_doc_table,
     build_index,
     cfg_from_manifest,
@@ -122,56 +123,57 @@ def update_index(
     offset = ((int(max_id) // cfg.shard_size) + 1) * cfg.shard_size
 
     pages_text = tokens_from_pages(delta, cfg, use_stored_text=use_stored_text)
-    docs_new = build_doc_table(pages_text, cfg, id_offset=offset)
+    with analyzed_pages(pages_text, cfg) as analyzed:
+        docs_new = build_doc_table(analyzed, cfg, id_offset=offset)
 
-    # re-crawl upsert: tombstone the EXISTING doc of every url the delta
-    # re-delivers. Derived from docs_existing (file set snapshotted BEFORE
-    # this delta's append) so a doc can never tombstone itself; WRITTEN
-    # only after the new segment's postings commit (below). Crash/ordering
-    # contract: mid-update (or crashed-before-tombstones) the url is served
-    # by its OLD version — or transiently by BOTH versions for a fresh
-    # reader in the commit→tombstone window — but never by NEITHER; the
-    # exactly-once view is restored at _finalize's generation bump (or the
-    # retry). Retry-idempotent: a retry recomputes the same ids and
-    # duplicates union away.
-    old_ids = (
-        docs_existing.join(docs_new.select("url"), "url").select("doc_id")
-        if upsert
-        else None
-    )
+        # re-crawl upsert: tombstone the EXISTING doc of every url the delta
+        # re-delivers. Derived from docs_existing (file set snapshotted
+        # BEFORE this delta's append) so a doc can never tombstone itself;
+        # WRITTEN only after the new segment's postings commit (below).
+        # Crash/ordering contract: mid-update (or crashed-before-tombstones)
+        # the url is served by its OLD version — or transiently by BOTH
+        # versions for a fresh reader in the commit→tombstone window — but
+        # never by NEITHER; the exactly-once view is restored at _finalize's
+        # generation bump (or the retry). Retry-idempotent: a retry
+        # recomputes the same ids and duplicates union away.
+        old_ids = (
+            docs_existing.join(docs_new.select("url"), "url").select("doc_id")
+            if upsert
+            else None
+        )
 
-    # WAL-style: record the pending segment BEFORE the append so a crash
-    # anywhere up to the final manifest commit is undone on retry
-    segment = f"snap{current}"
-    manifest["pending_segment"] = segment
-    _save_manifest(paths, manifest)
-    docs_new.withColumn("segment", F.lit(segment)).write.mode("append").partitionBy(
-        "segment"
-    ).parquet(paths.docs)
-    # stored `shard` is advisory — derive from the layout (robust to any
-    # earlier compaction having changed shard_size)
-    docs_new = (
-        spark.read.parquet(paths.docs)
-        .where(F.col("doc_id") >= offset)
-        .withColumn("shard", (F.col("doc_id") / F.lit(cfg.shard_size)).cast("long"))
-    )
+        # WAL-style: record the pending segment BEFORE the append so a crash
+        # anywhere up to the final manifest commit is undone on retry
+        segment = f"snap{current}"
+        manifest["pending_segment"] = segment
+        _save_manifest(paths, manifest)
+        docs_new.withColumn("segment", F.lit(segment)).write.mode("append").partitionBy(
+            "segment"
+        ).parquet(paths.docs)
+        # stored `shard` is advisory — derive from the layout (robust to any
+        # earlier compaction having changed shard_size)
+        docs_new = (
+            spark.read.parquet(paths.docs)
+            .where(F.col("doc_id") >= offset)
+            .withColumn("shard", (F.col("doc_id") / F.lit(cfg.shard_size)).cast("long"))
+        )
 
-    new_shards = sorted(
-        int(r["shard"]) for r in docs_new.select("shard").distinct().collect()
-    )
-    log = ShardLog(out_dir)
-    observed = _encode_and_commit(
-        spark, pages_text, docs_new, new_shards, cfg, paths, log
-    )
-    n_added = observed["n_docs"]
-    n_upserted = 0
-    if old_ids is not None:
-        from invoicenet_spark.index.deletes import write_tombstones
+        new_shards = sorted(
+            int(r["shard"]) for r in docs_new.select("shard").distinct().collect()
+        )
+        log = ShardLog(out_dir)
+        observed = _encode_and_commit(
+            spark, analyzed, docs_new, new_shards, cfg, paths, log
+        )
+        n_added = observed["n_docs"]
+        n_upserted = 0
+        if old_ids is not None:
+            from invoicenet_spark.index.deletes import write_tombstones
 
-        # after the replacement postings committed; bump=False — the
-        # finalize below is the single visibility point for new docs AND
-        # their predecessors' tombstones
-        n_upserted = write_tombstones(old_ids, paths, bump=False)
+            # after the replacement postings committed; bump=False — the
+            # finalize below is the single visibility point for new docs AND
+            # their predecessors' tombstones
+            n_upserted = write_tombstones(old_ids, paths, bump=False)
     docs_all = spark.read.parquet(paths.docs)
     _finalize(spark, docs_all, cfg, paths, manifest, log, t0, observed)
     manifest = _load_manifest(paths)

@@ -88,18 +88,18 @@ def test_column_and_python_twins_fuzz(spark):
         assert g == analyze_terms(toks, STOP, "s_stem"), t
 
 
-def _search_both(spark, root, q):
+def _search_both(spark, root, q, synonyms=None):
     from invoicenet_spark.query.exec import load_index, search
     from invoicenet_spark.query.local import search_local
 
     sp = (
-        search(spark, load_index(spark, root), q.copy())
+        search(spark, load_index(spark, root), q.copy(), synonyms=synonyms)
         .toPandas()
         .sort_values(["query_id", "rank"])
         .reset_index(drop=True)
     )
     lo = (
-        search_local(root, q.copy())
+        search_local(root, q.copy(), synonyms=synonyms)
         .sort_values(["query_id", "rank"])
         .reset_index(drop=True)
     )
@@ -245,3 +245,78 @@ def test_snippets_highlight_surface_forms(spark, chain_idx):
     assert "«windows»" in snips or "«window»" in snips
     # both surface forms highlight (docs 1 and 2 carry different surfaces)
     assert "«windows»" in snips and "«window»" in snips
+
+
+# ---------------------------------------------- analyze each term once --
+# `ares` stems to `are`, which is itself a stopword: a second analysis pass
+# over a planner-built tree would elide it.
+ONCE_CFG = EngineConfig(shard_size=8, block_size=4, build_partitions=1,
+                        stopwords=("are",), stem="s_stem")
+ONCE_DOCS = [  # (title, body)
+    ("ares spark", "engine ares"),
+    ("spark", "data"),
+    ("data", "ares"),
+    ("spark only", "here"),
+    ("are spark", "are"),
+    ("ares data", "spark"),
+]
+ONCE_SYN = {"spark": ["data"]}
+
+
+def _pre_analyzed(text):
+    return " ".join(analyze_terms(text.split(), ONCE_CFG.stopwords, ONCE_CFG.stem))
+
+
+@pytest.fixture(scope="module")
+def once_indexes(spark, tmp_path_factory):
+    """{(layout, chain?): root}: each layout built once with the chain and
+    once, chain-free, over the corpus analyzed beforehand — the same
+    dictionary, doc lengths and doc ids."""
+    import dataclasses
+
+    from invoicenet_spark.index.build import build_index
+
+    base = tmp_path_factory.mktemp("once")
+    roots = {}
+    for layout, fields in (("plain", ()), ("fielded", ("title", "body"))):
+        for chain in (True, False):
+            cfg = dataclasses.replace(ONCE_CFG, fields=fields)
+            prep = str
+            if not chain:
+                cfg = dataclasses.replace(cfg, stopwords=(), stem=None)
+                prep = _pre_analyzed
+            rows = [
+                (f"{i:03d}", prep(f"{t} {b}"), prep(t), prep(b), "en")
+                for i, (t, b) in enumerate(ONCE_DOCS)
+            ]
+            pages = spark.createDataFrame(
+                rows, "url string, text string, title string, body string, lang string"
+            )
+            root = str(base / f"{layout}_{chain}")
+            build_index(spark, pages, root, cfg, use_stored_text=True)
+            roots[layout, chain] = root
+    return roots
+
+
+@pytest.mark.parametrize("layout", ["plain", "fielded"])
+def test_each_user_term_analyzed_once(spark, once_indexes, layout):
+    """AND + synonyms (the planner builds the tree) and BOOL neg_terms (the
+    planner folds them into the tree) must keep a term whose stem is a
+    stopword: equal to the same rows written pre-analyzed against the
+    chain-free twin, on both query paths."""
+    q = pd.DataFrame([
+        {"query_id": 1, "terms": ["ares", "spark"], "mode": "AND", "k": 10,
+         "neg_terms": []},
+        {"query_id": 2, "terms": ["spark"], "mode": "BOOL", "k": 10,
+         "neg_terms": ["ares"]},
+    ])
+    pre = q.assign(terms=[["are", "spark"], ["spark"]],
+                   neg_terms=[[], ["are"]])
+    got = _search_both(spark, once_indexes[layout, True], q, ONCE_SYN)
+    want = _search_both(spark, once_indexes[layout, False], pre, ONCE_SYN)
+    cols = ["query_id", "rank", "doc_id"]
+    assert got[cols].values.tolist() == want[cols].values.tolist()
+    np.testing.assert_allclose(got["score"].to_numpy(float), want["score"].to_numpy(float))
+    # one id bucket (build_partitions=1): doc i is ONCE_DOCS[i]
+    assert _ids(got, 1) == {0, 2, 5}
+    assert _ids(got, 2) == {1, 3, 4}

@@ -157,6 +157,25 @@ def test_single_segment_federation_identity(spark, seg_indexes):
     assert _rows(fed) == _rows(full)
 
 
+def test_hot_dictionary_ceiling_is_per_segment(spark, seg_indexes, monkeypatch):
+    """plan.MAX_HOT_TERMS applies to each segment on its own: a segment
+    over the ceiling falls back to dictionary scans, the smaller one keeps
+    its hot dictionary, and results do not change."""
+    from invoicenet_spark.query import plan
+
+    roots = [seg_indexes["full"], seg_indexes["a"]]
+    q = _queries()
+    want = _rows(search_federated(spark, roots, q.copy()))
+    n_terms = [load_index(spark, r).terms.count() for r in roots]
+    assert n_terms[0] > n_terms[1]
+    monkeypatch.setattr(plan, "MAX_HOT_TERMS", n_terms[1])
+    fed = FederatedIndex(spark, roots)
+    big, small = fed.global_segments((0, 1))
+    assert big._local_dict is None
+    assert small._local_dict is not None and len(small._local_dict) == n_terms[1]
+    assert _rows(search_federated(spark, fed, q.copy())) == want
+
+
 def test_time_pruning(spark, seg_indexes):
     fed = FederatedIndex(spark, [seg_indexes["a"], seg_indexes["b"]])
     # ranges recorded at build: segment a = docs 0..149 → ts < cut
