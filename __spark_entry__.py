@@ -52,7 +52,7 @@ def entry(spark: SparkSession) -> DataFrame:
             {"query_id": 5, "terms": ["data", "value", "row", "scan"], "mode": "OR", "k": 10},
         ]
     )
-    return search(spark, index, queries, kernel="auto")
+    return search(spark, index, queries)
 
 
 # --------------------------------------------------------------------------

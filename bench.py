@@ -145,9 +145,9 @@ def main():
     index = load_index(spark, out)
     queries = gen_queries(100, seed=42)
     timings["query_batch_100"], spreads["query_batch_100"] = measure(
-        lambda: search(spark, index, queries, kernel="auto").count()
+        lambda: search(spark, index, queries).count()
     )
-    n_res = search(spark, index, queries, kernel="auto").count()
+    n_res = search(spark, index, queries).count()
 
     # same 100 queries rewritten as boolean trees ("a OR b" strings, mode
     # BOOL) — the round-5 pruned tree path in the official record
@@ -158,7 +158,7 @@ def main():
     ]
     bool_queries["mode"] = "BOOL"
     timings["query_batch_bool_100"], spreads["query_batch_bool_100"] = measure(
-        lambda: search(spark, index, bool_queries, kernel="auto").count()
+        lambda: search(spark, index, bool_queries).count()
     )
 
     # ---- 2b. serving path: single-query latency without a Spark job

@@ -11,7 +11,7 @@ reference file:line citations).
 
 Nothing here is a translation of the reference's TensorFlow execution; all
 plans are declarative DataFrame/SQL handed to Catalyst, with numpy-vectorized
-Arrow UDF kernels only for the posting-list codec and WAND scoring loops.
+Arrow UDF kernels only for the posting-list codec and the query scoring kernels.
 """
 
 from invoicenet_spark.config import EngineConfig

@@ -173,10 +173,6 @@ def main(argv=None):
                    help="fielded search weights, e.g. 'title=2,body=1' "
                         "(index must be built with --fields)")
     s.add_argument("-k", type=int, default=10)
-    s.add_argument("--kernel", default="auto", choices=["auto", "wand", "exhaustive"],
-                   help="'auto' = vectorized MaxScore block-max pruning; "
-                        "'wand' is a back-compat alias for it (the cursor "
-                        "WAND kernel was retired in round 3)")
     s.add_argument("--count", action="store_true",
                    help="print the exact match count (track_total_hits) instead of results")
     s.add_argument("--facet", default=None,
@@ -285,13 +281,12 @@ def main(argv=None):
             if args.count:
                 res = search_local_federated(
                     args.fed_roots, q, ts_from=args.ts_from, ts_to=args.ts_to,
-                    kernel=args.kernel, count_only=True,
+                    count_only=True,
                 )
                 print(json.dumps({"total_hits": int(res["total_hits"].iloc[0])}))
                 return 0
             res = search_local_federated(
                 args.fed_roots, q, ts_from=args.ts_from, ts_to=args.ts_to,
-                kernel=args.kernel,
             )
             for r in res.to_dict("records"):
                 print(json.dumps(
@@ -307,12 +302,12 @@ def main(argv=None):
 
             excluded = excluded_ids_local(args.index, args.doc_filter)
         if args.count:
-            res = search_local(args.index, q, kernel=args.kernel,
+            res = search_local(args.index, q,
                                count_only=True, excluded_ids=excluded,
                                synonyms=_synonym_map(args))
             print(json.dumps({"total_hits": int(res["total_hits"].iloc[0])}))
             return 0
-        res = search_local(args.index, q, kernel=args.kernel,
+        res = search_local(args.index, q,
                            excluded_ids=excluded, synonyms=_synonym_map(args))
         if args.facet:
             from invoicenet_spark.query.local import facet_counts_local
@@ -440,13 +435,13 @@ def main(argv=None):
             if args.count:
                 row = search_federated(
                     spark, args.fed_roots, q, ts_from=args.ts_from,
-                    ts_to=args.ts_to, kernel=args.kernel, count_only=True,
+                    ts_to=args.ts_to, count_only=True,
                 ).collect()[0]
                 print(json.dumps({"total_hits": int(row["total_hits"])}))
                 return 0
             res = search_federated(
                 spark, args.fed_roots, q, ts_from=args.ts_from,
-                ts_to=args.ts_to, kernel=args.kernel,
+                ts_to=args.ts_to,
             )
             for r in res.collect():
                 print(json.dumps(
@@ -459,12 +454,12 @@ def main(argv=None):
         index = load_index(spark, args.index)
         doc_filter = (index.docs, args.doc_filter) if args.doc_filter else None
         if args.count:
-            row = search(spark, index, q, kernel=args.kernel, count_only=True,
+            row = search(spark, index, q, count_only=True,
                          doc_filter=doc_filter,
                          synonyms=_synonym_map(args)).collect()[0]
             print(json.dumps({"total_hits": int(row["total_hits"])}))
             return 0
-        res = search(spark, index, q, kernel=args.kernel, doc_filter=doc_filter,
+        res = search(spark, index, q, doc_filter=doc_filter,
                      synonyms=_synonym_map(args))
         if args.facet:
             from invoicenet_spark.query.exec import facet_counts

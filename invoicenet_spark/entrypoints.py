@@ -153,7 +153,7 @@ def _ranked_from_index(
         [{"query_id": 1, "terms": list(terms), "mode": mode, "k": 100000, **qextra}]
     )
     res = search(
-        spark, index, q, kernel="auto", with_url=True, doc_filter=doc_filter,
+        spark, index, q, with_url=True, doc_filter=doc_filter,
         synonyms=synonyms,
     )
     scored = res.select(
@@ -605,7 +605,7 @@ def q_bm25_local_topk(spark, sf_dir):
     q = pd.DataFrame(
         [{"query_id": 1, "terms": list(BM25_QUERY_TERMS), "mode": "OR", "k": 100000}]
     )
-    res = search_local(index, q, kernel="auto")
+    res = search_local(index, q)
     res["doc_id"] = res["url"].astype("int64")
     res["score_r6"] = res["score"].round(6)
     res = res.sort_values(["score_r6", "doc_id"], ascending=[False, True]).head(20)

@@ -51,6 +51,8 @@ import re
 
 import numpy as np
 
+from invoicenet_spark.query.qparse import check_boost
+
 _TOKEN_RE = re.compile(
     r"""\s*(?:
         (?P<lpar>\() |
@@ -81,13 +83,8 @@ def _tokenize(s: str) -> list[str]:
 
 
 def _leaf_from_word(w: str) -> dict:
-    boost = 1.0
     base, caret, suffix = w.partition("^")
-    if caret:
-        try:
-            boost = float(suffix)
-        except ValueError as e:
-            raise BoolParseError(f"bad boost in {w!r}") from e
+    boost = check_boost(suffix, base, BoolParseError) if caret else 1.0
     if base.endswith("*") and len(base) > 1:
         if boost != 1.0:
             raise BoolParseError(f"boost not supported on prefix leaf {w!r}")
@@ -640,6 +637,7 @@ def fielded_tree(
     union of its forms' field leaves — 'any form of the concept in any
     field' — mirroring apply_synonyms_rows' AND-of-disjunction-groups
     semantics on fielded rows (which that rewrite leaves to this one)."""
+    field_weights = {f: check_boost(w, f) for f, w in field_weights.items()}
     unknown = [f for f in field_weights if f not in field_stats]
     if unknown:
         raise ValueError(
@@ -652,7 +650,7 @@ def fielded_tree(
             {
                 "kind": "term",
                 "term": f"{f}:{form}",
-                "boost": float(w),
+                "boost": w,
                 "avgdl": float(field_stats[f]["avgdl"]),
             }
             for form in dict.fromkeys(forms)
@@ -718,12 +716,12 @@ def evaluate_shard(tree: dict, by_tid: dict) -> tuple[np.ndarray, np.ndarray]:
     Scale shape: pure sorted-array algebra (searchsorted / unique / add.at),
     no per-doc Python; work is O(sum of leaf posting lengths) per shard —
     this walk is the exhaustive path. Top-k callers should enter through
-    evaluate_shard_topk, which routes pure-disjunction trees (every
-    bare/fielded OR rewrite) to the block-max MaxScore kernel,
-    AND-of-groups to the conjunctive block-probe kernel, min_match to its
-    pigeonhole mode, and mixed ORs to score_mixed_or — falling back here
-    only to materialize individual non-flat subtrees (phrases, NOT
-    negatives, nested min_match) whose cost their own semantics bound.
+    evaluate_shard_topk, which routes disjunctions (every bare/fielded OR
+    rewrite, and ORs mixing terms with other clauses) to the block-max
+    MaxScore kernel, AND-of-groups to the conjunctive block-probe kernel
+    and min_match to its pigeonhole mode — falling back here only to
+    materialize individual non-flat subtrees (phrases, NOT negatives,
+    nested min_match) whose cost their own semantics bound.
     Counting callers use this walk directly — a count touches every match
     by definition.
     """
@@ -831,29 +829,31 @@ def evaluate_shard(tree: dict, by_tid: dict) -> tuple[np.ndarray, np.ndarray]:
     return ev(tree)
 
 
+def _leaf_key(node: dict) -> tuple[int, float, float | None]:
+    """(tid, boost, avgdl|None) of a resolved term leaf."""
+    avgdl = node.get("avgdl")
+    return (
+        int(node.get("tid", -1)),
+        float(node.get("boost", 1.0)),
+        float(avgdl) if avgdl is not None else None,
+    )
+
+
 def flatten_or_terms(tree: dict) -> list[tuple[int, float, float | None]] | None:
     """If the tree is a PURE DISJUNCTION of term leaves — arbitrary OR
     nesting, min_match ≤ 1 at every OR node, no phrase/and/not nodes —
     return its leaves as (tid, boost, avgdl|None) in DFS order, else None.
 
-    This is the dominant rewritten shape: every bare or fielded OR query
-    becomes OR-of-(OR-of-field-leaves) via qualify_bare_leaves /
-    fielded_tree, so recognizing it restores block-max pruning exactly
-    where fielded indexes otherwise give up the engine's best kernel win
-    (round-4 verdict, "What's missing" #1)."""
+    The group flattener: each clause of an AND, of a min_match OR, or of an
+    AND inside a disjunction ('andg' parts of flatten_or_mixed) that
+    flattens here becomes one disjunction group of score_and_groups — the
+    fielded rewrite's per-term OR-of-field-leaves is exactly this shape."""
     out: list[tuple[int, float, float | None]] = []
 
     def walk(node: dict) -> bool:
         kd = node["kind"]
         if kd == "term":
-            avgdl = node.get("avgdl")
-            out.append(
-                (
-                    int(node.get("tid", -1)),
-                    float(node.get("boost", 1.0)),
-                    float(avgdl) if avgdl is not None else None,
-                )
-            )
+            out.append(_leaf_key(node))
             return True
         if kd == "or":
             mm = node.get("min_match", 1)
@@ -866,12 +866,12 @@ def flatten_or_terms(tree: dict) -> list[tuple[int, float, float | None]] | None
 
 
 def flatten_or_mixed(tree: dict) -> list | None:
-    """flatten_or_terms' sibling for disjunctions that ALSO carry non-term
-    clauses. When the tree is OR-nested (min_match ≤ 1 at every walked OR)
-    returns DFS-ordered parts:
+    """The disjunction flattener top-k routing uses. When the tree is a
+    bare term leaf or OR-nested (min_match ≤ 1 at every walked OR) returns
+    DFS-ordered parts:
 
       ('term', (tid, boost, avgdl|None))  — a term leaf (keeps MaxScore
-                                            pruning in score_mixed_or)
+                                            pruning in score_blockmax)
       ('andg', [group_leaves, ...])       — an AND subtree whose clauses
                                             all flatten via
                                             flatten_or_terms: materializes
@@ -882,19 +882,15 @@ def flatten_or_mixed(tree: dict) -> list | None:
       ('sub', node)                       — any other subtree (phrase/NEAR
                                             leaf, NOT, nested min_match>1
                                             OR, non-flat AND): materializes
-                                            via the walk — bounded by its
-                                            own semantics, and no worse
-                                            than the status quo where it
-                                            dragged ALL siblings onto the
-                                            exhaustive walk
+                                            via the walk, bounded by its
+                                            own semantics
 
-    Returns None when the root is not a plain disjunction (kind != 'or',
-    or root min_match > 1 — that shape belongs to the pigeonhole
-    min_match routing) or when there is no non-term clause (pure-term
-    trees take flatten_or_terms' flat kernels) — so this recognizes
-    exactly the shapes that previously fell to the exhaustive walk:
-    `stopword OR "a phrase"`, `stopword OR (rare AND stopword2)`,
-    dismax-style unions of subqueries."""
+    A pure-term disjunction gives all-'term' parts in flatten_or_terms'
+    order, so its floats match the flat kernels'. Returns None when the
+    root is neither a term nor a plain disjunction (root min_match > 1
+    belongs to the pigeonhole min_match routing) or has no clauses."""
+    if tree["kind"] == "term":
+        return [("term", _leaf_key(tree))]
     if tree["kind"] != "or" or int(tree.get("min_match") or 1) > 1:
         return None
     out: list = []
@@ -902,15 +898,7 @@ def flatten_or_mixed(tree: dict) -> list | None:
     def walk(node: dict) -> None:
         kd = node["kind"]
         if kd == "term":
-            avgdl = node.get("avgdl")
-            out.append((
-                "term",
-                (
-                    int(node.get("tid", -1)),
-                    float(node.get("boost", 1.0)),
-                    float(avgdl) if avgdl is not None else None,
-                ),
-            ))
+            out.append(("term", _leaf_key(node)))
             return
         if kd == "or" and int(node.get("min_match") or 1) <= 1:
             for c in node["clauses"]:
@@ -928,9 +916,7 @@ def flatten_or_mixed(tree: dict) -> list | None:
 
     for c in tree["clauses"]:
         walk(c)
-    if not out or all(k == "term" for k, _ in out):
-        return None
-    return out
+    return out or None
 
 
 def evaluate_shard_topk(
@@ -939,32 +925,30 @@ def evaluate_shard_topk(
     k: int,
     deleted=None,
     after: tuple[float, int] | None = None,
-    kernel: str = "auto",
 ) -> tuple[np.ndarray, np.ndarray]:
     """Top-k evaluation of a resolved tree over ONE shard — the routing
     front door both query paths share (identical floats across Spark and
     serving by construction).
 
-    Pure-disjunction trees (flatten_or_terms) ALWAYS route to the flat
-    kernels: each leaf becomes a posting view whose idf is scaled by the
-    leaf boost and whose length normalization uses the leaf's field avgdl,
-    so the kernel's per-block upper bounds remain valid bounds on the
-    leaf's true contribution (boost is linear in the score; the bound and
-    the score use the same avgdl). Normally that's block-max MaxScore —
-    including on cursored pages (round 6: score_blockmax seeds theta from
-    after-filtered seed scores); kernel='exhaustive' forces the flat
-    exhaustive kernel. The two are FLOAT-IDENTICAL by construction
-    (_probe_scores accumulates in score_exhaustive's order), so cursors
-    minted by either kernel remain exact on later pages, and the kernel
-    choice never changes a score bit. Rank-identity of the pruned kernel
-    is the score_blockmax contract (fuzz-pinned, incl. the tree fuzz in
-    tests/test_booltree.py); flat-kernel floats may differ from the
-    nested tree walk in the last ulp (boost folded into idf, flat vs
-    nested accumulation), which the rounded oracle contract absorbs.
+    Disjunctions (flatten_or_mixed) route to block-max MaxScore
+    (kernels.score_blockmax), cursored pages included: each term leaf
+    becomes a posting view whose idf is scaled by the leaf boost and whose
+    length normalization uses the leaf's field avgdl, so the kernel's
+    per-block upper bounds remain valid bounds on the leaf's true
+    contribution (boost is linear in the score; the bound and the score
+    use the same avgdl). Non-term clauses pre-evaluate into materialized
+    (docs, scores) pseudo lists with exact upper bounds — AND-of-flat-
+    groups via the block-probed conjunction kernel (their stopword clauses
+    are skipped, not decoded), phrases/NOT/nested min_match via the walk.
+    Rank-identity is the score_blockmax contract (fuzz-pinned, incl. the
+    tree fuzz in tests/test_booltree_pruned.py); its floats may differ
+    from the nested tree walk in the last ulp (boost folded into idf, flat
+    vs nested accumulation), which the rounded oracle contract absorbs.
 
-    Everything else — AND/NOT nodes, phrase leaves, min_match > 1 — takes
-    the exhaustive tree walk with root-level masking/cursor/top-k,
-    exactly the round-4 semantics."""
+    NOT folds its negative into the deleted mask; AND-of-groups and
+    min_match ORs over flattenable clauses take score_and_groups. Anything
+    else takes the exhaustive tree walk with root-level masking, cursor
+    and top-k, exactly the round-4 semantics."""
     from invoicenet_spark.query import kernels
 
     def _resolve(leaves):
@@ -984,64 +968,25 @@ def evaluate_shard_topk(
             )
         return plists
 
-    leaves = flatten_or_terms(tree)
-    if leaves is not None:
-        plists = _resolve(leaves)
-        if not plists:
+    mixed = flatten_or_mixed(tree)
+    if mixed is not None:
+        parts = []
+        for kind, payload in mixed:
+            if kind == "term":
+                parts += _resolve([payload])
+                continue
+            if kind == "andg":
+                groups = [_resolve(g) for g in payload]
+                if any(not g for g in groups):
+                    continue  # a leafless group: the AND matches nothing
+                d, s = kernels.score_and_groups(groups, 0, full_matches=True)
+            else:
+                d, s = evaluate_shard(payload, by_tid)
+            if d.size:
+                parts.append((d, s))
+        if not parts:
             return _EMPTY
-        if kernel == "exhaustive":
-            return kernels.score_exhaustive(plists, k, "OR", deleted=deleted, after=after)
-        # cursors no longer force the exhaustive kernel (round 6):
-        # score_blockmax seeds theta from after-filtered seed scores and
-        # after-filters candidates — float-identical, pages stay exact
-        return kernels.score_blockmax(plists, k, deleted=deleted, after=after)
-    if tree["kind"] == "or":
-        mixed = flatten_or_mixed(tree)
-        if mixed is not None:
-            # disjunction carrying non-term clauses: each such clause
-            # pre-evaluates into a materialized pseudo posting list with
-            # an EXACT upper bound, and the sibling term leaves keep
-            # MaxScore pruning (score_mixed_or) — previously ANY non-term
-            # clause dragged the whole OR, stopword terms included, onto
-            # the exhaustive walk. AND-of-flat-groups subtrees materialize
-            # via the block-probed conjunction kernel (their own stopword
-            # clauses are skipped, not decoded); phrases/NOT/nested
-            # min_match materialize via the walk, bounded by their own
-            # semantics.
-            parts = []
-            for kind, payload in mixed:
-                if kind == "term":
-                    tid, boost, avgdl = payload
-                    tp0 = by_tid.get(tid)
-                    if tid < 0 or tp0 is None:
-                        continue
-                    parts.append((
-                        "term",
-                        kernels.TermPostings(
-                            tp0.row,
-                            idf=tp0.idf * boost,
-                            avgdl=avgdl if avgdl is not None else tp0.avgdl,
-                            k1=tp0.k1,
-                            b=tp0.b,
-                        ),
-                    ))
-                elif kind == "andg":
-                    groups = [_resolve(g) for g in payload]
-                    if any(not g for g in groups):
-                        continue  # a leafless group: the AND matches nothing
-                    d, s = kernels.score_and_groups(groups, 0, full_matches=True)
-                    if d.size:
-                        parts.append(("mat", (d, s)))
-                else:
-                    d, s = evaluate_shard(payload, by_tid)
-                    if d.size:
-                        parts.append(("mat", (d, s)))
-            if not parts:
-                return _EMPTY
-            return kernels.score_mixed_or(
-                parts, k, deleted=deleted, after=after,
-                prune=(kernel != "exhaustive"),
-            )
+        return kernels.score_blockmax(parts, k, deleted=deleted, after=after)
     if tree["kind"] == "not":
         # NOT is an exclusion mask over the positive subtree — the exact
         # mechanism tombstones already use — so fold the negative's match
@@ -1056,16 +1001,14 @@ def evaluate_shard_topk(
             else (nd if deleted is None else np.union1d(deleted, nd))
         )
         return evaluate_shard_topk(
-            tree["positive"], by_tid, k, deleted=merged, after=after, kernel=kernel
+            tree["positive"], by_tid, k, deleted=merged, after=after
         )
     if tree["kind"] == "and":
         # conjunction of disjunction-groups (the fielded AND rewrite):
         # exact structural pruning — candidates seed from the smallest
         # group, the stopword-side groups are block-probed, every match is
         # scored, so cursors compose (kernels.score_and_groups). Exact by
-        # construction (no theta), so it serves kernel='exhaustive' too —
-        # its guard-bail branch shares the same float contract, keeping
-        # scores bit-stable across kernel settings and pages.
+        # construction (no theta).
         flat_groups = [flatten_or_terms(c) for c in tree["clauses"]]
         if tree["clauses"] and all(g is not None for g in flat_groups):
             groups = [_resolve(g) for g in flat_groups]

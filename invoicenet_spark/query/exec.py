@@ -317,7 +317,7 @@ def _empty_results(spark: SparkSession, with_url: bool) -> DataFrame:
     return spark.createDataFrame([], schema=schema)
 
 
-def _shard_group(specs: list, stats: dict, kernel: str, deleted_bc=None, count: bool = False):
+def _shard_group(specs: list, stats: dict, deleted_bc=None, count: bool = False):
     """applyInPandas body for one (query_id, shard) group: the group's
     posting rows go through the query's QuerySpec to kernels.run_shard.
     The specs ride the closure (query batches are tiny by contract), so
@@ -344,9 +344,7 @@ def _shard_group(specs: list, stats: dict, kernel: str, deleted_bc=None, count: 
                 deleted = np.asarray(val, dtype=np.int64)
             pdf = pdf.drop(columns=["_deleted"])  # keep row dicts lean
         rows = {int(r["term_id"]): r for r in pdf.to_dict("records")}
-        res = by_qid[qid].run_shard(
-            rows, stats, kernel=kernel, deleted=deleted, count=count
-        )
+        res = by_qid[qid].run_shard(rows, stats, deleted=deleted, count=count)
         docs, scores = (np.array([res]), np.zeros(1)) if count else res
         return pd.DataFrame(
             {"query_id": np.full(docs.size, qid, dtype=np.int64),
@@ -361,7 +359,6 @@ def search(
     spark: SparkSession,
     index: Index,
     queries: pd.DataFrame | DataFrame,
-    kernel: str = "auto",
     with_url: bool = True,
     count_only: bool = False,
     matches_only: bool = False,
@@ -470,7 +467,7 @@ def search(
         cand = cand.join(mask_payload, "shard", "left")
     out = cand.groupBy("query_id", "shard").applyInPandas(
         _shard_group(
-            specs, index.stats, kernel, mask_payload if mask_kind == "bc" else None,
+            specs, index.stats, mask_payload if mask_kind == "bc" else None,
             count=count_only,
         ),
         schema=RESULT_SCHEMA,

@@ -281,7 +281,6 @@ def search_federated(
     queries: pd.DataFrame,
     ts_from=None,
     ts_to=None,
-    kernel: str = "auto",
     with_url: bool = True,
     count_only: bool = False,
     matches_only: bool = False,
@@ -326,7 +325,7 @@ def search_federated(
     for i in live:
         seg_ix = handles[i]
         res = qexec.search(
-            spark, seg_ix, _segment_cursor_queries(queries, i), kernel=kernel,
+            spark, seg_ix, _segment_cursor_queries(queries, i),
             with_url=with_url and not matches_only,
             count_only=count_only, matches_only=matches_only,
         )
@@ -386,7 +385,6 @@ def search_local_federated(
     queries: pd.DataFrame,
     ts_from=None,
     ts_to=None,
-    kernel: str = "auto",
     with_url: bool = True,
     count_only: bool = False,
 ) -> pd.DataFrame:
@@ -472,7 +470,7 @@ def search_local_federated(
     frames = []
     for i in live:
         res = search_local(
-            lis[i], _segment_cursor_queries(queries, i), kernel=kernel,
+            lis[i], _segment_cursor_queries(queries, i),
             with_url=with_url, count_only=count_only,
             stats_override=stats_override, df_override=df_union,
         )

@@ -1,18 +1,20 @@
-"""Pure numpy query kernels: gallop intersection, exhaustive scoring, and
-block-max WAND. No Spark imports — unit-testable standalone. run_shard is
-the one per-(query, shard) router both query paths call (the Spark path
-inside applyInPandas, the serving path in its per-query loop).
+"""Pure numpy query kernels: gallop intersection, exhaustive scoring, the
+conjunctive block-probe kernel and block-max MaxScore. No Spark imports —
+unit-testable standalone. run_shard is the one per-(query, shard) router
+both query paths call (the Spark path inside applyInPandas, the serving
+path in its per-query loop).
 
 Reference analog (SURVEY.md §2.6 J4, §2.7 A1, §2.8 K1): the query-term ∩
 candidate intersection is the reference's memory-mask (model.py:124-125);
 scoring is the masked global softmax (sum of per-candidate partials,
 model.py:127-131); top-k generalizes the argmax decode (acp.py:117).
-WAND pruning ≈ masking non-candidates before the softmax.
+Pruning ≈ masking non-candidates before the softmax.
 
-Block-max WAND follows Ding & Suel (SIGIR 2011): document-at-a-time pivot
-selection on list upper bounds, with per-block (max_tf, min_dl) bounds
-(codec.py) for the shallow check; the control loop is per *evaluated
-candidate* (already pruned), all decode/score math inside is vectorized.
+Block-max pruning follows Ding & Suel (SIGIR 2011) in its MaxScore form:
+a theta seeded from the strongest list, an essential/non-essential split
+on list upper bounds, and block-granular probes guided by the per-block
+(max_tf, min_dl) bounds (codec.py). Control flow is per LIST, never per
+candidate; all decode/score/probe math is vectorized numpy.
 """
 
 from __future__ import annotations
@@ -22,7 +24,12 @@ from functools import cached_property
 import numpy as np
 
 from invoicenet_spark.index import bm25
-from invoicenet_spark.index.codec import decode_block, decode_positions, decode_posting_list
+from invoicenet_spark.index.codec import (
+    decode_block,
+    decode_blocks_batch,
+    decode_positions,
+    decode_posting_list,
+)
 
 
 def drop_deleted(docs: np.ndarray, deleted: np.ndarray | None) -> np.ndarray:
@@ -120,7 +127,7 @@ class TermPostings:
 
 
 def score_exhaustive(
-    plists: list[TermPostings],
+    plists: list,
     k: int,
     mode: str = "OR",
     deleted: np.ndarray | None = None,
@@ -128,6 +135,10 @@ def score_exhaustive(
     after: tuple[float, int] | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Vectorized exhaustive scoring of one shard.
+
+    plists: TermPostings; in OR mode also (docs, scores) materialized
+    pseudo lists (see score_blockmax), whose partials are added as they
+    are.
 
     after: search_after pagination cursor (see apply_after).
 
@@ -148,11 +159,11 @@ def score_exhaustive(
     """
     if not plists:
         return np.zeros(0, dtype=np.int64), np.zeros(0)
-    decoded = [tp.decode_all() for tp in plists]
 
     if mode == "AND":
         # intersect-then-score: gallop the doc sets first, then gather
         # (tf, dl) for survivors only — skips scoring the union
+        decoded = [tp.decode_all() for tp in plists]
         keep = gallop_intersect([d[0] for d in decoded])
         keep = keep[drop_deleted(keep, deleted)]
         if keep.size == 0:
@@ -165,14 +176,20 @@ def score_exhaustive(
         return topk_select(keep, agg, k)
 
     all_docs, all_scores = [], []
-    for tp, (docs, tfs, dls) in zip(plists, decoded):
-        s = tp.idf * bm25.tf_score(tfs, dls, tp.avgdl, tp.k1, tp.b)
+    for p in plists:
+        if isinstance(p, TermPostings):
+            docs, tfs, dls = p.decode_all()
+            s = p.idf * bm25.tf_score(tfs, dls, p.avgdl, p.k1, p.b)
+        else:
+            docs, s = p
         all_docs.append(docs)
         all_scores.append(s)
     docs_cat = np.concatenate(all_docs)
     scores_cat = np.concatenate(all_scores)
     uniq, inv = np.unique(docs_cat, return_inverse=True)
     agg = np.zeros(uniq.size, dtype=np.float64)
+    # add.at adds per doc in part-major order: the same float order as the
+    # pruned kernels' per-part probes (_score_at), so their bits agree
     np.add.at(agg, inv, scores_cat)
     if min_match > 1:
         # each decoded list contributes one row per doc, so bincount over
@@ -402,36 +419,23 @@ def near_matches(
     return cand[np.unique(cur[hit] >> _SHIFT_BITS)]
 
 
-def _probe_scores(
-    plists: list[TermPostings],
-    caches: list[dict],
-    cand: np.ndarray,
-) -> np.ndarray:
-    """FULL BM25 scores for the sorted candidate doc array, decoding only the
-    blocks that can contain a candidate (block-granular random access via the
-    skip table). Accumulation is per list in plists order — identical float
-    order to score_exhaustive."""
-    from invoicenet_spark.index.codec import decode_blocks_batch
-
-    scores = np.zeros(cand.size, dtype=np.float64)
-    for li, tp in enumerate(plists):
-        r = _probe_list(tp, caches[li], cand)
-        if r is not None:
-            hit, tfs, dls = r
-            scores[hit] += tp.idf * bm25.tf_score(tfs, dls, tp.avgdl, tp.k1, tp.b)
-    return scores
+def _locate(docs: np.ndarray, cand: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(idx, hit) for a sorted candidate array in a sorted doc array: hit
+    marks the candidates present in `docs`, idx[hit] their positions."""
+    if docs.size == 0:
+        return np.zeros(cand.size, dtype=np.intp), np.zeros(cand.size, dtype=bool)
+    idx = np.minimum(np.searchsorted(docs, cand), docs.size - 1)
+    return idx, docs[idx] == cand
 
 
-def _probe_list(tp: TermPostings, cache: dict, cand: np.ndarray):
+def _probe_blocks(tp: TermPostings, cache: dict, cand: np.ndarray) -> list | None:
     """Block-granular random access into ONE posting list at a sorted
-    candidate array: decodes only blocks that can contain a candidate
-    (filling `cache`, keyed by block index) and returns
-    (hit_mask_over_cand, tfs_at_hits, dls_at_hits), or None when no
-    candidate lands in the list. The shared primitive behind MaxScore
-    probing (_probe_scores) and the conjunctive kernel's interleaved
-    scoring — both must add the same operands in the same order."""
-    from invoicenet_spark.index.codec import decode_blocks_batch
-
+    candidate array: the (docs, tfs, dls) of every block that can contain
+    a candidate, in block order (so docs ascend), or None when no candidate
+    lands inside the list. Blocks missing from `cache` (keyed by block
+    index) are decoded in ONE batched varbyte call — per-block python
+    decode costs ~0.1 ms of loop overhead each, which ties the pruned path
+    with exhaustive instead of beating it."""
     jb = np.searchsorted(tp.block_last, cand, side="left")
     ok = jb < tp.n_blocks
     if not ok.any():
@@ -439,56 +443,72 @@ def _probe_list(tp: TermPostings, cache: dict, cand: np.ndarray):
     needed = np.unique(jb[ok])
     missing = np.array([j for j in needed if int(j) not in cache], dtype=np.int64)
     if missing.size:
-        # ONE batched varbyte decode for every missing block — per-block
-        # python decode costs ~0.1 ms of loop overhead each, which ties
-        # the pruned path with exhaustive instead of beating it
         bd, bt, bl, offs = decode_blocks_batch(tp.row, missing)
         for bi, j in enumerate(missing):
             sl = slice(offs[bi], offs[bi + 1])
             cache[int(j)] = (bd[sl], bt[sl], bl[sl])
-    parts = [cache[int(j)] for j in needed]  # block ids ascending → docs ascending
-    d = np.concatenate([p[0] for p in parts])
-    t = np.concatenate([p[1] for p in parts])
-    l = np.concatenate([p[2] for p in parts])
-    idx_c = np.minimum(np.searchsorted(d, cand), d.size - 1)
-    hit = d[idx_c] == cand
+    return [cache[int(j)] for j in needed]
+
+
+def _probe_list(tp: TermPostings, cache: dict, cand: np.ndarray):
+    """(hit_mask_over_cand, tfs_at_hits, dls_at_hits) for one posting list
+    at a sorted candidate array, decoding only the blocks that can contain
+    a candidate; None when no candidate is in the list."""
+    blocks = _probe_blocks(tp, cache, cand)
+    if blocks is None:
+        return None
+    idx, hit = _locate(np.concatenate([b[0] for b in blocks]), cand)
     if not hit.any():
         return None
-    h = idx_c[hit]
-    return hit, t[h], l[h]
+    h = idx[hit]
+    tfs = np.concatenate([b[1] for b in blocks])[h]
+    dls = np.concatenate([b[2] for b in blocks])[h]
+    return hit, tfs, dls
 
 
 def _probe_membership(
-    plists: list[TermPostings],
-    caches: list[dict],
-    cand: np.ndarray,
+    plists: list[TermPostings], caches: dict, cand: np.ndarray
 ) -> np.ndarray:
     """Boolean mask over the sorted candidate array: does the doc appear in
-    AT LEAST ONE of these posting lists? Decodes only the blocks that can
-    contain a candidate (same skip-table random access as _probe_scores,
-    sharing its per-list block caches) — the membership half of the
-    conjunctive probe."""
-    from invoicenet_spark.index.codec import decode_blocks_batch
-
+    AT LEAST ONE of these posting lists? Block-probed like _probe_list,
+    sharing its block caches (keyed by id(tp)) — the membership half of
+    the conjunctive probe."""
     hit_any = np.zeros(cand.size, dtype=bool)
-    for li, tp in enumerate(plists):
-        jb = np.searchsorted(tp.block_last, cand, side="left")
-        ok = jb < tp.n_blocks
-        if not ok.any():
-            continue
-        cache = caches[li]
-        needed = np.unique(jb[ok])
-        missing = np.array([j for j in needed if int(j) not in cache], dtype=np.int64)
-        if missing.size:
-            bd, bt, bl, offs = decode_blocks_batch(tp.row, missing)
-            for bi, j in enumerate(missing):
-                sl = slice(offs[bi], offs[bi + 1])
-                cache[int(j)] = (bd[sl], bt[sl], bl[sl])
-        parts = [cache[int(j)] for j in needed]
-        d = np.concatenate([p[0] for p in parts])
-        idx = np.minimum(np.searchsorted(d, cand), d.size - 1)
-        hit_any |= d[idx] == cand
+    for tp in plists:
+        blocks = _probe_blocks(tp, caches.setdefault(id(tp), {}), cand)
+        if blocks is not None:
+            hit_any |= _locate(np.concatenate([b[0] for b in blocks]), cand)[1]
     return hit_any
+
+
+def _score_at(parts: list, cand: np.ndarray, full: dict, caches: dict) -> np.ndarray:
+    """FULL scores at a sorted candidate doc array. Per part IN ORDER:
+    gather from a materialized (docs, scores) list or from the part's full
+    decode in `full`, else block-probe it (only blocks that can hold a
+    candidate are decoded; `caches` keeps them). Both dicts are keyed by
+    id(part). Every part adds the same operands in the same order whichever
+    way it was served — score_exhaustive's float order — so every routing
+    returns the same bits and cursors minted by any of them stay exact."""
+    scores = np.zeros(cand.size, dtype=np.float64)
+    for p in parts:
+        term = isinstance(p, TermPostings)
+        if term and id(p) not in full:
+            r = _probe_list(p, caches.setdefault(id(p), {}), cand)
+            if r is None:
+                continue
+            hit, tfs, dls = r
+        else:
+            arrs = full[id(p)] if term else p
+            idx, hit = _locate(arrs[0], cand)
+            if not hit.any():
+                continue
+            h = idx[hit]
+            if not term:
+                scores[hit] += arrs[1][h]
+                continue
+            tfs, dls = arrs[1][h], arrs[2][h]
+        scores[hit] += p.idf * bm25.tf_score(tfs, dls, p.avgdl, p.k1, p.b)
+    return scores
 
 
 def score_and_groups(
@@ -515,16 +535,15 @@ def score_and_groups(
     group-by-group in ascending-size order, cheapest-first.
 
     Float contract: scores accumulate per list in the caller's flat
-    (group-major) list order over the final sorted candidate array —
-    IDENTICAL operand order to score_exhaustive(mode='AND') for
-    single-leaf groups (fuzz-pinned bit-equal), so switching the flat AND
-    path to this kernel changes no score bit.
+    (group-major) list order over the final sorted candidate array
+    (_score_at) — IDENTICAL operand order to score_exhaustive(mode='AND')
+    for single-leaf groups (fuzz-pinned bit-equal).
 
     Decode-strategy guard, per group: block probing decodes ≈ one block
     (block_size postings) per candidate, so it only pays when
     2·cand < the group's block count (expected decode under ~half the
     list); otherwise the group is decoded fully once and gathered — same
-    floats either way (see the scoring loop's order contract).
+    floats either way.
 
     min_groups=m generalizes the conjunction to Lucene's
     minimumNumberShouldMatch: a doc matches iff it appears in >= m of the
@@ -540,7 +559,7 @@ def score_and_groups(
     full_matches=True returns the COMPLETE match set doc-ascending
     (k/after ignored) instead of top-k — this is how an AND subtree
     inside a disjunction materializes into a pseudo posting list for
-    score_mixed_or while keeping the block-probed decode skipping (the
+    score_blockmax while keeping the block-probed decode skipping (the
     walk would decode its stopword clauses fully)."""
     groups = [g for g in groups if g]  # a leafless group can never match
     n = len(groups)
@@ -549,50 +568,21 @@ def score_and_groups(
         return np.zeros(0, dtype=np.int64), np.zeros(0)
     m = max(m, 1)
     flat = [tp for g in groups for tp in g]
-    if n == 1:
-        if full_matches:
-            # complete doc-ascending match set of a plain OR group: the
-            # same per-list gather order over the sorted union as the
-            # main scoring loop below (float contract preserved)
-            decs = [tp.decode_all() for tp in flat]
-            parts = [d[0] for d in decs if d[0].size]
-            if not parts:
-                return np.zeros(0, dtype=np.int64), np.zeros(0)
-            cand = parts[0] if len(parts) == 1 else np.unique(np.concatenate(parts))
-            cand = cand[drop_deleted(cand, deleted)]
-            if cand.size == 0:
-                return np.zeros(0, dtype=np.int64), np.zeros(0)
-            scores = np.zeros(cand.size, dtype=np.float64)
-            for tp, (docs_i, tfs_i, dls_i) in zip(flat, decs):
-                if docs_i.size == 0:
-                    continue
-                idx = np.minimum(np.searchsorted(docs_i, cand), docs_i.size - 1)
-                hit = docs_i[idx] == cand
-                if hit.any():
-                    h = idx[hit]
-                    scores[hit] += tp.idf * bm25.tf_score(
-                        tfs_i[h], dls_i[h], tp.avgdl, tp.k1, tp.b
-                    )
-            return cand, scores
+    if n == 1 and not full_matches:
         # no conjunction to skip on — plain OR over the single group
         return score_exhaustive(flat, k, "OR", deleted=deleted, after=after)
 
     gdf = [sum(int(tp.row["df_shard"]) for tp in g) for g in groups]
     order = sorted(range(n), key=lambda i: gdf[i])
-    caches_by_id: dict[int, dict] = {}
-    full_by_id: dict[int, tuple] = {}
+    caches: dict[int, dict] = {}
+    full: dict[int, tuple] = {}
 
     def _member(g, cand):
         """Boolean membership of cand in the group (>= 1 list hit), via
-        full decode + gather — used for seed groups, which are decoded
-        anyway."""
+        full decode + gather — used for groups decoded anyway."""
         hit_any = np.zeros(cand.size, dtype=bool)
         for tp in g:
-            docs_i = full_by_id[id(tp)][0]
-            if docs_i.size == 0:
-                continue
-            idx = np.minimum(np.searchsorted(docs_i, cand), docs_i.size - 1)
-            hit_any |= docs_i[idx] == cand
+            hit_any |= _locate(full[id(tp)][0], cand)[1]
         return hit_any
 
     # seed: by pigeonhole any doc matching >= m groups appears in the
@@ -602,8 +592,8 @@ def score_and_groups(
     seed_parts = []
     for gi in order[:n_seed]:
         for tp in groups[gi]:
-            full_by_id[id(tp)] = tp.decode_all()
-            seed_parts.append(full_by_id[id(tp)][0])
+            full[id(tp)] = tp.decode_all()
+            seed_parts.append(full[id(tp)][0])
     cand = (
         seed_parts[0]
         if len(seed_parts) == 1
@@ -632,48 +622,20 @@ def score_and_groups(
         g_blocks = sum(tp.n_blocks for tp in g)
         if cand.size * 2 >= g_blocks:
             for tp in g:
-                full_by_id[id(tp)] = tp.decode_all()
+                full[id(tp)] = tp.decode_all()
             member = _member(g, cand)
         else:
-            member = _probe_membership(
-                g, [caches_by_id.setdefault(id(tp), {}) for tp in g], cand
-            )
+            member = _probe_membership(g, caches, cand)
         counts += member
         remaining = len(order[n_seed:]) - pos - 1
         viable = counts + remaining >= m
         cand, counts = cand[viable], counts[viable]
-    keep = counts >= m
-    cand = cand[keep]
+    cand = cand[counts >= m]
     if cand.size == 0:
         return np.zeros(0, dtype=np.int64), np.zeros(0)
-    # score at the survivors: lists already fully decoded gather directly,
-    # the rest probe block-granularly (reusing the membership phase's block
-    # caches) — interleaved per list IN FLAT ORDER, so every float is added
-    # with the same operands in the same order whichever representation
-    # served each list (the bit-identity contract with score_exhaustive).
-    scores = np.zeros(cand.size, dtype=np.float64)
-    for tp in flat:
-        dec = full_by_id.get(id(tp))
-        if dec is not None:
-            docs_i, tfs_i, dls_i = dec
-            if docs_i.size == 0:
-                continue
-            idx = np.minimum(np.searchsorted(docs_i, cand), docs_i.size - 1)
-            hit = docs_i[idx] == cand
-            if hit.all():  # single-leaf groups: membership is guaranteed
-                scores += tp.idf * bm25.tf_score(
-                    tfs_i[idx], dls_i[idx], tp.avgdl, tp.k1, tp.b
-                )
-            elif hit.any():
-                h = idx[hit]
-                scores[hit] += tp.idf * bm25.tf_score(
-                    tfs_i[h], dls_i[h], tp.avgdl, tp.k1, tp.b
-                )
-        else:
-            r = _probe_list(tp, caches_by_id.setdefault(id(tp), {}), cand)
-            if r is not None:
-                hit, tfs, dls = r
-                scores[hit] += tp.idf * bm25.tf_score(tfs, dls, tp.avgdl, tp.k1, tp.b)
+    # score at the survivors, reusing the membership phase's full decodes
+    # and block caches
+    scores = _score_at(flat, cand, full, caches)
     if full_matches:
         return cand, scores  # doc-ascending by construction
     cand, scores = apply_after(cand, scores, after)
@@ -681,75 +643,88 @@ def score_and_groups(
 
 
 def score_blockmax(
-    plists: list[TermPostings],
+    parts: list,
     k: int,
     deleted: np.ndarray | None = None,
     after: tuple[float, int] | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Vectorized MaxScore with block-granular probes (disjunctive),
-    rank-identical to score_exhaustive.
+    rank- and bit-identical to score_exhaustive over the same parts.
 
-    Phase A: fully score the docs of the highest-upper-bound list (cheap —
-    that list is usually the rare/high-idf one) to obtain a valid theta
+    A part is a TermPostings (decoded lazily; its upper bound comes from
+    the per-block bounds) or a (docs, scores) materialized pseudo posting
+    list: sorted docs, exact partial scores, upper bound = max score. BOOL
+    trees materialize their non-term clauses that way — phrase/NEAR
+    leaves, AND subtrees (score_and_groups full_matches mode, block-probed),
+    NOT / nested-min_match subtrees — so an OR mixing them with term
+    leaves keeps MaxScore pruning for the terms. Every partial must be
+    >= 0 (boosts are validated non-negative at parse time).
+
+    Phase A: fully score the docs of the highest-upper-bound part (cheap —
+    that part is usually the rare/high-idf one) to obtain a valid theta
     (k-th best full score).
 
-    Phase B: order lists by upper bound ascending; the maximal prefix whose
+    Phase B: order parts by upper bound ascending; the maximal prefix whose
     UB sum is STRICTLY below theta is non-essential — any doc appearing only
-    in non-essential lists scores strictly below theta and cannot enter the
+    in non-essential parts scores strictly below theta and cannot enter the
     top-k (strictness keeps doc_id tie-breaks exact). Candidates = union of
-    the essential lists' postings; their full scores come from block-granular
+    the essential parts' docs; their full scores come from block-granular
     probes into the non-essential lists (only blocks containing a candidate
     are decoded — on a stopword+rare-term query the stopword list is ~never
-    decoded). If every list is essential, pruning can't win: bail to the
-    plain exhaustive kernel so the worst case stays a small constant of it.
+    decoded).
 
-    Control flow is per LIST, never per candidate; all decode/score/probe
-    math is vectorized numpy.
+    Guards, each falling back to score_exhaustive (pruning can't win, so
+    the worst case stays a small constant of it): a single part; a seed
+    whose df exceeds twice the other TermPostings parts' block count (each
+    candidate costs at most one block decode per other list, so a fat seed
+    decodes everything anyway); every part essential; essential df over
+    half the total df.
 
     Tombstone soundness (deleted=): masks are applied to the seed docs
     BEFORE theta is seeded and to the candidate union BEFORE probing.
     Theta from live seed docs is a lower bound on the final (live-only)
-    k-th score, so the essential-list decomposition stays lossless; block
-    upper bounds remain valid upper bounds whether or not the docs behind
-    them are deleted (a deleted top doc only makes a bound conservative).
-    Pinned by the deletion fuzz in tests/test_kernels_fuzz.py.
+    k-th score, so the essential decomposition stays lossless; upper
+    bounds remain valid whether or not the docs behind them are deleted.
 
-    Cursor soundness (after=, round 6): the page contract is top-k among
-    docs STRICTLY after (after_score, after_doc) in result order. The
-    cursor filters FULL scores, so it composes with pruning exactly like
-    tombstones: theta is seeded from the after-FILTERED seed scores (a
-    lower bound on the final k-th after-filtered score), the essential
-    decomposition argument is unchanged (a doc seen only in non-essential
-    lists scores < theta and cannot place on this page either), and the
-    final candidates are after-filtered before top-k selection. Scores are
-    the same bits as score_exhaustive's (_probe_scores accumulates in its
-    order), so cursors minted by either kernel remain exact here —
-    previously ANY cursor dropped a pure OR back to the exhaustive kernel
-    and page 2+ of a stopword-bearing OR decoded everything page 1
-    skipped.
+    Cursor soundness (after=): the page contract is top-k among docs
+    STRICTLY after (after_score, after_doc) in result order. The cursor
+    filters FULL scores, so it composes with pruning exactly like
+    tombstones: theta is seeded from the after-FILTERED seed scores, and
+    the final candidates are after-filtered before top-k selection.
+    Scores are score_exhaustive's bits (_score_at), so cursors minted by
+    any routing stay exact here. Both pinned by tests/test_kernels_fuzz.py.
     """
-    n = len(plists)
+    n = len(parts)
     if n == 0 or k <= 0:
         return np.zeros(0, dtype=np.int64), np.zeros(0)
     if n == 1:
-        return score_exhaustive(plists, k, "OR", deleted=deleted, after=after)
+        return score_exhaustive(parts, k, "OR", deleted=deleted, after=after)
+    terms = [isinstance(p, TermPostings) for p in parts]
+    ubs = np.array([
+        p.list_ub if t else (float(p[1].max()) if p[1].size else 0.0)
+        for p, t in zip(parts, terms)
+    ])
+    dfs = [int(p.row["df_shard"]) if t else int(p[0].size) for p, t in zip(parts, terms)]
 
-    caches: list[dict] = [dict() for _ in range(n)]
-    ubs = np.array([tp.list_ub for tp in plists])
-
-    # Phase A — seed theta from the strongest list's own docs
+    # Phase A — seed theta from the strongest part's own docs
     seed = int(np.argmax(ubs))
-    # cheap upfront guard: probing is only profitable when the seed list is
-    # small relative to the other lists' BLOCK counts (each candidate costs
-    # at most one block decode per other list). A fat seed list would decode
-    # everything anyway — exhaustive does that with less overhead.
-    df_seed = int(plists[seed].row["df_shard"])
-    other_blocks = sum(tp.n_blocks for i, tp in enumerate(plists) if i != seed)
-    if df_seed > 2 * other_blocks:
-        return score_exhaustive(plists, k, "OR", deleted=deleted, after=after)
-    seed_docs = plists[seed].decode_all()[0]
+    other_blocks = sum(
+        p.n_blocks for i, (p, t) in enumerate(zip(parts, terms)) if t and i != seed
+    )
+    if dfs[seed] > 2 * other_blocks:
+        return score_exhaustive(parts, k, "OR", deleted=deleted, after=after)
+    full: dict[int, tuple] = {}
+    caches: dict[int, dict] = {}
+
+    def docs_of(i: int) -> np.ndarray:
+        if not terms[i]:
+            return parts[i][0]
+        full[id(parts[i])] = parts[i].decode_all()
+        return full[id(parts[i])][0]
+
+    seed_docs = docs_of(seed)
     seed_docs = seed_docs[drop_deleted(seed_docs, deleted)]
-    seed_scores = _probe_scores(plists, caches, seed_docs)
+    seed_scores = _score_at(parts, seed_docs, full, caches)
     # theta must bound the k-th score of THIS PAGE's eligible set: filter
     # the (full) seed scores through the cursor before seeding it
     sd_after, ss_after = apply_after(seed_docs, seed_scores, after)
@@ -759,164 +734,24 @@ def score_blockmax(
     else:
         theta = -np.inf
 
-    # Phase B — essential-list decomposition under theta
+    # Phase B — essential-part decomposition under theta
     order = np.argsort(ubs, kind="stable")
-    cum = np.cumsum(ubs[order])
-    non_ess = cum < theta  # strict: pruned docs score < theta, ties impossible
+    non_ess = np.cumsum(ubs[order]) < theta  # strict: pruned docs score < theta
     essential = [int(i) for i, ne in zip(order, non_ess) if not ne]
     if len(essential) == n:
-        return score_exhaustive(plists, k, "OR", deleted=deleted, after=after)
-    total_df = sum(int(tp.row["df_shard"]) for tp in plists)
-    ess_df = sum(int(plists[i].row["df_shard"]) for i in essential) + (
-        df_seed if seed not in essential else 0
-    )
-    if ess_df > total_df // 2:
+        return score_exhaustive(parts, k, "OR", deleted=deleted, after=after)
+    ess_df = sum(dfs[i] for i in essential) + (dfs[seed] if seed not in essential else 0)
+    if ess_df > sum(dfs) // 2:
         # candidates cover most postings — probe overhead beats the savings
-        return score_exhaustive(plists, k, "OR", deleted=deleted, after=after)
+        return score_exhaustive(parts, k, "OR", deleted=deleted, after=after)
 
-    cand_parts = [seed_docs]
-    for i in essential:
-        if i != seed:
-            cand_parts.append(plists[i].decode_all()[0])
-    cand = np.unique(np.concatenate(cand_parts))
+    cand = np.unique(
+        np.concatenate([seed_docs] + [docs_of(i) for i in essential if i != seed])
+    )
     cand = cand[drop_deleted(cand, deleted)]
-    scores = _probe_scores(plists, caches, cand)
+    scores = _score_at(parts, cand, full, caches)
     cand, scores = apply_after(cand, scores, after)
     return topk_select(cand, scores, k)
-
-
-def score_mixed_or(
-    parts: list,
-    k: int,
-    deleted: np.ndarray | None = None,
-    after: tuple[float, int] | None = None,
-    prune: bool = True,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Disjunction over MIXED lists: ('term', TermPostings) entries decode
-    lazily with block-max bounds; ('mat', (docs, scores)) entries are
-    pre-evaluated pseudo posting lists — phrase/NEAR leaves, AND subtrees
-    (materialized via score_and_groups full_matches mode, block-probed),
-    NOT / nested-min_match subtrees — whose own evaluation is bounded by
-    their semantics and whose upper bound is EXACT (max of the
-    materialized scores). This is how an OR containing non-term clauses
-    keeps MaxScore pruning for its term leaves instead of dragging the
-    whole tree to the exhaustive walk.
-
-    Float contract: scores accumulate per part in the caller's list order
-    over the final sorted doc array, with identical operands whether a
-    term part was probed block-granularly or fully decoded — so the
-    pruned and exhaustive (prune=False / cursor) routings are
-    BIT-identical, and cursors minted by a pruned page stay exact.
-
-    Rank soundness mirrors score_blockmax: theta is the k-th FULL score
-    over the strongest part's own (live) docs; the maximal ascending-ub
-    prefix with cumsum strictly below theta is non-essential — a doc
-    appearing only there scores < theta (partials are non-negative) and
-    cannot place. Candidates = union of essential parts' docs; probes
-    fill in non-essential contributions exactly."""
-    if not parts:
-        return np.zeros(0, dtype=np.int64), np.zeros(0)
-
-    caches = [dict() for _ in parts]
-    full: dict[int, tuple] = {}  # part index -> full decode (terms only)
-
-    def part_docs(pi):
-        kind, obj = parts[pi]
-        if kind != "term":
-            return obj[0]
-        if pi not in full:
-            full[pi] = obj.decode_all()
-        return full[pi][0]
-
-    def score_at(cand):
-        """Per part IN ORDER: gather from the cached full decode when one
-        exists, block-probe otherwise — identical operands and add order
-        either way (the bit-identity contract)."""
-        scores = np.zeros(cand.size, dtype=np.float64)
-        for pi, (kind, obj) in enumerate(parts):
-            if kind == "term":
-                if pi in full:
-                    docs_i, tfs_i, dls_i = full[pi]
-                    if docs_i.size == 0:
-                        continue
-                    idx = np.minimum(np.searchsorted(docs_i, cand), docs_i.size - 1)
-                    hit = docs_i[idx] == cand
-                    if hit.any():
-                        h = idx[hit]
-                        scores[hit] += obj.idf * bm25.tf_score(
-                            tfs_i[h], dls_i[h], obj.avgdl, obj.k1, obj.b
-                        )
-                else:
-                    r = _probe_list(obj, caches[pi], cand)
-                    if r is not None:
-                        hit, tfs, dls = r
-                        scores[hit] += obj.idf * bm25.tf_score(
-                            tfs, dls, obj.avgdl, obj.k1, obj.b
-                        )
-            else:
-                d, s = obj
-                if d.size:
-                    idx = np.minimum(np.searchsorted(d, cand), d.size - 1)
-                    hit = d[idx] == cand
-                    if hit.any():
-                        scores[hit] += s[idx[hit]]
-        return scores
-
-    ubs = np.array(
-        [
-            p[1].list_ub if p[0] == "term"
-            else (float(p[1][1].max()) if p[1][1].size else 0.0)
-            for p in parts
-        ]
-    )
-    term_blocks = sum(p[1].n_blocks for p in parts if p[0] == "term")
-    has_term = any(p[0] == "term" for p in parts)
-    pdfs = [
-        int(p[1].row["df_shard"]) if p[0] == "term" else int(p[1][0].size)
-        for p in parts
-    ]
-
-    if prune and has_term and len(parts) > 1:
-        seed = int(np.argmax(ubs))
-        seed_docs = part_docs(seed)
-        if pdfs[seed] <= 2 * max(term_blocks, 1):
-            seed_docs = seed_docs[drop_deleted(seed_docs, deleted)]
-            seed_scores = score_at(seed_docs)
-            # cursor composes like tombstones (same argument as
-            # score_blockmax, round 6): theta seeds from the
-            # after-FILTERED full seed scores, candidates after-filter
-            # before selection — page 2+ keeps the pruned routing
-            sd_after, ss_after = apply_after(seed_docs, seed_scores, after)
-            if sd_after.size >= k:
-                kth = np.lexsort((sd_after, -ss_after))[k - 1]
-                theta = float(ss_after[kth])
-            else:
-                theta = -np.inf
-            order = np.argsort(ubs, kind="stable")
-            cum = np.cumsum(ubs[order])
-            essential = [int(i) for i, ne in zip(order, cum < theta) if not ne]
-            ess_df = sum(pdfs[i] for i in essential) + (
-                pdfs[seed] if seed not in essential else 0
-            )
-            if len(essential) < len(parts) and ess_df <= sum(pdfs) // 2:
-                cand_parts = [seed_docs]
-                for i in essential:
-                    if i != seed:
-                        cand_parts.append(part_docs(i))
-                cand = np.unique(np.concatenate(cand_parts))
-                cand = cand[drop_deleted(cand, deleted)]
-                cand_s = score_at(cand)
-                cand, cand_s = apply_after(cand, cand_s, after)
-                return topk_select(cand, cand_s, k)
-    # exhaustive (and cursor) path — same score_at float order
-    all_docs = [part_docs(pi) for pi in range(len(parts))]
-    uniq = np.unique(np.concatenate(all_docs)) if all_docs else np.zeros(0, np.int64)
-    uniq = uniq[drop_deleted(uniq, deleted)]
-    if uniq.size == 0:
-        return np.zeros(0, dtype=np.int64), np.zeros(0)
-    scores = score_at(uniq)
-    uniq, scores = apply_after(uniq, scores, after)
-    return topk_select(uniq, scores, k)
 
 
 def count_matches_shard(
@@ -967,7 +802,6 @@ def run_shard(
     plists: list,
     k: int,
     *,
-    kernel: str = "auto",
     deleted: np.ndarray | None = None,
     neg=(),
     after: tuple[float, int] | None = None,
@@ -990,10 +824,10 @@ def run_shard(
     scoring, cursor ignored).
 
     Routes: BOOL → booltree.evaluate_shard_topk; PHRASE/NEAR → proximity
-    kernels; kernel='exhaustive' → score_exhaustive; AND and min_match>1 OR
-    → score_and_groups (exact structural pruning, bit-identical floats to
-    exhaustive); plain OR → score_blockmax (MaxScore with block-granular
-    probes, rank-identical to exhaustive, cursors included)."""
+    kernels; AND and min_match>1 OR → score_and_groups (exact structural
+    pruning); plain OR → score_blockmax (MaxScore with block-granular
+    probes). The pruned OR/AND routes return score_exhaustive's floats bit
+    for bit, cursors included, so there is no kernel for a caller to pick."""
     if len(neg):
         excl = np.unique(
             np.concatenate([decode_posting_list(r)[0] for r in neg])
@@ -1015,17 +849,13 @@ def run_shard(
 
         by_tid = {int(tp.row["term_id"]): tp for tp in present}
         return booltree.evaluate_shard_topk(
-            tree, by_tid, k, deleted=deleted, after=after, kernel=kernel
+            tree, by_tid, k, deleted=deleted, after=after
         )
     if mode == "PHRASE":
         return score_phrase(present, k, deleted=deleted, after=after)
     if mode == "NEAR":
         return score_near(
             present, k, slop, deleted=deleted, after=after, ordered=ordered
-        )
-    if kernel == "exhaustive":
-        return score_exhaustive(
-            present, k, mode, deleted=deleted, min_match=min_match, after=after
         )
     if mode == "AND" or min_match > 1:
         return score_and_groups(
@@ -1036,10 +866,7 @@ def run_shard(
 
 
 # score_wand (document-at-a-time block-max WAND with a per-pivot Python
-# cursor loop) was REMOVED in round 3: it was sound and fuzz-pinned after
-# the round-2 fixes, but per-shard it measured 22 ms vs score_blockmax's
-# 3.4 ms on the skewed fixture and never beat either kernel on any fixture
-# (BENCH/BASELINE.md §3) — it only avoided an 11 s single-list pathology
-# via a guard. score_blockmax (vectorized MaxScore with block-granular
-# probes) is the one pruned disjunctive kernel; callers that pass
-# kernel="wand" get it (alias kept for CLI/back-compat).
+# cursor loop) was removed in round 3: per shard it measured 22 ms vs
+# score_blockmax's 3.4 ms on the skewed fixture and never beat either
+# kernel on any fixture (BENCH/BASELINE.md §3). score_blockmax is the one
+# pruned disjunctive kernel.

@@ -332,7 +332,6 @@ normalize_local_queries = plan.normalize
 def search_local(
     index,
     queries: pd.DataFrame,
-    kernel: str = "auto",
     with_url: bool = True,
     count_only: bool = False,
     excluded_ids: "np.ndarray | None" = None,
@@ -414,7 +413,7 @@ def search_local(
         slot_tids = {t for t, _ in spec.slots}
         per_shard = [
             spec.run_shard(
-                rows_, stats, kernel=kernel, deleted=deleted_by_shard.get(shard),
+                rows_, stats, deleted=deleted_by_shard.get(shard),
                 count=count_only,
             )
             for shard, rows_ in shards

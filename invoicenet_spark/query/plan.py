@@ -281,7 +281,7 @@ class QuerySpec:
         """Present term_ids whose postings this query reads."""
         return {t for t, _ in self.slots if t >= 0} | set(self.neg)
 
-    def run_shard(self, rows: dict, stats: dict, *, kernel="auto", deleted=None, count=False):
+    def run_shard(self, rows: dict, stats: dict, *, deleted=None, count=False):
         """Run this query over ONE shard. rows: {term_id: posting row dict}
         for (at least) this query's terms present in the shard."""
         avgdl, k1, b = stats["avgdl"], stats["k1"], stats["b"]
@@ -291,7 +291,7 @@ class QuerySpec:
             for tid, idf in self.slots
         ]
         return kernels.run_shard(
-            self.mode, plists, self.k, kernel=kernel, deleted=deleted,
+            self.mode, plists, self.k, deleted=deleted,
             neg=[rows[t] for t in self.neg if t in rows], after=self.after,
             min_match=self.min_match, slop=self.slop, ordered=self.ordered,
             tree=self.tree, count=count,

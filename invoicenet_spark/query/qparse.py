@@ -5,7 +5,22 @@ Spark imports.
 
 from __future__ import annotations
 
+import math
+
 MAX_PREFIX_EXPANSIONS = 1024
+
+
+def check_boost(value, name: str, error: type[ValueError] = ValueError) -> float:
+    """A boost or field weight as a float, which must be finite and >= 0:
+    MaxScore pruning is only sound when every partial score is
+    non-negative. `^0` stays valid, as in Lucene."""
+    try:
+        boost = float(value)
+    except (TypeError, ValueError) as e:
+        raise error(f"bad boost {value!r} for {name!r}") from e
+    if not (math.isfinite(boost) and boost >= 0):
+        raise error(f"boost for {name!r} must be finite and >= 0, got {value!r}")
+    return boost
 
 
 def parse_boost_terms(raw_terms) -> tuple[list[str], dict[str, float]]:
@@ -27,7 +42,7 @@ def parse_boost_terms(raw_terms) -> tuple[list[str], dict[str, float]]:
         base, _, suffix = t.partition("^")
         base_terms.append(base)
         if suffix:
-            explicit[base] = explicit.get(base, 0.0) + float(suffix)
+            explicit[base] = explicit.get(base, 0.0) + check_boost(suffix, base)
         else:
             plain[base] = plain.get(base, 0) + 1
     bmap = {b: v + float(plain.get(b, 0)) for b, v in explicit.items()}

@@ -7,9 +7,9 @@ OR query rewrites to — route to the MaxScore kernel with per-leaf
 Pins, per random trial:
 - pruned vs the exhaustive TREE WALK: rank identity + scores to 1e-12 rel
   (flat vs nested accumulation may differ in the last ulp);
-- pruned vs the flat exhaustive kernel (kernel='exhaustive' routing):
-  BIT-identical scores — the float-identity contract that keeps pagination
-  cursors exact across pruned and cursored pages;
+- pruned vs kernels.score_exhaustive over the resolved leaf postings in
+  DFS order: BIT-identical scores — the float-identity contract that keeps
+  pagination cursors exact across pruned and cursored pages;
 - AND-of-disjunction-groups routes to the conjunctive block-probe kernel
   (exact structural pruning) and NOT folds its negative into the deleted
   mask so the positive keeps its pruned routing;
@@ -71,6 +71,20 @@ def _ground_truth(tree, by_tid, k, deleted, after=None):
     return kernels.topk_select(docs, scores, k)
 
 
+def _flat_exhaustive(tree, by_tid, k, deleted):
+    """score_exhaustive over the tree's present leaves in DFS order, each
+    leaf's boost folded into idf and its avgdl override applied."""
+    plists = [
+        kernels.TermPostings(
+            by_tid[tid].row, idf=by_tid[tid].idf * boost,
+            avgdl=by_tid[tid].avgdl if avgdl is None else avgdl, k1=K1, b=B,
+        )
+        for tid, boost, avgdl in booltree.flatten_or_terms(tree)
+        if tid in by_tid
+    ]
+    return kernels.score_exhaustive(plists, k, "OR", deleted=deleted)
+
+
 def test_pruned_disjunction_fuzz():
     for seed in range(400):
         rng = np.random.default_rng(90_000 + seed)
@@ -93,10 +107,9 @@ def test_pruned_disjunction_fuzz():
         assert np.array_equal(ed, gd), f"seed={seed}: docs {ed} != {gd}"
         assert np.allclose(es, gs, rtol=1e-12, atol=1e-12), f"seed={seed}"
 
-        # bit-identity between the pruned and flat-exhaustive routings
-        xd, xs = booltree.evaluate_shard_topk(
-            tree, by_tid, k, deleted=deleted, kernel="exhaustive"
-        )
+        # bit-identity between the pruned routing and the flat exhaustive
+        # kernel over the same leaf postings
+        xd, xs = _flat_exhaustive(tree, by_tid, k, deleted)
         assert np.array_equal(gd, xd), f"seed={seed}"
         assert np.array_equal(gs, xs), f"seed={seed}: pruned floats != flat floats"
 
@@ -352,10 +365,10 @@ def _positional_corpus(rng, n_docs, vocab_size):
 
 
 def test_mixed_or_with_phrase_leaves_fuzz():
-    """OR trees carrying phrase leaves route to score_mixed_or: phrases
+    """OR trees carrying phrase leaves route to score_blockmax: phrases
     pre-evaluate into materialized pseudo lists (exact upper bounds), term
     leaves keep MaxScore pruning. Rank identity + 1e-12-rel scores vs the
-    tree walk, bit-identity between pruned and exhaustive routings, exact
+    tree walk, bit-identity between pruned and exhaustive branches, exact
     cursor pages, tombstones composed."""
     for seed in range(250):
         rng = np.random.default_rng(700_000 + seed)
@@ -390,19 +403,18 @@ def test_mixed_or_with_phrase_leaves_fuzz():
         gd, gs = booltree.evaluate_shard_topk(tree, by_tid, k, deleted=deleted)
         assert np.array_equal(ed, gd), f"seed={seed}: docs {ed} != {gd}"
         assert np.allclose(es, gs, rtol=1e-12, atol=1e-12), f"seed={seed}"
-        xd, xs = booltree.evaluate_shard_topk(
-            tree, by_tid, k, deleted=deleted, kernel="exhaustive"
+        # bit-identity with the exhaustive branch: k = n_docs + 1 leaves
+        # theta at -inf, so that run scores every match exhaustively
+        fd, fs = booltree.evaluate_shard_topk(
+            tree, by_tid, n_docs + 1, deleted=deleted
         )
-        assert np.array_equal(gd, xd) and np.array_equal(gs, xs), f"seed={seed}"
+        assert np.array_equal(gd, fd[:k]) and np.array_equal(gs, fs[:k]), f"seed={seed}"
         if gd.size >= 2:
             kk = gd.size // 2
             p1d, p1s = booltree.evaluate_shard_topk(tree, by_tid, kk, deleted=deleted)
             after = (float(p1s[-1]), int(p1d[-1]))
             p2d, p2s = booltree.evaluate_shard_topk(
                 tree, by_tid, kk, deleted=deleted, after=after
-            )
-            fd, fs = booltree.evaluate_shard_topk(
-                tree, by_tid, n_docs + 1, deleted=deleted
             )
             n2 = p2d.size
             assert np.array_equal(p2d, fd[kk : kk + n2]), f"seed={seed}"
@@ -416,13 +428,16 @@ def test_flatten_or_mixed_shapes():
     andt = {"kind": "and", "clauses": [t(1), t(2)]}
     nott = {"kind": "not", "positive": t(1), "negative": t(2)}
     mmt = {"kind": "or", "clauses": [t(1), t(2), t(3)], "min_match": 2}
-    # root must be a plain OR
-    assert booltree.flatten_or_mixed(t(1)) is None
+    # root must be a term or a plain OR
+    assert booltree.flatten_or_mixed(t(1)) == [("term", (1, 1.0, None))]
     assert booltree.flatten_or_mixed(andt) is None
     assert booltree.flatten_or_mixed({"kind": "or", "clauses": [t(1), andt],
                                       "min_match": 2}) is None
-    # pure-term ORs belong to flatten_or_terms
-    assert booltree.flatten_or_mixed({"kind": "or", "clauses": [t(1), t(2)]}) is None
+    # pure-term ORs give all-term parts in flatten_or_terms' order
+    pure = {"kind": "or", "clauses": [
+        t(2), {"kind": "or", "clauses": [t(1), t(3)]}]}
+    assert booltree.flatten_or_mixed(pure) == [
+        ("term", leaf) for leaf in booltree.flatten_or_terms(pure)]
     # AND-of-flat-groups -> andg; AND with a non-flat clause -> sub
     parts = booltree.flatten_or_mixed({"kind": "or", "clauses": [t(0), andt]})
     assert [k for k, _ in parts] == ["term", "andg"]
@@ -441,7 +456,7 @@ def test_mixed_or_general_subtrees_fuzz():
     term leaves with AND subtrees (-> block-probed andg materialization),
     NOT subtrees, nested min_match ORs, and phrase leaves (-> walk
     materialization). Rank identity + 1e-12-rel scores vs the tree walk,
-    bit-identity between pruned and exhaustive routings, exact cursor
+    bit-identity between pruned and exhaustive branches, exact cursor
     pages, tombstones composed."""
     for seed in range(300):
         rng = np.random.default_rng(800_000 + seed)
@@ -479,19 +494,18 @@ def test_mixed_or_general_subtrees_fuzz():
         gd, gs = booltree.evaluate_shard_topk(tree, by_tid, k, deleted=deleted)
         assert np.array_equal(ed, gd), f"seed={seed}: docs {ed} != {gd}"
         assert np.allclose(es, gs, rtol=1e-12, atol=1e-12), f"seed={seed}"
-        xd, xs = booltree.evaluate_shard_topk(
-            tree, by_tid, k, deleted=deleted, kernel="exhaustive"
+        # bit-identity with the exhaustive branch: k = n_docs + 1 leaves
+        # theta at -inf, so that run scores every match exhaustively
+        fd, fs = booltree.evaluate_shard_topk(
+            tree, by_tid, n_docs + 1, deleted=deleted
         )
-        assert np.array_equal(gd, xd) and np.array_equal(gs, xs), f"seed={seed}"
+        assert np.array_equal(gd, fd[:k]) and np.array_equal(gs, fs[:k]), f"seed={seed}"
         if gd.size >= 2:
             kk = gd.size // 2
             p1d, p1s = booltree.evaluate_shard_topk(tree, by_tid, kk, deleted=deleted)
             after = (float(p1s[-1]), int(p1d[-1]))
             p2d, p2s = booltree.evaluate_shard_topk(
                 tree, by_tid, kk, deleted=deleted, after=after
-            )
-            fd, fs = booltree.evaluate_shard_topk(
-                tree, by_tid, n_docs + 1, deleted=deleted
             )
             n2 = p2d.size
             assert np.array_equal(p2d, fd[kk : kk + n2]), f"seed={seed}"

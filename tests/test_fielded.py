@@ -427,6 +427,16 @@ def test_fielded_and_with_synonyms(spark, fielded_idx):
     )
 
 
+def test_negative_field_weight_raises_on_both_paths(spark, fielded_idx):
+    root, idx = fielded_idx
+    q = pd.DataFrame([{"query_id": 1, "terms": ["spark"], "mode": "OR", "k": 5,
+                       "fields": {"title": -1.0, "body": 1.0}}])
+    with pytest.raises(ValueError, match="'title'"):
+        search(spark, idx, q)
+    with pytest.raises(ValueError, match="'title'"):
+        search_local(root, q)
+
+
 @pytest.mark.parametrize(
     "row",
     [

@@ -51,7 +51,7 @@ def test_incremental_matches_oracle(spark, incr_index):
     assert abs(index.avgdl - oracle.avgdl) < 1e-9
 
     queries = gen_queries(30, seed=42)
-    res = search(spark, index, queries, kernel="auto").collect()
+    res = search(spark, index, queries).collect()
     by_q = {}
     for r in res:
         by_q.setdefault(r["query_id"], []).append(r)

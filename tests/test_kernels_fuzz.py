@@ -474,3 +474,51 @@ def test_blockmax_cursor_fuzz_vs_exhaustive():
             if ed.size == 0:
                 break
             after = (float(es[-1]), int(ed[-1]))
+
+
+def test_blockmax_materialized_parts_fuzz(monkeypatch):
+    """score_blockmax over random mixes of TermPostings and (docs, scores)
+    materialized parts — the shape BOOL disjunctions with phrase/AND/NOT
+    clauses hand it — with tombstones and chased cursor pages: docs AND
+    scores bit-identical to score_exhaustive over the same parts. The
+    pruned (non-fallback) branch must actually run in a good share of the
+    trials."""
+    fallbacks = []
+    exhaustive = kernels.score_exhaustive
+
+    def counting(*args, **kw):
+        fallbacks.append(1)
+        return exhaustive(*args, **kw)
+
+    pruned_runs = 0
+    for seed in range(400):
+        rng = np.random.default_rng(700_000 + seed)
+        n_docs = int(rng.integers(8, 80))
+        bs = int(rng.choice([4, 8]))
+        k = int(rng.integers(1, 6))
+        parts = _random_corpus(rng, n_docs, int(rng.integers(0, 4)), bs)
+        for _ in range(int(rng.integers(1, 4))):
+            df = int(rng.integers(1, n_docs + 1))
+            docs = np.sort(rng.choice(n_docs, size=df, replace=False)).astype(np.int64)
+            parts.append((docs, rng.random(df) * float(rng.choice([0.5, 3.0, 12.0]))))
+        parts = [parts[i] for i in rng.permutation(len(parts))]
+        n_del = int(rng.integers(0, max(1, n_docs // 3)))
+        deleted = (
+            np.sort(rng.choice(n_docs, size=n_del, replace=False)).astype(np.int64)
+            if n_del
+            else None
+        )
+        after = None
+        for _page in range(4):
+            ed, es = exhaustive(parts, k, "OR", deleted=deleted, after=after)
+            fallbacks.clear()
+            with monkeypatch.context() as m:
+                m.setattr(kernels, "score_exhaustive", counting)
+                gd, gs = kernels.score_blockmax(parts, k, deleted=deleted, after=after)
+            pruned_runs += not fallbacks
+            assert np.array_equal(ed, gd), f"seed={seed}: docs {ed} != {gd}"
+            assert np.array_equal(es, gs), f"seed={seed}: float drift"
+            if ed.size == 0:
+                break
+            after = (float(es[-1]), int(ed[-1]))
+    assert pruned_runs >= 150, pruned_runs

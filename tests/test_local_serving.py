@@ -24,12 +24,12 @@ def pos_index(spark, tmp_path_factory):
 
 def test_local_matches_spark_path(spark, pos_index):
     queries = gen_queries(40, seed=42)
-    spark_rows = search(spark, pos_index, queries, kernel="auto").collect()
+    spark_rows = search(spark, pos_index, queries).collect()
     want = [
         (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9), r["url"])
         for r in spark_rows
     ]
-    got_df = search_local(pos_index, queries, kernel="auto")
+    got_df = search_local(pos_index, queries)
     got = [
         (int(r.query_id), int(r.rank), int(r.doc_id), round(r.score, 9), r.url)
         for r in got_df.itertuples()
@@ -46,7 +46,7 @@ def test_local_phrase_matches_spark_path(spark, pos_index):
     queries = queries[queries["terms"].map(len) == 2].copy()
     queries["mode"] = "PHRASE"
     assert len(queries) > 0
-    spark_rows = search(spark, pos_index, queries, kernel="auto").collect()
+    spark_rows = search(spark, pos_index, queries).collect()
     want = [(r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9)) for r in spark_rows]
     got_df = search_local(pos_index, queries)
     got = [
@@ -172,7 +172,7 @@ def test_local_facets_and_sort_match_spark_ops(spark, pos_index):
 
     queries = gen_queries(8, seed=42)
     queries["k"] = 100000  # full match sets
-    matches_sdf = search(spark, pos_index, queries, kernel="auto").select("query_id", "doc_id")
+    matches_sdf = search(spark, pos_index, queries).select("query_id", "doc_id")
     matches_pd = search_local(pos_index, queries)
 
     # external metadata frame: deterministic source label per doc

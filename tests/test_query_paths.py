@@ -3,10 +3,12 @@ the Spark batch path, the serving path and single-segment federation on
 both — every path must return identical (query_id, rank, doc_id, score)
 rows, and the plain AND/OR/PHRASE rows must equal the numpy BM25 oracle.
 
-The batch covers modes AND/OR/PHRASE/BOOL with neg_terms, min_match,
+The batch covers modes AND/OR/PHRASE/NEAR/BOOL with neg_terms, min_match,
 `term^boost`, search_after cursors and query-time synonyms over an index
 with a tombstoned doc — plus the BOOL + neg_terms row whose must_not the
-serving path once ignored."""
+serving path once ignored, ordered and unordered NEAR rows with slop 0-3,
+and BOOL disjunctions whose non-term clauses (a phrase, an AND subtree)
+reach the MaxScore kernel as materialized lists, and a `^0` boost."""
 
 import random
 import warnings
@@ -103,9 +105,41 @@ def _random_rows(oracle) -> tuple[pd.DataFrame, set[int]]:
     rows.append({"query_id": N_ROWS, "terms": ["spark OR data"], "mode": "BOOL",
                  "k": BIG, "neg_terms": ["window"], "min_match": 0,
                  "after_score": np.nan, "after_doc": np.nan})
+    extra = _near_rows(oracle) + [
+        # stopword OR "a phrase" / term OR (rare AND stopword)
+        {"terms": ['spark OR "data window"'], "mode": "BOOL"},
+        {"terms": ["window OR (rare AND spark)"], "mode": "BOOL"},
+        {"terms": ["spark^0", "data"], "mode": "OR"},  # ^0 stays valid
+    ]
+    for qid, row in enumerate(extra, start=N_ROWS + 1):
+        rows.append({"query_id": qid, "k": 3, "neg_terms": [], "min_match": 0,
+                     "after_score": np.nan, "after_doc": np.nan, **row})
     q = pd.DataFrame(rows)
+    q["slop"] = q["slop"].fillna(0).astype(int)
+    q["ordered"] = [o is not False for o in q["ordered"]]
     q["after_segment"] = 0  # federated cursors name the segment
     return q, plain
+
+
+def _near_rows(oracle) -> list[dict]:
+    """NEAR rows, ordered and unordered, with slop 0-3. Each row's two
+    words sit slop+1 apart in some doc (swapped for unordered rows), so
+    every row has a hit; synonym keys are skipped so federation, which
+    takes no synonym map, compares every NEAR row too."""
+    rng = random.Random(SEED + 1)
+    docs = sorted(oracle._texts)
+    rows = []
+    for slop in range(4):
+        for ordered in (True, False):
+            while True:
+                toks = oracle._texts[rng.choice(docs)].split()
+                i = rng.randrange(len(toks))
+                pair = toks[i:i + slop + 2:slop + 1]
+                if len(pair) == 2 and pair[0] != pair[1] and not set(pair) & set(SYNONYMS):
+                    break
+            rows.append({"terms": pair if ordered else pair[::-1], "mode": "NEAR",
+                         "slop": slop, "ordered": ordered})
+    return rows
 
 
 def _rows(df) -> list[tuple]:
@@ -151,6 +185,33 @@ def test_every_path_gives_the_same_rows(spark, paths_index):
     window_docs = set(oracle.postings["window"])
     hits = {d for d, _ in by_q[N_ROWS]}
     assert hits and not hits & window_docs
+    # every NEAR, mixed-disjunction and ^0 row answers, and federation
+    # saw it
+    extra = set(range(N_ROWS + 1, len(q)))
+    assert extra <= set(by_q) and extra <= set(fq["query_id"])
+
+
+@pytest.mark.parametrize(
+    "row",
+    [
+        {"terms": ["spark^-2", "data"], "mode": "OR"},
+        {"terms": ["spark^-2 OR data"], "mode": "BOOL"},
+        {"terms": ["spark^nan", "data"], "mode": "OR"},
+        {"terms": ["spark^inf"], "mode": "AND"},
+        {"terms": ["spark^inf OR data"], "mode": "BOOL"},
+    ],
+    ids=["flat-negative", "bool-negative", "flat-nan", "flat-inf", "bool-inf"],
+)
+def test_negative_and_non_finite_boosts_raise(spark, paths_index, row):
+    """MaxScore pruning needs every partial >= 0: a negative or non-finite
+    boost fails loudly on both paths, naming the term."""
+    root, _, _ = paths_index
+    q = pd.DataFrame([{"query_id": 1, "k": 5, **row}])
+    with pytest.raises(ValueError, match="'spark'"):
+        search(spark, load_index(spark, root), q)
+    with pytest.raises(ValueError, match="'spark'"):
+        search_local(root, q)
+
 
 
 def test_search_infers_group_eval_type_without_warning(spark, paths_index):

@@ -26,7 +26,6 @@ def main():
     ap.add_argument("--docs", type=int, default=100_000)
     ap.add_argument("--reps", type=int, default=5)
     ap.add_argument("--cpus", type=int, default=32)
-    ap.add_argument("--kernel", default="auto")
     args = ap.parse_args()
 
     from invoicenet_spark.config import EngineConfig
@@ -57,11 +56,11 @@ def main():
 
     index = load_index(spark, out)
     queries = gen_queries(100, seed=42)
-    search(spark, index, queries, kernel=args.kernel).count()  # warmup
+    search(spark, index, queries).count()  # warmup
     reps = []
     for _ in range(args.reps):
         t0 = time.time()
-        n = search(spark, index, queries, kernel=args.kernel).count()
+        n = search(spark, index, queries).count()
         reps.append(round(time.time() - t0, 3))
     print(json.dumps({
         "build_s": build_s,

@@ -92,12 +92,12 @@ def main():
               file=sys.stderr, flush=True)
 
     row("union_batch_100",
-        lambda: search(spark, union_ix, queries, kernel="auto").count())
+        lambda: search(spark, union_ix, queries).count())
     row("federated_batch_100",
-        lambda: search_federated(spark, fed, queries, kernel="auto").count())
+        lambda: search_federated(spark, fed, queries).count())
     row("federated_pruned_batch_100",
         lambda: search_federated(
-            spark, fed, queries, kernel="auto", ts_from=ts_b
+            spark, fed, queries, ts_from=ts_b
         ).count())
 
     roots = [os.path.join(base, "a"), os.path.join(base, "b")]

@@ -2,9 +2,9 @@
 
 Builds a 1M-doc POSITIONAL index once (reused if --index exists), then
 measures, after warmup:
-  - single-query p50/p95 over the reference query set (kernel=auto);
-  - a skewed stopword+rare disjunctive query: auto (MaxScore block-max)
-    vs exhaustive — the pruning payoff the block-max design exists for;
+  - single-query p50/p95 over the reference query set;
+  - a skewed stopword+rare disjunctive query (MaxScore block-max), the
+    case the block-max design exists for;
   - a real-bigram PHRASE query vs the equivalent AND query (vectorized
     phrase kernel overhead check);
   - batch-of-100 throughput.
@@ -31,14 +31,14 @@ def pctl(xs, q):
     return xs[min(len(xs) - 1, int(round(q * (len(xs) - 1))))]
 
 
-def time_query(spark, index, search, terms, mode, kernel, reps=7):
+def time_query(spark, index, search, terms, mode, reps=7):
     import pandas as pd
 
     q = pd.DataFrame([{"query_id": 1, "terms": terms, "mode": mode, "k": 10}])
     times = []
     for _ in range(reps):
         t0 = time.time()
-        search(spark, index, q, kernel=kernel, with_url=False).collect()
+        search(spark, index, q, with_url=False).collect()
         times.append(time.time() - t0)
     return times
 
@@ -95,25 +95,22 @@ def main():
     }
 
     # warmup
-    search(spark, index, gen_queries(10, seed=1), kernel="auto").count()
+    search(spark, index, gen_queries(10, seed=1)).count()
 
     # reference query set p50/p95 (one query per job)
     qs = gen_queries(40, seed=42)
     lat = []
     for _, row in qs.iterrows():
-        ts = time_query(spark, index, search, list(row["terms"]), row["mode"], "auto", reps=1)
+        ts = time_query(spark, index, search, list(row["terms"]), row["mode"], reps=1)
         lat.extend(ts)
     report["ref_p50_ms"] = round(pctl(lat, 0.5) * 1000)
     report["ref_p95_ms"] = round(pctl(lat, 0.95) * 1000)
 
-    # skewed stopword+rare: auto (MaxScore) vs exhaustive (WAND retired r3)
-    for kernel in ("auto", "exhaustive"):
-        ts = time_query(spark, index, search, [hot, rare], "OR", kernel)
-        report[f"skew_or_{kernel}_p50_ms"] = round(pctl(ts, 0.5) * 1000)
-    # hot-only single-term and hot+mid for context
-    for kernel in ("auto", "exhaustive"):
-        ts = time_query(spark, index, search, [hot, mid, rare], "OR", kernel)
-        report[f"skew3_or_{kernel}_p50_ms"] = round(pctl(ts, 0.5) * 1000)
+    # skewed stopword+rare, then hot+mid+rare for context
+    ts = time_query(spark, index, search, [hot, rare], "OR")
+    report["skew_or_p50_ms"] = round(pctl(ts, 0.5) * 1000)
+    ts = time_query(spark, index, search, [hot, mid, rare], "OR")
+    report["skew3_or_p50_ms"] = round(pctl(ts, 0.5) * 1000)
 
     # phrase vs AND on a real bigram: take two consecutive tokens from a doc
     from invoicenet_spark.fixtures import gen_pages_pandas
@@ -121,17 +118,17 @@ def main():
     some = gen_pages_pandas(50, seed=42)
     en_text = some[some["lang"] == "en"]["text"].iloc[0].lower().split()
     bigram = [en_text[2], en_text[3]]
-    ts_ph = time_query(spark, index, search, bigram, "PHRASE", "auto")
-    ts_and = time_query(spark, index, search, bigram, "AND", "auto")
+    ts_ph = time_query(spark, index, search, bigram, "PHRASE")
+    ts_and = time_query(spark, index, search, bigram, "AND")
     report["phrase_bigram_p50_ms"] = round(pctl(ts_ph, 0.5) * 1000)
     report["and_bigram_p50_ms"] = round(pctl(ts_and, 0.5) * 1000)
     report["bigram"] = bigram
 
     # batch throughput
     qb = gen_queries(100, seed=42)  # seed ties queries to the corpus vocabulary
-    search(spark, index, qb, kernel="auto").count()
+    search(spark, index, qb).count()
     t0 = time.time()
-    n = search(spark, index, qb, kernel="auto").count()
+    n = search(spark, index, qb).count()
     report["batch_100_sec"] = round(time.time() - t0, 2)
     report["batch_qps"] = round(100 / (time.time() - t0), 1)
     report["batch_rows"] = n
