@@ -20,7 +20,6 @@ PAD, EOS, UNK = 0, 1, 2
 _PRINTABLE = list(string.printable)  # 100 chars, ids 3..102
 CHAR_TO_ID = {c: i + 3 for i, c in enumerate(_PRINTABLE)}
 ID_TO_CHAR = {i + 3: c for i, c in enumerate(_PRINTABLE)}
-N_OUTPUT = 103
 
 
 def char_encode(col: str | Column, seq_len: int = 32) -> Column:

@@ -16,8 +16,6 @@ from pyspark.sql import Column, functions as F
 
 # F1: amount regex (invoicenet/common/util.py:44)
 AMOUNT_PATTERN = r"\d+[,\d]*\.\d+"
-# F2: date regexes (invoicenet/common/util.py:45-46)
-DATE_PATTERN_DMY = r"\b(\d{1,2}[\/\-\.]\d{1,2}[\/\-\.]\d{2,4})\b"
 
 
 # European amount shape: dot-grouped thousands + comma decimals ('1.234,56',
@@ -50,12 +48,6 @@ def normalize_date(col: str | Column) -> Column:
     invoicenet/parsing/date_generator.py:124): canonical 'MM-dd-yyyy'."""
     c = F.col(col) if isinstance(col, str) else col
     return F.date_format(c, "MM-dd-yyyy")
-
-
-def plausible_date(col: str | Column) -> Column:
-    """P4 (invoicenet/common/util.py:51,68): reject future dates."""
-    c = F.col(col) if isinstance(col, str) else col
-    return c <= F.current_timestamp()
 
 
 def pattern_hash_class(col: str | Column) -> Column:

@@ -32,8 +32,6 @@ updates without re-encoding old segments.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 import numpy as np
 
 BLOCK_SIZE = 128
@@ -92,13 +90,6 @@ def vb_decode(blob: bytes | np.ndarray, count: int | None = None) -> np.ndarray:
 
 
 # ---------------------------------------------------------- posting lists --
-@dataclass
-class PostingList:
-    doc_ids: np.ndarray  # int64, sorted ascending
-    tfs: np.ndarray  # int64
-    doc_lens: np.ndarray  # int64 (doc length per posting; query-side need)
-
-
 def encode_posting_list(
     doc_ids: np.ndarray,
     tfs: np.ndarray,

@@ -23,16 +23,19 @@ the scalable semantics itself, following the segment-file playbook:
   update) anti-join the tombstones so N/avgdl never count deleted docs that
   a purge hasn't reclaimed yet.
 
-Scale shape: the query-time mask is held as ONE sorted int64 array per
-index generation, sliced per shard on demand — memory ∝ outstanding
-(un-purged) tombstones, the same bound as Lucene's in-heap liveDocs, and
-reset by every purge. The Spark path ships it to executors as a broadcast
-created once per Index handle.
+Scale shape: the query-time mask is per shard — memory ∝ a shard's
+outstanding (un-purged) tombstones, the same bound as Lucene's in-heap
+liveDocs, and reset by every purge. The serving path holds ONE sorted
+int64 array per index generation, sliced per shard (`split_by_shard`). The
+Spark path never materializes the ids on the driver: exec.search groups
+(shard, doc_id) tombstone rows beside each shard's postings, so a kernel
+group holds at most one shard's ids.
 
 Visibility: writers bump the index generation (stats.json atomic rewrite)
 after appending tombstones, so the serving cache (query/local.py) picks up
-deletes without restarts; Spark-side `exec.Index` handles are snapshots of
-load time, like every other part of the index they hold.
+deletes without restarts; Spark-side `exec.Index` handles snapshot the
+tombstone file list at load time (`list_tombstone_files`), like every
+other part of the index they hold.
 """
 
 from __future__ import annotations
@@ -49,13 +52,9 @@ def _deletes_dir(paths: IndexPaths) -> str:
 
 
 # Above this many outstanding tombstones (~40 MB of int64 at the bound) the
-# engine stops shipping the whole set to every executor: query-time masks
-# switch from a {shard: ids} broadcast to a per-shard (shard, ids[]) frame
-# joined onto the candidates (executor memory ∝ shards it touches, each
-# array ≤ shard_size), and purge/stats anti-joins drop the broadcast hint
-# (shuffle join). A churn-heavy index with 10^8 un-purged deletes must not
-# OOM the driver or the broadcast. Tests monkeypatch this to exercise the
-# big-set paths.
+# purge and corpus-stat anti-joins drop the broadcast hint (shuffle join):
+# a churn-heavy index with 10^8 un-purged deletes must not OOM the driver
+# or the broadcast. Tests monkeypatch this to exercise the big-set path.
 TOMBSTONE_BROADCAST_MAX_IDS = 5_000_000
 
 
@@ -82,25 +81,6 @@ def maybe_broadcast_tombstones(tomb, paths: IndexPaths):
     if tombstone_count_upper(paths) <= TOMBSTONE_BROADCAST_MAX_IDS:
         return F.broadcast(tomb)
     return tomb
-
-
-def tombstones_by_shard_df(spark, paths: IndexPaths, shard_size: int):
-    """Tombstones as a (shard long, _deleted array<long> sorted) DataFrame —
-    the big-set mask carrier: joined onto the query candidates on `shard`,
-    so each kernel group receives ONLY its shard's ids (array length ≤
-    shard_size). Built with a distributed distinct+collect_set, never
-    driver-side."""
-    from pyspark.sql import functions as F
-
-    d = _deletes_dir(paths)
-    return (
-        spark.read.parquet(d)
-        .select(F.col("doc_id").cast("long"))
-        .distinct()
-        .withColumn("shard", (F.col("doc_id") / F.lit(int(shard_size))).cast("long"))
-        .groupBy("shard")
-        .agg(F.sort_array(F.collect_set("doc_id")).alias("_deleted"))
-    )
 
 
 def bump_generation(paths: IndexPaths) -> None:
@@ -167,18 +147,20 @@ def delete_docs(
 
 def read_tombstones_spark(spark, paths: IndexPaths, files: list[str] | None = None):
     """Tombstones as a Spark DataFrame (doc_id long), or None when there are
-    none — callers skip the anti-join entirely then. files: restrict to a
-    snapshot from list_tombstone_files (the purge protocol: consume exactly
-    what you will clear)."""
-    if files is not None:
-        parquet = [f for f in files if f.endswith(".parquet")]
-        if not parquet:
-            return None
-        return spark.read.parquet(*parquet).select("doc_id").distinct()
-    d = _deletes_dir(paths)
-    if not _has_parquet(d):
+    none — callers skip the anti-join entirely then. An id deleted twice
+    appears twice: every consumer is an anti-join or dedups itself, so no
+    distinct shuffle is paid here, and the explicit schema spares a
+    footer-reading job. files: restrict to a snapshot from
+    list_tombstone_files (the purge protocol: consume exactly what you will
+    clear; exec.Index: mask exactly the deletes present at load time)."""
+    if files is None:
+        d = _deletes_dir(paths)
+        files = [d] if _has_parquet(d) else []
+    else:
+        files = [f for f in files if f.endswith(".parquet")]
+    if not files:
         return None
-    return spark.read.parquet(d).select("doc_id").distinct()
+    return spark.read.schema("doc_id long").parquet(*files)
 
 
 def load_tombstones(paths: IndexPaths) -> np.ndarray:
@@ -195,8 +177,8 @@ def load_tombstones(paths: IndexPaths) -> np.ndarray:
 
 def split_by_shard(deleted: np.ndarray, shard_size: int) -> dict[int, np.ndarray]:
     """Slice the sorted tombstone array into per-shard sorted arrays —
-    kernels mask per (query, shard) group, so a shard's mask must not pay
-    for the whole set."""
+    kernels mask one shard at a time, so a shard's mask must not pay for
+    the whole set."""
     if deleted.size == 0:
         return {}
     shards = deleted // shard_size

@@ -4,20 +4,22 @@ Plan shape for a batch of queries:
 
   queries(query_id, terms, mode, k, …)              [collected, tiny]
     plan.normalize + query_specs (driver)           [the one query planner]
-    → (query_id, term_id) pairs                     [tiny]
-    postings ⋈ broadcast pairs on term_id           [pushed-down IN filter]
-    groupBy(query_id, shard) applyInPandas          [kernels.run_shard]
+    postings where term_id IN (batch terms)         [pushed-down IN filter]
+    cogroup by shard with the (shard, doc_id) mask  [tombstones ∪ doc_filter]
+    applyInPandas → plan.run_shard_batch            [the serving path's loop]
     window top-k by (score desc, doc_id asc)        [global merge, tiny]
     docs ⋈ broadcast top-k → url                    [result materialization]
 
 Query normalization (analyzer chain, synonyms, fielded rewrite, dictionary
-expansion, BOOL trees) is query/plan.py and per-shard kernel routing is
-kernels.run_shard — both shared with the serving path (query/local.py), so
-the two paths give the same answers by construction.
+expansion, BOOL trees) is query/plan.py and the per-shard batch loop is
+plan.run_shard_batch — both shared with the serving path (query/local.py),
+so the two paths give the same answers by construction.
 
-Every (query_id, shard) task is independent — the shard axis is the same
-docID-range partitioning the build used, so cross-shard skew cannot occur
-and the global merge touches only per-shard top-k rows (≤ k · n_shards).
+Every shard group is independent — the shard axis is the same docID-range
+partitioning the build used, so a group builds its posting rows once and
+runs every query of the batch over them, and the global merge touches only
+per-shard top-k rows (≤ k · n_shards per query). Batch parallelism is the
+number of probed shards.
 
 The term filter reaches the parquet scan as a pushed filter; postings files
 are laid out sorted by term_id within each shard so row-group min/max
@@ -29,7 +31,7 @@ from __future__ import annotations
 
 import json
 import operator
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from functools import reduce
 
 import numpy as np
@@ -37,6 +39,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from invoicenet_spark.index.build import IndexPaths, read_postings
+from invoicenet_spark.index.deletes import list_tombstone_files, read_tombstones_spark
 from invoicenet_spark.query import plan
 
 
@@ -49,7 +52,8 @@ class Index(plan.Dictionary):
     stats: dict
     _local_dict: "pd.DataFrame | None" = None
     _fuzzy_vocab: "np.ndarray | None" = None
-    _deleted_bc: "object | None" = None  # broadcast {shard: sorted doc_ids}
+    # tombstone files at load time: a handle masks exactly these deletes
+    tombstone_files: list[str] = field(default_factory=list)
 
     @property
     def N(self) -> int:
@@ -58,50 +62,6 @@ class Index(plan.Dictionary):
     @property
     def avgdl(self) -> float:
         return self.stats["avgdl"]
-
-    def deleted_mask_source(self, spark: SparkSession):
-        """How tombstone masks reach the shard kernels — created once per
-        Index handle. Three regimes (size guard in index/deletes.py):
-
-          ("none", None)  no tombstones — the common case adds nothing.
-          ("bc", bc)      a per-shard {shard: ids} dict broadcast (the
-                          Lucene liveDocs analog: memory ∝ outstanding
-                          un-purged tombstones, reset by purge).
-          ("df", frame)   beyond TOMBSTONE_BROADCAST_MAX_IDS: a per-shard
-                          (shard, _deleted[]) frame the plan left-joins onto
-                          the candidates — executor memory ∝ shards a task
-                          touches (each array ≤ shard_size), never the full
-                          set; the driver never materializes the ids at all.
-        """
-        if self._deleted_bc is None:
-            from invoicenet_spark.index.deletes import (
-                TOMBSTONE_BROADCAST_MAX_IDS,
-                load_tombstones,
-                split_by_shard,
-                tombstone_count_upper,
-                tombstones_by_shard_df,
-            )
-
-            n_upper = tombstone_count_upper(self.paths)
-            if n_upper == 0:
-                self._deleted_bc = ("none", None)
-            elif n_upper > TOMBSTONE_BROADCAST_MAX_IDS:
-                self._deleted_bc = (
-                    "df",
-                    tombstones_by_shard_df(
-                        spark, self.paths, int(self.stats["shard_size"])
-                    ),
-                )
-            else:
-                by_shard = split_by_shard(
-                    load_tombstones(self.paths), int(self.stats["shard_size"])
-                )
-                self._deleted_bc = (
-                    ("bc", spark.sparkContext.broadcast(by_shard))
-                    if by_shard
-                    else ("none", None)
-                )
-        return self._deleted_bc
 
     def hot_dict(self) -> "pd.DataFrame | None":
         """Driver-side term → (term_id, df) cache for low-latency lookups —
@@ -151,6 +111,7 @@ def load_index(spark: SparkSession, root: str) -> Index:
         terms=spark.read.parquet(paths.terms).cache(),
         docs=spark.read.parquet(paths.docs),
         stats=stats,
+        tombstone_files=list_tombstone_files(paths),
     )
 
 
@@ -256,6 +217,14 @@ def top_by_field(
     )
 
 
+def _with_shard(ids: DataFrame, shard_size: int) -> DataFrame:
+    """(doc_id) rows as (shard, doc_id) mask rows — docID-range sharding."""
+    return ids.select(
+        (F.col("doc_id") / F.lit(int(shard_size))).cast("long").alias("shard"),
+        F.col("doc_id").cast("long"),
+    )
+
+
 def excluded_by_shard_df(
     spark: SparkSession,
     meta: DataFrame,
@@ -263,11 +232,10 @@ def excluded_by_shard_df(
     shard_size: int,
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """ES filter-context exclusions as a (shard, _deleted array<long>
-    sorted) frame — the same per-shard mask carrier the big-tombstone-set
-    regime uses, so the shard kernels apply a metadata filter with ZERO
-    kernel changes and BEFORE top-k selection (post-filtering a ranked
-    page would under-fill it; Lucene applies filter bitsets during
+    """ES filter-context exclusions as (shard, doc_id) rows — the same mask
+    carrier tombstones ride, so the shard kernels apply a metadata filter
+    with ZERO kernel changes and BEFORE top-k selection (post-filtering a
+    ranked page would under-fill it; Lucene applies filter bitsets during
     collection for the same reason).
 
     Excluded = meta rows where `predicate` is NOT TRUE — false and NULL
@@ -276,38 +244,18 @@ def excluded_by_shard_df(
     corpus metadata table); docs absent from `meta` are not excluded.
 
     Scale shape: ONE scan of the metadata table with the negated
-    predicate and the id column pushed to the reader, then a single
-    shuffle keyed by shard to build the arrays (each ≤ shard_size, the
+    predicate and the id column pushed to the reader; search() groups the
+    rows by shard beside the postings (each group ≤ shard_size ids, the
     docID-range sharding guarantee). Exclusion volume ∝ docs FAILING the
     filter, so permissive filters are near-free; a highly selective
-    filter (most docs excluded) pays arrays ∝ shard population — at that
+    filter (most docs excluded) pays ids ∝ shard population — at that
     extreme, seeding candidates from the allowed side instead would win,
     which is the documented future escalation."""
-    return (
-        meta.where(~F.coalesce(F.expr(predicate).cast("boolean"), F.lit(False)))
-        .select(F.col(id_col).cast("long").alias("doc_id"))
-        .distinct()
-        .withColumn("shard", (F.col("doc_id") / F.lit(int(shard_size))).cast("long"))
-        .groupBy("shard")
-        .agg(F.sort_array(F.collect_set("doc_id")).alias("_deleted"))
-    )
-
-
-def _merge_mask_frames(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Union two (shard, _deleted[]) mask frames into one — tombstones +
-    filter exclusions ride a single joined column, keeping the kernel's
-    one-mask contract."""
-    empty = F.array().cast("array<long>")
-    return (
-        a.withColumnRenamed("_deleted", "_da")
-        .join(b.withColumnRenamed("_deleted", "_db"), "shard", "full")
-        .select(
-            "shard",
-            F.array_sort(
-                F.array_union(F.coalesce("_da", empty), F.coalesce("_db", empty))
-            ).alias("_deleted"),
-        )
-    )
+    excluded = meta.where(
+        F.col(id_col).isNotNull()
+        & ~F.coalesce(F.expr(predicate).cast("boolean"), F.lit(False))
+    ).select(F.col(id_col).alias("doc_id"))
+    return _with_shard(excluded, shard_size)
 
 
 def _empty_results(spark: SparkSession, with_url: bool) -> DataFrame:
@@ -317,40 +265,32 @@ def _empty_results(spark: SparkSession, with_url: bool) -> DataFrame:
     return spark.createDataFrame([], schema=schema)
 
 
-def _shard_group(specs: list, stats: dict, deleted_bc=None, count: bool = False):
-    """applyInPandas body for one (query_id, shard) group: the group's
-    posting rows go through the query's QuerySpec to kernels.run_shard.
-    The specs ride the closure (query batches are tiny by contract), so
-    the shuffled rows carry only (query_id, term_id) beside the postings.
-    deleted_bc: a broadcast {shard: sorted tombstoned doc_ids} or None —
-    each group masks with ITS shard's slice only. count: emit ONE row per
-    group whose doc_id column carries the shard's match COUNT (summed by
-    the caller — the track_total_hits analog). `run` is deliberately
-    unannotated: PySpark then takes the grouped-map eval type as given,
-    while a partial annotation made it warn on every call."""
-    by_qid = {s.query_id: s for s in specs}
+def _shard_batch(specs: list, stats: dict, count: bool):
+    """cogroup applyInPandas body for one shard: the shard's posting rows
+    (built into {term_id: row} once) and its masked doc_ids go through
+    plan.run_shard_batch — the serving path's per-shard loop — for every
+    query of the batch. The specs ride the closure (query batches are tiny
+    by contract). count: one row per (query, shard) whose doc_id column
+    carries the match COUNT (summed by the caller — the track_total_hits
+    analog). `run` is deliberately unannotated: PySpark then takes the
+    cogrouped-map eval type as given, while a partial annotation made it
+    warn on every call."""
 
-    def run(key, pdf):
-        qid, shard = int(key[0]), int(key[1])
-        deleted = None
-        if deleted_bc is not None:
-            deleted = deleted_bc.value.get(shard)
-        elif "_deleted" in pdf.columns:
-            # big-tombstone-set regime: this shard's ids arrived as a joined
-            # column (same array on every row of the group) — see
-            # Index.deleted_mask_source
-            val = pdf["_deleted"].iloc[0]
-            if isinstance(val, (list, np.ndarray)) and len(val):
-                deleted = np.asarray(val, dtype=np.int64)
-            pdf = pdf.drop(columns=["_deleted"])  # keep row dicts lean
-        rows = {int(r["term_id"]): r for r in pdf.to_dict("records")}
-        res = by_qid[qid].run_shard(rows, stats, deleted=deleted, count=count)
-        docs, scores = (np.array([res]), np.zeros(1)) if count else res
-        return pd.DataFrame(
-            {"query_id": np.full(docs.size, qid, dtype=np.int64),
-             "doc_id": docs.astype(np.int64),
-             "score": scores.astype(np.float64)}
-        )
+    def run(key, postings, mask):
+        rows = {int(r["term_id"]): r for r in postings.to_dict("records")}
+        # np.unique: drop_deleted needs sorted ids, and tombstones may repeat
+        deleted = np.unique(mask["doc_id"].to_numpy(np.int64)) if len(mask) else None
+        qids, docs, scores = [np.zeros(0, np.int64)], [np.zeros(0, np.int64)], [np.zeros(0)]
+        for spec, res in zip(specs, plan.run_shard_batch(specs, rows, stats, deleted, count)):
+            if res is None:
+                continue
+            d, s = (np.array([res]), np.zeros(1)) if count else res
+            qids.append(np.full(d.size, spec.query_id, dtype=np.int64))
+            docs.append(d.astype(np.int64))
+            scores.append(s.astype(np.float64))
+        return pd.DataFrame({"query_id": np.concatenate(qids),
+                             "doc_id": np.concatenate(docs),
+                             "score": np.concatenate(scores)})
 
     return run
 
@@ -399,9 +339,9 @@ def search(
     never occupy k slots) and shared by every query in the batch. The
     filter restricts matching but never scores (Lucene filter clauses
     contribute 0). Implemented as negated-predicate exclusions unioned
-    into the tombstone mask frame — see excluded_by_shard_df for the
-    semantics (false/NULL exclude) and scale shape. Applies to ranked,
-    count_only and matches_only modes alike.
+    with the handle's tombstones into one (shard, doc_id) mask — see
+    excluded_by_shard_df for the semantics (false/NULL exclude) and scale
+    shape. Applies to ranked, count_only and matches_only modes alike.
 
     Returns (query_id, rank, doc_id, score[, url]) sorted by query_id, rank.
     """
@@ -417,60 +357,42 @@ def search(
         # no bound (2^62 is unreachable by any shard's doc count)
         for spec in specs:
             spec.k = 1 << 62
-    pairs = pd.DataFrame(
-        [(s.query_id, t) for s in specs for t in sorted(s.term_ids())],
-        columns=["query_id", "term_id"], dtype="int64",
-    )
+    term_ids = sorted(set().union(*(s.term_ids() for s in specs)))
     qids = pd.DataFrame({"query_id": [s.query_id for s in specs]}, dtype="int64")
     if count_only:
         zero = spark.createDataFrame(qids).withColumn("total_hits", F.lit(0).cast("long"))
-    if pairs.empty:
+    if not term_ids:
         return zero.orderBy("query_id") if count_only else _empty_results(spark, with_url)
 
-    # postings probe on term_id. A broadcast join alone would SCAN the whole
-    # postings table and filter in the join — at web scale that reads the
-    # entire index. The explicit IN-filter on the (tiny) batch's term_ids
-    # pushes the predicate into the parquet scan: `PushedFilters: [In(term_id,
-    # …)]` + row-group min/max skipping on the term_id-sorted files turn the
-    # probe into a near-point lookup. Posting rows are self-contained
-    # (per-posting doc_len stream), so it is the only scan.
-    probe = index.postings.where(F.col("term_id").isin(sorted(set(pairs["term_id"]))))
+    # postings probe on term_id. The explicit IN-filter on the (tiny)
+    # batch's term_ids pushes the predicate into the parquet scan:
+    # `PushedFilters: [In(term_id, …)]` + row-group min/max skipping on the
+    # term_id-sorted files turn the probe into a near-point lookup. Posting
+    # rows are self-contained (per-posting doc_len stream), so it is the
+    # only scan, and each probed row reaches the kernels exactly once.
+    probe = index.postings.where(F.col("term_id").isin(term_ids))
     if not positional:
         # the position stream is the fattest column; only proximity reads it
         probe = probe.drop("pos_blob", "block_pos_off")
-    cand = probe.join(F.broadcast(spark.createDataFrame(pairs)), "term_id")
 
-    mask_kind, mask_payload = index.deleted_mask_source(spark)
+    # the mask: (shard, doc_id) rows — the handle's tombstones plus the
+    # doc_filter's exclusions — grouped beside each shard's postings, so a
+    # kernel group holds only its shard's ids (≤ shard_size) and the driver
+    # never materializes them
+    shard_size = int(index.stats["shard_size"])
+    masks = []
+    tombstones = read_tombstones_spark(spark, index.paths, files=index.tombstone_files)
+    if tombstones is not None:
+        masks.append(_with_shard(tombstones, shard_size))
     if doc_filter is not None:
         meta_df, pred = doc_filter
-        excl = excluded_by_shard_df(
-            spark, meta_df, pred, int(index.stats["shard_size"])
-        )
-        if mask_kind == "bc":
-            # fold the broadcast tombstones into frame form and merge —
-            # with a filter in play the join-frame regime carries both
-            # (filter exclusions have no small-set guarantee)
-            from invoicenet_spark.index.deletes import tombstones_by_shard_df
-
-            excl = _merge_mask_frames(
-                tombstones_by_shard_df(
-                    spark, index.paths, int(index.stats["shard_size"])
-                ),
-                excl,
-            )
-        elif mask_kind == "df":
-            excl = _merge_mask_frames(mask_payload, excl)
-        mask_kind, mask_payload = "df", excl
-    if mask_kind == "df":
-        # big-tombstone-set regime: each kernel group gets ONLY its shard's
-        # ids via this equi-join — no full-set broadcast anywhere
-        cand = cand.join(mask_payload, "shard", "left")
-    out = cand.groupBy("query_id", "shard").applyInPandas(
-        _shard_group(
-            specs, index.stats, mask_payload if mask_kind == "bc" else None,
-            count=count_only,
-        ),
-        schema=RESULT_SCHEMA,
+        masks.append(excluded_by_shard_df(spark, meta_df, pred, shard_size))
+    mask = (
+        reduce(DataFrame.unionByName, masks) if masks
+        else spark.createDataFrame([], "shard long, doc_id long")
+    )
+    out = probe.groupBy("shard").cogroup(mask.groupBy("shard")).applyInPandas(
+        _shard_batch(specs, index.stats, count_only), schema=RESULT_SCHEMA
     )
     if count_only:
         counts = out.groupBy("query_id").agg(

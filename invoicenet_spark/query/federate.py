@@ -193,7 +193,7 @@ class FederatedIndex:
         union+agg over the live segments' terms tables (cached — every
         search call's idf join reads it). exec.search on such a handle
         computes union-idf with zero changes — every kernel, pruning route,
-        tombstone regime and filter applies per segment."""
+        tombstone mask and filter applies per segment."""
         if live in self._global_cache:
             return self._global_cache[live]
         segs = [self.segments[i] for i in live]
@@ -227,7 +227,6 @@ class FederatedIndex:
                 .fillna(0, subset=["df"]),
                 _local_dict=None,
                 _fuzzy_vocab=None,
-                _deleted_bc=None,
             )
             for ix in segs
         ]

@@ -1,8 +1,9 @@
 """Pure numpy query kernels: gallop intersection, exhaustive scoring, the
 conjunctive block-probe kernel and block-max MaxScore. No Spark imports —
 unit-testable standalone. run_shard is the one per-(query, shard) router
-both query paths call (the Spark path inside applyInPandas, the serving
-path in its per-query loop).
+both query paths reach through the one per-shard batch loop,
+plan.run_shard_batch (the Spark path once per shard group, the serving
+path once per probed shard).
 
 Reference analog (SURVEY.md §2.6 J4, §2.7 A1, §2.8 K1): the query-term ∩
 candidate intersection is the reference's memory-mask (model.py:124-125);
@@ -811,8 +812,9 @@ def run_shard(
     tree: dict | None = None,
     count: bool = False,
 ):
-    """The ONE per-(query, shard) router: the Spark applyInPandas body and
-    the serving loop both score every query through it.
+    """The ONE per-(query, shard) router: plan.run_shard_batch — the
+    per-shard loop of the Spark shard groups and of the serving path —
+    scores every query through it.
 
     plists: one TermPostings per query slot (slot order for PHRASE/NEAR),
     None where the slot's term has no postings in this shard — an

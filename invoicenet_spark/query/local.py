@@ -27,9 +27,9 @@ At web scale this is the component that runs on each query-serving replica:
 the dictionary is held hot (LocalIndex._dict), postings reads touch only
 the probed term_ids' row groups, and nothing here involves the driver of a
 build cluster — it is a client of the index files. Query batches share ONE
-postings read (the union of the batch's term_ids) and then run the
-per-query kernels serially — measured faster than both a thread pool
-(small GIL-bound numpy calls) and the Spark batch path at 100 queries.
+postings read (the union of the batch's term_ids) and then run
+plan.run_shard_batch shard by shard — the same per-shard loop exec.search
+runs in each of its shard groups.
 
 Queries normalize through the one planner (query/plan.py: LocalIndex is
 its pyarrow dictionary adapter) and score per shard through the one router
@@ -317,12 +317,6 @@ def local_index(index_or_root) -> LocalIndex:
     return li
 
 
-def invalidate_local_index(root: str) -> None:
-    """Drop any cached serving handle for an index root (explicit hook; the
-    generation check makes this optional — the next call re-keys anyway)."""
-    _SERVING_CACHE.pop(os.path.realpath(root), None)
-
-
 # ----------------------------------------------------------------- querying --
 # the planner's normalize step under the serving path's name (the federated
 # dfs probe and benchmark traces address it here)
@@ -364,13 +358,13 @@ def search_local(
     asc). Returns the same columns as exec.search.
 
     Batches: the postings read is shared across the whole batch (one
-    catalog probe for the union of term_ids), then the per-query kernels
-    run serially. Measured, 100-query batches: on a 100k-doc index 0.8 s
-    serial vs 1.5 s Spark batch; on a 1M-doc index 7.2 s serial vs 3.2 s
-    Spark batch (a thread pool was slower still: many small GIL-bound numpy
-    calls). Division of labor: this path owns interactive/single queries
-    and small-corpus batches; the Spark path owns large-corpus batch
-    throughput (its cores run kernels truly in parallel).
+    catalog probe for the union of term_ids), then plan.run_shard_batch
+    runs the batch shard by shard on one core (a thread pool was slower:
+    many small GIL-bound numpy calls). exec.search runs the same loop once
+    per shard group, the shards in parallel across executor cores, behind
+    a Spark job's scheduling floor. Division of labor: this path owns
+    interactive/single queries and batches over few shards; the Spark path
+    owns batches over many shards.
     """
     li = local_index(index)
     stats = {**li.stats, **stats_override} if stats_override else li.stats
@@ -407,18 +401,16 @@ def search_local(
             merged[sh] = ids if cur is None else np.union1d(cur, ids)
         deleted_by_shard = merged
 
-    shards = sorted(by_shard.items())
+    per_query: list[list] = [[] for _ in specs]
+    for shard, rows_ in sorted(by_shard.items()):
+        results = plan.run_shard_batch(
+            specs, rows_, stats, deleted_by_shard.get(shard), count_only
+        )
+        for per_shard, res in zip(per_query, results):
+            if res is not None:
+                per_shard.append(res)
     out_rows, totals = [], []
-    for spec in specs:
-        slot_tids = {t for t, _ in spec.slots}
-        per_shard = [
-            spec.run_shard(
-                rows_, stats, deleted=deleted_by_shard.get(shard),
-                count=count_only,
-            )
-            for shard, rows_ in shards
-            if not slot_tids.isdisjoint(rows_)
-        ]
+    for spec, per_shard in zip(specs, per_query):
         if count_only:
             totals.append(int(sum(per_shard)))
             continue

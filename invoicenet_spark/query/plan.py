@@ -3,8 +3,8 @@
 federated dfs probe (federate.search_local_federated) all normalize a
 query batch through `normalize` and compile it into per-query `QuerySpec`s
 through `query_specs`, so a row can never mean one thing on one path and
-something else on another. Every spec then runs per (query, shard) through
-the one router, kernels.run_shard.
+something else on another. Every batch then runs shard by shard through
+`run_shard_batch`, which routes each spec through kernels.run_shard.
 
 Pipeline (`normalize`), in this order:
 
@@ -296,6 +296,22 @@ class QuerySpec:
             min_match=self.min_match, slop=self.slop, ordered=self.ordered,
             tree=self.tree, count=count,
         )
+
+
+def run_shard_batch(
+    specs: list[QuerySpec], rows: dict, stats: dict, deleted=None, count=False
+) -> list:
+    """Run a query batch over ONE shard — the per-shard loop of both the
+    serving path and the Spark batch path's shard group. rows: {term_id:
+    posting row dict} for the batch's terms present in the shard; deleted:
+    the shard's sorted masked doc_ids or None. Returns one entry per spec:
+    its (docs, scores) (its match count when count), or None when none of
+    its scored terms occur in the shard."""
+    return [
+        None if {t for t, _ in s.slots}.isdisjoint(rows)
+        else s.run_shard(rows, stats, deleted=deleted, count=count)
+        for s in specs
+    ]
 
 
 def _opt(q: dict, name: str, default, cast):

@@ -93,38 +93,18 @@ def test_delete_masks_both_paths_exactly(spark, del_index):
 
 
 def test_big_tombstone_set_uses_shard_join_identically(spark, del_index, monkeypatch):
-    """Tombstone sets past TOMBSTONE_BROADCAST_MAX_IDS switch the mask from
-    a full-set broadcast to the per-shard (shard, ids[]) join — results must
-    be BIT-identical to the broadcast regime on the same index (threshold
-    monkeypatched to 0 to force the big-set path)."""
+    """Tombstone sets past TOMBSTONE_BROADCAST_MAX_IDS purge through shuffle
+    anti-joins (no broadcast hint) — a compaction under the forced threshold
+    (monkeypatched to 0) must be bit-identical to one purged through the
+    broadcast path (a purge re-derives stats, so compare purged vs purged,
+    not vs the pre-purge baseline)."""
+    import shutil
+
     from invoicenet_spark.index import deletes as del_mod
+    from invoicenet_spark.index.maintain import compact_index
 
     q = gen_queries(10, seed=42)
     orig_threshold = del_mod.TOMBSTONE_BROADCAST_MAX_IDS
-    idx_bc = load_index(spark, del_index)  # fixture already carries deletes
-    kind, _ = idx_bc.deleted_mask_source(spark)
-    assert kind == "bc"
-    base = search(spark, idx_bc, q).toPandas().reset_index(drop=True)
-
-    monkeypatch.setattr(del_mod, "TOMBSTONE_BROADCAST_MAX_IDS", 0)
-    idx_df = load_index(spark, del_index)  # fresh handle — re-decides regime
-    kind, payload = idx_df.deleted_mask_source(spark)
-    assert kind == "df" and payload is not None
-    got = search(spark, idx_df, q).toPandas().reset_index(drop=True)
-    pd.testing.assert_frame_equal(
-        got[["query_id", "rank", "doc_id", "url"]],
-        base[["query_id", "rank", "doc_id", "url"]],
-        check_dtype=False,
-    )
-    np.testing.assert_array_equal(got["score"].to_numpy(), base["score"].to_numpy())
-
-    # purge: anti-joins under the forced threshold run WITHOUT the broadcast
-    # hint — the compacted index must be bit-identical to one purged through
-    # the broadcast path (a purge re-derives stats, so compare purged vs
-    # purged, not vs the pre-purge baseline)
-    import shutil
-
-    from invoicenet_spark.index.maintain import compact_index
 
     roots = {}
     for label, thresh in (("shuffle", 0), ("broadcast", orig_threshold)):

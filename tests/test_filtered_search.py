@@ -22,7 +22,6 @@ from invoicenet_spark.fixtures import gen_pages_spark, gen_queries
 from invoicenet_spark.index.deletes import delete_docs
 from invoicenet_spark.index.build import build_index
 from invoicenet_spark.query.exec import (
-    _merge_mask_frames,
     excluded_by_shard_df,
     load_index,
     search,
@@ -162,26 +161,12 @@ def test_excluded_by_shard_df_semantics(spark):
             }
         )
     )
-    out = {
-        int(r["shard"]): list(r["_deleted"])
+    out = sorted(
+        (int(r["shard"]), int(r["doc_id"]))
         for r in excluded_by_shard_df(spark, meta, "flag", 64).collect()
-    }
-    # false AND NULL excluded, grouped by doc_id // shard_size
-    assert out == {0: [1], 1: [65], 2: [130]}
-
-
-def test_merge_mask_frames(spark):
-    a = spark.createDataFrame(
-        pd.DataFrame({"shard": [0, 1], "_deleted": [[1, 3], [70]]})
     )
-    b = spark.createDataFrame(
-        pd.DataFrame({"shard": [1, 2], "_deleted": [[65, 70], [130]]})
-    )
-    got = {
-        int(r["shard"]): list(r["_deleted"])
-        for r in _merge_mask_frames(a, b).collect()
-    }
-    assert got == {0: [1, 3], 1: [65, 70], 2: [130]}
+    # false AND NULL excluded, each keyed by doc_id // shard_size
+    assert out == [(0, 1), (1, 65), (2, 130)]
 
 
 URL_PRED = "url LIKE '%//site3.%' OR url LIKE '%//site7.%'"  # Spark+DuckDB portable

@@ -235,6 +235,22 @@ def test_line_segments(spark):
     assert list(got) == ["One two", "Three four", "Five", "Para two here"]
 
 
+def test_ann_cosine_topk_without_query_vector_raises(spark, tmp_path):
+    """The exact-cosine entry point scores against the vec_id=0 embedding:
+    a table without that row fails loudly instead of returning no rows."""
+    from invoicenet_spark import entrypoints
+
+    rng = np.random.default_rng(3)
+    pdf = pd.DataFrame(
+        {"vec_id": [1, 2, 3], "embedding": [rng.random(4).tolist() for _ in range(3)]}
+    )
+    spark.createDataFrame(pdf, schema="vec_id long, embedding array<float>").write.parquet(
+        str(tmp_path / "embeddings.parquet")
+    )
+    with pytest.raises(ValueError, match="vec_id=0"):
+        entrypoints.q_ann_cosine_topk(spark, str(tmp_path)).collect()
+
+
 def test_ann_index_partition_pruning(spark, tmp_path):
     """Persisted ANN buckets: probe reads ONLY matching buckets' files
     (planner partition pruning), multi-probe recall beats single-probe."""

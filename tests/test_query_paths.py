@@ -190,6 +190,20 @@ def test_every_path_gives_the_same_rows(spark, paths_index):
     extra = set(range(N_ROWS + 1, len(q)))
     assert extra <= set(by_q) and extra <= set(fq["query_id"])
 
+    # count_only and matches_only run the same per-shard loop: counts and
+    # full match sets agree with the serving path (k = N_DOCS covers every
+    # match there)
+    counts = search(spark, idx, q, count_only=True, synonyms=SYNONYMS).toPandas()
+    local_counts = search_local(root, q, count_only=True, synonyms=SYNONYMS)
+    assert sorted(map(tuple, counts.values.tolist())) == sorted(
+        map(tuple, local_counts.values.tolist())
+    )
+    assert counts["total_hits"].sum() > 0
+    matches = search(spark, idx, q, matches_only=True, synonyms=SYNONYMS).toPandas()
+    local_all = search_local(root, q.assign(k=N_DOCS), synonyms=SYNONYMS)
+    assert _rows(matches.assign(rank=0)) == _rows(local_all.assign(rank=0))
+    assert len(matches) > len(spark_rows)
+
 
 @pytest.mark.parametrize(
     "row",
@@ -223,6 +237,30 @@ def test_search_infers_group_eval_type_without_warning(spark, paths_index):
         warnings.simplefilter("always")
         search(spark, load_index(spark, root), q).toPandas()
     assert not [w for w in caught if "infer the eval type" in str(w.message)]
+
+
+def test_batch_groups_postings_by_shard_only(spark, paths_index):
+    """The Spark batch runs one kernel group per shard: the executed plan
+    has exactly one cogrouped pandas call keyed on `shard` alone (postings
+    beside the tombstone mask), and nothing joins on term_id — each probed
+    posting row reaches the kernels once, whatever the number of queries."""
+    import re
+
+    root, _, _ = paths_index
+    q = pd.DataFrame([
+        {"query_id": i, "terms": ["spark", "data"], "mode": m, "k": 5}
+        for i, m in enumerate(["OR", "AND", "OR"])
+    ])
+    df = search(spark, load_index(spark, root), q)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = plan.split("== Initial Plan ==")[0]  # the executed (post-AQE) plan
+    groups = re.findall(r"FlatMapCoGroupsInPandas \[([^\]]*)\], \[([^\]]*)\]", plan)
+    assert len(groups) == 1, plan
+    assert all(re.fullmatch(r"shard#\d+L?", key) for key in groups[0]), plan
+    assert "FlatMapGroupsInPandas" not in plan, plan
+    joins = [ln for ln in plan.splitlines() if "Join" in ln]
+    assert joins and not [ln for ln in joins if "term_id" in ln], plan
 
 
 def test_url_join_broadcasts_the_topk_side(spark, paths_index):

@@ -69,7 +69,6 @@ def main():
         "min": min(reps),
         "n_results": n,
         "docs": args.docs,
-        "kernel": args.kernel,
     }))
 
 
