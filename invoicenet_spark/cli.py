@@ -253,11 +253,10 @@ def main(argv=None):
         args.fed_roots = args.index.split(",")
         args.federated = len(args.fed_roots) > 1 or args.ts_from or args.ts_to
         if args.federated and (args.facet or args.sort_by or args.snippets
-                               or args.doc_filter or args.date_histogram
-                               or args.synonyms):
+                               or args.doc_filter or args.date_histogram):
             raise SystemExit(
-                "--facet/--sort-by/--snippets/--filter are per-index "
-                "features; run them against one segment root"
+                "--facet/--sort-by/--snippets/--filter/--date-histogram are "
+                "per-index features; run them against one segment root"
             )
 
     if args.cmd == "vacuum":
@@ -281,12 +280,13 @@ def main(argv=None):
             if args.count:
                 res = search_local_federated(
                     args.fed_roots, q, ts_from=args.ts_from, ts_to=args.ts_to,
-                    count_only=True,
+                    count_only=True, synonyms=_synonym_map(args),
                 )
                 print(json.dumps({"total_hits": int(res["total_hits"].iloc[0])}))
                 return 0
             res = search_local_federated(
                 args.fed_roots, q, ts_from=args.ts_from, ts_to=args.ts_to,
+                synonyms=_synonym_map(args),
             )
             for r in res.to_dict("records"):
                 print(json.dumps(
@@ -436,12 +436,13 @@ def main(argv=None):
                 row = search_federated(
                     spark, args.fed_roots, q, ts_from=args.ts_from,
                     ts_to=args.ts_to, count_only=True,
+                    synonyms=_synonym_map(args),
                 ).collect()[0]
                 print(json.dumps({"total_hits": int(row["total_hits"])}))
                 return 0
             res = search_federated(
                 spark, args.fed_roots, q, ts_from=args.ts_from,
-                ts_to=args.ts_to,
+                ts_to=args.ts_to, synonyms=_synonym_map(args),
             )
             for r in res.collect():
                 print(json.dumps(

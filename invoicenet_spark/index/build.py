@@ -662,6 +662,34 @@ def build_index(
     return paths
 
 
+def range_encode(rows: DataFrame, cfg: EngineConfig, shard_size: int) -> DataFrame:
+    """The encode stage every postings writer shares (the build and
+    compaction): (term_id, doc_id, doc_len[, pos]) token rows → one range
+    exchange on (term_id, doc_id // shard_size) → sort → the vectorized
+    encode kernel, yielding POSTINGS_SCHEMA rows at `shard_size`.
+
+    RANGE partitioning on (term_id, shard) — not hash. Equal keys still
+    land in one partition (groups are never split, every (term, shard)
+    group stays ≤ shard_size docs = skew-free), but each output FILE covers
+    a NARROW contiguous term_id range instead of a hash-sample of the whole
+    vocabulary. That is what makes the pushed In(term_id, …) filter
+    actually skip: parquet row-group/file min-max stats are useless when
+    every file spans term_id 0..vocab (measured: a point lookup read the
+    ENTIRE index). With ranges, a query touches only the files whose term
+    range covers its terms — in both the Spark batch path and the pyarrow
+    serving path (query/local.py)."""
+    shard_expr = (F.col("doc_id") / F.lit(shard_size)).cast("long")
+    sort_cols = ["term_id", "doc_id"] + (["pos"] if cfg.with_positions else [])
+    return (
+        rows.repartitionByRange(cfg.build_partitions, F.col("term_id"), shard_expr)
+        .sortWithinPartitions(*sort_cols)
+        .mapInArrow(
+            lambda it: _encode_partition(it, cfg.block_size, shard_size),
+            schema=POSTINGS_SCHEMA,
+        )
+    )
+
+
 def _encode_and_commit(
     spark,
     analyzed: DataFrame,
@@ -697,33 +725,13 @@ def _encode_and_commit(
     )
     tokens = _token_rows(src, cfg, "doc_id")
     term_dict = _term_dictionary(spark, tokens, cfg, paths)
-    sort_cols = ["term_id", "doc_id"] + (["pos"] if cfg.with_positions else [])
     enc_input = tokens.join(term_dict, "term").select(
-        "term_id", "doc_id", "doc_len", *sort_cols[2:]
+        "term_id", "doc_id", "doc_len", *(["pos"] if cfg.with_positions else [])
     )
-    shard_expr = (F.col("doc_id") / F.lit(cfg.shard_size)).cast("long")
-    # RANGE partitioning on (term_id, shard) — not hash. Equal keys still
-    # land in one partition (groups are never split, every (term, shard)
-    # group stays ≤ shard_size docs = skew-free), but each output FILE now
-    # covers a NARROW contiguous term_id range instead of a hash-sample of
-    # the whole vocabulary. That is what makes the pushed In(term_id, …)
-    # filter actually skip: parquet row-group/file min-max stats are useless
-    # when every file spans term_id 0..vocab (measured: a point lookup read
-    # the ENTIRE index). With ranges, a query touches only the files whose
-    # term range covers its terms — in both the Spark batch path and the
-    # pyarrow serving path (query/local.py).
-    encoded = (
-        enc_input.repartitionByRange(cfg.build_partitions, F.col("term_id"), shard_expr)
-        .sortWithinPartitions(*sort_cols)
-        .mapInArrow(
-            lambda it: _encode_partition(it, cfg.block_size, cfg.shard_size),
-            schema=POSTINGS_SCHEMA,
-        )
-        .observe(
-            obs_enc,
-            F.count(F.lit(1)).alias("posting_rows"),
-            F.sum("df_shard").alias("n_postings"),
-        )
+    encoded = range_encode(enc_input, cfg, cfg.shard_size).observe(
+        obs_enc,
+        F.count(F.lit(1)).alias("posting_rows"),
+        F.sum("df_shard").alias("n_postings"),
     )
     # Write straight from the encode partitioning: partitionBy(shard) splits
     # each task's output into its shard dirs, keeping full write parallelism

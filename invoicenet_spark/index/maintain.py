@@ -34,16 +34,15 @@ import os
 import time
 
 import numpy as np
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import SparkSession
 
 from invoicenet_spark.index.build import (
     IndexPaths,
-    POSTINGS_SCHEMA,
-    _encode_partition,
     _finalize,
     _load_manifest,
     _save_manifest,
     cfg_from_manifest,
+    range_encode,
     read_postings,
     write_and_commit_postings,
 )
@@ -206,16 +205,7 @@ def compact_index(
         from invoicenet_spark.index.deletes import maybe_broadcast_tombstones
 
         pairs = pairs.join(maybe_broadcast_tombstones(tomb, paths), "doc_id", "left_anti")
-    shard_expr = (F.col("doc_id") / F.lit(new_shard_size)).cast("long")
-    sort_cols = ["term_id", "doc_id", "pos"] if positional else ["term_id", "doc_id"]
-    encoded = (
-        pairs.repartitionByRange(cfg.build_partitions, F.col("term_id"), shard_expr)
-        .sortWithinPartitions(*sort_cols)
-        .mapInArrow(
-            lambda it: _encode_partition(it, cfg.block_size, new_shard_size),
-            schema=POSTINGS_SCHEMA,
-        )
-    )
+    encoded = range_encode(pairs, cfg, new_shard_size)
     new_shards = sorted({s * cfg.shard_size // new_shard_size for s in old_shards})
     # retire absorbed old shard ids in the SAME batched log append as the
     # new commits — a crash can never leave both an old shard and the new

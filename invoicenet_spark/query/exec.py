@@ -36,6 +36,7 @@ from functools import reduce
 
 import numpy as np
 import pandas as pd
+import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from invoicenet_spark.index.build import IndexPaths, read_postings
@@ -51,7 +52,6 @@ class Index(plan.Dictionary):
     docs: DataFrame
     stats: dict
     _local_dict: "pd.DataFrame | None" = None
-    _fuzzy_vocab: "np.ndarray | None" = None
     # tombstone files at load time: a handle masks exactly these deletes
     tombstone_files: list[str] = field(default_factory=list)
 
@@ -67,9 +67,11 @@ class Index(plan.Dictionary):
         """Driver-side term → (term_id, df) cache for low-latency lookups —
         what a serving node holds hot. Skipped when the vocabulary exceeds
         plan.MAX_HOT_TERMS (then lookups stay pushed-filter dictionary
-        scans)."""
+        scans). The ceiling check reads parquet footer row counts, not a
+        Spark count job."""
         if self._local_dict is None:
-            if self.terms.count() > plan.MAX_HOT_TERMS:
+            terms = pads.dataset(self.paths.terms, format="parquet")
+            if terms.count_rows() > plan.MAX_HOT_TERMS:
                 return None
             self._local_dict = self.terms.toPandas().set_index("term")
         return self._local_dict
@@ -304,6 +306,8 @@ def search(
     matches_only: bool = False,
     doc_filter: "tuple[DataFrame, str] | None" = None,
     synonyms: dict | None = None,
+    stats_override: dict | None = None,
+    df_override: "dict[str, int] | None" = None,
 ) -> DataFrame:
     """Batch top-k search. queries: (query_id, terms array<string>, mode, k).
 
@@ -343,6 +347,11 @@ def search(
     excluded_by_shard_df for the semantics (false/NULL exclude) and scale
     shape. Applies to ranked, count_only and matches_only modes alike.
 
+    stats_override / df_override: the federation hooks search_local shares
+    (query/federate.py), with the same semantics — the union corpus's
+    scoring constants (N, avgdl, field stats) and per-term df replace the
+    handle's own; a term missing from df_override keeps its own df.
+
     Returns (query_id, rank, doc_id, score[, url]) sorted by query_id, rank.
     """
     if count_only and matches_only:
@@ -350,8 +359,9 @@ def search(
     # a Spark-frame batch is collected like a pandas one: query batches are
     # tiny by contract, and normalization is driver-side for every row
     qpd = queries if isinstance(queries, pd.DataFrame) else queries.toPandas()
-    qpd, needed, positional = plan.normalize(index, qpd, index.stats, synonyms)
-    specs = plan.query_specs(qpd, index.term_info(needed), index.stats)
+    stats = {**index.stats, **stats_override} if stats_override else index.stats
+    qpd, needed, positional = plan.normalize(index, qpd, stats, synonyms)
+    specs = plan.query_specs(qpd, index.term_info(needed), stats, df_override)
     if matches_only:
         # k bounds each kernel's per-shard output; the full match set means
         # no bound (2^62 is unreachable by any shard's doc count)
@@ -379,7 +389,7 @@ def search(
     # doc_filter's exclusions — grouped beside each shard's postings, so a
     # kernel group holds only its shard's ids (≤ shard_size) and the driver
     # never materializes them
-    shard_size = int(index.stats["shard_size"])
+    shard_size = int(stats["shard_size"])
     masks = []
     tombstones = read_tombstones_spark(spark, index.paths, files=index.tombstone_files)
     if tombstones is not None:
@@ -392,7 +402,7 @@ def search(
         else spark.createDataFrame([], "shard long, doc_id long")
     )
     out = probe.groupBy("shard").cogroup(mask.groupBy("shard")).applyInPandas(
-        _shard_batch(specs, index.stats, count_only), schema=RESULT_SCHEMA
+        _shard_batch(specs, stats, count_only), schema=RESULT_SCHEMA
     )
     if count_only:
         counts = out.groupBy("query_id").agg(

@@ -30,18 +30,23 @@ MultiReader / cross-index-search analog (Lucene MultiSearcher, ES
      cursors translate per segment (below).
   3. **scatter-gather merge** — each segment answers the batch with its
      own per-shard kernels (every pruning path intact: the segment search
-     IS `exec.search` on a stats-overridden handle), producing ≤ k rows
-     per (query, segment); the global merge re-ranks the union by
-     (score desc, url asc) and keeps k. Merge input is ≤ k·n_segments
-     rows per query — never proportional to corpus size.
+     IS `exec.search` — or `search_local` on the serving path — on the
+     plain segment handle, given the union stats and df through its
+     `stats_override`/`df_override` hooks), producing ≤ k rows per
+     (query, segment); the global merge re-ranks the union by
+     (score desc, segment asc, doc_id asc) and keeps k. Merge input is
+     ≤ k·n_segments rows per query — never proportional to corpus size.
 
+Both paths run ONE design: `_check_segments`, `_live_segments`, then the
+dfs probe `_dfs`, which resolves union df for only the batch's dictionary
+keys (each live segment's plan.normalize + term_info, summed) — the
+literal dfs_query_then_fetch two-phase: a stats round-trip, then scoring.
 Scale shape: the per-segment searches are independent Spark jobs over
 disjoint data (on a cluster: disjoint executors / one cluster per live
-segment if desired); the only cross-segment exchanges are the
-dictionary-sized df union and the k·n_segments-row merge. Global-df for a
-query term the segment lacks is still correct: the segment's terms frame
-simply has no row, so the term scores only where it exists, with the
-union-corpus idf.
+segment if desired); the only cross-segment traffic is the batch-sized
+df probe and the k·n_segments-row merge. Global df for a query term a
+segment lacks is still correct: the segment's dictionary has no row, so
+the term scores only where it exists, with the union-corpus idf.
 
 Fielded indexes federate too: stats.json already records per-field
 (avgdl, n_docs), so the union overrides stats["fields"] with the
@@ -62,7 +67,6 @@ only k slots from genuinely-after docs.
 
 from __future__ import annotations
 
-import dataclasses
 from functools import reduce
 
 import numpy as np
@@ -79,7 +83,7 @@ _AFTER_ALL_DOCS = 1 << 62
 
 def _union_field_stats(per_seg: list[dict]) -> dict:
     """n_docs-weighted per-field avgdl union over segments' stats.json
-    `fields` maps (same field set — enforced at FederatedIndex open)."""
+    `fields` maps (same field set — enforced by _check_segments)."""
     out = {}
     for f in per_seg[0]:
         n = sum(s[f]["n_docs"] for s in per_seg)
@@ -139,139 +143,95 @@ def _overlaps(ts_min, ts_max, ts_from, ts_to) -> bool:
     return True
 
 
-class FederatedIndex:
-    """A set of segment indexes searched as one corpus.
+def _check_segments(handles: list) -> None:
+    """The one segment check both federated paths run: at least one
+    segment, and one scoring config across all of them — k1/b, the token
+    pattern, the field set and the analyzer chain (segments with different
+    stopword/stem chains analyze the same query into different term forms,
+    so union df and cross-segment scores would silently stop comparing)."""
+    if not handles:
+        raise ValueError("federated search needs at least one segment root")
 
-    Holds the loaded per-segment `exec.Index` handles plus the global
-    statistics (computed once per handle — the dfs round-trip is paid at
-    open, not per query): union N/avgdl from the segments' stats.json
-    (no data scan — sum_dl = N_i · avgdl_i), and the union-df dictionary
-    as a Spark frame (one dictionary-sized union+agg, cached).
-    """
+    def _cfg(s):
+        return (
+            s["k1"], s["b"], s.get("token_pattern"),
+            tuple(sorted(s.get("fields") or {})),
+            tuple(s.get("stopwords") or ()), s.get("stem"),
+        )
+
+    cfg0 = _cfg(handles[0].stats)
+    for h in handles[1:]:
+        if (cfg := _cfg(h.stats)) != cfg0:
+            raise ValueError(
+                f"segment scoring configs differ ({cfg0} vs {cfg}) — "
+                "federated segments must share k1/b/token_pattern/fields "
+                "and the analyzer chain"
+            )
+
+
+def _live_segments(handles: list, ts_from=None, ts_to=None) -> list[int]:
+    """Positions of the segments surviving time pruning for [ts_from,
+    ts_to] — before any query work on either path."""
+    return [
+        i for i, h in enumerate(handles)
+        if _overlaps(h.stats.get("ts_min"), h.stats.get("ts_max"), ts_from, ts_to)
+    ]
+
+
+def _dfs(handles: list, live: list[int], queries: pd.DataFrame, synonyms=None):
+    """The dfs phase of dfs_query_then_fetch, shared by both paths:
+    returns (stats_override, df_override) for the live set's union corpus.
+
+    handles are plan.Dictionary handles (exec.Index or LocalIndex). Union
+    N/avgdl (and per-field stats) come from the segments' stats.json — no
+    data scan, sum_dl = N_i · avgdl_i. Union df covers exactly the
+    dictionary keys the batch can touch: the probe set is what the SAME
+    planner the per-segment searches run (plan.normalize: analyzer chain,
+    synonyms, fielded auto-qualification, PREFIX/FUZZY expansion against
+    each segment's dictionary, BOOL leaves) needs on any live segment, and
+    each segment's term_info over it is summed. A probe that missed a
+    scored term would silently score it with its segment-local df."""
+    segs = [handles[i] for i in live]
+    n_total = sum(h.stats["N"] for h in segs)
+    sum_dl = sum(h.stats["N"] * h.stats["avgdl"] for h in segs)
+    stats = {"N": int(n_total), "avgdl": float(sum_dl / n_total) if n_total else 0.0}
+    if segs[0].stats.get("fields"):
+        # n_docs-weighted per-field means; df needs nothing extra — fielded
+        # dictionary keys are `field:term`, so the term-level union below
+        # IS per-field
+        stats["fields"] = _union_field_stats([h.stats["fields"] for h in segs])
+    probe = set().union(*(plan.normalize(h, queries, h.stats, synonyms)[1] for h in segs))
+    df: dict[str, int] = {}
+    for h in segs:
+        for t, (_tid, n) in h.term_info(probe).items():
+            df[t] = df.get(t, 0) + int(n)
+    return stats, df
+
+
+def _result_cols(with_url: bool) -> list[str]:
+    return ["query_id", "rank", "segment", "doc_id"] + (["url"] if with_url else []) + ["score"]
+
+
+def _zero_counts(queries: pd.DataFrame) -> pd.DataFrame:
+    """count_only over no live segment: every query reports 0 hits."""
+    return pd.DataFrame({"query_id": queries["query_id"].astype("int64"),
+                         "total_hits": np.zeros(len(queries), dtype="int64")})
+
+
+class FederatedIndex:
+    """A set of segment indexes searched as one corpus: the loaded,
+    compatibility-checked per-segment `exec.Index` handles. Nothing is
+    rewritten per live set — every search runs the shared dfs probe
+    (`_dfs`) and hands its union stats/df to each plain segment handle's
+    `exec.search` as `stats_override`/`df_override`."""
 
     def __init__(self, spark: SparkSession, roots: list[str]):
-        if not roots:
-            raise ValueError("FederatedIndex needs at least one segment root")
-        self.spark = spark
         self.segments = [qexec.load_index(spark, r) for r in roots]
-
-        def _cfg(ix):
-            return (
-                ix.stats["k1"], ix.stats["b"], ix.stats.get("token_pattern"),
-                tuple(sorted(ix.stats.get("fields") or {})),
-                # analyzer chain is part of score comparability: segments
-                # built with different stopword/stem chains analyze the
-                # same query into different term forms
-                tuple(ix.stats.get("stopwords") or ()),
-                ix.stats.get("stem"),
-            )
-
-        cfg0 = _cfg(self.segments[0])
-        for ix in self.segments[1:]:
-            cfg = _cfg(ix)
-            if cfg != cfg0:
-                raise ValueError(
-                    f"segment scoring configs differ ({cfg0} vs {cfg}) — "
-                    "cross-segment scores would not be comparable"
-                )
-        n_total = sum(ix.stats["N"] for ix in self.segments)
-        sum_dl = sum(ix.stats["N"] * ix.stats["avgdl"] for ix in self.segments)
-        self.n_total = int(n_total)
-        self.avgdl = float(sum_dl / n_total) if n_total else 0.0
-        # stats-overridden handles per LIVE SET: time pruning restricts the
-        # corpus, so scores must use the surviving-union's N/avgdl/df (a user
-        # who queries only last month's crawls scores against that corpus,
-        # and the pruned federation must equal a federation opened on the
-        # surviving segments alone — pinned by test). Keyed by the live
-        # tuple; the all-live entry is what unwindowed searches hit.
-        self._global_cache: dict[tuple, list] = {}
-
-    def global_segments(self, live: tuple[int, ...]) -> list:
-        """Per-segment handles re-keyed to the live set's union statistics:
-        same paths/postings/docs, but N/avgdl come from the summed
-        stats.json values and each term's df from a dictionary-sized
-        union+agg over the live segments' terms tables (cached — every
-        search call's idf join reads it). exec.search on such a handle
-        computes union-idf with zero changes — every kernel, pruning route,
-        tombstone mask and filter applies per segment."""
-        if live in self._global_cache:
-            return self._global_cache[live]
-        segs = [self.segments[i] for i in live]
-        n_total = sum(ix.stats["N"] for ix in segs)
-        sum_dl = sum(ix.stats["N"] * ix.stats["avgdl"] for ix in segs)
-        avgdl = float(sum_dl / n_total) if n_total else 0.0
-        extra = {"N": int(n_total), "avgdl": avgdl}
-        if segs[0].stats.get("fields"):
-            # per-field union: stats.json holds (avgdl, n_docs) per field, so
-            # the n_docs-weighted mean is the union field avgdl exactly; df
-            # needs nothing — fielded dictionary keys are `field:term`, so
-            # the term-level union below IS per-field
-            extra["fields"] = _union_field_stats(
-                [ix.stats["fields"] for ix in segs]
-            )
-        df_union = (
-            reduce(
-                DataFrame.unionByName,
-                [ix.terms.select("term", "df") for ix in segs],
-            )
-            .groupBy("term")
-            .agg(F.sum("df").alias("df"))
-            .cache()
-        )
-        out = [
-            dataclasses.replace(
-                ix,
-                stats={**ix.stats, **extra},
-                terms=ix.terms.drop("df")
-                .join(df_union, "term", "left")
-                .fillna(0, subset=["df"]),
-                _local_dict=None,
-                _fuzzy_vocab=None,
-            )
-            for ix in segs
-        ]
-        # Batched term resolution: resolve (term → term_id, union df) for
-        # every live segment in ONE union job here (the open/dfs phase,
-        # where the df union is already computed) instead of two small jobs
-        # per segment on the first query. The plan.MAX_HOT_TERMS ceiling
-        # applies PER SEGMENT, from parquet footer row counts (no Spark
-        # job): an oversized segment keeps the pushed-filter
-        # dictionary-scan path without turning the hot dictionary off for
-        # the others.
-        import pyarrow.dataset as pads
-
-        hot = [
-            i
-            for i, h in enumerate(out)
-            if pads.dataset(h.paths.terms, format="parquet").count_rows()
-            <= plan.MAX_HOT_TERMS
-        ]
-        if hot:
-            pdf = reduce(
-                DataFrame.unionByName,
-                [
-                    out[i].terms.select(F.lit(i).alias("_seg"), "term", "term_id", "df")
-                    for i in hot
-                ],
-            ).toPandas()
-            for i in hot:
-                out[i]._local_dict = (
-                    pdf[pdf["_seg"] == i].drop(columns=["_seg"]).set_index("term")
-                )
-        self._global_cache[live] = out
-        return out
-
-    def ts_range(self, i: int):
-        s = self.segments[i].stats
-        return s.get("ts_min"), s.get("ts_max")
+        _check_segments(self.segments)
 
     def live_segments(self, ts_from=None, ts_to=None) -> list[int]:
         """Segment indices surviving time pruning for [ts_from, ts_to]."""
-        return [
-            i
-            for i in range(len(self.segments))
-            if _overlaps(*self.ts_range(i), ts_from, ts_to)
-        ]
+        return _live_segments(self.segments, ts_from, ts_to)
 
 
 def search_federated(
@@ -283,13 +243,15 @@ def search_federated(
     with_url: bool = True,
     count_only: bool = False,
     matches_only: bool = False,
+    synonyms: dict | None = None,
 ) -> DataFrame:
     """Batch top-k search across segment indexes (see module docstring).
 
     queries: the `exec.search` pandas contract — (query_id, terms, mode, k)
     plus the optional modifier columns. PREFIX/FUZZY expansion runs per
     segment against that segment's dictionary (the Lucene per-reader
-    rewrite); expanded terms score with union idf.
+    rewrite); expanded terms score with union idf. synonyms: exec.search's
+    query-time map; synonym-expanded terms get union df too.
 
     ts_from / ts_to (str | datetime | pd.Timestamp, either open): prune
     segments whose [ts_min, ts_max] misses the window BEFORE any Spark
@@ -311,22 +273,24 @@ def search_federated(
     live = fed.live_segments(ts_from, ts_to)
     if not live:
         if count_only:
+            return spark.createDataFrame(_zero_counts(queries)).orderBy("query_id")
+        if matches_only:
             return spark.createDataFrame(
-                pd.DataFrame(
-                    {"query_id": queries["query_id"].astype("int64"),
-                     "total_hits": np.zeros(len(queries), dtype="int64")}
-                )
-            ).orderBy("query_id")
-        return _empty_federated(spark, with_url, matches_only)
+                [], "query_id long, segment int, doc_id long, score double"
+            )
+        url = ", url string" if with_url else ""
+        return spark.createDataFrame(
+            [], f"query_id long, rank int, segment int, doc_id long{url}, score double"
+        )
 
-    handles = dict(zip(live, fed.global_segments(tuple(live))))
+    stats, df = _dfs(fed.segments, live, queries, synonyms)
     per_seg = []
     for i in live:
-        seg_ix = handles[i]
         res = qexec.search(
-            spark, seg_ix, _segment_cursor_queries(queries, i),
+            spark, fed.segments[i], _segment_cursor_queries(queries, i),
             with_url=with_url and not matches_only,
             count_only=count_only, matches_only=matches_only,
+            synonyms=synonyms, stats_override=stats, df_override=df,
         )
         if not count_only:
             res = res.withColumn("segment", F.lit(i).cast("int"))
@@ -352,27 +316,13 @@ def search_federated(
     ks = spark.createDataFrame(
         queries[["query_id", "k"]].astype({"query_id": "int64", "k": "int64"})
     )
-    cols = ["query_id", "rank", "segment", "doc_id"] + (
-        ["url"] if with_url else []
-    ) + ["score"]
     return (
         merged.drop("rank")
         .withColumn("rank", F.row_number().over(w))
         .join(F.broadcast(ks), "query_id")
         .where(F.col("rank") <= F.col("k"))
-        .select(*cols)
+        .select(*_result_cols(with_url))
         .orderBy("query_id", "rank")
-    )
-
-
-def _empty_federated(spark, with_url: bool, matches_only: bool) -> DataFrame:
-    if matches_only:
-        return spark.createDataFrame(
-            [], "query_id long, segment int, doc_id long, score double"
-        )
-    url = ", url string" if with_url else ""
-    return spark.createDataFrame(
-        [], f"query_id long, rank int, segment int, doc_id long{url}, score double"
     )
 
 
@@ -386,106 +336,44 @@ def search_local_federated(
     ts_to=None,
     with_url: bool = True,
     count_only: bool = False,
+    synonyms: dict | None = None,
 ) -> pd.DataFrame:
     """Serving twin: Spark-free scatter-gather over LocalIndex handles.
 
-    Global stats come the cheap interactive way — union N/avgdl from each
-    segment's stats.json, union df for ONLY the query's resolved terms
-    (each segment's term_info probe, summed) — i.e. the literal
-    dfs_query_then_fetch two-phase: stats round-trip, then scoring. The
-    per-segment scoring runs `search_local` with stats/df overrides, so
-    every serving kernel path is reused unchanged.
+    The same segment check, time pruning and dfs probe (`_dfs`) as
+    search_federated; the per-segment scoring runs `search_local` with the
+    same stats/df overrides, so every serving kernel path is reused
+    unchanged.
 
     Returns (query_id, rank, segment, doc_id[, url], score) ranked by
     (score desc, segment asc, doc_id asc) — identical rows to the Spark
-    path (pinned). Fielded segments and (after_score, after_segment,
-    after_doc) cursors work exactly as in search_federated.
+    path (pinned). Fielded segments, synonyms and (after_score,
+    after_segment, after_doc) cursors work exactly as in search_federated.
     """
     from invoicenet_spark.query.local import local_index, search_local
 
     lis = [local_index(r) for r in roots_or_indexes]
-    # same compatibility contract as FederatedIndex: scoring params AND the
-    # analyzer chain must match, or per-segment query analysis diverges and
-    # union-df/score comparability silently breaks
-    def _cfg(li):
-        return (
-            li.stats["k1"], li.stats["b"], li.stats.get("token_pattern"),
-            tuple(sorted(li.stats.get("fields") or {})),
-            tuple(li.stats.get("stopwords") or ()),
-            li.stats.get("stem"),
-        )
-
-    if lis:
-        cfg0 = _cfg(lis[0])
-        for li in lis[1:]:
-            cfg = _cfg(li)
-            if cfg != cfg0:
-                raise ValueError(
-                    f"segment scoring configs differ ({cfg0} vs {cfg}) — "
-                    "federated segments must share k1/b/token_pattern/fields "
-                    "and the analyzer chain"
-                )
-    live = [
-        i
-        for i, li in enumerate(lis)
-        if _overlaps(li.stats.get("ts_min"), li.stats.get("ts_max"), ts_from, ts_to)
-    ]
+    _check_segments(lis)
+    live = _live_segments(lis, ts_from, ts_to)
     if not live:
-        if count_only:
-            return pd.DataFrame(
-                {"query_id": queries["query_id"].astype("int64"),
-                 "total_hits": np.zeros(len(queries), dtype="int64")}
-            )
-        cols = ["query_id", "rank", "segment", "doc_id"] + (
-            ["url"] if with_url else []
-        ) + ["score"]
-        return pd.DataFrame(columns=cols)
-
-    n_total = sum(lis[i].stats["N"] for i in live)
-    avgdl = (
-        sum(lis[i].stats["N"] * lis[i].stats["avgdl"] for i in live) / n_total
-        if n_total
-        else 0.0
-    )
-    # dfs phase: union df for every dictionary key the batch can touch, per
-    # segment. The term set comes from the SAME planner search_local itself
-    # runs (plan.normalize: fielded auto-qualification, PREFIX/FUZZY
-    # expansion against each segment's dictionary, BOOL leaf terms) — any
-    # probe/scoring divergence would silently score a term with its
-    # segment-local df instead of the union's.
-    probe: set[str] = set()
-    for i in live:
-        probe |= plan.normalize(lis[i], queries, lis[i].stats)[1]
-    df_union: dict[str, int] = {}
-    for i in live:
-        for t, (_tid, df) in lis[i].term_info(set(probe)).items():
-            df_union[t] = df_union.get(t, 0) + int(df)
-
-    stats_override = {"N": n_total, "avgdl": avgdl}
-    if lis[live[0]].stats.get("fields"):
-        stats_override["fields"] = _union_field_stats(
-            [lis[i].stats["fields"] for i in live]
+        return _zero_counts(queries) if count_only else pd.DataFrame(
+            columns=_result_cols(with_url)
         )
-    frames = []
-    for i in live:
-        res = search_local(
+
+    stats, df = _dfs(lis, live, queries, synonyms)
+    merged = pd.concat([
+        search_local(
             lis[i], _segment_cursor_queries(queries, i),
-            with_url=with_url, count_only=count_only,
-            stats_override=stats_override, df_override=df_union,
-        )
-        if not count_only:
-            res = res.copy()
-            res["segment"] = i
-        frames.append(res)
-    merged = pd.concat(frames, ignore_index=True)
+            with_url=with_url, count_only=count_only, synonyms=synonyms,
+            stats_override=stats, df_override=df,
+        ).assign(segment=i)
+        for i in live
+    ], ignore_index=True)
     if count_only:
         out = merged.groupby("query_id", as_index=False)["total_hits"].sum()
         return out.astype({"query_id": "int64", "total_hits": "int64"})
     if not len(merged):
-        cols = ["query_id", "rank", "segment", "doc_id"] + (
-            ["url"] if with_url else []
-        ) + ["score"]
-        return pd.DataFrame(columns=cols)
+        return pd.DataFrame(columns=_result_cols(with_url))
     merged = merged.sort_values(
         ["query_id", "score", "segment", "doc_id"],
         ascending=[True, False, True, True],
@@ -493,7 +381,4 @@ def search_local_federated(
     merged["rank"] = merged.groupby("query_id").cumcount() + 1
     kmap = dict(zip(queries["query_id"].astype(int), queries["k"].astype(int)))
     merged = merged[merged["rank"] <= merged["query_id"].map(kmap)]
-    cols = ["query_id", "rank", "segment", "doc_id"] + (
-        ["url"] if with_url else []
-    ) + ["score"]
-    return merged[cols].reset_index(drop=True)
+    return merged[_result_cols(with_url)].reset_index(drop=True)

@@ -335,12 +335,13 @@ def search_local(
 ) -> pd.DataFrame:
     """Serve (query_id, terms, mode, k) queries driver-locally, Spark-free.
 
-    stats_override / df_override: federation hooks (query/federate.py) —
-    replace the scoring constants (N, avgdl) and per-term df with the
-    union-corpus values so cross-segment scores are comparable
-    (dfs_query_then_fetch). A term missing from df_override keeps its
-    segment-local df. Never changes candidate generation — only idf and
-    normalization inputs.
+    stats_override / df_override: the federation hooks exec.search shares
+    (query/federate.py) — replace the scoring constants (N, avgdl, field
+    stats) and per-term df with the union-corpus values so cross-segment
+    scores are comparable (dfs_query_then_fetch). A term missing from
+    df_override keeps its segment-local df (plan.query_specs applies it).
+    Never changes candidate generation — only idf and normalization
+    inputs.
 
     excluded_ids: doc_ids excluded from matching for this call (ES filter
     context, pre-computed by the caller — e.g. a pyarrow/pandas predicate
@@ -372,12 +373,7 @@ def search_local(
         li, queries, stats, synonyms=synonyms
     )
     term_info = li.term_info(needed_terms)
-    if df_override:
-        term_info = {
-            t: (tid, int(df_override.get(t, df)))
-            for t, (tid, df) in term_info.items()
-        }
-    specs = plan.query_specs(queries, term_info, stats)
+    specs = plan.query_specs(queries, term_info, stats, df_override)
 
     all_tids = sorted({tid for tid, _ in term_info.values()})
     rows = (

@@ -1,9 +1,10 @@
 """One query planner for every query path: the Spark batch path
 (exec.search), the Spark-free serving path (local.search_local) and the
-federated dfs probe (federate.search_local_federated) all normalize a
-query batch through `normalize` and compile it into per-query `QuerySpec`s
-through `query_specs`, so a row can never mean one thing on one path and
-something else on another. Every batch then runs shard by shard through
+federated dfs probe both federated paths share (federate._dfs) all
+normalize a query batch through `normalize` and compile it into per-query
+`QuerySpec`s through `query_specs` (which also applies federation's union
+df), so a row can never mean one thing on one path and something else on
+another. Every batch then runs shard by shard through
 `run_shard_batch`, which routes each spec through kernels.run_shard.
 
 Pipeline (`normalize`), in this order:
@@ -320,14 +321,20 @@ def _opt(q: dict, name: str, default, cast):
 
 
 def query_specs(
-    queries: pd.DataFrame, term_info: dict[str, tuple[int, int]], stats: dict
+    queries: pd.DataFrame,
+    term_info: dict[str, tuple[int, int]],
+    stats: dict,
+    df_override: "dict[str, int] | None" = None,
 ) -> list[QuerySpec]:
     """Compile normalized rows into QuerySpecs. term_info: term → (term_id,
-    df) as scored (federation passes union df); optional columns may be
-    absent or hold None/NaN holes, which mean the modifier's default."""
+    df) from the index's dictionary; df_override: term → df to score with
+    instead (federation's union df — a term it lacks keeps its own df).
+    Optional columns may be absent or hold None/NaN holes, which mean the
+    modifier's default."""
     N = stats["N"]
+    dfs = df_override or {}
     tid = {t: i for t, (i, _df) in term_info.items()}
-    idf = {t: float(bm25.idf(N, df)) for t, (_i, df) in term_info.items()}
+    idf = {t: float(bm25.idf(N, int(dfs.get(t, df)))) for t, (_i, df) in term_info.items()}
     specs = []
     for q in queries.to_dict("records"):
         mode = q["mode"]

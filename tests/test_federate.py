@@ -96,7 +96,7 @@ def _assert_fed_equiv(spark, ref_root, fed_df, q):
     docstring): identical per-query score sequences; every federated row is
     a true (url, score) match of the reference index (checked against its
     exhaustive-k result); exact set equality at exhaustive k; federated tie
-    order is the documented (score desc, url asc)."""
+    order is the documented (score desc, segment asc, doc_id asc)."""
     ref = load_index(spark, ref_root)
     full = search(spark, ref, q.copy()).toPandas()
     fed = fed_df.toPandas()
@@ -170,10 +170,11 @@ def test_hot_dictionary_ceiling_is_per_segment(spark, seg_indexes, monkeypatch):
     assert n_terms[0] > n_terms[1]
     monkeypatch.setattr(plan, "MAX_HOT_TERMS", n_terms[1])
     fed = FederatedIndex(spark, roots)
-    big, small = fed.global_segments((0, 1))
-    assert big._local_dict is None
-    assert small._local_dict is not None and len(small._local_dict) == n_terms[1]
-    assert _rows(search_federated(spark, fed, q.copy())) == want
+    got = _rows(search_federated(spark, fed, q.copy()))
+    big, small = fed.segments
+    assert big.hot_dict() is None
+    assert small.hot_dict() is not None and len(small.hot_dict()) == n_terms[1]
+    assert got == want
 
 
 def test_time_pruning(spark, seg_indexes):
@@ -265,6 +266,9 @@ def test_federated_guards(spark, seg_indexes):
         search_federated(spark, [seg_indexes["a"]], q)
     with pytest.raises(ValueError):
         FederatedIndex(spark, [])
+    # an empty root list is refused on the serving path too
+    with pytest.raises(ValueError):
+        search_local_federated([], _queries())
 
 
 def test_federated_pagination(spark, seg_indexes):

@@ -124,8 +124,7 @@ def _random_rows(oracle) -> tuple[pd.DataFrame, set[int]]:
 def _near_rows(oracle) -> list[dict]:
     """NEAR rows, ordered and unordered, with slop 0-3. Each row's two
     words sit slop+1 apart in some doc (swapped for unordered rows), so
-    every row has a hit; synonym keys are skipped so federation, which
-    takes no synonym map, compares every NEAR row too."""
+    every row has a hit."""
     rng = random.Random(SEED + 1)
     docs = sorted(oracle._texts)
     rows = []
@@ -135,7 +134,7 @@ def _near_rows(oracle) -> list[dict]:
                 toks = oracle._texts[rng.choice(docs)].split()
                 i = rng.randrange(len(toks))
                 pair = toks[i:i + slop + 2:slop + 1]
-                if len(pair) == 2 and pair[0] != pair[1] and not set(pair) & set(SYNONYMS):
+                if len(pair) == 2 and pair[0] != pair[1]:
                     break
             rows.append({"terms": pair if ordered else pair[::-1], "mode": "NEAR",
                          "slop": slop, "ordered": ordered})
@@ -156,14 +155,10 @@ def test_every_path_gives_the_same_rows(spark, paths_index):
     spark_rows = _rows(search(spark, idx, q, synonyms=SYNONYMS).toPandas())
     assert spark_rows == _rows(search_local(root, q, synonyms=SYNONYMS))
 
-    # federation takes no synonym map: compare it on the rows synonyms
-    # leave alone (BOOL trees, and flat rows without a synonym key)
-    fq = q[(q["mode"] == "BOOL") | ~q["terms"].map(
-        lambda ts: any(t.split("^")[0] in SYNONYMS for t in ts)
-    )].reset_index(drop=True)
-    want = [r for r in spark_rows if r[0] in set(fq["query_id"])]
-    assert want == _rows(search_federated(spark, [root], fq).toPandas())
-    assert want == _rows(search_local_federated([root], fq))
+    assert spark_rows == _rows(
+        search_federated(spark, [root], q, synonyms=SYNONYMS).toPandas()
+    )
+    assert spark_rows == _rows(search_local_federated([root], q, synonyms=SYNONYMS))
 
     by_q: dict[int, list] = {}
     for qid, rank, doc, score in spark_rows:
@@ -185,10 +180,8 @@ def test_every_path_gives_the_same_rows(spark, paths_index):
     window_docs = set(oracle.postings["window"])
     hits = {d for d, _ in by_q[N_ROWS]}
     assert hits and not hits & window_docs
-    # every NEAR, mixed-disjunction and ^0 row answers, and federation
-    # saw it
-    extra = set(range(N_ROWS + 1, len(q)))
-    assert extra <= set(by_q) and extra <= set(fq["query_id"])
+    # every NEAR, mixed-disjunction and ^0 row answers
+    assert set(range(N_ROWS + 1, len(q))) <= set(by_q)
 
     # count_only and matches_only run the same per-shard loop: counts and
     # full match sets agree with the serving path (k = N_DOCS covers every
