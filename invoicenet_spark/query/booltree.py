@@ -3,10 +3,12 @@ phrase/NEAR, prefix and fuzzy leaves — the Lucene BooleanQuery analog
 (the reference's per-field dispatch, invoicenet/acp/acp.py:41-49, is the
 composition analog on the extraction side).
 
-Pure module: no Spark imports. Shared by the Spark batch path (exec.py,
-mode="BOOL") and the pyarrow serving path (local.py), exactly like
-qparse — one grammar and ONE evaluator, so both paths are float-identical
-by construction.
+Pure module: no Spark imports. Shared by the Spark batch path (exec.py)
+and the pyarrow serving path (local.py), exactly like qparse — one grammar
+and ONE evaluator, so both paths are float-identical by construction.
+Trees are the only query representation: query/plan.py compiles every flat
+row (AND/OR/PHRASE/NEAR and the expansion modes) into one here
+(flat_row_to_tree), on plain and fielded indexes alike.
 
 Node shapes (plain dicts — JSON-serializable so the Spark path can ship a
 resolved tree to executors as one string column):
@@ -51,7 +53,7 @@ import re
 
 import numpy as np
 
-from invoicenet_spark.query.qparse import check_boost
+from invoicenet_spark.query.qparse import check_boost, parse_boost_terms
 
 _TOKEN_RE = re.compile(
     r"""\s*(?:
@@ -503,80 +505,66 @@ def qualify_bare_leaves(node: dict, field_stats: dict) -> dict:
     return node
 
 
-def flat_row_to_tree(row) -> dict:
-    """Rewrite one FLAT query row (any mode, with its modifiers) into the
-    equivalent bare-leaf boolean tree — how fielded indexes serve plain
-    queries: the bare leaves then qualify across all fields
-    (qualify_bare_leaves), so a fielded index is a drop-in replacement for
-    a single-field one at query time."""
+def flat_row_to_tree(row: dict) -> dict:
+    """Compile one FLAT query row (a record dict: mode AND/OR/PHRASE/NEAR,
+    or PREFIX/FUZZY on a fielded index, with its min_match/slop/ordered/
+    max_edits modifiers) into the equivalent bare-leaf tree. plan.normalize
+    runs every flat row through here on every index; on a fielded index
+    the bare leaves then qualify across all fields (qualify_bare_leaves).
+    neg_terms are not read: plan.normalize folds them into every tree.
+
+    AND/OR terms go through qparse.parse_boost_terms: one leaf per distinct
+    base term carrying its effective boost, so `spark^2 spark^2` ≡
+    `spark^4`. A PHRASE/NEAR slot takes no `^boost`: the whole phrase
+    does, in the BOOL grammar (`"a b"^2`)."""
     import pandas as pd
 
-    def _get(name, default=None):
-        try:
-            v = row.get(name) if hasattr(row, "get") else row[name]
-        except (KeyError, IndexError):
-            return default
-        if v is None or (isinstance(v, float) and pd.isna(v)):
-            return default
-        return v
+    def _get(name, default):
+        v = row.get(name)  # scalar modifier cells: None/NaN/NA mean default
+        return default if v is None or pd.isna(v) else v
 
     mode = row["mode"]
-    terms = list(row["terms"])
-    if mode == "PHRASE" or mode == "NEAR":
-        base = {
+    terms = [str(t) for t in row["terms"]]
+    if mode in ("PHRASE", "NEAR"):
+        for t in terms:
+            if "^" in t:
+                raise ValueError(
+                    f"^boost on {mode} slot {t.partition('^')[0]!r}: boost the "
+                    'whole phrase with the BOOL grammar instead, e.g. \'"a b"^2\''
+                )
+        near = mode == "NEAR"
+        return {
             "kind": "phrase",
-            "terms": [t.partition("^")[0] for t in terms],
-            "slop": int(_get("slop", 0)) if mode == "NEAR" else 0,
-            "ordered": bool(_get("ordered", True)),
+            "terms": terms,
+            "slop": int(_get("slop", 0)) if near else 0,
+            "ordered": bool(_get("ordered", True)) if near else True,
             "boost": 1.0,
         }
+    if mode == "PREFIX":
+        leaves = [
+            {"kind": "prefix", "prefix": t.partition("^")[0]} for t in dict.fromkeys(terms)
+        ]
+    elif mode == "FUZZY":
+        e = int(_get("max_edits", 1))
+        leaves = [
+            {"kind": "fuzzy", "term": t.partition("^")[0], "max_edits": e}
+            for t in dict.fromkeys(terms)
+        ]
     else:
-        if mode == "PREFIX":
-            leaves = [
-                {"kind": "prefix", "prefix": t.partition("^")[0]}
-                for t in dict.fromkeys(terms)
-            ]
-        elif mode == "FUZZY":
-            e = int(_get("max_edits", 1))
-            leaves = [
-                {"kind": "fuzzy", "term": t.partition("^")[0], "max_edits": e}
-                for t in dict.fromkeys(terms)
-            ]
-        else:  # OR / AND — _leaf_from_word keeps `term^2.5` boosts
-            leaves = [_leaf_from_word(t) for t in dict.fromkeys(terms)]
-        if mode == "AND":
-            base = leaves[0] if len(leaves) == 1 else {"kind": "and", "clauses": leaves}
-        else:
-            mm = int(_get("min_match", 0))
-            if len(leaves) == 1 and mm <= 1:
-                base = leaves[0]
-            else:
-                base = {"kind": "or", "clauses": leaves}
-                if mm > 1:
-                    base["min_match"] = mm
-    negs = _get("neg_terms")
-    if negs is None or isinstance(negs, str) or not hasattr(negs, "__len__"):
-        return base
-    return with_negations(base, negs)
-
-
-def auto_fielded_rows(queries):
-    """Fielded-index drop-in: every remaining FLAT row (no explicit `fields`
-    map — those were already rewritten) becomes a mode='BOOL' row whose
-    bare-leaf tree the normalize pipeline qualifies across all fields at
-    weight 1. Rows already BOOL pass through (their bare leaves qualify in
-    normalize)."""
-    queries = queries.copy()
-    if "tree" not in queries.columns:
-        queries["tree"] = None
-    for i in queries.index:
-        if queries.at[i, "mode"] == "BOOL":
-            continue
-        queries.at[i, "tree"] = flat_row_to_tree(queries.loc[i])
-        queries.at[i, "mode"] = "BOOL"
-    drop = [c for c in ("neg_terms", "min_match", "slop", "ordered", "max_edits")
-            if c in queries.columns]
-    return queries.drop(columns=drop)
+        base, boosts = parse_boost_terms(terms)
+        leaves = [
+            {"kind": "term", "term": t, "boost": boosts.get(t, 1.0)}
+            for t in dict.fromkeys(base)
+        ]
+    mm = 0 if mode == "AND" else int(_get("min_match", 0))
+    if len(leaves) == 1 and mm <= 1:
+        return leaves[0]
+    if mode == "AND" and leaves:
+        return {"kind": "and", "clauses": leaves}
+    node = {"kind": "or", "clauses": leaves}  # no leaves: matches nothing
+    if mm > 1:
+        node["min_match"] = mm
+    return node
 
 
 # ------------------------------------------------------------------ fielded --
@@ -631,7 +619,9 @@ def fielded_tree(
     where each per-term group = or(`field:term`^weight per field). A doc's
     score is the weighted sum of its per-field BM25 partials (weight scales
     idf; dl/avgdl are the FIELD's), and AND requires every base term in at
-    least one field — Lucene BooleanQuery-over-fields semantics.
+    least one field — Lucene BooleanQuery-over-fields semantics. A
+    `term^boost` multiplies its leaves' weights; duplicate terms sum their
+    boosts (qparse.parse_boost_terms), as on every flat row.
 
     synonyms {token: [equivalents]}: each per-term group expands to the
     union of its forms' field leaves — 'any form of the concept in any
@@ -643,14 +633,15 @@ def fielded_tree(
         raise ValueError(
             f"unknown fields {unknown!r} — index has {sorted(field_stats)}"
         )
+    base, boosts = parse_boost_terms(terms)
     groups = []
-    for t in dict.fromkeys(terms):
+    for t in dict.fromkeys(base):
         forms = [t] + [s for s in (synonyms or {}).get(t, ())]
         leaves = [
             {
                 "kind": "term",
                 "term": f"{f}:{form}",
-                "boost": w,
+                "boost": w * boosts.get(t, 1.0),
                 "avgdl": float(field_stats[f]["avgdl"]),
             }
             for form in dict.fromkeys(forms)
@@ -662,7 +653,7 @@ def fielded_tree(
     node = {"kind": "or", "clauses": groups}
     if min_match and min_match > 1:
         node["min_match"] = int(min_match)
-    return node if len(groups) > 1 or "min_match" in node else groups[0]
+    return node if len(groups) != 1 or "min_match" in node else groups[0]
 
 
 def rewrite_fielded_rows(queries, field_stats: dict, synonyms: dict | None = None):
@@ -672,7 +663,7 @@ def rewrite_fielded_rows(queries, field_stats: dict, synonyms: dict | None = Non
     `synonyms` expand inside the tree for AND rows (apply_synonyms_rows
     skips fielded AND rows so this rewrite can qualify the forms; fielded
     OR rows arrive with their term lists already expanded). A row's bare
-    `neg_terms` stay in their column: plan.normalize folds every BOOL
+    `neg_terms` stay in their column: plan.normalize folds every
     row's into its tree (with_negations), where they qualify across fields
     like any bare leaf."""
     import pandas as pd
@@ -709,9 +700,9 @@ def evaluate_shard(tree: dict, by_tid: dict) -> tuple[np.ndarray, np.ndarray]:
     by_tid: {term_id: TermPostings} for every leaf tid present in the shard
     (absent = term has no postings here). Returns the FULL (docs, scores)
     match list sorted by doc — top-k, pagination cursors and tombstone
-    masking are applied by the caller at the root, exactly like the flat
-    kernels. Correct per shard because a doc lives in exactly one shard, so
-    every set operation is shard-local.
+    masking are applied by the caller at the root. Correct per shard
+    because a doc lives in exactly one shard, so every set operation is
+    shard-local.
 
     Scale shape: pure sorted-array algebra (searchsorted / unique / add.at),
     no per-doc Python; work is O(sum of leaf posting lengths) per shard —
@@ -886,9 +877,10 @@ def flatten_or_mixed(tree: dict) -> list | None:
                                             own semantics
 
     A pure-term disjunction gives all-'term' parts in flatten_or_terms'
-    order, so its floats match the flat kernels'. Returns None when the
-    root is neither a term nor a plain disjunction (root min_match > 1
-    belongs to the pigeonhole min_match routing) or has no clauses."""
+    order, so its floats are score_exhaustive's over those leaves. Returns
+    None when the root is neither a term nor a plain disjunction (root
+    min_match > 1 belongs to the pigeonhole min_match routing) or has no
+    clauses."""
     if tree["kind"] == "term":
         return [("term", _leaf_key(tree))]
     if tree["kind"] != "or" or int(tree.get("min_match") or 1) > 1:
@@ -926,9 +918,12 @@ def evaluate_shard_topk(
     deleted=None,
     after: tuple[float, int] | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Top-k evaluation of a resolved tree over ONE shard — the routing
-    front door both query paths share (identical floats across Spark and
-    serving by construction).
+    """Top-k evaluation of a resolved tree over ONE shard — the one
+    per-(query, shard) router both query paths share through
+    plan.run_shard_batch (identical floats across Spark and serving by
+    construction). Every flat row arrives here as its compiled tree: flat
+    OR → MaxScore, flat AND and min_match → score_and_groups, PHRASE/NEAR
+    → the walk's phrase leaf, neg_terms → the NOT mask.
 
     Disjunctions (flatten_or_mixed) route to block-max MaxScore
     (kernels.score_blockmax), cursored pages included: each term leaf

@@ -11,9 +11,10 @@ Plan shape for a batch of queries:
     docs ⋈ broadcast top-k → url                    [result materialization]
 
 Query normalization (analyzer chain, synonyms, fielded rewrite, dictionary
-expansion, BOOL trees) is query/plan.py and the per-shard batch loop is
-plan.run_shard_batch — both shared with the serving path (query/local.py),
-so the two paths give the same answers by construction.
+expansion, every row compiled into a tree) is query/plan.py and the
+per-shard batch loop is plan.run_shard_batch — both shared with the
+serving path (query/local.py), so the two paths give the same answers by
+construction.
 
 Every shard group is independent — the shard axis is the same docID-range
 partitioning the build used, so a group builds its posting rows once and
@@ -360,14 +361,14 @@ def search(
     # tiny by contract, and normalization is driver-side for every row
     qpd = queries if isinstance(queries, pd.DataFrame) else queries.toPandas()
     stats = {**index.stats, **stats_override} if stats_override else index.stats
-    qpd, needed, positional = plan.normalize(index, qpd, stats, synonyms)
-    specs = plan.query_specs(qpd, index.term_info(needed), stats, df_override)
+    qrows, needed, positional = plan.normalize(index, qpd, stats, synonyms)
+    specs = plan.query_specs(qrows, index.term_info(needed), stats, df_override)
     if matches_only:
         # k bounds each kernel's per-shard output; the full match set means
         # no bound (2^62 is unreachable by any shard's doc count)
         for spec in specs:
             spec.k = 1 << 62
-    term_ids = sorted(set().union(*(s.term_ids() for s in specs)))
+    term_ids = sorted(set().union(*(s.idf for s in specs)))
     qids = pd.DataFrame({"query_id": [s.query_id for s in specs]}, dtype="int64")
     if count_only:
         zero = spark.createDataFrame(qids).withColumn("total_hits", F.lit(0).cast("long"))

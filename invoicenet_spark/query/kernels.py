@@ -1,9 +1,10 @@
-"""Pure numpy query kernels: gallop intersection, exhaustive scoring, the
-conjunctive block-probe kernel and block-max MaxScore. No Spark imports —
-unit-testable standalone. run_shard is the one per-(query, shard) router
-both query paths reach through the one per-shard batch loop,
-plan.run_shard_batch (the Spark path once per shard group, the serving
-path once per probed shard).
+"""Pure numpy query kernels: gallop intersection, exhaustive scoring,
+phrase/NEAR match lists, the conjunctive block-probe kernel and block-max
+MaxScore. No Spark imports — unit-testable standalone. Every query is a
+tree (plan.normalize compiles flat rows into trees), so the one router
+over these kernels is booltree.evaluate_shard_topk, which both query paths
+reach through the one per-shard batch loop, plan.run_shard_batch (the
+Spark path once per shard group, the serving path once per probed shard).
 
 Reference analog (SURVEY.md §2.6 J4, §2.7 A1, §2.8 K1): the query-term ∩
 candidate intersection is the reference's memory-mask (model.py:124-125);
@@ -151,8 +152,8 @@ def score_exhaustive(
 
     Posting rows are self-contained (per-posting doc_len stream), so no
     forward-index side input is needed. Deterministic accumulation:
-    per-term partials added in caller-supplied list order (callers sort
-    by term_id).
+    per-term partials added in caller-supplied list order (the tree's
+    leaf order).
 
     deleted: sorted tombstone doc_ids for THIS shard (index/deletes.py) —
     masked before top-k selection so tombstoned docs never displace live
@@ -203,29 +204,6 @@ def score_exhaustive(
     return topk_select(uniq, agg, k)
 
 
-def score_phrase(
-    plists_by_qpos: list[TermPostings],
-    k: int,
-    deleted: np.ndarray | None = None,
-    after: tuple[float, int] | None = None,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Exact phrase query over a positional index.
-
-    plists_by_qpos: one posting view per phrase slot, in phrase order
-    (repeated terms appear once per slot). A doc matches iff some position
-    p has slot i's term at p+i for every i. Matching docs are then scored
-    with plain BM25 over the phrase's distinct terms (standard semantics:
-    the phrase is a filter, not a scoring unit).
-    """
-    if not plists_by_qpos:
-        return np.zeros(0, dtype=np.int64), np.zeros(0)
-    decoded = [tp.decode_all() for tp in plists_by_qpos]
-    match_arr = phrase_matches(plists_by_qpos, decoded, deleted=deleted)
-    if match_arr.size == 0:
-        return np.zeros(0, dtype=np.int64), np.zeros(0)
-    return _bm25_over_matches(plists_by_qpos, decoded, match_arr, k, after=after)
-
-
 _SHIFT_BITS = np.int64(32)
 _SHIFT = np.int64(1) << _SHIFT_BITS
 
@@ -259,17 +237,13 @@ def _slot_key_arrays(decoded, plists_by_qpos, cand, align: bool):
     return key_arrays
 
 
-def phrase_matches(
-    plists_by_qpos: list[TermPostings],
-    decoded,
-    deleted: np.ndarray | None = None,
-) -> np.ndarray:
-    """Docs of this shard containing the exact phrase — the FULL match list
-    (no top-k), so boolean-tree phrase leaves can compose it."""
+def phrase_matches(plists_by_qpos: list[TermPostings], decoded) -> np.ndarray:
+    """Docs of this shard containing the exact phrase — one posting view
+    per phrase slot, in phrase order (a repeated term appears once per
+    slot); a doc matches iff some position p has slot i's term at p+i for
+    every i. The FULL match list (no top-k), so boolean-tree phrase leaves
+    can compose it."""
     cand = gallop_intersect([d[0] for d in decoded])
-    # mask tombstones BEFORE the (expensive) position alignment — deleted
-    # docs shouldn't pay for slot checks they can never survive
-    cand = cand[drop_deleted(cand, deleted)]
     if cand.size == 0:
         return cand
     # A phrase start survives iff its aligned key appears in EVERY slot's
@@ -287,12 +261,12 @@ def bm25_scores_at(
     match_arr: np.ndarray,
     avgdl_override: float | None = None,
 ) -> np.ndarray:
-    """BM25 over the query's distinct terms (a slot's term may repeat),
+    """BM25 over a phrase leaf's distinct terms (a slot's term may repeat),
     restricted to the proximity-matching docs; accumulated in deterministic
     term_id order. Standard semantics: proximity is a FILTER, scoring stays
-    plain BM25 (shared by PHRASE and NEAR, and by boolean-tree proximity
-    leaves which need the full match list, not a top-k). avgdl_override:
-    fielded phrase leaves normalize by their FIELD's average length."""
+    plain BM25 (booltree.evaluate_shard's phrase/NEAR leaves).
+    avgdl_override: fielded phrase leaves normalize by their FIELD's
+    average length."""
     scores = np.zeros(match_arr.size, dtype=np.float64)
     by_tid = {int(tp.row["term_id"]): (tp, dec) for tp, dec in zip(plists, decoded)}
     for tid in sorted(by_tid):
@@ -303,65 +277,22 @@ def bm25_scores_at(
     return scores
 
 
-def _bm25_over_matches(
-    plists: list[TermPostings],
-    decoded,
-    match_arr: np.ndarray,
-    k: int,
-    after: tuple[float, int] | None = None,
-) -> tuple[np.ndarray, np.ndarray]:
-    scores = bm25_scores_at(plists, decoded, match_arr)
-    match_arr, scores = apply_after(match_arr, scores, after)
-    return topk_select(match_arr, scores, k)
-
-
-def score_near(
-    plists_by_qpos: list[TermPostings],
-    k: int,
-    slop: int,
-    deleted: np.ndarray | None = None,
-    after: tuple[float, int] | None = None,
-    ordered: bool = True,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Proximity query (NEAR/slop) over a positional index.
-
-    ordered=True: a doc matches iff its tokens contain the query terms IN
-    ORDER at strictly increasing positions p1 < … < pn with span
-    pn - p1 <= (n-1) + slop. slop=0 degenerates to PHRASE exactly (an
-    n-chain of strictly increasing ints spanning n-1 is consecutive —
-    pinned by test).
-
-    ordered=False (Lucene SpanNear ordered=false / classic slop): terms may
-    appear in ANY order — a doc matches iff some choice p_i from each
-    slot's positions has max(p) - min(p) <= (n-1) + slop. ("new york"~2
-    order-tolerant.) For repeated terms the slots share occurrences
-    (degenerate but documented; use ordered for strict repeats).
-
-    Matching docs score plain BM25 over the distinct terms, like PHRASE.
-    """
-    n = len(plists_by_qpos)
-    if n == 0:
-        return np.zeros(0, dtype=np.int64), np.zeros(0)
-    if n == 1:
-        return score_exhaustive(plists_by_qpos, k, "OR", deleted=deleted, after=after)
-    decoded = [tp.decode_all() for tp in plists_by_qpos]
-    match_arr = near_matches(
-        plists_by_qpos, decoded, slop, deleted=deleted, ordered=ordered
-    )
-    if match_arr.size == 0:
-        return np.zeros(0, dtype=np.int64), np.zeros(0)
-    return _bm25_over_matches(plists_by_qpos, decoded, match_arr, k, after=after)
-
-
 def near_matches(
     plists_by_qpos: list[TermPostings],
     decoded,
     slop: int,
-    deleted: np.ndarray | None = None,
     ordered: bool = True,
 ) -> np.ndarray:
     """FULL NEAR match list for one shard (no top-k) — composable by
     boolean-tree proximity leaves.
+
+    ordered=True: a doc matches iff its tokens contain the slots' terms IN
+    ORDER at strictly increasing positions p1 < … < pn with span
+    pn - p1 <= (n-1) + slop; slop=0 matches exactly what phrase_matches
+    does (pinned by test). ordered=False (Lucene SpanNear ordered=false):
+    any order, some choice p_i from each slot's positions with
+    max(p) - min(p) <= (n-1) + slop; repeated terms share occurrences
+    (degenerate but documented).
 
     Ordered: vectorized greedy chain, no per-candidate Python: level 1
     enumerates every occurrence of slot 1 across all candidate docs as
@@ -382,7 +313,6 @@ def near_matches(
     """
     n = len(plists_by_qpos)
     cand = gallop_intersect([d[0] for d in decoded])
-    cand = cand[drop_deleted(cand, deleted)]
     if cand.size == 0:
         return cand
     keys = _slot_key_arrays(decoded, plists_by_qpos, cand, align=False)
@@ -753,118 +683,6 @@ def score_blockmax(
     scores = _score_at(parts, cand, full, caches)
     cand, scores = apply_after(cand, scores, after)
     return topk_select(cand, scores, k)
-
-
-def count_matches_shard(
-    mode: str,
-    plists: list[TermPostings],
-    deleted: np.ndarray | None = None,
-    tree: dict | None = None,
-    slop: int = 0,
-    ordered: bool = True,
-    min_match: int = 0,
-) -> int:
-    """Match COUNT for one shard — full match semantics, no scoring, no
-    top-k (the track_total_hits analog; shared by the Spark count path and
-    the serving path). Block-max pruning is inapplicable (a count touches
-    every match), so every mode takes its exhaustive match-list path."""
-    if mode == "BOOL":
-        from invoicenet_spark.query import booltree
-
-        by_tid = {int(tp.row["term_id"]): tp for tp in plists}
-        docs, _ = booltree.evaluate_shard(tree, by_tid)
-        return int(drop_deleted(docs, deleted).sum()) if docs.size else 0
-    if not plists:
-        return 0
-    decoded = [tp.decode_all() for tp in plists]
-    if mode == "PHRASE":
-        return int(phrase_matches(plists, decoded, deleted=deleted).size)
-    if mode == "NEAR":
-        return int(
-            near_matches(plists, decoded, slop, deleted=deleted, ordered=ordered).size
-        )
-    if mode == "AND":
-        docs = gallop_intersect([d[0] for d in decoded])
-        return int(drop_deleted(docs, deleted).sum()) if docs.size else 0
-    # OR (+ min_match)
-    docs_cat = np.concatenate([d[0] for d in decoded])
-    uniq, inv = np.unique(docs_cat, return_inverse=True)
-    if min_match > 1:
-        cnt = np.bincount(inv, minlength=uniq.size)
-        uniq = uniq[cnt >= min_match]
-    return int(drop_deleted(uniq, deleted).sum()) if uniq.size else 0
-
-
-_ALL_TERMS_MODES = ("AND", "PHRASE", "NEAR")
-
-
-def run_shard(
-    mode: str,
-    plists: list,
-    k: int,
-    *,
-    deleted: np.ndarray | None = None,
-    neg=(),
-    after: tuple[float, int] | None = None,
-    min_match: int = 0,
-    slop: int = 0,
-    ordered: bool = True,
-    tree: dict | None = None,
-    count: bool = False,
-):
-    """The ONE per-(query, shard) router: plan.run_shard_batch — the
-    per-shard loop of the Spark shard groups and of the serving path —
-    scores every query through it.
-
-    plists: one TermPostings per query slot (slot order for PHRASE/NEAR),
-    None where the slot's term has no postings in this shard — an
-    AND/PHRASE/NEAR query then matches nothing here, OR/BOOL skip it. neg:
-    posting rows of must_not terms; their docs join the `deleted` mask (the
-    tombstone mechanism, fuzz-pinned sound under block-max pruning). tree:
-    the resolved BOOL tree. Returns the shard's top-k (docs, scores), or
-    its match count when count=True (track_total_hits: exhaustive, no
-    scoring, cursor ignored).
-
-    Routes: BOOL → booltree.evaluate_shard_topk; PHRASE/NEAR → proximity
-    kernels; AND and min_match>1 OR → score_and_groups (exact structural
-    pruning); plain OR → score_blockmax (MaxScore with block-granular
-    probes). The pruned OR/AND routes return score_exhaustive's floats bit
-    for bit, cursors included, so there is no kernel for a caller to pick."""
-    if len(neg):
-        excl = np.unique(
-            np.concatenate([decode_posting_list(r)[0] for r in neg])
-        ).astype(np.int64)
-        deleted = excl if deleted is None else np.union1d(deleted, excl)
-    present = [tp for tp in plists if tp is not None]
-    if not present or (mode in _ALL_TERMS_MODES and len(present) < len(plists)):
-        return 0 if count else (np.zeros(0, dtype=np.int64), np.zeros(0))
-    if mode in ("AND", "OR"):
-        # deterministic float accumulation order on every path
-        present.sort(key=lambda tp: int(tp.row["term_id"]))
-    if count:
-        return count_matches_shard(
-            mode, present, deleted=deleted, tree=tree, slop=slop,
-            ordered=ordered, min_match=min_match,
-        )
-    if mode == "BOOL":
-        from invoicenet_spark.query import booltree
-
-        by_tid = {int(tp.row["term_id"]): tp for tp in present}
-        return booltree.evaluate_shard_topk(
-            tree, by_tid, k, deleted=deleted, after=after
-        )
-    if mode == "PHRASE":
-        return score_phrase(present, k, deleted=deleted, after=after)
-    if mode == "NEAR":
-        return score_near(
-            present, k, slop, deleted=deleted, after=after, ordered=ordered
-        )
-    if mode == "AND" or min_match > 1:
-        return score_and_groups(
-            [[tp] for tp in present], k, deleted=deleted, after=after,
-            min_groups=min_match if mode == "OR" else None,
-        )
-    return score_blockmax(present, k, deleted=deleted, after=after)
 
 
 # score_wand (document-at-a-time block-max WAND with a per-pivot Python

@@ -32,8 +32,9 @@ plan.run_shard_batch shard by shard — the same per-shard loop exec.search
 runs in each of its shard groups.
 
 Queries normalize through the one planner (query/plan.py: LocalIndex is
-its pyarrow dictionary adapter) and score per shard through the one router
-(kernels.run_shard), exactly as exec.search does.
+its pyarrow dictionary adapter) into trees and score per shard through the
+one tree router (booltree.evaluate_shard_topk), exactly as exec.search
+does.
 """
 
 from __future__ import annotations
@@ -355,8 +356,8 @@ def search_local(
 
     Semantics are exec.search's by construction: the same planner
     (plan.normalize + plan.query_specs) and the same per-shard router
-    (kernels.run_shard); the global merge ranks by (score desc, doc_id
-    asc). Returns the same columns as exec.search.
+    (booltree.evaluate_shard_topk); the global merge ranks by (score
+    desc, doc_id asc). Returns the same columns as exec.search.
 
     Batches: the postings read is shared across the whole batch (one
     catalog probe for the union of term_ids), then plan.run_shard_batch
@@ -369,11 +370,11 @@ def search_local(
     """
     li = local_index(index)
     stats = {**li.stats, **stats_override} if stats_override else li.stats
-    queries, needed_terms, positional = normalize_local_queries(
+    qrows, needed_terms, positional = normalize_local_queries(
         li, queries, stats, synonyms=synonyms
     )
     term_info = li.term_info(needed_terms)
-    specs = plan.query_specs(queries, term_info, stats, df_override)
+    specs = plan.query_specs(qrows, term_info, stats, df_override)
 
     all_tids = sorted({tid for tid, _ in term_info.values()})
     rows = (

@@ -4,8 +4,11 @@ federated dfs probe both federated paths share (federate._dfs) all
 normalize a query batch through `normalize` and compile it into per-query
 `QuerySpec`s through `query_specs` (which also applies federation's union
 df), so a row can never mean one thing on one path and something else on
-another. Every batch then runs shard by shard through
-`run_shard_batch`, which routes each spec through kernels.run_shard.
+another. Every row, flat or BOOL, on every index, leaves `normalize` as a
+tree, so there is one query representation and one router: every batch
+runs shard by shard through `run_shard_batch`, which evaluates each spec's
+tree through booltree.evaluate_shard_topk (booltree.evaluate_shard for
+match counts).
 
 Pipeline (`normalize`), in this order:
 
@@ -14,12 +17,14 @@ Pipeline (`normalize`), in this order:
              (parsed here); no later step analyzes again
   synonyms   OR rows gain clauses, AND rows become BOOL trees (qparse)
   fielded    rows with a `fields` weight map become BOOL trees (booltree)
-  negations  every BOOL row's `neg_terms` fold into its tree as a `not`
-             wrapper, so bare-leaf qualification and dictionary lookup
-             cover them like any other leaf
-  expand     fielded index: flat rows become bare-leaf trees; otherwise
-             PREFIX/FUZZY/WILDCARD/REGEX rows expand against the dictionary
-  trees      BOOL trees qualify, expand and get field stats
+  expand     plain index: PREFIX/FUZZY/WILDCARD/REGEX rows expand against
+             the dictionary into OR rows (a fielded index expands them per
+             leaf in `trees`)
+  compile    every remaining flat row becomes its bare-leaf tree
+             (booltree.flat_row_to_tree), and every row's `neg_terms` fold
+             into its tree as a `not` wrapper, so bare-leaf qualification
+             and dictionary lookup cover them like any other leaf
+  trees      trees qualify (fielded index), expand and get field stats
   needed     every dictionary key the batch can touch
 
 Dictionary access goes through the `Dictionary` adapter both index handles
@@ -174,48 +179,29 @@ def _parse_bool_rows(queries: pd.DataFrame, stats: dict) -> pd.DataFrame:
     return queries
 
 
-def _fold_negations(queries: pd.DataFrame) -> pd.DataFrame:
-    """Fold every BOOL row's `neg_terms` into its tree
-    (booltree.with_negations), clearing the column: a BOOL row's must_not
-    then rides the tree on every path, and on a fielded index its bare
-    leaves qualify across fields like the positive ones."""
-    mask = queries["mode"] == "BOOL"
-    if not mask.any() or "neg_terms" not in queries.columns:
-        return queries
-    queries = queries.copy()
-    for i in queries.index[mask]:
-        negs = _term_list(queries.at[i, "neg_terms"])
-        if negs:
-            queries.at[i, "tree"] = booltree.with_negations(queries.at[i, "tree"], negs)
-            queries.at[i, "neg_terms"] = []
-    return queries
-
-
 def normalize(
     d: Dictionary, queries: pd.DataFrame, stats: dict, synonyms: dict | None = None
 ) -> tuple[pd.DataFrame, set[str], bool]:
     """Canonicalize a pandas query batch against ONE index's dictionary
-    (module docstring). Returns (queries, needed_terms, positional): rows
-    are left with modes AND/OR/PHRASE/NEAR/BOOL, BOOL rows carry their
-    expanded tree dict in `tree` and its sorted leaf terms in `terms`;
-    needed_terms is every boost-stripped dictionary key the batch can
-    touch; positional says whether any row needs position streams."""
+    (module docstring). Returns (rows, needed_terms, positional): rows are
+    the batch's row dicts, each, whatever its mode, carrying its expanded
+    tree dict in `tree` and its sorted leaf terms in `terms`; needed_terms
+    is every dictionary key the batch can touch; positional says whether
+    any row needs position streams."""
     field_stats = stats.get("fields") or {}
     queries = qparse.analyze_query_rows(queries, stats)
     queries = _parse_bool_rows(queries, stats)
     queries = qparse.apply_synonyms_rows(queries, synonyms)
     queries = booltree.rewrite_fielded_rows(queries, field_stats, synonyms=synonyms)
-    queries = _fold_negations(queries)
     if field_stats:
+        # PREFIX/FUZZY rows become prefix/fuzzy leaves, expanded per leaf
+        # against the field-qualified keys below
         if queries["mode"].isin(["WILDCARD", "REGEX"]).any():
             raise ValueError(
                 "WILDCARD/REGEX modes are not supported on fielded indexes "
                 "(v1) — query one field with an explicit field-qualified "
                 "pattern via expand_regex + OR"
             )
-        # a fielded index is a query-time drop-in: flat rows become
-        # bare-leaf trees that qualify across all fields below
-        queries = booltree.auto_fielded_rows(queries)
     else:
         expanders = {
             "PREFIX": lambda ts, _e: d.expand_prefixes(ts),
@@ -227,75 +213,72 @@ def normalize(
         }
         for mode, expander in expanders.items():
             queries = qparse.rewrite_expansion_rows(queries, mode, expander)
-
-    positional = bool(queries["mode"].isin(["PHRASE", "NEAR"]).any())
-    bool_mask = queries["mode"] == "BOOL"
-    if bool_mask.any():
-        queries = queries.copy()
-        for i in queries.index[bool_mask]:
-            tree = booltree.attach_field_stats(
-                booltree.normalize_query(
-                    queries.at[i, "tree"], d.expand_prefixes, d.expand_fuzzy,
-                    field_stats=field_stats,
+    # every row as a tree: flat rows compile, neg_terms fold in as a `not`
+    # wrapper (so on a fielded index they qualify like any bare leaf)
+    rows = _records(queries)
+    for q in rows:
+        q["tree"] = booltree.attach_field_stats(
+            booltree.normalize_query(
+                booltree.with_negations(
+                    q["tree"] if q["mode"] == "BOOL" else booltree.flat_row_to_tree(q),
+                    _term_list(q.get("neg_terms")),
                 ),
-                field_stats,
-            )
-            queries.at[i, "tree"] = tree
-            queries.at[i, "terms"] = sorted(booltree.leaf_terms(tree))
-            positional |= booltree.has_positional(tree)
+                d.expand_prefixes, d.expand_fuzzy, field_stats=field_stats,
+            ),
+            field_stats,
+        )
+        q["terms"] = sorted(booltree.leaf_terms(q["tree"]))
+    positional = any(booltree.has_positional(q["tree"]) for q in rows)
     if positional and not stats.get("with_positions", False):
         raise ValueError(
             "PHRASE/NEAR queries (or phrase leaves in a BOOL query) require a "
             "positional index (build with EngineConfig(with_positions=True) / "
             "--with-positions)"
         )
-    needed = {t.partition("^")[0] for ts in queries["terms"] for t in ts}
-    if "neg_terms" in queries.columns:
-        needed |= {t for ts in queries["neg_terms"] for t in _term_list(ts)}
-    return queries, needed, positional
+    needed = set().union(*(q["terms"] for q in rows))
+    return rows, needed, positional
+
+
+def _records(queries: pd.DataFrame) -> list[dict]:
+    """The rows of a query frame as dicts — what DataFrame.to_dict('records')
+    returns, at a fraction of its per-call cost, which dominated the
+    planning of a one-row serving query."""
+    cols = list(queries.columns)
+    return [dict(zip(cols, vals)) for vals in zip(*(queries[c].tolist() for c in cols))]
 
 
 # ----------------------------------------------------------------- specs --
 @dataclass
 class QuerySpec:
-    """One normalized query, resolved against the dictionary: everything
-    kernels.run_shard needs besides a shard's posting rows.
-
-    slots: (term_id, idf) per kernel input — slot order for PHRASE/NEAR,
-    distinct terms for AND/OR (term_id -1 = absent from the dictionary, so
-    an AND/PHRASE/NEAR query matches nothing), distinct present leaves for
-    BOOL. idf carries any `term^boost`. neg: term_ids whose docs are
-    excluded (must_not)."""
+    """One normalized query, resolved against the dictionary: its tree
+    (booltree.resolve_tids: leaves carry term_ids, -1 = absent from the
+    dictionary, so the leaf matches nothing) and idf per present leaf term
+    — everything the tree evaluator needs besides a shard's posting rows.
+    Leaf boosts stay on the tree (evaluate_shard_topk folds them into the
+    posting views' idf)."""
 
     query_id: int
-    mode: str
     k: int
-    slots: list[tuple[int, float]]
-    neg: list[int]
-    tree: dict | None = None
-    min_match: int = 0
-    slop: int = 0
-    ordered: bool = True
+    tree: dict
+    idf: dict[int, float]
     after: tuple[float, int] | None = None
-
-    def term_ids(self) -> set[int]:
-        """Present term_ids whose postings this query reads."""
-        return {t for t, _ in self.slots if t >= 0} | set(self.neg)
 
     def run_shard(self, rows: dict, stats: dict, *, deleted=None, count=False):
         """Run this query over ONE shard. rows: {term_id: posting row dict}
-        for (at least) this query's terms present in the shard."""
+        for (at least) this query's terms present in the shard; deleted:
+        the shard's sorted masked doc_ids or None. Returns the shard's
+        top-k (docs, scores), or its match count when count (the
+        track_total_hits analog: exhaustive, no scoring, cursor ignored)."""
         avgdl, k1, b = stats["avgdl"], stats["k1"], stats["b"]
-        plists = [
-            kernels.TermPostings(rows[tid], idf=idf, avgdl=avgdl, k1=k1, b=b)
-            if tid in rows else None
-            for tid, idf in self.slots
-        ]
-        return kernels.run_shard(
-            self.mode, plists, self.k, deleted=deleted,
-            neg=[rows[t] for t in self.neg if t in rows], after=self.after,
-            min_match=self.min_match, slop=self.slop, ordered=self.ordered,
-            tree=self.tree, count=count,
+        by_tid = {
+            tid: kernels.TermPostings(rows[tid], idf=idf, avgdl=avgdl, k1=k1, b=b)
+            for tid, idf in self.idf.items() if tid in rows
+        }
+        if count:
+            docs, _ = booltree.evaluate_shard(self.tree, by_tid)
+            return int(kernels.drop_deleted(docs, deleted).sum())
+        return booltree.evaluate_shard_topk(
+            self.tree, by_tid, self.k, deleted=deleted, after=self.after
         )
 
 
@@ -307,59 +290,36 @@ def run_shard_batch(
     posting row dict} for the batch's terms present in the shard; deleted:
     the shard's sorted masked doc_ids or None. Returns one entry per spec:
     its (docs, scores) (its match count when count), or None when none of
-    its scored terms occur in the shard."""
+    its leaf terms occur in the shard."""
     return [
-        None if {t for t, _ in s.slots}.isdisjoint(rows)
+        None if s.idf.keys().isdisjoint(rows)
         else s.run_shard(rows, stats, deleted=deleted, count=count)
         for s in specs
     ]
 
 
-def _opt(q: dict, name: str, default, cast):
-    v = q.get(name)
-    return default if _is_null(v) else cast(v)
-
-
 def query_specs(
-    queries: pd.DataFrame,
+    rows: list[dict],
     term_info: dict[str, tuple[int, int]],
     stats: dict,
     df_override: "dict[str, int] | None" = None,
 ) -> list[QuerySpec]:
-    """Compile normalized rows into QuerySpecs. term_info: term → (term_id,
+    """Compile `normalize`'s rows into QuerySpecs. term_info: term → (term_id,
     df) from the index's dictionary; df_override: term → df to score with
     instead (federation's union df — a term it lacks keeps its own df).
-    Optional columns may be absent or hold None/NaN holes, which mean the
-    modifier's default."""
+    A missing or NaN after_score means no cursor."""
     N = stats["N"]
     dfs = df_override or {}
     tid = {t: i for t, (i, _df) in term_info.items()}
     idf = {t: float(bm25.idf(N, int(dfs.get(t, df)))) for t, (_i, df) in term_info.items()}
     specs = []
-    for q in queries.to_dict("records"):
-        mode = q["mode"]
-        tree = None
-        if mode == "BOOL":
-            tree = booltree.resolve_tids(q["tree"], tid)
-            slots = [(tid[t], idf[t]) for t in q["terms"] if t in tid]
-        else:
-            terms, boosts = qparse.parse_boost_terms(list(q["terms"]))
-            if mode not in ("PHRASE", "NEAR"):
-                terms = list(dict.fromkeys(terms))  # duplicates never double-count
-            slots = [
-                (tid.get(t, -1), idf.get(t, 0.0) * boosts.get(t, 1.0)) for t in terms
-            ]
+    for q in rows:
         a_s = q.get("after_score")
         specs.append(QuerySpec(
             query_id=int(q["query_id"]),
-            mode=mode,
             k=int(q["k"]),
-            slots=slots,
-            neg=[tid[t] for t in dict.fromkeys(_term_list(q.get("neg_terms"))) if t in tid],
-            tree=tree,
-            min_match=_opt(q, "min_match", 0, int),
-            slop=_opt(q, "slop", 0, int),
-            ordered=_opt(q, "ordered", True, bool),
+            tree=booltree.resolve_tids(q["tree"], tid),
+            idf={tid[t]: idf[t] for t in q["terms"] if t in tid},
             after=None if _is_null(a_s) else (float(a_s), int(q["after_doc"])),
         ))
     return specs

@@ -185,7 +185,7 @@ def apply_synonyms_rows(queries, synonyms: dict | None):
                     leaves[0] if len(leaves) == 1
                     else {"kind": "or", "clauses": leaves, "min_match": 0}
                 )
-            # the row's neg_terms fold into the tree with every other BOOL
+            # the row's neg_terms fold into the tree with every other
             # row's (plan.normalize)
             queries.at[i, "tree"] = (
                 groups[0] if len(groups) == 1

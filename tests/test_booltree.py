@@ -58,6 +58,16 @@ def test_tree_json_roundtrip():
     assert json.loads(json.dumps(t)) == t
 
 
+@pytest.mark.parametrize("mode", ["OR", "AND"])
+def test_empty_rows_compile_to_trees_that_match_nothing(mode):
+    """A row with no terms compiles to a clause-less tree (no match, as on
+    a plain index), with or without a `fields` map."""
+    stats = {"title": {"avgdl": 2.0}}
+    for tree in (bt.flat_row_to_tree({"mode": mode, "terms": []}),
+                 bt.fielded_tree([], mode, {"title": 1.0}, stats)):
+        assert tree["kind"] in ("and", "or") and tree["clauses"] == []
+
+
 # ----------------------------------------------------------- brute evaluator --
 def _brute_tf_score(tf, dl, avgdl, k1=1.2, b=0.75):
     return tf * (k1 + 1.0) / (tf + k1 * (1 - b + b * dl / avgdl))

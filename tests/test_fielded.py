@@ -458,3 +458,29 @@ def test_fielded_neg_terms_exclude_on_both_paths(spark, fielded_idx, row):
     assert set(got["url"].astype(int)) == want
     assert set(loc["url"].astype(int)) == want
     np.testing.assert_array_equal(got["score"].to_numpy(), loc["score"].to_numpy())
+
+
+@pytest.mark.parametrize(
+    "fields", [None, {"title": 1.0, "body": 1.0}], ids=["drop-in", "weighted"]
+)
+def test_duplicate_boosts_sum_on_both_paths(spark, fielded_idx, fields):
+    """`spark^2 spark^2` is two clauses of boost 2, the same query as
+    `spark^4` (qparse.parse_boost_terms) — on a fielded index as on a plain
+    one, with or without a `fields` map."""
+    root, idx = fielded_idx
+
+    def q(terms):
+        return pd.DataFrame(
+            [{"query_id": 1, "terms": terms, "mode": "OR", "k": BIG, "fields": fields}]
+        )
+
+    dup = search(spark, idx, q(["spark^2", "spark^2"])).toPandas()
+    single = search(spark, idx, q(["spark^4"])).toPandas()
+    for other in (single, search_local(root, q(["spark^2", "spark^2"]))):
+        assert dup["doc_id"].tolist() == other["doc_id"].astype("int64").tolist()
+        np.testing.assert_array_equal(dup["score"].to_numpy(), other["score"].to_numpy())
+    expect = _brute_fielded(["spark"], {"title": 4.0, "body": 4.0})
+    got_map = dict(zip(dup["url"].astype(int), dup["score"]))
+    assert set(got_map) == set(expect)
+    for d in expect:
+        assert got_map[d] == pytest.approx(expect[d], rel=1e-9)

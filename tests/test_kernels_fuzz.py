@@ -172,7 +172,7 @@ def _encode_positional(docs, positions_list, dls):
 
 
 def test_phrase_fuzz_vs_token_scan():
-    """score_phrase's vectorized slot intersection vs a brute-force python
+    """phrase_matches' vectorized slot intersection vs a brute-force python
     token scan over random corpora."""
     for seed in range(120):
         rng = np.random.default_rng(1000 + seed)
@@ -207,7 +207,7 @@ def test_phrase_fuzz_vs_token_scan():
             plists.append(kernels.TermPostings(row, idf, avgdl, 1.2, 0.75))
         if not feasible:
             continue
-        got_docs, _ = kernels.score_phrase(plists, k=50)
+        got_docs = kernels.phrase_matches(plists, [tp.decode_all() for tp in plists])
         expect = sorted(
             d
             for d, toks in docs_tokens.items()
@@ -222,7 +222,7 @@ def test_phrase_fuzz_vs_token_scan():
 
 
 def test_near_fuzz_vs_token_scan():
-    """score_near's greedy-chain vs a brute-force python scan: a doc matches
+    """near_matches' greedy chain vs a brute-force python scan: a doc matches
     iff SOME ordered occurrence chain spans <= (n-1)+slop. The brute force
     enumerates every start and greedily chains (greedy minimizes the final
     span for a fixed start, so it is exact on both sides — the point of the
@@ -278,7 +278,7 @@ def test_near_fuzz_vs_token_scan():
             plists.append(kernels.TermPostings(row, idf, avgdl, 1.2, 0.75))
         if not feasible:
             continue
-        got_docs, _ = kernels.score_near(plists, k=50, slop=slop)
+        got_docs = kernels.near_matches(plists, [tp.decode_all() for tp in plists], slop)
         expect = sorted(
             d for d, toks in docs_tokens.items() if brute_near(toks, q_terms, slop)
         )
@@ -346,7 +346,8 @@ def test_near_unordered_fuzz_vs_selection_scan():
         if not feasible or len(plists) < 2:
             continue
         checked += 1
-        got_docs, _ = kernels.score_near(plists, k=50, slop=slop, ordered=False)
+        decoded = [tp.decode_all() for tp in plists]
+        got_docs = kernels.near_matches(plists, decoded, slop, ordered=False)
         expect = sorted(
             d
             for d, toks in docs_tokens.items()
@@ -357,7 +358,7 @@ def test_near_unordered_fuzz_vs_selection_scan():
             f"got {sorted(got_docs.tolist())} expect {expect}"
         )
         # order-tolerance is a superset of ordered matching
-        got_ordered, _ = kernels.score_near(plists, k=50, slop=slop, ordered=True)
+        got_ordered = kernels.near_matches(plists, decoded, slop, ordered=True)
         assert set(got_ordered.tolist()) <= set(got_docs.tolist())
     assert checked >= 60
 

@@ -1,4 +1,6 @@
-"""Federated-search cost/benefit measurement → BENCH/FEDERATED.json.
+"""Federated-search cost/benefit measurement → BENCH/FEDERATED.json
+(written only at the recorded 100k-doc scale; BENCH_FED_DOCS=<n> runs
+print their JSON and leave the record alone).
 
 Three questions a segment-per-crawl deployment asks (query/federate.py):
 
@@ -29,7 +31,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import CPUS, measure  # noqa: E402  (bench.py guards main())
 
-N_DOCS = int(os.environ.get("BENCH_FED_DOCS", 100_000))
+RECORD_DOCS = 100_000  # the scale BENCH/FEDERATED.json records
+N_DOCS = int(os.environ.get("BENCH_FED_DOCS", RECORD_DOCS))
 
 
 def main():
@@ -130,10 +133,12 @@ def main():
                   / timings["serving_federated_batch_100"], 3),
         "protocol": {"stat": "median", "reps": 5, "warmups": 2},
     }
-    dest = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                        "BENCH", "FEDERATED.json")
-    with open(dest, "w") as f:
-        json.dump(out, f, indent=1)
+    if N_DOCS == RECORD_DOCS:
+        # a reduced-scale run only prints: it must not overwrite the record
+        dest = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                            "BENCH", "FEDERATED.json")
+        with open(dest, "w") as f:
+            json.dump(out, f, indent=1)
     print(json.dumps(out))
     shutil.rmtree(base, ignore_errors=True)
 
