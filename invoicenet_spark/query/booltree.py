@@ -219,22 +219,14 @@ def positive_leaf_terms(node: dict) -> set[str]:
 
 def highlight_terms_for_row(row) -> list[str]:
     """Terms to highlight for one query row (any mode): BOOL rows parse
-    their tree/grammar and keep only positive leaves; flat rows keep their
-    term list (boost suffixes handled by the snippet highlighter)."""
-    mode = row.get("mode") if hasattr(row, "get") else row["mode"]
-    if mode != "BOOL":
+    their query (plan.bool_source) and keep only positive leaves; flat rows
+    keep their term list (boost suffixes handled by the snippet
+    highlighter)."""
+    if row["mode"] != "BOOL":
         return list(row["terms"])
-    raw = None
-    try:
-        raw = row.get("tree") if hasattr(row, "get") else row["tree"]
-    except (KeyError, IndexError):
-        raw = None
-    if raw is None or (isinstance(raw, float)):
-        ts = row["terms"]
-        raw = ts[0] if len(ts) == 1 else None
-    if raw is None:
-        return []
-    return sorted(positive_leaf_terms(as_tree(raw)))
+    from invoicenet_spark.query.plan import bool_source
+
+    return sorted(positive_leaf_terms(as_tree(bool_source(row))))
 
 
 def as_tree(raw) -> dict:
@@ -505,7 +497,24 @@ def qualify_bare_leaves(node: dict, field_stats: dict) -> dict:
     return node
 
 
-def flat_row_to_tree(row: dict) -> dict:
+def _synonym_forms(term: str, synonyms: dict | None) -> list[str]:
+    """A base term followed by its query-time synonyms, each form once."""
+    return list(dict.fromkeys([term, *(synonyms or {}).get(term, ())]))
+
+
+def _with_synonyms(raw_terms, synonyms: dict | None) -> list[str]:
+    """An OR row's raw terms, each followed by its synonym forms carrying
+    the term's `^boost` suffix. Nothing is deduplicated, so
+    qparse.parse_boost_terms sums repeated boosts exactly as it does
+    without synonyms (`spark^2 spark^2` ≡ `spark^4`)."""
+    out = []
+    for raw in raw_terms:
+        base, sep, boost = str(raw).partition("^")
+        out += [f + sep + boost for f in [base, *(synonyms or {}).get(base, ())]]
+    return out
+
+
+def flat_row_to_tree(row: dict, synonyms: dict | None = None) -> dict:
     """Compile one FLAT query row (a record dict: mode AND/OR/PHRASE/NEAR,
     or PREFIX/FUZZY on a fielded index, with its min_match/slop/ordered/
     max_edits modifiers) into the equivalent bare-leaf tree. plan.normalize
@@ -516,7 +525,14 @@ def flat_row_to_tree(row: dict) -> dict:
     AND/OR terms go through qparse.parse_boost_terms: one leaf per distinct
     base term carrying its effective boost, so `spark^2 spark^2` ≡
     `spark^4`. A PHRASE/NEAR slot takes no `^boost`: the whole phrase
-    does, in the BOOL grammar (`"a b"^2`)."""
+    does, in the BOOL grammar (`"a b"^2`).
+
+    synonyms {token: [equivalents]} (the ES query-time synonym_filter
+    mode; tokens are analyzer-output forms): an OR row gains each form as
+    a clause with its term's boost (_with_synonyms; a doc carrying several
+    forms sums them, unlike Lucene's blended SynonymQuery); an AND row's
+    leaf per distinct base term becomes an OR group of its forms, so 'any
+    form of every concept' matches. Other modes ignore synonyms."""
     import pandas as pd
 
     def _get(name, default):
@@ -551,11 +567,19 @@ def flat_row_to_tree(row: dict) -> dict:
             for t in dict.fromkeys(terms)
         ]
     else:
-        base, boosts = parse_boost_terms(terms)
-        leaves = [
-            {"kind": "term", "term": t, "boost": boosts.get(t, 1.0)}
-            for t in dict.fromkeys(base)
-        ]
+        base, boosts = parse_boost_terms(
+            _with_synonyms(terms, synonyms) if mode == "OR" else terms
+        )
+        leaves = []
+        for t in dict.fromkeys(base):
+            forms = [
+                {"kind": "term", "term": f, "boost": boosts.get(t, 1.0)}
+                for f in _synonym_forms(t, synonyms if mode == "AND" else None)
+            ]
+            leaves.append(
+                forms[0] if len(forms) == 1
+                else {"kind": "or", "clauses": forms, "min_match": 0}
+            )
     mm = 0 if mode == "AND" else int(_get("min_match", 0))
     if len(leaves) == 1 and mm <= 1:
         return leaves[0]
@@ -623,20 +647,21 @@ def fielded_tree(
     `term^boost` multiplies its leaves' weights; duplicate terms sum their
     boosts (qparse.parse_boost_terms), as on every flat row.
 
-    synonyms {token: [equivalents]}: each per-term group expands to the
-    union of its forms' field leaves — 'any form of the concept in any
-    field' — mirroring apply_synonyms_rows' AND-of-disjunction-groups
-    semantics on fielded rows (which that rewrite leaves to this one)."""
+    synonyms {token: [equivalents]} follow flat_row_to_tree's rule: an OR
+    row gains each form as a clause with its term's boost (_with_synonyms),
+    and an AND row's per-term group expands to the union of its forms'
+    field leaves — 'any form of the concept in any field'."""
     field_weights = {f: check_boost(w, f) for f, w in field_weights.items()}
     unknown = [f for f in field_weights if f not in field_stats]
     if unknown:
         raise ValueError(
             f"unknown fields {unknown!r} — index has {sorted(field_stats)}"
         )
+    if mode == "OR":
+        terms, synonyms = _with_synonyms(terms, synonyms), None
     base, boosts = parse_boost_terms(terms)
     groups = []
     for t in dict.fromkeys(base):
-        forms = [t] + [s for s in (synonyms or {}).get(t, ())]
         leaves = [
             {
                 "kind": "term",
@@ -644,7 +669,7 @@ def fielded_tree(
                 "boost": w * boosts.get(t, 1.0),
                 "avgdl": float(field_stats[f]["avgdl"]),
             }
-            for form in dict.fromkeys(forms)
+            for form in _synonym_forms(t, synonyms)
             for f, w in field_weights.items()
         ]
         groups.append(leaves[0] if len(leaves) == 1 else {"kind": "or", "clauses": leaves})
@@ -654,40 +679,6 @@ def fielded_tree(
     if min_match and min_match > 1:
         node["min_match"] = int(min_match)
     return node if len(groups) != 1 or "min_match" in node else groups[0]
-
-
-def rewrite_fielded_rows(queries, field_stats: dict, synonyms: dict | None = None):
-    """Both query paths' driver-side rewrite: rows carrying a non-empty
-    `fields` {field: weight} map (modes OR/AND) become mode='BOOL' rows with
-    a fielded_tree in `tree`. Returns a frame without the `fields` column.
-    `synonyms` expand inside the tree for AND rows (apply_synonyms_rows
-    skips fielded AND rows so this rewrite can qualify the forms; fielded
-    OR rows arrive with their term lists already expanded). A row's bare
-    `neg_terms` stay in their column: plan.normalize folds every
-    row's into its tree (with_negations), where they qualify across fields
-    like any bare leaf."""
-    import pandas as pd
-
-    if "fields" not in queries.columns:
-        return queries
-    queries = queries.copy()
-    if "tree" not in queries.columns:
-        queries["tree"] = None
-    for i in queries.index:
-        fw = queries.at[i, "fields"]
-        if not isinstance(fw, dict) or not fw:
-            continue
-        mode = queries.at[i, "mode"]
-        if mode not in ("OR", "AND"):
-            raise ValueError(f"`fields` applies to OR/AND queries, not {mode}")
-        mm_raw = queries.at[i, "min_match"] if "min_match" in queries.columns else 0
-        mm = int(mm_raw) if mm_raw is not None and not pd.isna(mm_raw) else 0
-        queries.at[i, "tree"] = fielded_tree(
-            list(queries.at[i, "terms"]), mode, fw, field_stats, min_match=mm,
-            synonyms=synonyms if mode == "AND" else None,
-        )
-        queries.at[i, "mode"] = "BOOL"
-    return queries.drop(columns=["fields"])
 
 
 # ---------------------------------------------------------------- evaluation --

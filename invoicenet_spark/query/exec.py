@@ -121,13 +121,6 @@ def load_index(spark: SparkSession, root: str) -> Index:
 RESULT_SCHEMA = "query_id long, doc_id long, score double"
 
 
-# PREFIX / REGEX+WILDCARD / FUZZY dictionary rewrites (plan.Dictionary),
-# callable as functions of the Index: expand_prefix_terms(index, prefixes)
-expand_prefix_terms = plan.Dictionary.expand_prefixes
-expand_regex_terms = plan.Dictionary.expand_regex
-expand_fuzzy_terms = plan.Dictionary.expand_fuzzy
-
-
 def facet_counts(results: DataFrame, meta: DataFrame, field: str) -> DataFrame:
     """Facet the matched result set by a doc-metadata field: results ⋈ meta
     on doc_id, then count per (query_id, field value).
@@ -313,9 +306,9 @@ def search(
     """Batch top-k search. queries: (query_id, terms array<string>, mode, k).
 
     synonyms {token: [equivalent tokens]} expands query-time (see
-    qparse.apply_synonyms_rows: OR appends clauses, AND becomes
-    AND-of-disjunction-groups on the tree pipeline; tokens must be
-    analyzer-output forms when the index has a chain).
+    booltree.flat_row_to_tree: OR rows gain clauses, AND rows become
+    AND-of-disjunction-groups; tokens must be analyzer-output forms when
+    the index has a chain).
 
     Optional query columns (absent = off, per row):
       neg_terms array<string> — docs containing ANY of these are excluded
@@ -323,7 +316,7 @@ def search(
       min_match int — OR queries keep only docs matching >= min_match
           distinct query terms (minimumNumberShouldMatch).
     mode "PREFIX": each entry of `terms` is a prefix, rewritten driver-side
-    to the matching dictionary terms (expand_prefix_terms) and scored as OR.
+    to the matching dictionary terms (Index.expand_prefixes) and scored as OR.
 
     count_only (track_total_hits analog): return (query_id, total_hits)
     instead of ranked rows — per-shard exhaustive match COUNTS summed with

@@ -10,21 +10,26 @@ runs shard by shard through `run_shard_batch`, which evaluates each spec's
 tree through booltree.evaluate_shard_topk (booltree.evaluate_shard for
 match counts).
 
-Pipeline (`normalize`), in this order:
+Pipeline (`normalize`): the frame is read into row dicts once, and each
+row compiles straight to its tree (`_row_tree`), in this order:
 
   analyze    the index's token-filter chain, ONCE per user-written term:
-             flat rows and neg_terms (qparse), user BOOL trees' leaves
-             (parsed here); no later step analyzes again
-  synonyms   OR rows gain clauses, AND rows become BOOL trees (qparse)
-  fielded    rows with a `fields` weight map become BOOL trees (booltree)
-  expand     plain index: PREFIX/FUZZY/WILDCARD/REGEX rows expand against
-             the dictionary into OR rows (a fielded index expands them per
-             leaf in `trees`)
-  compile    every remaining flat row becomes its bare-leaf tree
-             (booltree.flat_row_to_tree), and every row's `neg_terms` fold
-             into its tree as a `not` wrapper, so bare-leaf qualification
-             and dictionary lookup cover them like any other leaf
-  trees      trees qualify (fielded index), expand and get field stats
+             flat terms (not PREFIX/FUZZY/WILDCARD/REGEX), neg_terms and a
+             BOOL row's parsed tree (`bool_source`: a `tree` cell, else one
+             query string); no later step analyzes again
+  build      rows with a `fields` weight map: booltree.fielded_tree;
+             plain index PREFIX/FUZZY/WILDCARD/REGEX rows: one dictionary
+             expansion over the row's terms, one clause cap, then an OR
+             row; every other flat row: booltree.flat_row_to_tree (a
+             fielded index expands its prefix/fuzzy leaves below). Both
+             builders apply the synonyms with one rule: an OR row gains
+             each form as a clause, an AND row gets one OR group of forms
+             per distinct base term
+  negate     the row's neg_terms fold in as a `not` wrapper
+             (booltree.with_negations), so bare-leaf qualification and
+             dictionary lookup cover them like any other leaf
+  tree       booltree.normalize_query (qualify bare leaves on a fielded
+             index, expand prefix/fuzzy leaves), then attach_field_stats
   needed     every dictionary key the batch can touch
 
 Dictionary access goes through the `Dictionary` adapter both index handles
@@ -134,6 +139,9 @@ def _is_null(v) -> bool:
     return v is None or v is pd.NA or (isinstance(v, float) and np.isnan(v))
 
 
+_EXPANSION_MODES = ("PREFIX", "FUZZY", "WILDCARD", "REGEX")
+
+
 def _term_list(v) -> list[str]:
     """A list-valued optional cell (list, tuple, numpy array) as a list;
     None/NaN holes (pandas fills missing dict keys) mean empty."""
@@ -142,92 +150,100 @@ def _term_list(v) -> list[str]:
     return []
 
 
-def _parse_bool_rows(queries: pd.DataFrame, stats: dict) -> pd.DataFrame:
-    """Parse every user-written BOOL row's query (the `tree` column — dict
-    or JSON — wins over a single query string in `terms`) and run the
-    index's token-filter chain over its leaves (booltree.analyze_tree_leaves
-    — the tree half of qparse.analyze_query_rows). Together the two analyze
-    each user-written term exactly once: trees the later steps build come
-    from already-analyzed terms and are never analyzed again (a stem that
-    is itself a stopword, `ares` → `are`, would otherwise elide)."""
-    mask = queries["mode"] == "BOOL"
-    if not mask.any():
-        return queries
-    queries = queries.copy()
-    if "tree" not in queries.columns:
-        queries["tree"] = None
+def bool_source(q) -> "dict | str":
+    """A BOOL row's query: its `tree` cell (a dict or its JSON) wins, else
+    the single query string in `terms` (the grammar). The planner and the
+    snippet highlighter (booltree.highlight_terms_for_row) share this."""
+    raw = q.get("tree")
+    if not _is_null(raw):
+        return raw
+    ts = q["terms"]
+    if len(ts) != 1:
+        raise ValueError(
+            "mode='BOOL' needs a `tree` (dict/JSON) or a single "
+            "query string in `terms`"
+        )
+    return ts[0]
+
+
+def _int_cell(q: dict, name: str, default: int) -> int:
+    v = q.get(name)
+    return default if _is_null(v) else int(v)
+
+
+def _row_tree(d: Dictionary, q: dict, stats: dict, synonyms: dict | None) -> dict:
+    """Compile one query row into its expanded tree (module docstring)."""
+    field_stats = stats.get("fields") or {}
     stopwords = tuple(stats.get("stopwords") or ())
     stem = stats.get("stem")
-    for i in queries.index[mask]:
-        raw = queries.at[i, "tree"]
-        if _is_null(raw):
-            ts = queries.at[i, "terms"]
-            if len(ts) != 1:
-                raise ValueError(
-                    "mode='BOOL' needs a `tree` (dict/JSON) or a single "
-                    "query string in `terms`"
-                )
-            raw = ts[0]
-        tree = booltree.as_tree(raw)
-        if stopwords or stem:
-            # every clause a stopword → keep the original tree: its terms
-            # are absent from the dictionary, so it matches nothing
-            tree = booltree.analyze_tree_leaves(
-                tree, stopwords, stem, stats.get("fields") or {}
-            ) or tree
-        queries.at[i, "tree"] = tree
-    return queries
+    mode, terms = q["mode"], q["terms"]
+    negs = _term_list(q.get("neg_terms"))
+    if mode == "BOOL":
+        tree = booltree.as_tree(bool_source(q))
+    if stopwords or stem:
+        from invoicenet_spark.functions.analyzer import analyze_terms
+
+        # each user-written term is analyzed exactly once, here (a stem
+        # that is itself a stopword, `ares` → `are`, would elide on a second
+        # pass); an all-stopword row or tree keeps its original terms,
+        # which are absent from the dictionary, so it matches nothing.
+        # Expansion-mode terms are never analyzed (multi-term convention)
+        if mode == "BOOL":
+            tree = booltree.analyze_tree_leaves(tree, stopwords, stem, field_stats) or tree
+        elif mode not in _EXPANSION_MODES:
+            terms = analyze_terms(terms, stopwords, stem) or list(terms)
+        negs = analyze_terms(negs, stopwords, stem)
+    fields = q.get("fields")
+    if isinstance(fields, dict) and fields:
+        if mode not in ("OR", "AND"):
+            raise ValueError(f"`fields` applies to OR/AND queries, not {mode}")
+        tree = booltree.fielded_tree(
+            terms, mode, fields, field_stats,
+            min_match=_int_cell(q, "min_match", 0), synonyms=synonyms,
+        )
+    elif mode in ("WILDCARD", "REGEX") and field_stats:
+        raise ValueError(
+            "WILDCARD/REGEX modes are not supported on fielded indexes "
+            "(v1) — query one field with an explicit field-qualified "
+            "pattern via expand_regex + OR"
+        )
+    elif mode in _EXPANSION_MODES and not field_stats:
+        # one union over the row's terms, one clause cap, then an OR row
+        # (a fielded index expands prefix/fuzzy leaves in normalize_query)
+        base = [str(t).partition("^")[0] for t in terms]
+        if mode == "PREFIX":
+            terms = d.expand_prefixes(base)
+        elif mode == "FUZZY":
+            terms = d.expand_fuzzy(base, _int_cell(q, "max_edits", 1))
+        else:
+            if mode == "WILDCARD":
+                base = [qparse.wildcard_to_regex(t) for t in base]
+            terms = d.expand_regex(base)
+        tree = booltree.flat_row_to_tree({**q, "mode": "OR", "terms": terms})
+    elif mode != "BOOL":
+        tree = booltree.flat_row_to_tree({**q, "terms": terms}, synonyms)
+    tree = booltree.normalize_query(
+        booltree.with_negations(tree, negs),
+        d.expand_prefixes, d.expand_fuzzy, field_stats=field_stats,
+    )
+    return booltree.attach_field_stats(tree, field_stats)
 
 
 def normalize(
     d: Dictionary, queries: pd.DataFrame, stats: dict, synonyms: dict | None = None
-) -> tuple[pd.DataFrame, set[str], bool]:
+) -> tuple[list[dict], set[str], bool]:
     """Canonicalize a pandas query batch against ONE index's dictionary
     (module docstring). Returns (rows, needed_terms, positional): rows are
     the batch's row dicts, each, whatever its mode, carrying its expanded
     tree dict in `tree` and its sorted leaf terms in `terms`; needed_terms
     is every dictionary key the batch can touch; positional says whether
-    any row needs position streams."""
-    field_stats = stats.get("fields") or {}
-    queries = qparse.analyze_query_rows(queries, stats)
-    queries = _parse_bool_rows(queries, stats)
-    queries = qparse.apply_synonyms_rows(queries, synonyms)
-    queries = booltree.rewrite_fielded_rows(queries, field_stats, synonyms=synonyms)
-    if field_stats:
-        # PREFIX/FUZZY rows become prefix/fuzzy leaves, expanded per leaf
-        # against the field-qualified keys below
-        if queries["mode"].isin(["WILDCARD", "REGEX"]).any():
-            raise ValueError(
-                "WILDCARD/REGEX modes are not supported on fielded indexes "
-                "(v1) — query one field with an explicit field-qualified "
-                "pattern via expand_regex + OR"
-            )
-    else:
-        expanders = {
-            "PREFIX": lambda ts, _e: d.expand_prefixes(ts),
-            "FUZZY": lambda ts, e: d.expand_fuzzy(ts, e),
-            "WILDCARD": lambda ts, _e: d.expand_regex(
-                [qparse.wildcard_to_regex(t) for t in ts]
-            ),
-            "REGEX": lambda ts, _e: d.expand_regex(ts),
-        }
-        for mode, expander in expanders.items():
-            queries = qparse.rewrite_expansion_rows(queries, mode, expander)
-    # every row as a tree: flat rows compile, neg_terms fold in as a `not`
-    # wrapper (so on a fielded index they qualify like any bare leaf)
-    rows = _records(queries)
-    for q in rows:
-        q["tree"] = booltree.attach_field_stats(
-            booltree.normalize_query(
-                booltree.with_negations(
-                    q["tree"] if q["mode"] == "BOOL" else booltree.flat_row_to_tree(q),
-                    _term_list(q.get("neg_terms")),
-                ),
-                d.expand_prefixes, d.expand_fuzzy, field_stats=field_stats,
-            ),
-            field_stats,
-        )
-        q["terms"] = sorted(booltree.leaf_terms(q["tree"]))
+    any row needs position streams. The frame is read, never written."""
+    cols = list(queries.columns)
+    rows = []
+    for vals in zip(*(queries[c].tolist() for c in cols)):
+        q = dict(zip(cols, vals))
+        tree = _row_tree(d, q, stats, synonyms)
+        rows.append({**q, "tree": tree, "terms": sorted(booltree.leaf_terms(tree))})
     positional = any(booltree.has_positional(q["tree"]) for q in rows)
     if positional and not stats.get("with_positions", False):
         raise ValueError(
@@ -237,14 +253,6 @@ def normalize(
         )
     needed = set().union(*(q["terms"] for q in rows))
     return rows, needed, positional
-
-
-def _records(queries: pd.DataFrame) -> list[dict]:
-    """The rows of a query frame as dicts — what DataFrame.to_dict('records')
-    returns, at a fraction of its per-call cost, which dominated the
-    planning of a one-row serving query."""
-    cols = list(queries.columns)
-    return [dict(zip(cols, vals)) for vals in zip(*(queries[c].tolist() for c in cols))]
 
 
 # ----------------------------------------------------------------- specs --

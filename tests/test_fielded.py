@@ -376,7 +376,7 @@ def test_cross_field_phrase_rejected(fielded_idx):
 
 def test_fielded_and_with_synonyms(spark, fielded_idx):
     """AND + a `fields` weight map + synonyms must not hard-fail (the
-    synonym AND→BOOL rewrite used to run first and rewrite_fielded_rows
+    synonym AND→BOOL rewrite used to run first and the fielded rewrite
     then rejected the BOOL row). The synonyms expand INSIDE the fielded
     tree: and-of-groups where each group is any form in any weighted
     field — identical rows on both paths, and equal to the manually
@@ -484,3 +484,24 @@ def test_duplicate_boosts_sum_on_both_paths(spark, fielded_idx, fields):
     assert set(got_map) == set(expect)
     for d in expect:
         assert got_map[d] == pytest.approx(expect[d], rel=1e-9)
+
+
+def test_drop_in_and_synonyms_equal_the_weighted_spelling(spark, fielded_idx):
+    """A drop-in AND row repeating a synonym-bearing term gets one
+    (query|window) group, like its fields={f: 1.0} spelling (fielded_tree),
+    so `query` counts once: both spellings return the same rows, with the
+    same floats, on both paths."""
+    root, idx = fielded_idx
+    syn = {"query": ["window"]}
+    row = {"query_id": 1, "terms": ["query", "query", "spark"], "mode": "AND", "k": BIG}
+    drop_in = pd.DataFrame([row])
+    weighted = pd.DataFrame([{**row, "fields": {"title": 1.0, "body": 1.0}}])
+    want = search(spark, idx, weighted, synonyms=syn).toPandas()
+    assert set(want["url"].astype(int)) == {0, 1}
+    for got in (
+        search(spark, idx, drop_in, synonyms=syn).toPandas(),
+        search_local(root, drop_in, synonyms=syn),
+        search_local(root, weighted, synonyms=syn),
+    ):
+        assert got["doc_id"].astype("int64").tolist() == want["doc_id"].tolist()
+        np.testing.assert_array_equal(got["score"].to_numpy(), want["score"].to_numpy())

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from invoicenet_spark.config import EngineConfig
 from invoicenet_spark.fixtures import gen_pages_spark
-from invoicenet_spark.query.exec import expand_prefix_terms, load_index, search
+from invoicenet_spark.query.exec import load_index, search
 from invoicenet_spark.query.local import search_local
 
 CFG = EngineConfig(shard_size=64, block_size=16, build_partitions=8, with_positions=True)
@@ -131,7 +131,7 @@ def test_min_match(spark, ql):
 def test_prefix_expansion(spark, ql):
     root, idx, top = ql
     prefix = top[0][:3]
-    expansion = expand_prefix_terms(idx, [prefix])
+    expansion = idx.expand_prefixes([prefix])
     assert top[0] in expansion and len(expansion) >= 1
     expect = _run(spark, idx, _q(expansion))
     got = _run(spark, idx, _q([prefix], mode="PREFIX"))
@@ -149,7 +149,7 @@ def test_prefix_expansion(spark, ql):
 def test_prefix_expansion_cap(spark, ql):
     root, idx, _ = ql
     with pytest.raises(ValueError, match="prefix expansion"):
-        expand_prefix_terms(idx, [""], max_expansions=10)
+        idx.expand_prefixes([""], max_expansions=10)
     from invoicenet_spark.query.local import local_index
 
     with pytest.raises(ValueError, match="prefix expansion"):
@@ -463,13 +463,12 @@ def test_mixed_optional_columns_multi_query_batch(spark, ql):
 def test_fuzzy_queries(spark, ql):
     """FUZZY == OR over the Levenshtein expansion; a 1-edit misspelling of
     a real term recovers that term's docs on both paths."""
-    from invoicenet_spark.query.exec import expand_fuzzy_terms
     from invoicenet_spark.query.local import local_index
 
     root, idx, top = ql
     t0 = top[0]
     typo = t0[:-1] + ("x" if t0[-1] != "x" else "y")  # 1 substitution
-    expansion = expand_fuzzy_terms(idx, [typo], max_edits=1)
+    expansion = idx.expand_fuzzy([typo], max_edits=1)
     assert t0 in expansion
     # serving expansion agrees with the Spark-path expansion
     assert local_index(root).expand_fuzzy([typo], max_edits=1) == expansion

@@ -1,6 +1,8 @@
-"""Query-time synonym expansion (qparse.apply_synonyms_rows): OR appends
-clauses, AND becomes AND-of-disjunction-groups on the tree pipeline;
-boosts ride onto every form; both query paths identical."""
+"""Query-time synonym expansion (the tree builders booltree.flat_row_to_tree
+and fielded_tree, called per row by plan.normalize): OR rows gain every
+form as a clause, AND rows get one disjunction group of forms per distinct
+base term; boosts ride onto every form and duplicate terms follow the same
+rule as without a synonym map; both query paths identical."""
 
 import numpy as np
 import pandas as pd
@@ -127,3 +129,27 @@ def test_and_synonyms_neg_terms(spark, syn_idx):
     res = _both(spark, syn_idx, q, synonyms=SYN)
     # (car|auto|automobile) AND park, NOT big → only doc 1 ("auto park small")
     assert {d for d, _ in _rows(res, 1)} == {1}
+
+
+def test_duplicate_boosts_sum_with_synonyms(spark, syn_idx):
+    """`car^2 car^2` ≡ `car^4` under a synonym map, as without one: every
+    occurrence of a term is a clause, and so is every form it expands to."""
+    def q(terms):
+        return pd.DataFrame([{"query_id": 1, "terms": terms, "mode": "OR", "k": 10}])
+
+    dup = _both(spark, syn_idx, q(["car^2", "car^2"]), synonyms=SYN)
+    single = _both(spark, syn_idx, q(["car^4"]), synonyms=SYN)
+    manual = _both(spark, syn_idx, q(["car^4", "auto^4", "automobile^4"]))
+    assert _rows(dup, 1) == _rows(single, 1) == _rows(manual, 1)
+
+
+def test_and_duplicates_stay_one_group(spark, syn_idx):
+    """`car car park` ≡ `car park` on an AND row under a synonym map: a
+    plain duplicate is one (car|auto|automobile) group, not two."""
+    def q(terms):
+        return pd.DataFrame([{"query_id": 1, "terms": terms, "mode": "AND", "k": 10}])
+
+    dup = _both(spark, syn_idx, q(["car", "car", "park"]), synonyms=SYN)
+    single = _both(spark, syn_idx, q(["car", "park"]), synonyms=SYN)
+    assert _rows(dup, 1) == _rows(single, 1)
+    assert {d for d, _ in _rows(dup, 1)} == {0, 1}

@@ -7,7 +7,7 @@ import pandas as pd
 import pytest
 
 from invoicenet_spark.config import EngineConfig
-from invoicenet_spark.query.exec import expand_regex_terms, load_index, search
+from invoicenet_spark.query.exec import load_index, search
 from invoicenet_spark.query.local import local_index, search_local
 from invoicenet_spark.query.qparse import wildcard_to_regex
 
@@ -45,14 +45,14 @@ def test_expansion_full_match(spark, rx_idx):
     """Patterns anchor: `w?ndow` must NOT match `windows` (Lucene
     full-term semantics), `a?c` matches the one-char hole only."""
     index = load_index(spark, rx_idx)
-    assert expand_regex_terms(index, ["w.ndow"]) == ["window"]
-    assert expand_regex_terms(index, ["a.c"]) == ["a1c", "abc", "axc"]
+    assert index.expand_regex(["w.ndow"]) == ["window"]
+    assert index.expand_regex(["a.c"]) == ["a1c", "abc", "axc"]
     li = local_index(rx_idx)
     assert li.expand_regex(["w.ndow"]) == ["window"]
     assert li.expand_regex(["a.c"]) == ["a1c", "abc", "axc"]
     # clause cap (TooManyClauses analog)
     with pytest.raises(ValueError, match="regex expansion"):
-        expand_regex_terms(index, [".*"], max_expansions=3)
+        index.expand_regex([".*"], max_expansions=3)
     with pytest.raises(ValueError, match="regex expansion"):
         li.expand_regex([".*"], max_expansions=3)
 
