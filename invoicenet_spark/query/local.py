@@ -5,8 +5,8 @@ job amortize the ~1.2 s job-scheduling floor. An interactive single query
 doesn't: its kernel time is single-digit ms while the job costs 1.2 s. This
 module is the serving-node fast path a search frontend would run: it reads
 the SAME index files (hive-partitioned parquet postings + terms + docs)
-through pyarrow.dataset with the SAME pushed term_id filter (row-group
-min/max skipping on the term_id-sorted files), and scores with the SAME
+through pyarrow with the SAME term_id pruning (row-group min/max skipping
+on the term_id-sorted files), and scores with the SAME
 numpy kernels (query/kernels.py) — so results are rank-identical to
 exec.search by construction, and a test pins it.
 
@@ -16,7 +16,8 @@ generation marker (stats.json mtime_ns+size — rewritten atomically by every
 build/update finalize). A GC'd-and-reallocated Index object can never alias
 another index's catalog, and after `update_index` appends shards the next
 call observes the new generation and rebuilds the catalog, so a long-lived
-server picks up new docs without restart. The cache is a small bounded LRU.
+server picks up new docs without restart. The handle cache is a small
+bounded LRU (_SERVING_CACHE_MAX handles).
 
 The serving path is Spark-free: dictionary, postings and docs are all read
 via pyarrow, and only COMMITTED postings files (per the shard log — see
@@ -30,6 +31,18 @@ build cluster — it is a client of the index files. Query batches share ONE
 postings read (the union of the batch's term_ids) and then run
 plan.run_shard_batch shard by shard — the same per-shard loop exec.search
 runs in each of its shard groups.
+
+Per-generation cache, so a single query costs about what it costs inside
+a batch: each LocalIndex keeps one LRU of decoded data (_DecodedCache),
+bounded to _DECODED_CACHE_BYTES (64 MiB of Arrow nbytes per handle). It
+holds the postings row groups the catalog decoded, where a term's rows are
+found by binary search over the row group's term_id column, and each
+probed shard's sorted doc_ids with its urls' Arrow string buffers. Index
+files never change within a generation, so re-keying the handle on a new
+generation is the whole invalidation. At most _SERVING_CACHE_MAX handles,
+so 8 × 64 MiB of decoded data, stay live. The gain depends on repeated
+hits: an index whose probed row groups and shards do not fit under the
+bound re-decodes on every miss.
 
 Queries normalize through the one planner (query/plan.py: LocalIndex is
 its pyarrow dictionary adapter) into trees and score per shard through the
@@ -54,8 +67,107 @@ from invoicenet_spark.query import kernels, plan
 _INT64_MIN, _INT64_MAX = -(1 << 63), (1 << 63) - 1
 
 
+# Decoded data one serving handle keeps (postings row groups and per-shard
+# url arrays), bounded by their Arrow nbytes. The serve benchmark's whole
+# index decodes to ~2 MB of row groups plus ~0.3 MB of urls.
+_DECODED_CACHE_BYTES = 64 << 20
+
+
+class _DecodedCache:
+    """One handle's LRU of decoded index data, keyed ("postings", file, row
+    group, column set) or ("urls", shard), bounded to _DECODED_CACHE_BYTES
+    of Arrow nbytes. Entries are looked up, filled and evicted under one
+    lock; two threads that miss the same key both decode it and the first
+    fill is kept."""
+
+    def __init__(self):
+        import threading
+
+        self._lock = threading.Lock()
+        self.entries: "OrderedDict[tuple, tuple[object, int]]" = OrderedDict()
+        self.nbytes = 0
+
+    def get(self, key):
+        with self._lock:
+            hit = self.entries.get(key)
+            if hit is None:
+                return None
+            self.entries.move_to_end(key)
+            return hit[0]
+
+    def put(self, key, value, nbytes: int):
+        """Cache value (nbytes of Arrow data) and return the cached value
+        for key, evicting least-recently-used entries over the bound."""
+        with self._lock:
+            if key not in self.entries:
+                self.entries[key] = (value, nbytes)
+                self.nbytes += nbytes
+            self.entries.move_to_end(key)
+            value = self.entries[key][0]
+            while self.entries and self.nbytes > _DECODED_CACHE_BYTES:
+                _, (_, old) = self.entries.popitem(last=False)
+                self.nbytes -= old
+        return value
+
+
+def _binary_view(arr) -> tuple[np.ndarray, np.ndarray]:
+    """(offsets, data) numpy views over a binary/string Arrow array's
+    buffers: value i is data[offsets[i]:offsets[i + 1]]."""
+    _, offs, data = arr.buffers()
+    offs = np.frombuffer(offs, dtype=np.int32)[arr.offset:arr.offset + len(arr) + 1]
+    return offs, np.frombuffer(data, dtype=np.uint8)
+
+
+class _RowGroup:
+    """One decoded postings row group: its Arrow table (what the cache
+    bound counts), its term_id column, and numpy views over the table's
+    buffers, so posting rows are sliced out without an Arrow take. The
+    postings schema (build.POSTINGS_SCHEMA) has only non-null integer,
+    binary and integer-list columns; anything else raises."""
+
+    def __init__(self, table):
+        import pyarrow as pa
+
+        self.table = table
+        self.term_ids = table.column("term_id").to_numpy()
+        self.sorted = bool((self.term_ids[1:] >= self.term_ids[:-1]).all())
+        self._cols = []
+        for name, col in zip(table.column_names, table.columns):
+            arr, t = col.combine_chunks(), col.type
+            if arr.null_count:
+                raise ValueError(f"postings column {name!r} has nulls")
+            if pa.types.is_list(t):
+                view = ("list", arr.offsets.to_numpy(), arr.values.to_numpy())
+            elif pa.types.is_binary(t):
+                view = ("bytes", *_binary_view(arr))
+            elif pa.types.is_integer(t):
+                view = ("num", arr.to_numpy(), None)
+            else:
+                raise TypeError(f"postings column {name!r} has unexpected type {t}")
+            self._cols.append((name, *view))
+
+    def rows(self, idx: np.ndarray, shard: int) -> list[dict]:
+        """Posting row dicts of rows idx: scalars as Python values, blobs
+        as bytes, list columns as read-only numpy views (kernels only read
+        them), plus the row's `shard`."""
+        out = []
+        for i in idx.tolist():
+            row = {}
+            for name, kind, a, b in self._cols:
+                if kind == "list":
+                    row[name] = b[a[i]:a[i + 1]]
+                elif kind == "bytes":
+                    row[name] = b[a[i]:a[i + 1]].tobytes()
+                else:
+                    row[name] = a[i].item()
+            row["shard"] = shard
+            out.append(row)
+        return out
+
+
 class _PostingsCatalog:
-    """File-level (term_id min, max, shard) catalog over the postings files.
+    """File-level (term_id min, max, shard) catalog over the postings files;
+    the row groups it decodes go to its handle's _DecodedCache.
 
     A generic dataset scan re-reads every fragment's parquet footer PER
     QUERY to evaluate stats pruning (~0.4 ms × n_files — measured 0.6 s on
@@ -65,6 +177,15 @@ class _PostingsCatalog:
     min/max pruning, possible because the build range-partitions postings
     by (term_id, shard) so each file covers a narrow term slice.
 
+    Row-group cache: a decoded row group stays in the handle's LRU keyed
+    by (file, row group, column set), so a query whose terms sit in cached
+    row groups decodes nothing. This is valid because a catalog belongs to
+    one LocalIndex, i.e. one index generation, and files never change
+    within a generation. Each term's rows are found by np.searchsorted
+    over the row group's term_id column (sorted by the build); a row group
+    whose term_id column is not non-decreasing falls back to a pc.is_in
+    filter.
+
     `files`: explicit committed-file list (the shard-log commit protocol);
     None falls back to a directory scan (legacy index). The term_id column
     index is resolved BY NAME from each file's schema, and a row group
@@ -72,8 +193,9 @@ class _PostingsCatalog:
     (always read) — stats are an optimization, never a correctness input.
     """
 
-    def __init__(self, path: str, files: list[str] | None = None):
+    def __init__(self, path: str, files: list[str] | None, cache: _DecodedCache):
         import re
+        import threading
 
         import pyarrow.parquet as pq
 
@@ -83,13 +205,12 @@ class _PostingsCatalog:
         # (path, shard, [(rg_idx, lo, hi), ...]) — row-group granularity.
         # Handles are NOT retained here: an index can have far more files
         # than the fd limit, so footers are read through a transient handle
-        # at open and reads go through the bounded-LRU _handle() below.
-        import threading
-
+        # at open and reads go through the bounded-LRU _handles_for() below.
         self.files: list[tuple[str, int, list[tuple[int, int, int]]]] = []
         self._handles: "OrderedDict[str, pq.ParquetFile]" = OrderedDict()
         self._lock = threading.Lock()
         self._schema_names: list[str] = []
+        self.cache = cache
         for fpath in files:
             pf = pq.ParquetFile(fpath)
             try:
@@ -114,8 +235,8 @@ class _PostingsCatalog:
     _MAX_OPEN_HANDLES = 256
 
     def _handles_for(self, paths: list[str]) -> dict:
-        """Resolve open handles for one read, SERIALLY under the lock (the
-        per-file fetch threads must never mutate the LRU). Hot term-range
+        """Resolve open handles for one read under the lock (concurrent
+        callers share one catalog). Hot term-range
         files stay open across queries; fd usage is bounded by
         max(_MAX_OPEN_HANDLES, files this read touches) — a function of
         query fan-out, never of index size."""
@@ -135,52 +256,56 @@ class _PostingsCatalog:
                 old.close()
         return out
 
-    def read(self, term_ids: list[int], with_positions: bool = False) -> pd.DataFrame:
-        from concurrent.futures import ThreadPoolExecutor
+    def _row_groups_for(self, keys: list[tuple]) -> dict:
+        """The decoded _RowGroup of each ("postings", path, rg, columns)
+        key: hits come from the handle's cache, misses are decoded
+        serially and put there."""
+        out = {key: self.cache.get(key) for key in keys}
+        missed = [key for key, rg in out.items() if rg is None]
+        if missed:
+            handles = self._handles_for(sorted({key[1] for key in missed}))
+            for key in missed:
+                _, path, rg, columns = key
+                table = handles[path].read_row_group(rg, columns=columns and list(columns))
+                entry = _RowGroup(table)
+                out[key] = self.cache.put(key, entry, table.nbytes)
+        return out
 
+    def read(self, term_ids: list[int], with_positions: bool = False) -> list[dict]:
+        """Posting row dicts (see _RowGroup.rows) of the given term_ids, in
+        (file, row group, term_id) order."""
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        tids = sorted(term_ids)
-        tid_arr = pa.array(tids, type=pa.int64())
-        work = []
-        for path, shard, rgs in self.files:
-            hit_rgs = [i for i, lo, hi in rgs if any(lo <= t <= hi for t in tids)]
-            if hit_rgs:
-                work.append((path, shard, hit_rgs))
+        tids = np.unique(np.asarray(term_ids, dtype=np.int64))
         columns = None
         if not with_positions and self._schema_names:
             # column pruning: the position stream is by far the fattest
             # column (hot terms carry MBs of positions) and only PHRASE
             # queries decode it
-            columns = [
+            columns = tuple(
                 c for c in self._schema_names if c not in ("pos_blob", "block_pos_off")
-            ]
-        handles = self._handles_for([p for p, _, _ in work])
-
-        def fetch(item):
-            path, shard, hit_rgs = item
-            # Arrow-level row filter BEFORE pandas conversion: materializing
-            # non-matching rows' nested blobs into python objects was the
-            # hot spot, not the I/O
-            t = handles[path].read_row_groups(hit_rgs, columns=columns)
-            t = t.filter(pc.is_in(t.column("term_id"), value_set=tid_arr))
-            return shard, t
-
-        # parquet decode releases the GIL — thread the per-file reads
-        with ThreadPoolExecutor(max_workers=8) as ex:
-            fetched = [(s, t) for s, t in ex.map(fetch, work) if t.num_rows]
-        if not fetched:
-            return pd.DataFrame(columns=["term_id", "shard"])
-        # ONE pandas conversion for the whole result (per-file to_pandas was
-        # 1.4 ms of fixed overhead each)
-        big = pa.concat_tables([t for _, t in fetched])
-        pdf = big.to_pandas()
-        pdf["shard"] = np.repeat(
-            np.array([s for s, _ in fetched], dtype=np.int64),
-            [t.num_rows for _, t in fetched],
-        )
-        return pdf
+            )
+        work = []
+        for path, shard, rgs in self.files:
+            for i, lo, hi in rgs:
+                want = tids[(tids >= lo) & (tids <= hi)]
+                if want.size:
+                    work.append((("postings", path, i, columns), shard, want))
+        decoded = self._row_groups_for([key for key, _, _ in work])
+        out: list[dict] = []
+        for key, shard, want in work:
+            rg = decoded[key]
+            if rg.sorted:
+                lo_i = np.searchsorted(rg.term_ids, want, "left")
+                n = np.searchsorted(rg.term_ids, want, "right") - lo_i
+                # the rows [lo_i, lo_i + n) of every wanted term
+                idx = np.arange(n.sum()) + np.repeat(lo_i - (np.cumsum(n) - n), n)
+            else:
+                mask = pc.is_in(rg.table.column("term_id"), value_set=pa.array(want))
+                idx = np.flatnonzero(mask.to_numpy(zero_copy_only=False))
+            out += rg.rows(idx, shard)
+        return out
 
 
 # ---------------------------------------------------------- serving handles --
@@ -213,6 +338,7 @@ class LocalIndex(plan.Dictionary):
         self._dict: pd.DataFrame | None = None
         self._dict_too_big = False
         self._deleted_by_shard: dict | None = None
+        self.cache = _DecodedCache()
 
     def deleted_by_shard(self) -> dict:
         """{shard: sorted tombstoned doc_ids} for query-time masking — the
@@ -229,7 +355,7 @@ class LocalIndex(plan.Dictionary):
     def catalog(self) -> _PostingsCatalog:
         if self._catalog is None:
             self._catalog = _PostingsCatalog(
-                self.paths.postings, committed_postings_files(self.paths)
+                self.paths.postings, committed_postings_files(self.paths), self.cache
             )
         return self._catalog
 
@@ -279,11 +405,52 @@ class LocalIndex(plan.Dictionary):
             zip(tbl.column("term_id").to_pylist(), tbl.column("df").to_pylist()),
         ))
 
+    def _load_urls(self, shards: list[int]) -> dict:
+        """{shard: (sorted doc_ids, url offsets, url bytes)} for the given
+        shards, from ONE doc_id-range scan of the docs table (its files are
+        not doc_id sorted, so each scan reads every file), each shard put
+        in the handle's cache. The urls stay in Arrow's string buffers, so
+        the cache holds raw bytes, not Python objects."""
+        size = int(self.stats["shard_size"])
+        doc_id = ds.field("doc_id")
+        ranges = [(doc_id >= sh * size) & (doc_id < (sh + 1) * size) for sh in shards]
+        flt = ranges[0]
+        for r in ranges[1:]:
+            flt = flt | r
+        tbl = self.docs_dataset().to_table(columns=["doc_id", "url"], filter=flt)
+        ids = tbl.column("doc_id").to_numpy()
+        order = np.argsort(ids, kind="stable")
+        ids = ids[order]
+        bounds = np.searchsorted(ids, np.array(shards + [s + 1 for s in shards]) * size)
+        out = {}
+        for sh, lo, hi in zip(shards, bounds[: len(shards)], bounds[len(shards):]):
+            # each shard its own buffers, so evicting one frees its bytes
+            sh_ids = ids[lo:hi].copy()
+            urls = tbl.column("url").take(order[lo:hi]).combine_chunks()
+            entry = (sh_ids, *_binary_view(urls))
+            out[sh] = self.cache.put(("urls", sh), entry, sh_ids.nbytes + urls.nbytes)
+        return out
+
     def urls_for(self, doc_ids: list[int]) -> dict[int, str]:
-        tbl = self.docs_dataset().to_table(
-            columns=["doc_id", "url"], filter=ds.field("doc_id").isin(doc_ids)
-        )
-        return dict(zip(tbl.column("doc_id").to_pylist(), tbl.column("url").to_pylist()))
+        """doc_id → url for the doc_ids present in the docs table, looked
+        up by binary search in each shard's cached sorted doc_ids."""
+        ids = np.unique(np.asarray(doc_ids, dtype=np.int64))
+        size = int(self.stats["shard_size"])
+        shards = ids // size
+        arrays = {sh: self.cache.get(("urls", sh)) for sh in np.unique(shards).tolist()}
+        missed = [sh for sh, got in arrays.items() if got is None]
+        if missed:
+            arrays.update(self._load_urls(missed))
+        out: dict[int, str] = {}
+        for shard, (have, offs, data) in arrays.items():
+            want = ids[shards == shard]
+            if not have.size:
+                continue
+            pos = np.minimum(np.searchsorted(have, want), have.size - 1)
+            hit = have[pos] == want
+            for d, i in zip(want[hit].tolist(), pos[hit].tolist()):
+                out[d] = data[offs[i]:offs[i + 1]].tobytes().decode()
+        return out
 
 
 _SERVING_CACHE: "OrderedDict[str, LocalIndex]" = OrderedDict()
@@ -359,6 +526,11 @@ def search_local(
     (booltree.evaluate_shard_topk); the global merge ranks by (score
     desc, doc_id asc). Returns the same columns as exec.search.
 
+    Cost: a query whose row groups and url shards the handle has decoded
+    before (its byte-bounded per-generation cache, module docstring)
+    decodes no parquet; its urls come from per-shard sorted arrays, and
+    the result frame is built once from the merged rows.
+
     Batches: the postings read is shared across the whole batch (one
     catalog probe for the union of term_ids), then plan.run_shard_batch
     runs the batch shard by shard on one core (a thread pool was slower:
@@ -377,15 +549,11 @@ def search_local(
     specs = plan.query_specs(qrows, term_info, stats, df_override)
 
     all_tids = sorted({tid for tid, _ in term_info.values()})
-    rows = (
-        li.catalog().read(all_tids, with_positions=positional)
-        if all_tids
-        else pd.DataFrame()
-    )
+    rows = li.catalog().read(all_tids, with_positions=positional) if all_tids else []
     # {shard: {term_id: posting row}}
     by_shard: dict[int, dict[int, dict]] = {}
-    for rec in rows.to_dict("records") if len(rows) else []:
-        by_shard.setdefault(int(rec["shard"]), {})[int(rec["term_id"])] = rec
+    for rec in rows:
+        by_shard.setdefault(rec["shard"], {})[rec["term_id"]] = rec
 
     deleted_by_shard = li.deleted_by_shard()
     if excluded_ids is not None and len(excluded_ids):
@@ -428,15 +596,23 @@ def search_local(
             {"query_id": [s.query_id for s in specs], "total_hits": totals}
         )
 
-    out = pd.DataFrame(out_rows, columns=["query_id", "rank", "doc_id", "score"])
-    if with_url and len(out):
-        urls = li.urls_for(sorted(set(out["doc_id"])))
-        out["url"] = out["doc_id"].map(urls)
-        out = out[["query_id", "rank", "doc_id", "url", "score"]]
-    elif with_url:
-        out["url"] = pd.Series(dtype="object")
-        out = out[["query_id", "rank", "doc_id", "url", "score"]]
-    return out.sort_values(["query_id", "rank"]).reset_index(drop=True)
+    cols = ["query_id", "rank", "doc_id"] + (["url"] if with_url else []) + ["score"]
+    if not out_rows:
+        return pd.DataFrame(columns=cols)  # an empty result keeps object columns
+    # (query_id, rank) order, stable for repeated query_ids
+    out_rows.sort(key=lambda r: r[:2])
+    qids, ranks, docs, scores = zip(*out_rows)
+    data = {
+        "query_id": np.array(qids, dtype=np.int64),
+        "rank": np.array(ranks, dtype=np.int64),
+        "doc_id": np.array(docs, dtype=np.int64),
+    }
+    if with_url:
+        urls = li.urls_for(sorted(set(docs)))
+        # a list, so pandas infers the column's dtype as Series.map would
+        data["url"] = [urls.get(d, np.nan) for d in docs]
+    data["score"] = np.array(scores, dtype=np.float64)
+    return pd.DataFrame(data)
 
 
 def _local_meta(meta, field: str, doc_ids) -> pd.DataFrame:

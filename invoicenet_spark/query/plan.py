@@ -93,8 +93,14 @@ class Dictionary:
         hot = self.hot_dict()
         if hot is None:
             return self._scan_info(sorted(needed)) if needed else {}
-        hit = hot.loc[[t for t in sorted(needed) if t in hot.index]]
-        return dict(zip(hit.index, zip(hit["term_id"].tolist(), hit["df"].tolist())))
+        terms = sorted(needed)
+        pos = hot.index.get_indexer(terms)
+        hit = pos >= 0
+        pos = pos[hit]
+        return dict(zip(
+            [t for t, h in zip(terms, hit) if h],
+            zip(hot["term_id"].to_numpy()[pos].tolist(), hot["df"].to_numpy()[pos].tolist()),
+        ))
 
     def _expand(self, kind, patterns, max_edits, max_expansions) -> list[str]:
         """Shared expansion: hot-dictionary match or backend scan, then the

@@ -149,10 +149,12 @@ def attach_snippets_local(
 ) -> pd.DataFrame:
     """Serving path: add a `snippet` column to search_local results.
 
-    Texts are fetched once for the result set's distinct doc_ids through
-    the docs pyarrow dataset (point lookups, same as urls_for); each row is
-    highlighted with ITS query's terms. Raises if the index was not built
-    with store_text=True."""
+    Texts are fetched once per call for the result set's distinct doc_ids
+    through a doc_id-filtered scan of the docs pyarrow dataset. Unlike the
+    urls (LocalIndex.urls_for keeps per-shard arrays in the handle's
+    bounded cache), texts are not cached: stored text is too large to hold
+    per handle. Each row is highlighted with ITS query's terms. Raises if
+    the index was not built with store_text=True."""
     import pyarrow.dataset as ds
 
     from invoicenet_spark.query.local import local_index
