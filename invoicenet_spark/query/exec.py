@@ -31,13 +31,11 @@ analog under the plain-parquet fallback.
 from __future__ import annotations
 
 import json
-import operator
 from dataclasses import dataclass, field
 from functools import reduce
 
 import numpy as np
 import pandas as pd
-import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from invoicenet_spark.index.build import IndexPaths, read_postings
@@ -49,10 +47,8 @@ from invoicenet_spark.query import plan
 class Index(plan.Dictionary):
     paths: IndexPaths
     postings: DataFrame
-    terms: DataFrame
     docs: DataFrame
     stats: dict
-    _local_dict: "pd.DataFrame | None" = None
     # tombstone files at load time: a handle masks exactly these deletes
     tombstone_files: list[str] = field(default_factory=list)
 
@@ -64,54 +60,19 @@ class Index(plan.Dictionary):
     def avgdl(self) -> float:
         return self.stats["avgdl"]
 
-    def hot_dict(self) -> "pd.DataFrame | None":
-        """Driver-side term → (term_id, df) cache for low-latency lookups —
-        what a serving node holds hot. Skipped when the vocabulary exceeds
-        plan.MAX_HOT_TERMS (then lookups stay pushed-filter dictionary
-        scans). The ceiling check reads parquet footer row counts, not a
-        Spark count job."""
-        if self._local_dict is None:
-            terms = pads.dataset(self.paths.terms, format="parquet")
-            if terms.count_rows() > plan.MAX_HOT_TERMS:
-                return None
-            self._local_dict = self.terms.toPandas().set_index("term")
-        return self._local_dict
-
-    def _scan_terms(self, kind, patterns, max_edits, limit) -> set[str]:
-        """Big-vocab expansion: the match pushed into a JVM dictionary scan
-        (Java regex dialect for 'regex', F.levenshtein for 'fuzzy')."""
-        cond = {
-            "prefix": lambda p: F.col("term").startswith(p),
-            "regex": lambda p: F.col("term").rlike(f"^(?:{p})$"),
-            "fuzzy": lambda t: F.levenshtein("term", F.lit(t)) <= int(max_edits),
-        }[kind]
-        rows = (
-            self.terms.where(reduce(operator.or_, map(cond, patterns)))
-            .select("term").limit(limit).collect()
-        )
-        return {r["term"] for r in rows}
-
-    def _scan_info(self, needed) -> dict[str, tuple[int, int]]:
-        rows = (
-            self.terms.where(F.col("term").isin(needed))
-            .select("term", "term_id", "df").collect()
-        )
-        return {r["term"]: (int(r["term_id"]), int(r["df"])) for r in rows}
-
 
 def load_index(spark: SparkSession, root: str) -> Index:
     paths = IndexPaths(root)
     with open(paths.stats) as f:
         stats = json.load(f)
-    # the dictionary is scanned (with a pushed semi-join filter) on every
-    # query — cache it; it is orders of magnitude smaller than postings.
+    # the term dictionary is plan.Dictionary's pyarrow read of
+    # paths.terms, loaded on first lookup with no Spark job.
     # Postings come from the COMMITTED file list in the shard log (the
     # object-store commit protocol) — partial files from a crashed build
     # are never visible to queries.
     return Index(
         paths=paths,
         postings=read_postings(spark, paths),
-        terms=spark.read.parquet(paths.terms).cache(),
         docs=spark.read.parquet(paths.docs),
         stats=stats,
         tombstone_files=list_tombstone_files(paths),
@@ -373,8 +334,12 @@ def search(
     # `PushedFilters: [In(term_id, …)]` + row-group min/max skipping on the
     # term_id-sorted files turn the probe into a near-point lookup. Posting
     # rows are self-contained (per-posting doc_len stream), so it is the
-    # only scan, and each probed row reaches the kernels exactly once.
-    probe = index.postings.where(F.col("term_id").isin(term_ids))
+    # only scan, and each probed row reaches the kernels exactly once. The
+    # IN list is one SQL string (the ids are dictionary ints): Column.isin
+    # costs one py4j call per literal.
+    probe = index.postings.where(
+        F.expr(f"term_id IN ({', '.join(str(int(t)) for t in term_ids)})")
+    )
     if not positional:
         # the position stream is the fattest column; only proximity reads it
         probe = probe.drop("pos_blob", "block_pos_off")

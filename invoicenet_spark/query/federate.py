@@ -182,9 +182,10 @@ def _dfs(handles: list, live: list[int], queries: pd.DataFrame, synonyms=None):
     """The dfs phase of dfs_query_then_fetch, shared by both paths:
     returns (stats_override, df_override) for the live set's union corpus.
 
-    handles are plan.Dictionary handles (exec.Index or LocalIndex). Union
-    N/avgdl (and per-field stats) come from the segments' stats.json — no
-    data scan, sum_dl = N_i · avgdl_i. Union df covers exactly the
+    handles are exec.Index or LocalIndex; both inherit the one pyarrow
+    term dictionary (plan.Dictionary), so a segment's term_info costs no
+    Spark job on either path. Union N/avgdl (and per-field stats) come from
+    the segments' stats.json — no data scan, sum_dl = N_i · avgdl_i. Union df covers exactly the
     dictionary keys the batch can touch: the probe set is what the SAME
     planner the per-segment searches run (plan.normalize: analyzer chain,
     synonyms, fielded auto-qualification, PREFIX/FUZZY expansion against

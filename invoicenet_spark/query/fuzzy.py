@@ -12,8 +12,9 @@ m*L ~ a few hundred vectorized ops regardless of vocabulary size. numpy
 view, no per-string Python. Lucene uses Levenshtein automata for the same
 job; at the dictionary sizes a serving node holds hot (<= 5M terms) the
 vectorized DP is a few hundred ms worst-case and has no automaton-
-construction complexity. The Spark batch path's big-vocab fallback pushes
-F.levenshtein into a JVM dictionary scan instead (exec.Index._scan_terms).
+construction complexity. Past the hot-dictionary ceiling every path runs
+the same DP over streamed record batches of the term column
+(plan.Dictionary._scan_terms).
 """
 
 from __future__ import annotations

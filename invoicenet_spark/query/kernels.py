@@ -27,7 +27,6 @@ import numpy as np
 
 from invoicenet_spark.index import bm25
 from invoicenet_spark.index.codec import (
-    decode_block,
     decode_blocks_batch,
     decode_positions,
     decode_posting_list,
@@ -120,9 +119,6 @@ class TermPostings:
 
     def decode_all(self) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
         return decode_posting_list(self.row)
-
-    def decode_one_block(self, i: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        return decode_block(self.row, i)
 
     def decode_positions(self, tfs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
         return decode_positions(self.row, tfs)

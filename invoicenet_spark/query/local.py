@@ -25,9 +25,9 @@ index/shardlog.py commit protocol) are visible, exactly like the Spark
 reader.
 
 At web scale this is the component that runs on each query-serving replica:
-the dictionary is held hot (LocalIndex._dict), postings reads touch only
-the probed term_ids' row groups, and nothing here involves the driver of a
-build cluster — it is a client of the index files. Query batches share ONE
+the dictionary is held hot (plan.Dictionary.hot_dict), postings reads touch
+only the probed term_ids' row groups, and nothing here involves the driver
+of a build cluster — it is a client of the index files. Query batches share ONE
 postings read (the union of the batch's term_ids) and then run
 plan.run_shard_batch shard by shard — the same per-shard loop exec.search
 runs in each of its shard groups.
@@ -44,10 +44,10 @@ so 8 × 64 MiB of decoded data, stay live. The gain depends on repeated
 hits: an index whose probed row groups and shards do not fit under the
 bound re-decodes on every miss.
 
-Queries normalize through the one planner (query/plan.py: LocalIndex is
-its pyarrow dictionary adapter) into trees and score per shard through the
-one tree router (booltree.evaluate_shard_topk), exactly as exec.search
-does.
+Queries normalize through the one planner (query/plan.py) against the one
+term dictionary (plan.Dictionary, which exec.Index inherits too) into
+trees and score per shard through the one tree router
+(booltree.evaluate_shard_topk), exactly as exec.search does.
 """
 
 from __future__ import annotations
@@ -334,9 +334,6 @@ class LocalIndex(plan.Dictionary):
             self.stats = json.load(f)
         self._catalog: _PostingsCatalog | None = None
         self._docs_ds = None
-        self._terms_ds = None
-        self._dict: pd.DataFrame | None = None
-        self._dict_too_big = False
         self._deleted_by_shard: dict | None = None
         self.cache = _DecodedCache()
 
@@ -365,45 +362,6 @@ class LocalIndex(plan.Dictionary):
                 self.paths.docs, format="parquet", partitioning="hive"
             )
         return self._docs_ds
-
-    def _terms_dataset(self):
-        if self._terms_ds is None:
-            self._terms_ds = ds.dataset(self.paths.terms, format="parquet")
-        return self._terms_ds
-
-    def hot_dict(self) -> "pd.DataFrame | None":
-        """The dictionary held hot when it fits (a serving node's hot
-        dictionary — the common case pays NO dataset/filesystem work per
-        query); above plan.MAX_HOT_TERMS lookups stay pushed-filter parquet
-        reads."""
-        if self._dict is None and not self._dict_too_big:
-            tds = self._terms_dataset()
-            if tds.count_rows() > plan.MAX_HOT_TERMS:  # metadata-only count
-                self._dict_too_big = True
-            else:
-                tbl = tds.to_table(columns=["term", "term_id", "df"])
-                self._dict = tbl.to_pandas().set_index("term")
-        return self._dict
-
-    def _scan_terms(self, kind, patterns, max_edits, limit) -> set[str]:
-        """Big-vocab expansion: STREAM the term column in record batches —
-        never materialize a >MAX_HOT_TERMS dictionary as one padded numpy
-        array (that is exactly what the hot-dictionary cap avoids)."""
-        out: set[str] = set()
-        for batch in self._terms_dataset().to_batches(columns=["term"]):
-            col = batch.column("term")
-            vocab = np.asarray(col, dtype=str) if kind == "fuzzy" else col.to_pandas()
-            out |= plan.match_terms(kind, vocab, patterns, max_edits)
-        return out
-
-    def _scan_info(self, needed) -> dict[str, tuple[int, int]]:
-        tbl = self._terms_dataset().to_table(
-            columns=["term", "term_id", "df"], filter=ds.field("term").isin(needed)
-        )
-        return dict(zip(
-            tbl.column("term").to_pylist(),
-            zip(tbl.column("term_id").to_pylist(), tbl.column("df").to_pylist()),
-        ))
 
     def _load_urls(self, shards: list[int]) -> dict:
         """{shard: (sorted doc_ids, url offsets, url bytes)} for the given

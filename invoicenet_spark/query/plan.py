@@ -32,11 +32,11 @@ row compiles straight to its tree (`_row_tree`), in this order:
              index, expand prefix/fuzzy leaves), then attach_field_stats
   needed     every dictionary key the batch can touch
 
-Dictionary access goes through the `Dictionary` adapter both index handles
-(exec.Index, local.LocalIndex) implement: hot-dictionary matching is written
-here once; each backend supplies only how to load its hot dictionary and
-its >MAX_HOT_TERMS fallbacks (a JVM dictionary scan on Spark, a pyarrow
-scan on serving), since those are the only code that runs there.
+Dictionary access goes through the one `Dictionary` both index handles
+(exec.Index, local.LocalIndex) inherit: it reads the index's `terms` parquet
+through pyarrow on every path, so loading the hot dictionary costs no Spark
+job, and its >MAX_HOT_TERMS fallbacks (a streamed term scan, a filtered
+read) match with the same Python `re` dialect as the hot path.
 """
 
 from __future__ import annotations
@@ -46,6 +46,7 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+import pyarrow.dataset as ds
 
 from invoicenet_spark.index import bm25
 from invoicenet_spark.query import booltree, kernels, qparse
@@ -71,21 +72,55 @@ def match_terms(kind: str, vocab, patterns, max_edits: int = 1) -> set[str]:
 
 
 class Dictionary:
-    """Term-dictionary adapter. Subclasses supply `hot_dict` (a term-indexed
-    (term_id, df) frame, or None past MAX_HOT_TERMS), `_scan_terms` and
-    `_scan_info` (the big-vocabulary fallbacks); lookup and expansion over
-    the hot dictionary live here."""
+    """The term dictionary over `self.paths.terms`, read through pyarrow:
+    `hot_dict` (a term-indexed (term_id, df) frame, or None past
+    MAX_HOT_TERMS), lookup (`term_info`) and expansion (`_expand`) over it,
+    and the big-vocabulary fallbacks `_scan_terms` and `_scan_info`. A
+    handle only supplies `paths`."""
 
     _fuzzy_vocab = None
+    _terms_ds = None
+    _dict = None
+    _dict_too_big = False
+
+    def _terms_dataset(self):
+        if self._terms_ds is None:
+            self._terms_ds = ds.dataset(self.paths.terms, format="parquet")
+        return self._terms_ds
 
     def hot_dict(self) -> "pd.DataFrame | None":
-        raise NotImplementedError
+        """The dictionary held hot when it fits (a serving node's hot
+        dictionary — the common case pays NO dataset/filesystem work per
+        query); above MAX_HOT_TERMS lookups stay pushed-filter parquet
+        reads."""
+        if self._dict is None and not self._dict_too_big:
+            tds = self._terms_dataset()
+            if tds.count_rows() > MAX_HOT_TERMS:  # metadata-only count
+                self._dict_too_big = True
+            else:
+                tbl = tds.to_table(columns=["term", "term_id", "df"])
+                self._dict = tbl.to_pandas().set_index("term")
+        return self._dict
 
-    def _scan_terms(self, kind: str, patterns: list[str], max_edits: int, limit: int) -> set[str]:
-        raise NotImplementedError
+    def _scan_terms(self, kind, patterns, max_edits) -> set[str]:
+        """Big-vocab expansion: STREAM the term column in record batches —
+        never materialize a >MAX_HOT_TERMS dictionary as one padded numpy
+        array (that is exactly what the hot-dictionary cap avoids)."""
+        out: set[str] = set()
+        for batch in self._terms_dataset().to_batches(columns=["term"]):
+            col = batch.column("term")
+            vocab = np.asarray(col, dtype=str) if kind == "fuzzy" else col.to_pandas()
+            out |= match_terms(kind, vocab, patterns, max_edits)
+        return out
 
-    def _scan_info(self, needed: list[str]) -> dict[str, tuple[int, int]]:
-        raise NotImplementedError
+    def _scan_info(self, needed) -> dict[str, tuple[int, int]]:
+        tbl = self._terms_dataset().to_table(
+            columns=["term", "term_id", "df"], filter=ds.field("term").isin(needed)
+        )
+        return dict(zip(
+            tbl.column("term").to_pylist(),
+            zip(tbl.column("term_id").to_pylist(), tbl.column("df").to_pylist()),
+        ))
 
     def term_info(self, needed: set[str]) -> dict[str, tuple[int, int]]:
         """term → (term_id, df) for the requested terms present in the
@@ -103,19 +138,18 @@ class Dictionary:
         ))
 
     def _expand(self, kind, patterns, max_edits, max_expansions) -> list[str]:
-        """Shared expansion: hot-dictionary match or backend scan, then the
-        clause cap (the BooleanQuery.TooManyClauses analog) and the
+        """Shared expansion: hot-dictionary match or streamed term scan,
+        then the clause cap (the BooleanQuery.TooManyClauses analog) and the
         deterministic lexicographic order (qparse.cap_prefix_expansion)."""
         if not patterns:
             return []
         if kind == "regex":
-            # bad patterns surface as re.error on every backend. NOTE: the
-            # Spark big-vocab fallback matches with JVM rlike, so patterns
-            # must stick to the common Python/Java subset to expand alike
+            # bad patterns surface as re.error before any dictionary work;
+            # every path, hot or scanned, matches with this Python dialect
             [re.compile(p) for p in patterns]
         hot = self.hot_dict()
         if hot is None:
-            out = self._scan_terms(kind, patterns, max_edits, max_expansions + 1)
+            out = self._scan_terms(kind, patterns, max_edits)
         elif kind == "fuzzy":
             if self._fuzzy_vocab is None:
                 # one O(vocab x maxlen) conversion per handle, not per row

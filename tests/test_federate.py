@@ -166,7 +166,7 @@ def test_hot_dictionary_ceiling_is_per_segment(spark, seg_indexes, monkeypatch):
     roots = [seg_indexes["full"], seg_indexes["a"]]
     q = _queries()
     want = _rows(search_federated(spark, roots, q.copy()))
-    n_terms = [load_index(spark, r).terms.count() for r in roots]
+    n_terms = [spark.read.parquet(load_index(spark, r).paths.terms).count() for r in roots]
     assert n_terms[0] > n_terms[1]
     monkeypatch.setattr(plan, "MAX_HOT_TERMS", n_terms[1])
     fed = FederatedIndex(spark, roots)

@@ -302,7 +302,7 @@ def test_fielded_html_extraction(spark, tmp_path):
     root = str(tmp_path / "html_fielded")
     build_index(spark, pages, root, cfg)
     idx = load_index(spark, root)
-    terms = {r["term"] for r in idx.terms.collect()}
+    terms = {r["term"] for r in spark.read.parquet(idx.paths.terms).collect()}
     assert "title:spark" in terms and "title:friends" in terms  # entity decoded
     assert "body:query" in terms and "body:spark" in terms  # title rides body too
     q = pd.DataFrame(

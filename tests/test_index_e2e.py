@@ -47,8 +47,8 @@ def test_doc_table(built, oracle):
     assert abs(built.avgdl - oracle.avgdl) < 1e-9
 
 
-def test_df_matches_oracle(built, oracle):
-    got = {r["term"]: r["df"] for r in built.terms.collect()}
+def test_df_matches_oracle(spark, built, oracle):
+    got = {r["term"]: r["df"] for r in spark.read.parquet(built.paths.terms).collect()}
     want = {t: len(p) for t, p in oracle.postings.items()}
     assert got == want
 
@@ -120,9 +120,9 @@ def test_spark_generator_matches_pandas(spark):
     assert [bytes(b) for b in got["html"]] == [bytes(b) for b in want["html"]]
 
 
-def test_df_sum_invariant(built, oracle):
+def test_df_sum_invariant(spark, built, oracle):
     """FIXTURES.md §6: Σ df over terms == #distinct (term, doc) pairs."""
-    total_df = built.terms.agg(F.sum("df")).collect()[0][0]
+    total_df = spark.read.parquet(built.paths.terms).agg(F.sum("df")).collect()[0][0]
     expect = sum(len(p) for p in oracle.postings.values())
     assert total_df == expect
 

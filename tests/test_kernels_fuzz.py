@@ -108,7 +108,7 @@ def test_phrase_and_and_deletion_masking():
     assert gd.size == n_docs - 3
 
 
-def test_blockmax_prunes_stopword_blocks():
+def test_blockmax_prunes_stopword_blocks(monkeypatch):
     """Skew scenario: one stopword list (every doc) + one rare list. The
     block-max path must not decode most of the stopword list's blocks."""
     rng = np.random.default_rng(0)
@@ -132,23 +132,30 @@ def test_blockmax_prunes_stopword_blocks():
     stop_tp = kernels.TermPostings(stop_row, stop_idf, avgdl, 1.2, 0.75)
     rare_tp = kernels.TermPostings(rare_row, rare_idf, avgdl, 1.2, 0.75)
 
+    # every block decode the kernels make: the batched block probe, and a
+    # full-list decode counted as all of the list's blocks
     decoded_blocks = []
-    orig = kernels.TermPostings.decode_one_block
+    batch_decode = kernels.decode_blocks_batch
+    decode_all = kernels.TermPostings.decode_all
 
-    def counting(self, i):
-        decoded_blocks.append((id(self), i))
-        return orig(self, i)
+    def counting_batch(row, blocks):
+        decoded_blocks.extend((id(row), int(i)) for i in blocks)
+        return batch_decode(row, blocks)
 
-    kernels.TermPostings.decode_one_block = counting
-    try:
-        gd, gs = kernels.score_blockmax([stop_tp, rare_tp], 10)
-    finally:
-        kernels.TermPostings.decode_one_block = orig
+    def counting_all(self):
+        decoded_blocks.extend((id(self.row), i) for i in range(self.n_blocks))
+        return decode_all(self)
+
+    monkeypatch.setattr(kernels, "decode_blocks_batch", counting_batch)
+    monkeypatch.setattr(kernels.TermPostings, "decode_all", counting_all)
+    gd, gs = kernels.score_blockmax([stop_tp, rare_tp], 10)
+    monkeypatch.undo()
 
     ed, es = kernels.score_exhaustive([stop_tp, rare_tp], 10, "OR")
     assert np.array_equal(ed, gd) and np.allclose(es, gs)
     n_stop_blocks = stop_tp.n_blocks
-    n_decoded_stop = len({b for o, b in decoded_blocks if o == id(stop_tp)})
+    n_decoded_stop = len({b for o, b in decoded_blocks if o == id(stop_row)})
+    assert n_decoded_stop > 0  # the counters see the probe's decodes
     # rare term dominates scores → only the ~40 rare-doc segments (plus the
     # first chunk) should force stopword block decodes
     assert n_decoded_stop < n_stop_blocks * 0.9, (

@@ -28,7 +28,8 @@ def mo_idx(spark, tmp_path_factory):
     idx = load_index(spark, root)
     top = [
         r["term"]
-        for r in idx.terms.orderBy(F.col("df").desc(), "term").limit(4).collect()
+        for r in spark.read.parquet(idx.paths.terms)
+        .orderBy(F.col("df").desc(), "term").limit(4).collect()
     ]
     return idx, top
 

@@ -44,7 +44,7 @@ def test_bool_query_plan_keeps_pushed_probe(spark, built):
     """Boolean trees ride the SAME pruned probe: leaf term_ids reach the
     postings scan as a pushed IN-filter, and a non-positional BOOL batch
     prunes the position columns from the scan."""
-    terms = [r["term"] for r in built.terms.limit(3).collect()]
+    terms = [r["term"] for r in spark.read.parquet(built.paths.terms).limit(3).collect()]
     q = pd.DataFrame([{
         "query_id": 1, "terms": [f"({terms[0]} AND {terms[1]}) OR {terms[2]}"],
         "mode": "BOOL", "k": 10,

@@ -36,7 +36,8 @@ def ql(spark, tmp_path_factory):
     idx = load_index(spark, root)
     top = [
         r["term"]
-        for r in idx.terms.orderBy(F.col("df").desc(), "term").limit(6).collect()
+        for r in spark.read.parquet(idx.paths.terms)
+        .orderBy(F.col("df").desc(), "term").limit(6).collect()
     ]
     return root, idx, top
 
@@ -97,7 +98,7 @@ def test_min_match(spark, ql):
     # one stopword-like term plus rare terms, so match counts actually vary
     rare = [
         r["term"]
-        for r in idx.terms.where(F.col("df").between(5, 40))
+        for r in spark.read.parquet(idx.paths.terms).where(F.col("df").between(5, 40))
         .orderBy("term")
         .limit(3)
         .collect()
@@ -538,6 +539,59 @@ def test_fuzzy_levenshtein_kernel_fuzz():
         got = levenshtein_within(vocab, t, e)
         exp = sorted(v for v in vocab if ref(t, v) <= e)
         assert got == exp, (seed, t, e)
+
+
+def _result_rows(df):
+    df = df.sort_values(["query_id", "rank"])
+    return list(zip(
+        df["query_id"].astype("int64").tolist(), df["rank"].astype("int64").tolist(),
+        df["doc_id"].astype("int64").tolist(), df["url"].tolist(), df["score"].tolist(),
+    ))
+
+
+def test_expansion_rows_agree_across_paths_hot_and_scanned(spark, ql, monkeypatch):
+    """PREFIX/FUZZY/WILDCARD/REGEX rows give identical rows through
+    exec.search and search_local, with the dictionary hot and with the
+    big-vocabulary scan forced (MAX_HOT_TERMS = 0): both paths read one
+    dictionary with one regex dialect."""
+    from invoicenet_spark.query import plan
+    from invoicenet_spark.query.local import LocalIndex
+
+    root, _, top = ql
+    typo = top[1][:-1] + ("x" if top[1][-1] != "x" else "y")
+    q = pd.DataFrame([{"query_id": i, "k": BIG, **r} for i, r in enumerate([
+        {"terms": [top[0][:3]], "mode": "PREFIX"},
+        {"terms": [typo], "mode": "FUZZY", "max_edits": 1},
+        {"terms": [top[2][0] + "?" + top[2][2:] + "*"], "mode": "WILDCARD"},
+        # a Python named group, which Java's regex dialect rejects
+        {"terms": [f"(?P<g>{top[3][:3]}){top[3][3:]}.*"], "mode": "REGEX"},
+    ], 1)])
+    runs = []
+    for ceiling in (plan.MAX_HOT_TERMS, 0):
+        monkeypatch.setattr(plan, "MAX_HOT_TERMS", ceiling)
+        # fresh handles: a loaded hot dictionary would outlive the ceiling
+        idx, li = load_index(spark, root), LocalIndex(root)
+        runs.append(_result_rows(search(spark, idx, q.copy()).toPandas()))
+        runs.append(_result_rows(search_local(li, q.copy())))
+        assert (idx.hot_dict() is None) == (li.hot_dict() is None) == (ceiling == 0)
+    assert {r[0] for r in runs[0]} == {1, 2, 3, 4}
+    assert runs[1:] == [runs[0]] * 3
+
+
+def test_dictionary_lookups_start_no_spark_job(spark, ql):
+    """A freshly loaded Spark handle loads its hot dictionary and looks
+    terms up through pyarrow: no Spark job."""
+    root, _, top = ql
+    idx = load_index(spark, root)
+    sc, group = spark.sparkContext, "dictionary_lookups_start_no_spark_job"
+    sc.setJobGroup(group, group)
+    try:
+        hot = idx.hot_dict()
+        info = idx.term_info(set(top))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert hot is not None and set(info) == set(top)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 def test_prefix_no_match_is_empty(spark, ql):

@@ -74,12 +74,13 @@ def main():
 
     # term selection from the dictionary: hottest term (stopword analog),
     # a mid term, and a rare term — via direct df-band lookups
-    hot_row = index.terms.orderBy(F.desc("df")).first()
+    terms = spark.read.parquet(index.paths.terms)
+    hot_row = terms.orderBy(F.desc("df")).first()
     hot = hot_row["term"]
 
     def band(lo, hi):
         r = (
-            index.terms.where((F.col("df") >= lo) & (F.col("df") <= hi))
+            terms.where((F.col("df") >= lo) & (F.col("df") <= hi))
             .orderBy(F.desc("df"), "term")
             .first()
         )
