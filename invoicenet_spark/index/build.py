@@ -134,9 +134,14 @@ def committed_postings_files(paths: IndexPaths) -> list[str] | None:
     return sorted(files)
 
 
-def read_postings(spark: SparkSession, paths: IndexPaths) -> DataFrame:
+def read_postings(
+    spark: SparkSession, paths: IndexPaths, schema: str | None = None
+) -> DataFrame:
     """Postings DataFrame from the committed file list (basePath keeps the
-    hive `shard=` partition column); directory scan for legacy indexes."""
+    hive `shard=` partition column); directory scan for legacy indexes.
+    schema: an explicit read schema for the committed files
+    (POSTINGS_READ_SCHEMA), which skips Spark's schema-inference job;
+    None infers it."""
     files = committed_postings_files(paths)
     if files is None:
         return spark.read.parquet(paths.postings)
@@ -144,7 +149,8 @@ def read_postings(spark: SparkSession, paths: IndexPaths) -> DataFrame:
         # POSTINGS_SCHEMA already carries `shard` (the encode output schema);
         # appending it again gave an ambiguous duplicate column downstream
         return spark.createDataFrame([], POSTINGS_SCHEMA)
-    return spark.read.option("basePath", paths.postings).parquet(*files)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.option("basePath", paths.postings).parquet(*files)
 
 
 def vacuum_postings(paths: IndexPaths) -> list[str]:
@@ -201,6 +207,12 @@ POSTINGS_SCHEMA = (
     "block_last array<long>, block_doc_off array<int>, block_tf_off array<int>, "
     "block_dl_off array<int>, block_pos_off array<int>, "
     "block_max_tf array<long>, block_min_dl array<long>"
+)
+# What schema inference gives a committed postings read: the files' own
+# columns, then the hive `shard=` directory key, which partition inference
+# types as int
+POSTINGS_READ_SCHEMA = ", ".join(
+    [f for f in POSTINGS_SCHEMA.split(", ") if f.split()[0] != "shard"] + ["shard int"]
 )
 
 

@@ -689,7 +689,8 @@ def evaluate_shard(tree: dict, by_tid: dict) -> tuple[np.ndarray, np.ndarray]:
     """Evaluate a resolved tree against ONE shard's postings.
 
     by_tid: {term_id: TermPostings} for every leaf tid present in the shard
-    (absent = term has no postings here). Returns the FULL (docs, scores)
+    (absent = term has no postings here); decodes go to the views' shared
+    posting lists (kernels.PostingList), so nothing is decoded twice. Returns the FULL (docs, scores)
     match list sorted by doc — top-k, pagination cursors and tombstone
     masking are applied by the caller at the root. Correct per shard
     because a doc lives in exactly one shard, so every set operation is
@@ -709,14 +710,11 @@ def evaluate_shard(tree: dict, by_tid: dict) -> tuple[np.ndarray, np.ndarray]:
     """
     from invoicenet_spark.query import kernels
 
-    decode_cache: dict[int, tuple] = {}
     partial_cache: dict[int, tuple] = {}
 
     def decoded(tid: int):
-        if tid not in decode_cache:
-            tp = by_tid.get(tid)
-            decode_cache[tid] = None if tp is None else tp.decode_all()
-        return decode_cache[tid]
+        tp = by_tid.get(tid)
+        return None if tp is None else tp.decode_all()
 
     def term_partial(tid: int, avgdl: float | None):
         """Base (docs, bm25_partial) for one (term, normalization) — leaf
@@ -938,6 +936,7 @@ def evaluate_shard_topk(
     from invoicenet_spark.query import kernels
 
     def _resolve(leaves):
+        """Each present leaf's view over its term's shared posting list."""
         plists = []
         for tid, boost, avgdl in leaves:
             tp0 = by_tid.get(tid)
@@ -945,7 +944,7 @@ def evaluate_shard_topk(
                 continue
             plists.append(
                 kernels.TermPostings(
-                    tp0.row,
+                    tp0.postings,
                     idf=tp0.idf * boost,
                     avgdl=avgdl if avgdl is not None else tp0.avgdl,
                     k1=tp0.k1,

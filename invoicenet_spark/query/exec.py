@@ -38,7 +38,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from invoicenet_spark.index.build import IndexPaths, read_postings
+from invoicenet_spark.index.build import POSTINGS_READ_SCHEMA, IndexPaths, read_postings
 from invoicenet_spark.index.deletes import list_tombstone_files, read_tombstones_spark
 from invoicenet_spark.query import plan
 
@@ -69,10 +69,12 @@ def load_index(spark: SparkSession, root: str) -> Index:
     # paths.terms, loaded on first lookup with no Spark job.
     # Postings come from the COMMITTED file list in the shard log (the
     # object-store commit protocol) — partial files from a crashed build
-    # are never visible to queries.
+    # are never visible to queries — read with the explicit schema, so the
+    # postings read starts no schema-inference job (the docs read still
+    # does: its columns vary with the build's options).
     return Index(
         paths=paths,
-        postings=read_postings(spark, paths),
+        postings=read_postings(spark, paths, POSTINGS_READ_SCHEMA),
         docs=spark.read.parquet(paths.docs),
         stats=stats,
         tombstone_files=list_tombstone_files(paths),
@@ -225,8 +227,9 @@ def _empty_results(spark: SparkSession, with_url: bool) -> DataFrame:
 def _shard_batch(specs: list, stats: dict, count: bool):
     """cogroup applyInPandas body for one shard: the shard's posting rows
     (built into {term_id: row} once) and its masked doc_ids go through
-    plan.run_shard_batch — the serving path's per-shard loop — for every
-    query of the batch. The specs ride the closure (query batches are tiny
+    plan.run_shard_batch — the serving path's per-shard loop, which decodes
+    each row at most once for the whole batch — for every query of the
+    batch. The specs ride the closure (query batches are tiny
     by contract). count: one row per (query, shard) whose doc_id column
     carries the match COUNT (summed by the caller — the track_total_hits
     analog). `run` is deliberately unannotated: PySpark then takes the

@@ -88,29 +88,118 @@ def topk_select(doc_ids: np.ndarray, scores: np.ndarray, k: int) -> tuple[np.nda
     return doc_ids[order], scores[order]
 
 
-class TermPostings:
-    """Decoded-on-demand view over one (term, shard) posting row dict."""
+def _frozen(*arrays: np.ndarray) -> tuple[np.ndarray, ...]:
+    """The arrays, marked read-only: decoded postings are shared by every
+    query and leaf that reads them."""
+    for a in arrays:
+        a.flags.writeable = False
+    return arrays
 
-    def __init__(self, row: dict, idf: float, avgdl: float, k1: float, b: float):
+
+class PostingList:
+    """One (shard, term_id) posting row, decoded at most once and shared by
+    every query and leaf that reads it: the row, its skip table
+    (block_last), the per-block bound inputs, a memoized full decode, a
+    memoized position decode and one cache of block-probed blocks. Every
+    array it hands out is read-only.
+
+    plan.run_shard_batch builds one per row per shard for a batch; the
+    serving path keeps them across calls in its handle cache
+    (local._DecodedCache), charged `nbytes`: the row's own bytes plus an
+    upper bound on everything it can decode (24 B per posting for the
+    int64 (docs, tfs, dls), 16 B per block for the float64 bound inputs,
+    and for a positional row 8 B per position-stream byte and per offset).
+    The block cache is dropped once the list is fully decoded, so it never
+    holds both. Concurrent readers may decode the same list twice; the
+    results are equal and the last one is kept."""
+
+    def __init__(self, row: dict):
         self.row = row
+        (self.block_last,) = _frozen(np.asarray(row["block_last"], dtype=np.int64).view())
+        self.n_blocks = self.block_last.size
+        self.df = int(row["df_shard"])
+        self.full = None  # (docs, tfs, dls) once fully decoded
+        self._positions = None
+        self._blocks: dict | None = {}
+        own = sum(
+            len(v) if isinstance(v, bytes) else v.nbytes
+            for v in row.values() if isinstance(v, (bytes, np.ndarray))
+        )
+        pos = row.get("pos_blob")
+        self.nbytes = (
+            own + 24 * self.df + 16 * self.n_blocks
+            + (8 * (len(pos) + self.df + 1) if pos is not None else 0)
+        )
+
+    @cached_property
+    def bound_inputs(self) -> tuple[np.ndarray, np.ndarray]:
+        """(block_max_tf, block_min_dl) as float64 — bm25.block_upper_bound's
+        inputs."""
+        return _frozen(
+            np.asarray(self.row["block_max_tf"], dtype=np.float64),
+            np.asarray(self.row["block_min_dl"], dtype=np.float64),
+        )
+
+    def decode_all(self) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        full = self.full
+        if full is None:
+            full = self.full = _frozen(*decode_posting_list(self.row))
+            self._blocks = None  # the full decode serves every block now
+        return full
+
+    def decode_positions(self, tfs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """(pos_flat, offsets) of the position stream; tfs is the list's
+        full tf array."""
+        pos = self._positions
+        if pos is None:
+            pos = self._positions = _frozen(*decode_positions(self.row, tfs))
+        return pos
+
+    def blocks(self, needed: np.ndarray) -> list:
+        """(docs, tfs, dls) of each needed block (sorted unique block
+        indices), in order. Blocks not yet cached are decoded in ONE batched
+        varbyte call — per-block python decode costs ~0.1 ms of loop overhead
+        each, which ties the pruned path with exhaustive instead of beating
+        it."""
+        cache = self._blocks
+        if cache is None:
+            cache = {}  # fully decoded meanwhile: these blocks are not kept
+        needed = needed.tolist()
+        missing = [j for j in needed if j not in cache]
+        if missing:
+            bd, bt, bl, offs = decode_blocks_batch(self.row, np.array(missing, dtype=np.int64))
+            _frozen(bd, bt, bl)
+            for bi, j in enumerate(missing):
+                sl = slice(offs[bi], offs[bi + 1])
+                cache[j] = (bd[sl], bt[sl], bl[sl])
+        return [cache[j] for j in needed]
+
+
+class TermPostings:
+    """One leaf's scoring view over a shared PostingList: the leaf's idf
+    (boost folded in), avgdl (its field's, on a fielded leaf), k1, b and
+    the block bounds those give. Decodes go to the shared list, so every
+    view over one row reads the same arrays, and the serving cache's bound
+    counts their decoded numpy bytes once, on the list (PostingList.nbytes),
+    not per view. `postings` is a PostingList or a posting row dict
+    (wrapped in a list of its own)."""
+
+    def __init__(self, postings, idf: float, avgdl: float, k1: float, b: float):
+        self.postings = postings if isinstance(postings, PostingList) else PostingList(postings)
         self.idf = float(idf)
         self.avgdl = avgdl
         self.k1, self.b = k1, b
-        self.block_last = np.asarray(row["block_last"], dtype=np.int64)
-        self.n_blocks = self.block_last.size
+
+    @property
+    def row(self) -> dict:
+        return self.postings.row
 
     @cached_property
     def block_ub(self) -> np.ndarray:
         """Per-block score upper bounds — computed on first use: only the
         pruned disjunctive kernels read them."""
-        return bm25.block_upper_bound(
-            self.idf,
-            np.asarray(self.row["block_max_tf"], dtype=np.float64),
-            np.asarray(self.row["block_min_dl"], dtype=np.float64),
-            self.avgdl,
-            self.k1,
-            self.b,
-        )
+        max_tf, min_dl = self.postings.bound_inputs
+        return bm25.block_upper_bound(self.idf, max_tf, min_dl, self.avgdl, self.k1, self.b)
 
     @cached_property
     def list_ub(self) -> float:
@@ -118,10 +207,10 @@ class TermPostings:
         return float(self.block_ub.max())
 
     def decode_all(self) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        return decode_posting_list(self.row)
+        return self.postings.decode_all()
 
     def decode_positions(self, tfs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        return decode_positions(self.row, tfs)
+        return self.postings.decode_positions(tfs)
 
 
 def score_exhaustive(
@@ -355,86 +444,58 @@ def _locate(docs: np.ndarray, cand: np.ndarray) -> tuple[np.ndarray, np.ndarray]
     return idx, docs[idx] == cand
 
 
-def _probe_blocks(tp: TermPostings, cache: dict, cand: np.ndarray) -> list | None:
-    """Block-granular random access into ONE posting list at a sorted
-    candidate array: the (docs, tfs, dls) of every block that can contain
-    a candidate, in block order (so docs ascend), or None when no candidate
-    lands inside the list. Blocks missing from `cache` (keyed by block
-    index) are decoded in ONE batched varbyte call — per-block python
-    decode costs ~0.1 ms of loop overhead each, which ties the pruned path
-    with exhaustive instead of beating it."""
-    jb = np.searchsorted(tp.block_last, cand, side="left")
-    ok = jb < tp.n_blocks
-    if not ok.any():
-        return None
-    needed = np.unique(jb[ok])
-    missing = np.array([j for j in needed if int(j) not in cache], dtype=np.int64)
-    if missing.size:
-        bd, bt, bl, offs = decode_blocks_batch(tp.row, missing)
-        for bi, j in enumerate(missing):
-            sl = slice(offs[bi], offs[bi + 1])
-            cache[int(j)] = (bd[sl], bt[sl], bl[sl])
-    return [cache[int(j)] for j in needed]
-
-
-def _probe_list(tp: TermPostings, cache: dict, cand: np.ndarray):
+def _probe_list(tp: TermPostings, cand: np.ndarray):
     """(hit_mask_over_cand, tfs_at_hits, dls_at_hits) for one posting list
-    at a sorted candidate array, decoding only the blocks that can contain
-    a candidate; None when no candidate is in the list."""
-    blocks = _probe_blocks(tp, cache, cand)
-    if blocks is None:
-        return None
-    idx, hit = _locate(np.concatenate([b[0] for b in blocks]), cand)
+    at a sorted candidate array, None when no candidate is in the list.
+    Gathers from the shared full decode when there is one; otherwise
+    decodes only the blocks that can contain a candidate (PostingList.
+    blocks keeps them). Either way the same postings come back."""
+    full = tp.postings.full
+    if full is None:
+        jb = np.searchsorted(tp.postings.block_last, cand, side="left")
+        ok = jb < tp.postings.n_blocks
+        if not ok.any():
+            return None
+        blocks = tp.postings.blocks(np.unique(jb[ok]))
+        full = [np.concatenate([b[i] for b in blocks]) for i in range(3)]
+    idx, hit = _locate(full[0], cand)
     if not hit.any():
         return None
     h = idx[hit]
-    tfs = np.concatenate([b[1] for b in blocks])[h]
-    dls = np.concatenate([b[2] for b in blocks])[h]
-    return hit, tfs, dls
+    return hit, full[1][h], full[2][h]
 
 
-def _probe_membership(
-    plists: list[TermPostings], caches: dict, cand: np.ndarray
-) -> np.ndarray:
+def _probe_membership(plists: list[TermPostings], cand: np.ndarray) -> np.ndarray:
     """Boolean mask over the sorted candidate array: does the doc appear in
-    AT LEAST ONE of these posting lists? Block-probed like _probe_list,
-    sharing its block caches (keyed by id(tp)) — the membership half of
-    the conjunctive probe."""
+    AT LEAST ONE of these posting lists? Probed like _probe_list — the
+    membership half of the conjunctive probe."""
     hit_any = np.zeros(cand.size, dtype=bool)
     for tp in plists:
-        blocks = _probe_blocks(tp, caches.setdefault(id(tp), {}), cand)
-        if blocks is not None:
-            hit_any |= _locate(np.concatenate([b[0] for b in blocks]), cand)[1]
+        r = _probe_list(tp, cand)
+        if r is not None:
+            hit_any |= r[0]
     return hit_any
 
 
-def _score_at(parts: list, cand: np.ndarray, full: dict, caches: dict) -> np.ndarray:
+def _score_at(parts: list, cand: np.ndarray) -> np.ndarray:
     """FULL scores at a sorted candidate doc array. Per part IN ORDER:
-    gather from a materialized (docs, scores) list or from the part's full
-    decode in `full`, else block-probe it (only blocks that can hold a
-    candidate are decoded; `caches` keeps them). Both dicts are keyed by
-    id(part). Every part adds the same operands in the same order whichever
-    way it was served — score_exhaustive's float order — so every routing
+    gather from a materialized (docs, scores) list, or probe a term part
+    (_probe_list: its full decode, else only the blocks that can hold a
+    candidate). Every part adds the same operands in the same order however
+    it was served — score_exhaustive's float order — so every routing
     returns the same bits and cursors minted by any of them stay exact."""
     scores = np.zeros(cand.size, dtype=np.float64)
     for p in parts:
-        term = isinstance(p, TermPostings)
-        if term and id(p) not in full:
-            r = _probe_list(p, caches.setdefault(id(p), {}), cand)
+        if isinstance(p, TermPostings):
+            r = _probe_list(p, cand)
             if r is None:
                 continue
             hit, tfs, dls = r
-        else:
-            arrs = full[id(p)] if term else p
-            idx, hit = _locate(arrs[0], cand)
-            if not hit.any():
-                continue
-            h = idx[hit]
-            if not term:
-                scores[hit] += arrs[1][h]
-                continue
-            tfs, dls = arrs[1][h], arrs[2][h]
-        scores[hit] += p.idf * bm25.tf_score(tfs, dls, p.avgdl, p.k1, p.b)
+            scores[hit] += p.idf * bm25.tf_score(tfs, dls, p.avgdl, p.k1, p.b)
+            continue
+        idx, hit = _locate(p[0], cand)
+        if hit.any():
+            scores[hit] += p[1][idx[hit]]
     return scores
 
 
@@ -499,17 +560,15 @@ def score_and_groups(
         # no conjunction to skip on — plain OR over the single group
         return score_exhaustive(flat, k, "OR", deleted=deleted, after=after)
 
-    gdf = [sum(int(tp.row["df_shard"]) for tp in g) for g in groups]
+    gdf = [sum(tp.postings.df for tp in g) for g in groups]
     order = sorted(range(n), key=lambda i: gdf[i])
-    caches: dict[int, dict] = {}
-    full: dict[int, tuple] = {}
 
     def _member(g, cand):
         """Boolean membership of cand in the group (>= 1 list hit), via
         full decode + gather — used for groups decoded anyway."""
         hit_any = np.zeros(cand.size, dtype=bool)
         for tp in g:
-            hit_any |= _locate(full[id(tp)][0], cand)[1]
+            hit_any |= _locate(tp.decode_all()[0], cand)[1]
         return hit_any
 
     # seed: by pigeonhole any doc matching >= m groups appears in the
@@ -519,8 +578,7 @@ def score_and_groups(
     seed_parts = []
     for gi in order[:n_seed]:
         for tp in groups[gi]:
-            full[id(tp)] = tp.decode_all()
-            seed_parts.append(full[id(tp)][0])
+            seed_parts.append(tp.decode_all()[0])
     cand = (
         seed_parts[0]
         if len(seed_parts) == 1
@@ -546,13 +604,11 @@ def score_and_groups(
         if cand.size == 0:
             break
         g = groups[gi]
-        g_blocks = sum(tp.n_blocks for tp in g)
+        g_blocks = sum(tp.postings.n_blocks for tp in g)
         if cand.size * 2 >= g_blocks:
-            for tp in g:
-                full[id(tp)] = tp.decode_all()
             member = _member(g, cand)
         else:
-            member = _probe_membership(g, caches, cand)
+            member = _probe_membership(g, cand)
         counts += member
         remaining = len(order[n_seed:]) - pos - 1
         viable = counts + remaining >= m
@@ -560,9 +616,9 @@ def score_and_groups(
     cand = cand[counts >= m]
     if cand.size == 0:
         return np.zeros(0, dtype=np.int64), np.zeros(0)
-    # score at the survivors, reusing the membership phase's full decodes
-    # and block caches
-    scores = _score_at(flat, cand, full, caches)
+    # score at the survivors, reusing the membership phase's decodes (the
+    # lists share them)
+    scores = _score_at(flat, cand)
     if full_matches:
         return cand, scores  # doc-ascending by construction
     cand, scores = apply_after(cand, scores, after)
@@ -631,27 +687,22 @@ def score_blockmax(
         p.list_ub if t else (float(p[1].max()) if p[1].size else 0.0)
         for p, t in zip(parts, terms)
     ])
-    dfs = [int(p.row["df_shard"]) if t else int(p[0].size) for p, t in zip(parts, terms)]
+    dfs = [p.postings.df if t else int(p[0].size) for p, t in zip(parts, terms)]
 
     # Phase A — seed theta from the strongest part's own docs
     seed = int(np.argmax(ubs))
     other_blocks = sum(
-        p.n_blocks for i, (p, t) in enumerate(zip(parts, terms)) if t and i != seed
+        p.postings.n_blocks for i, (p, t) in enumerate(zip(parts, terms)) if t and i != seed
     )
     if dfs[seed] > 2 * other_blocks:
         return score_exhaustive(parts, k, "OR", deleted=deleted, after=after)
-    full: dict[int, tuple] = {}
-    caches: dict[int, dict] = {}
 
     def docs_of(i: int) -> np.ndarray:
-        if not terms[i]:
-            return parts[i][0]
-        full[id(parts[i])] = parts[i].decode_all()
-        return full[id(parts[i])][0]
+        return parts[i].decode_all()[0] if terms[i] else parts[i][0]
 
     seed_docs = docs_of(seed)
     seed_docs = seed_docs[drop_deleted(seed_docs, deleted)]
-    seed_scores = _score_at(parts, seed_docs, full, caches)
+    seed_scores = _score_at(parts, seed_docs)
     # theta must bound the k-th score of THIS PAGE's eligible set: filter
     # the (full) seed scores through the cursor before seeding it
     sd_after, ss_after = apply_after(seed_docs, seed_scores, after)
@@ -676,7 +727,7 @@ def score_blockmax(
         np.concatenate([seed_docs] + [docs_of(i) for i in essential if i != seed])
     )
     cand = cand[drop_deleted(cand, deleted)]
-    scores = _score_at(parts, cand, full, caches)
+    scores = _score_at(parts, cand)
     cand, scores = apply_after(cand, scores, after)
     return topk_select(cand, scores, k)
 

@@ -34,15 +34,19 @@ runs in each of its shard groups.
 
 Per-generation cache, so a single query costs about what it costs inside
 a batch: each LocalIndex keeps one LRU of decoded data (_DecodedCache),
-bounded to _DECODED_CACHE_BYTES (64 MiB of Arrow nbytes per handle). It
-holds the postings row groups the catalog decoded, where a term's rows are
-found by binary search over the row group's term_id column, and each
-probed shard's sorted doc_ids with its urls' Arrow string buffers. Index
-files never change within a generation, so re-keying the handle on a new
-generation is the whole invalidation. At most _SERVING_CACHE_MAX handles,
-so 8 × 64 MiB of decoded data, stay live. The gain depends on repeated
-hits: an index whose probed row groups and shards do not fit under the
-bound re-decodes on every miss.
+bounded to _DECODED_CACHE_BYTES (64 MiB per handle), which counts Arrow
+nbytes and decoded numpy bytes alike. It holds the postings row groups the
+catalog decoded (one entry per row group, whatever its column set), where
+a term's rows are found by binary search over the row group's term_id
+column; one shared kernels.PostingList per (shard, term_id) row, charged
+its row's bytes plus a bound on the numpy arrays its varbyte decodes fill
+(~24 B per posting), so a warm handle runs no varbyte decode at all; and
+each probed shard's sorted doc_ids with its urls' Arrow string buffers.
+Index files never change within a generation, so re-keying the handle on
+a new generation is the whole invalidation. At most _SERVING_CACHE_MAX
+handles, so 8 × 64 MiB of decoded data, stay live. The gain depends on
+repeated hits: an index whose probed row groups, lists and shards do not
+fit under the bound re-decodes on every miss.
 
 Queries normalize through the one planner (query/plan.py) against the one
 term dictionary (plan.Dictionary, which exec.Index inherits too) into
@@ -67,18 +71,27 @@ from invoicenet_spark.query import kernels, plan
 _INT64_MIN, _INT64_MAX = -(1 << 63), (1 << 63) - 1
 
 
-# Decoded data one serving handle keeps (postings row groups and per-shard
-# url arrays), bounded by their Arrow nbytes. The serve benchmark's whole
-# index decodes to ~2 MB of row groups plus ~0.3 MB of urls.
+# Decoded data one serving handle keeps (postings row groups, shared
+# decoded posting lists and per-shard url arrays), bounded by their Arrow
+# nbytes and decoded numpy bytes. The serve benchmark's whole index takes
+# ~2 MB of row groups, ~0.3 MB of urls and ~12 MB of decoded posting lists.
 _DECODED_CACHE_BYTES = 64 << 20
 
 
 class _DecodedCache:
-    """One handle's LRU of decoded index data, keyed ("postings", file, row
-    group, column set) or ("urls", shard), bounded to _DECODED_CACHE_BYTES
-    of Arrow nbytes. Entries are looked up, filled and evicted under one
-    lock; two threads that miss the same key both decode it and the first
-    fill is kept."""
+    """One handle's LRU of decoded index data, bounded to
+    _DECODED_CACHE_BYTES. Keys and what each entry is charged:
+      ("postings", file, row group)  a _RowGroup, its Arrow nbytes; one
+                                     entry whatever its column set
+      ("list", shard, term_id)       a kernels.PostingList, its nbytes: its
+                                     row's bytes plus a bound on the numpy
+                                     arrays it can decode
+      ("urls", shard)                sorted doc_ids and url buffers, their
+                                     nbytes
+    Entries are looked up, filled and evicted under one lock; two threads
+    that miss the same key both decode it and the first fill is kept,
+    unless the second fill replaces it (a positional entry replacing one
+    without position streams)."""
 
     def __init__(self):
         import threading
@@ -95,13 +108,15 @@ class _DecodedCache:
             self.entries.move_to_end(key)
             return hit[0]
 
-    def put(self, key, value, nbytes: int):
-        """Cache value (nbytes of Arrow data) and return the cached value
-        for key, evicting least-recently-used entries over the bound."""
+    def put(self, key, value, nbytes: int, replace: bool = False):
+        """Cache value (charged nbytes) and return the cached value for
+        key, evicting least-recently-used entries over the bound. An entry
+        already cached for key is kept, or replaced when `replace`."""
         with self._lock:
-            if key not in self.entries:
+            old = self.entries.get(key)
+            if old is None or replace:
                 self.entries[key] = (value, nbytes)
-                self.nbytes += nbytes
+                self.nbytes += nbytes - (old[1] if old else 0)
             self.entries.move_to_end(key)
             value = self.entries[key][0]
             while self.entries and self.nbytes > _DECODED_CACHE_BYTES:
@@ -118,12 +133,16 @@ def _binary_view(arr) -> tuple[np.ndarray, np.ndarray]:
     return offs, np.frombuffer(data, dtype=np.uint8)
 
 
+_POSITION_COLUMNS = ("pos_blob", "block_pos_off")
+
+
 class _RowGroup:
     """One decoded postings row group: its Arrow table (what the cache
     bound counts), its term_id column, and numpy views over the table's
-    buffers, so posting rows are sliced out without an Arrow take. The
-    postings schema (build.POSTINGS_SCHEMA) has only non-null integer,
-    binary and integer-list columns; anything else raises."""
+    buffers, so posting rows are copied out without an Arrow take.
+    `positional` says whether it holds the position streams. The postings
+    schema (build.POSTINGS_SCHEMA) has only non-null integer, binary and
+    integer-list columns; anything else raises."""
 
     def __init__(self, table):
         import pyarrow as pa
@@ -131,6 +150,7 @@ class _RowGroup:
         self.table = table
         self.term_ids = table.column("term_id").to_numpy()
         self.sorted = bool((self.term_ids[1:] >= self.term_ids[:-1]).all())
+        self.positional = "pos_blob" in table.column_names
         self._cols = []
         for name, col in zip(table.column_names, table.columns):
             arr, t = col.combine_chunks(), col.type
@@ -146,28 +166,47 @@ class _RowGroup:
                 raise TypeError(f"postings column {name!r} has unexpected type {t}")
             self._cols.append((name, *view))
 
-    def rows(self, idx: np.ndarray, shard: int) -> list[dict]:
-        """Posting row dicts of rows idx: scalars as Python values, blobs
-        as bytes, list columns as read-only numpy views (kernels only read
-        them), plus the row's `shard`."""
-        out = []
-        for i in idx.tolist():
-            row = {}
-            for name, kind, a, b in self._cols:
-                if kind == "list":
-                    row[name] = b[a[i]:a[i + 1]]
-                elif kind == "bytes":
-                    row[name] = b[a[i]:a[i + 1]].tobytes()
-                else:
-                    row[name] = a[i].item()
-            row["shard"] = shard
-            out.append(row)
-        return out
+    def rows_of(self, want: np.ndarray) -> np.ndarray:
+        """Indices of the rows whose term_id is in the sorted array want:
+        binary search when the term_id column is non-decreasing (as the
+        build writes it), else a membership filter."""
+        if self.sorted:
+            lo_i = np.searchsorted(self.term_ids, want, "left")
+            n = np.searchsorted(self.term_ids, want, "right") - lo_i
+            # the rows [lo_i, lo_i + n) of every wanted term
+            return np.arange(n.sum()) + np.repeat(lo_i - (np.cumsum(n) - n), n)
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        mask = pc.is_in(self.table.column("term_id"), value_set=pa.array(want))
+        return np.flatnonzero(mask.to_numpy(zero_copy_only=False))
+
+    def row(self, i: int, shard: int, positions: bool) -> dict:
+        """Posting row dict of row i, owning its data, so a cached
+        PostingList does not pin this row group's buffers: scalars as
+        Python values, blobs as bytes, list columns as read-only numpy
+        copies, plus the row's `shard`. Position columns only when
+        `positions`."""
+        row = {}
+        for name, kind, a, b in self._cols:
+            if not positions and name in _POSITION_COLUMNS:
+                continue
+            if kind == "list":
+                v = b[a[i]:a[i + 1]].copy()
+                v.flags.writeable = False
+                row[name] = v
+            elif kind == "bytes":
+                row[name] = b[a[i]:a[i + 1]].tobytes()
+            else:
+                row[name] = a[i].item()
+        row["shard"] = shard
+        return row
 
 
 class _PostingsCatalog:
     """File-level (term_id min, max, shard) catalog over the postings files;
-    the row groups it decodes go to its handle's _DecodedCache.
+    the row groups it decodes and the posting lists it builds go to its
+    handle's _DecodedCache.
 
     A generic dataset scan re-reads every fragment's parquet footer PER
     QUERY to evaluate stats pruning (~0.4 ms × n_files — measured 0.6 s on
@@ -177,14 +216,17 @@ class _PostingsCatalog:
     min/max pruning, possible because the build range-partitions postings
     by (term_id, shard) so each file covers a narrow term slice.
 
-    Row-group cache: a decoded row group stays in the handle's LRU keyed
-    by (file, row group, column set), so a query whose terms sit in cached
-    row groups decodes nothing. This is valid because a catalog belongs to
-    one LocalIndex, i.e. one index generation, and files never change
-    within a generation. Each term's rows are found by np.searchsorted
-    over the row group's term_id column (sorted by the build); a row group
-    whose term_id column is not non-decreasing falls back to a pc.is_in
-    filter.
+    Caching, valid because a catalog belongs to one LocalIndex, i.e. one
+    index generation, and files never change within a generation: a
+    decoded row group stays in the handle's LRU keyed by (file, row group),
+    so a query whose terms sit in cached row groups decodes no parquet; a
+    non-positional read takes whichever column set is cached, and a
+    positional read replaces a cached entry read without position streams.
+    Each (shard, term_id) row's kernels.PostingList stays there too, so its
+    varbyte decodes happen once per generation. Each term's rows are found
+    by np.searchsorted over the row group's term_id column (sorted by the
+    build); a row group whose term_id column is not non-decreasing falls
+    back to a pc.is_in filter.
 
     `files`: explicit committed-file list (the shard-log commit protocol);
     None falls back to a directory scan (legacy index). The term_id column
@@ -256,55 +298,54 @@ class _PostingsCatalog:
                 old.close()
         return out
 
-    def _row_groups_for(self, keys: list[tuple]) -> dict:
-        """The decoded _RowGroup of each ("postings", path, rg, columns)
-        key: hits come from the handle's cache, misses are decoded
-        serially and put there."""
+    def _row_groups_for(self, keys: list[tuple], with_positions: bool) -> dict:
+        """The decoded _RowGroup of each ("postings", path, rg) key: hits
+        come from the handle's cache, misses (and, for a positional read,
+        entries without position streams) are decoded serially and put
+        there. A non-positional miss reads no position columns: the
+        position stream is by far the fattest column (hot terms carry MBs
+        of positions) and only proximity queries decode it."""
         out = {key: self.cache.get(key) for key in keys}
-        missed = [key for key, rg in out.items() if rg is None]
+        missed = [
+            key for key, rg in out.items()
+            if rg is None or (with_positions and not rg.positional)
+        ]
         if missed:
+            columns = None
+            if not with_positions and self._schema_names:
+                columns = [c for c in self._schema_names if c not in _POSITION_COLUMNS]
             handles = self._handles_for(sorted({key[1] for key in missed}))
             for key in missed:
-                _, path, rg, columns = key
-                table = handles[path].read_row_group(rg, columns=columns and list(columns))
-                entry = _RowGroup(table)
-                out[key] = self.cache.put(key, entry, table.nbytes)
+                _, path, rg = key
+                table = handles[path].read_row_group(rg, columns=columns)
+                out[key] = self.cache.put(
+                    key, _RowGroup(table), table.nbytes, replace=with_positions
+                )
         return out
 
-    def read(self, term_ids: list[int], with_positions: bool = False) -> list[dict]:
-        """Posting row dicts (see _RowGroup.rows) of the given term_ids, in
-        (file, row group, term_id) order."""
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
+    def read(self, term_ids: list[int], with_positions: bool = False) -> list:
+        """The shared kernels.PostingList of every (shard, term_id) row of
+        the given term_ids, in (file, row group, term_id) order: from the
+        handle's cache, else built from its row group and cached."""
         tids = np.unique(np.asarray(term_ids, dtype=np.int64))
-        columns = None
-        if not with_positions and self._schema_names:
-            # column pruning: the position stream is by far the fattest
-            # column (hot terms carry MBs of positions) and only PHRASE
-            # queries decode it
-            columns = tuple(
-                c for c in self._schema_names if c not in ("pos_blob", "block_pos_off")
-            )
         work = []
         for path, shard, rgs in self.files:
             for i, lo, hi in rgs:
                 want = tids[(tids >= lo) & (tids <= hi)]
                 if want.size:
-                    work.append((("postings", path, i, columns), shard, want))
-        decoded = self._row_groups_for([key for key, _, _ in work])
-        out: list[dict] = []
+                    work.append((("postings", path, i), shard, want))
+        decoded = self._row_groups_for([key for key, _, _ in work], with_positions)
+        out = []
         for key, shard, want in work:
             rg = decoded[key]
-            if rg.sorted:
-                lo_i = np.searchsorted(rg.term_ids, want, "left")
-                n = np.searchsorted(rg.term_ids, want, "right") - lo_i
-                # the rows [lo_i, lo_i + n) of every wanted term
-                idx = np.arange(n.sum()) + np.repeat(lo_i - (np.cumsum(n) - n), n)
-            else:
-                mask = pc.is_in(rg.table.column("term_id"), value_set=pa.array(want))
-                idx = np.flatnonzero(mask.to_numpy(zero_copy_only=False))
-            out += rg.rows(idx, shard)
+            idx = rg.rows_of(want)
+            for i, tid in zip(idx.tolist(), rg.term_ids[idx].tolist()):
+                lkey = ("list", shard, tid)
+                pl = self.cache.get(lkey)
+                if pl is None or (with_positions and "pos_blob" not in pl.row):
+                    pl = kernels.PostingList(rg.row(i, shard, with_positions))
+                    pl = self.cache.put(lkey, pl, pl.nbytes, replace=with_positions)
+                out.append(pl)
         return out
 
 
@@ -484,10 +525,11 @@ def search_local(
     (booltree.evaluate_shard_topk); the global merge ranks by (score
     desc, doc_id asc). Returns the same columns as exec.search.
 
-    Cost: a query whose row groups and url shards the handle has decoded
-    before (its byte-bounded per-generation cache, module docstring)
-    decodes no parquet; its urls come from per-shard sorted arrays, and
-    the result frame is built once from the merged rows.
+    Cost: a query whose row groups, posting lists and url shards the
+    handle has decoded before (its byte-bounded per-generation cache,
+    module docstring) decodes no parquet and no varbyte stream; its urls
+    come from per-shard sorted arrays, and the result frame is built once
+    from the merged rows.
 
     Batches: the postings read is shared across the whole batch (one
     catalog probe for the union of term_ids), then plan.run_shard_batch
@@ -507,11 +549,11 @@ def search_local(
     specs = plan.query_specs(qrows, term_info, stats, df_override)
 
     all_tids = sorted({tid for tid, _ in term_info.values()})
-    rows = li.catalog().read(all_tids, with_positions=positional) if all_tids else []
-    # {shard: {term_id: posting row}}
-    by_shard: dict[int, dict[int, dict]] = {}
-    for rec in rows:
-        by_shard.setdefault(rec["shard"], {})[rec["term_id"]] = rec
+    lists = li.catalog().read(all_tids, with_positions=positional) if all_tids else []
+    # {shard: {term_id: shared posting list}}
+    by_shard: dict[int, dict[int, kernels.PostingList]] = {}
+    for pl in lists:
+        by_shard.setdefault(pl.row["shard"], {})[pl.row["term_id"]] = pl
 
     deleted_by_shard = li.deleted_by_shard()
     if excluded_ids is not None and len(excluded_ids):

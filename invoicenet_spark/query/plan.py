@@ -311,16 +311,17 @@ class QuerySpec:
     idf: dict[int, float]
     after: tuple[float, int] | None = None
 
-    def run_shard(self, rows: dict, stats: dict, *, deleted=None, count=False):
-        """Run this query over ONE shard. rows: {term_id: posting row dict}
-        for (at least) this query's terms present in the shard; deleted:
-        the shard's sorted masked doc_ids or None. Returns the shard's
-        top-k (docs, scores), or its match count when count (the
-        track_total_hits analog: exhaustive, no scoring, cursor ignored)."""
+    def run_shard(self, lists: dict, stats: dict, *, deleted=None, count=False):
+        """Run this query over ONE shard. lists: {term_id:
+        kernels.PostingList} for (at least) this query's terms present in
+        the shard, each viewed with this query's idf; deleted: the shard's
+        sorted masked doc_ids or None. Returns the shard's top-k (docs,
+        scores), or its match count when count (the track_total_hits
+        analog: exhaustive, no scoring, cursor ignored)."""
         avgdl, k1, b = stats["avgdl"], stats["k1"], stats["b"]
         by_tid = {
-            tid: kernels.TermPostings(rows[tid], idf=idf, avgdl=avgdl, k1=k1, b=b)
-            for tid, idf in self.idf.items() if tid in rows
+            tid: kernels.TermPostings(lists[tid], idf=idf, avgdl=avgdl, k1=k1, b=b)
+            for tid, idf in self.idf.items() if tid in lists
         }
         if count:
             docs, _ = booltree.evaluate_shard(self.tree, by_tid)
@@ -335,13 +336,25 @@ def run_shard_batch(
 ) -> list:
     """Run a query batch over ONE shard — the per-shard loop of both the
     serving path and the Spark batch path's shard group. rows: {term_id:
-    posting row dict} for the batch's terms present in the shard; deleted:
-    the shard's sorted masked doc_ids or None. Returns one entry per spec:
-    its (docs, scores) (its match count when count), or None when none of
-    its leaf terms occur in the shard."""
+    posting row dict or kernels.PostingList} for the batch's terms present
+    in the shard; deleted: the shard's sorted masked doc_ids or None.
+    Returns one entry per spec: its (docs, scores) (its match count when
+    count), or None when none of its leaf terms occur in the shard.
+
+    Each row dict is wrapped in ONE shared PostingList here, so every spec
+    and leaf of the batch reads the same decode: a row is fully decoded at
+    most once per batch whatever the number of queries sharing its term.
+    The serving path passes the PostingLists its handle cache keeps
+    across calls (local._DecodedCache, charged their decoded numpy bytes
+    as well as the Arrow bytes of their row groups), so a warm handle
+    decodes nothing."""
+    lists = {
+        tid: r if isinstance(r, kernels.PostingList) else kernels.PostingList(r)
+        for tid, r in rows.items()
+    }
     return [
-        None if s.idf.keys().isdisjoint(rows)
-        else s.run_shard(rows, stats, deleted=deleted, count=count)
+        None if s.idf.keys().isdisjoint(lists)
+        else s.run_shard(lists, stats, deleted=deleted, count=count)
         for s in specs
     ]
 

@@ -193,3 +193,29 @@ def test_build_dedup_exact_equals_prededuped_build(spark, tmp_path):
     assert len(a) == len(b) > 0
     for c in ("doc_blob", "tf_blob", "dl_blob"):
         assert all(bytes(x) == bytes(y) for x, y in zip(a[c], b[c])), c
+
+
+@pytest.mark.parametrize("positional", [False, True], ids=["flat", "positional"])
+def test_load_index_reads_postings_without_a_schema_job(spark, tmp_path, positional):
+    """load_index reads the committed postings with their explicit schema:
+    its only Spark job is the docs read's schema inference, and the
+    postings frame has the columns and dtypes schema inference gives."""
+    from invoicenet_spark.index.build import IndexPaths, committed_postings_files
+
+    root = str(tmp_path / "index")
+    cfg = EngineConfig(shard_size=32, block_size=16, build_partitions=2,
+                       with_positions=positional)
+    build_index(spark, gen_pages_spark(spark, 80, seed=SEED, partitions=2), root, cfg)
+    sc, group = spark.sparkContext, f"load_index_jobs_{positional}"
+    sc.setJobGroup(group, group)
+    try:
+        idx = load_index(spark, root)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    paths = IndexPaths(root)
+    inferred = spark.read.option("basePath", paths.postings).parquet(
+        *committed_postings_files(paths)
+    )
+    assert idx.postings.dtypes == inferred.dtypes
+    assert idx.postings.count() == inferred.count() > 0

@@ -132,28 +132,29 @@ def test_blockmax_prunes_stopword_blocks(monkeypatch):
     stop_tp = kernels.TermPostings(stop_row, stop_idf, avgdl, 1.2, 0.75)
     rare_tp = kernels.TermPostings(rare_row, rare_idf, avgdl, 1.2, 0.75)
 
-    # every block decode the kernels make: the batched block probe, and a
-    # full-list decode counted as all of the list's blocks
+    # every block decode the kernels make, at the shared posting list's two
+    # decode sites: the batched block probe, and a full-list decode counted
+    # as all of the list's blocks (memoized reads decode nothing)
     decoded_blocks = []
     batch_decode = kernels.decode_blocks_batch
-    decode_all = kernels.TermPostings.decode_all
+    full_decode = kernels.decode_posting_list
 
     def counting_batch(row, blocks):
         decoded_blocks.extend((id(row), int(i)) for i in blocks)
         return batch_decode(row, blocks)
 
-    def counting_all(self):
-        decoded_blocks.extend((id(self.row), i) for i in range(self.n_blocks))
-        return decode_all(self)
+    def counting_full(row):
+        decoded_blocks.extend((id(row), i) for i in range(len(row["block_last"])))
+        return full_decode(row)
 
     monkeypatch.setattr(kernels, "decode_blocks_batch", counting_batch)
-    monkeypatch.setattr(kernels.TermPostings, "decode_all", counting_all)
+    monkeypatch.setattr(kernels, "decode_posting_list", counting_full)
     gd, gs = kernels.score_blockmax([stop_tp, rare_tp], 10)
     monkeypatch.undo()
 
     ed, es = kernels.score_exhaustive([stop_tp, rare_tp], 10, "OR")
     assert np.array_equal(ed, gd) and np.allclose(es, gs)
-    n_stop_blocks = stop_tp.n_blocks
+    n_stop_blocks = stop_tp.postings.n_blocks
     n_decoded_stop = len({b for o, b in decoded_blocks if o == id(stop_row)})
     assert n_decoded_stop > 0  # the counters see the probe's decodes
     # rare term dominates scores → only the ~40 rare-doc segments (plus the
@@ -161,6 +162,32 @@ def test_blockmax_prunes_stopword_blocks(monkeypatch):
     assert n_decoded_stop < n_stop_blocks * 0.9, (
         f"decoded {n_decoded_stop}/{n_stop_blocks} stopword blocks — no pruning"
     )
+
+
+def test_shared_decoded_arrays_are_read_only():
+    """Every array a shared PostingList hands out — full decode, probed
+    blocks, positions, skip table, bound inputs — refuses writes, so no
+    query can corrupt another's postings."""
+    docs = np.array([2, 5, 9, 14, 20, 31, 40], dtype=np.int64)
+    positions = [np.array([1, 4]), np.array([0]), np.array([3, 7, 8]), np.array([2]),
+                 np.array([5]), np.array([1, 6]), np.array([9])]
+    row, _ = _encode_positional(docs, positions, np.full(docs.size, 12, dtype=np.int64))
+    probed = kernels.PostingList(row)
+    blocks = probed.blocks(np.array([0], dtype=np.int64))
+    full = kernels.PostingList(row)
+    d, tfs, dls = full.decode_all()
+    pos, offs = full.decode_positions(tfs)
+    arrays = [*blocks[0], d, tfs, dls, pos, offs, full.block_last, *full.bound_inputs]
+    for a in arrays:
+        with pytest.raises(ValueError, match="read-only"):
+            a[0] = 1
+    assert full.decode_all()[0] is d  # memoized: one decode per list
+    # a full decode retires the block cache; probes then read the full arrays
+    probed.decode_all()
+    assert probed._blocks is None
+    tp = kernels.TermPostings(probed, 1.0, 12.0, 1.2, 0.75)
+    hit, t, _ = kernels._probe_list(tp, np.array([5, 6, 40], dtype=np.int64))
+    assert hit.tolist() == [True, False, True] and t.tolist() == [1, 1]
 
 
 def _encode_positional(docs, positions_list, dls):

@@ -1,7 +1,8 @@
 """The query planner without Spark: plan.normalize over an in-memory
 dictionary. A mixed batch compiles to the same per-row trees as each row
 normalized alone, the caller's frame is left as it was, and the rows
-outside the query-row contract raise."""
+outside the query-row contract raise. plan.run_shard_batch decodes each
+posting row at most once per batch, however many queries share it."""
 
 import copy
 
@@ -9,7 +10,8 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from invoicenet_spark.query import plan
+from invoicenet_spark.index import codec
+from invoicenet_spark.query import kernels, plan
 
 VOCAB = ["spark", "sparky", "data", "window", "windows", "query", "engine",
          "index", "alpha", "beta", "gamma", "delta", "are"]
@@ -129,3 +131,74 @@ def test_out_of_contract_rows_raise(d, stats, row, match):
     q = _frame([{"terms": ["spark"], "mode": "OR"}, row])
     with pytest.raises(ValueError, match=match):
         plan.normalize(d, q, stats, SYN)
+
+
+# ------------------------------------------------------- run_shard_batch --
+SHARED_ROWS = [
+    r
+    for t in ["alpha", "beta", "gamma", "delta", "window", "query", "index"]
+    for r in (
+        {"terms": ["spark", t], "mode": "OR"},
+        {"terms": ["data", t], "mode": "AND"},
+        {"terms": [f"spark AND NOT {t}"], "mode": "BOOL"},
+        {"terms": ["spark", "data", t], "mode": "OR", "min_match": 2},
+        {"terms": [t, "engine"], "mode": "OR", "neg_terms": ["data"]},
+    )
+] + [{"terms": ["wind", "sp"], "mode": "PREFIX"}]
+
+
+def _shard_rows(n_docs=3000, block_size=16, seed=5):
+    """One shard's encoded posting rows for VOCAB (term_id = sorted
+    position, as MemDictionary assigns): two hot terms, the rest rarer."""
+    rng = np.random.default_rng(seed)
+    dls = rng.integers(20, 200, size=n_docs).astype(np.int64)
+    rows = {}
+    for tid, term in enumerate(sorted(VOCAB)):
+        df = {"spark": 2400, "data": 1500}.get(term, int(rng.integers(20, 400)))
+        docs = np.sort(rng.choice(n_docs, size=df, replace=False)).astype(np.int64)
+        tfs = rng.integers(1, 9, size=df).astype(np.int64)
+        rows[tid] = codec.encode_posting_list(docs, tfs, dls[docs], block_size=block_size)
+        rows[tid]["term_id"] = tid
+    return rows, {"N": n_docs, "avgdl": float(dls.mean()), "k1": 1.2, "b": 0.75}
+
+
+def test_run_shard_batch_decodes_each_row_once(monkeypatch):
+    """Through plan.run_shard_batch, a batch whose queries share terms
+    fully decodes each posting row at most once, and doubling the queries
+    that share each term adds no varbyte decode; the repeated queries
+    answer bit for bit like the originals."""
+    rows, stats = _shard_rows()
+
+    def specs(n_copies):
+        q = _frame(SHARED_ROWS * n_copies)
+        qrows, needed, _ = plan.normalize(PLAIN_DICT, q, stats)
+        return plan.query_specs(qrows, PLAIN_DICT.term_info(needed), stats)
+
+    full, vb = [], []
+    real_full, real_vb = kernels.decode_posting_list, codec.vb_decode
+
+    def counting_full(row):
+        full.append(row["term_id"])
+        return real_full(row)
+
+    def counting_vb(*a, **k):
+        vb.append(1)
+        return real_vb(*a, **k)
+
+    monkeypatch.setattr(kernels, "decode_posting_list", counting_full)
+    monkeypatch.setattr(codec, "vb_decode", counting_vb)
+    results, decodes = [], []
+    for n_copies in (1, 2):
+        full.clear()
+        vb.clear()
+        results.append(plan.run_shard_batch(specs(n_copies), rows, stats))
+        assert len(full) == len(set(full)), "a posting row was fully decoded twice"
+        decodes.append(len(vb))
+    assert decodes[0] > 0
+    assert decodes[1] == decodes[0], f"varbyte decodes grew {decodes[0]} -> {decodes[1]}"
+    one, two = results
+    n = len(SHARED_ROWS)
+    assert sum(r is not None and r[0].size > 0 for r in one) > n // 2
+    for i, a in enumerate(one):
+        for b in (two[i], two[i + n]):
+            assert a[0].tobytes() == b[0].tobytes() and a[1].tobytes() == b[1].tobytes()

@@ -1,12 +1,15 @@
 """The per-generation serving cache (query/local.py): one byte-bounded LRU
-per handle holding the catalog's decoded postings row groups and
-urls_for's per-shard (doc_id, url) arrays.
+per handle holding the catalog's decoded postings row groups (one entry per
+row group), the shared decoded posting lists (one per (shard, term_id) row)
+and urls_for's per-shard (doc_id, url) arrays.
 
 - Generation contract: a held root string, warmed by search_local, sees
   every index change (update_index, delete_docs, compact_index with purge)
   on its next call, and answers like the Spark path on the same index.
 - The cache bound only trades time for memory: a 1-byte bound evicts
-  every row group and url array and answers the same.
+  every row group, posting list and url array and answers the same, and a
+  small bound never holds more decoded bytes than it was charged.
+- A warm handle runs no varbyte decode at all.
 - Concurrent callers on one handle get the serial answers.
 - Result dtypes are pinned for empty, count_only, with_url=False and
   normal results.
@@ -27,7 +30,8 @@ from invoicenet_spark.fixtures.pages import PAGES_SCHEMA, gen_pages_pandas
 from invoicenet_spark.index.build import IndexPaths, build_index, vacuum_docs_dirs
 from invoicenet_spark.index.deletes import delete_docs
 from invoicenet_spark.index.maintain import compact_index
-from invoicenet_spark.query import local
+from invoicenet_spark.index import codec
+from invoicenet_spark.query import kernels, local
 from invoicenet_spark.query.exec import load_index, search
 from invoicenet_spark.query.local import LocalIndex, local_index, search_local
 
@@ -52,6 +56,24 @@ def _queries() -> pd.DataFrame:
     return pd.concat([q, ph], ignore_index=True)
 
 
+def _shared_batch() -> pd.DataFrame:
+    """A batch in which many queries share terms: every row pairs one of
+    two common terms with a term of its own, in OR, AND and BOOL form."""
+    q = gen_queries(40, seed=42)
+    terms = list(dict.fromkeys(t for ts in q["terms"] for t in ts))
+    common, own = terms[:2], terms[2:26]
+    rows = []
+    for i, t in enumerate(own):
+        c = common[i % 2]
+        mode = ("OR", "AND", "BOOL")[i % 3]
+        ts = [f"{c} {'OR' if i % 2 else 'AND'} {t}"] if mode == "BOOL" else [c, t]
+        rows.append({"query_id": 2000 + i, "terms": ts, "mode": mode, "k": 5 + i % 7})
+    return pd.DataFrame(rows)
+
+
+_ALL_KINDS = {"postings", "list", "urls"}
+
+
 def _kinds(li: LocalIndex) -> set[str]:
     return {key[0] for key in li.cache.entries}
 
@@ -63,7 +85,7 @@ def _served_after_change(spark, root: str, q: pd.DataFrame, prev: LocalIndex):
     li = local_index(root)
     assert li is not prev and li.generation != prev.generation
     got = search_local(root, q)
-    assert _kinds(li) == {"postings", "urls"}
+    assert _kinds(li) == _ALL_KINDS
     want = search(spark, load_index(spark, root), q).toPandas()
     assert _tuples(got) == _tuples(want)
     return got, li
@@ -87,7 +109,7 @@ def test_cached_handle_sees_update_delete_and_purge(spark, tmp_path):
     # warm the cache on the held root string
     got = search_local(root, q)
     li = local_index(root)
-    assert _kinds(li) == {"postings", "urls"}
+    assert _kinds(li) == _ALL_KINDS
     assert (got["query_id"] == 99).sum() == 0
 
     # update_index: the new docs are served, with their urls
@@ -130,17 +152,16 @@ def root(spark, tmp_path_factory):
 
 
 def _singles_and_batch(li: LocalIndex, q: pd.DataFrame) -> list[pd.DataFrame]:
-    return [search_local(li, q.iloc[[i]]) for i in range(len(q))] + [search_local(li, q)]
+    return [search_local(li, q.iloc[[i]]) for i in range(len(q))] + [
+        search_local(li, q), search_local(li, _shared_batch())
+    ]
 
 
 def test_one_byte_bound_evicts_everything_and_answers_the_same(root, monkeypatch):
     q = _queries()
     unbounded = LocalIndex(root)
     want = _singles_and_batch(unbounded, q)
-    assert unbounded.cache.nbytes > 0 and _kinds(unbounded) == {"postings", "urls"}
-    # both column sets were cached, keyed apart
-    postings = [key for key in unbounded.cache.entries if key[0] == "postings"]
-    assert {key[3] is None for key in postings} == {True, False}
+    assert unbounded.cache.nbytes > 0 and _kinds(unbounded) == _ALL_KINDS
 
     monkeypatch.setattr(local, "_DECODED_CACHE_BYTES", 1)
     bounded = LocalIndex(root)
@@ -165,12 +186,107 @@ def test_warm_handle_decodes_nothing(root, monkeypatch):
         pd.testing.assert_frame_equal(a, b, check_exact=True)
 
 
+def test_warm_batch_runs_no_varbyte_decode(root, monkeypatch):
+    """The second identical shared-term batch on one handle decodes
+    nothing: every posting list it reads was decoded by the first."""
+    b = pd.concat([_shared_batch(), _queries()], ignore_index=True)
+    li = LocalIndex(root)
+    want = search_local(li, b)
+    calls = []
+    real = codec.vb_decode
+
+    def counting(*a, **k):
+        calls.append(1)
+        return real(*a, **k)
+
+    monkeypatch.setattr(codec, "vb_decode", counting)
+    got = search_local(li, b)
+    assert sum(calls) == 0, f"a warm batch ran {sum(calls)} varbyte decodes"
+    pd.testing.assert_frame_equal(want, got, check_exact=True)
+    search_local(LocalIndex(root), b)  # the counter sees a cold handle's decodes
+    assert sum(calls) > 0
+
+
+def test_one_postings_entry_per_row_group(root):
+    """A PHRASE query then an OR query over the same terms share one
+    postings entry per row group (the all-column one serves the OR query),
+    and the reverse order upgrades the OR query's entries in place."""
+    ph = _queries().query("mode == 'PHRASE'").head(2)
+    orq = ph.assign(mode="OR", query_id=ph["query_id"] + 100)
+    want = [search_local(LocalIndex(root), x) for x in (ph, orq)]
+
+    def postings(li):
+        return {k: v for k, (v, _) in li.cache.entries.items() if k[0] == "postings"}
+
+    for order in ((ph, orq), (orq, ph)):
+        li = LocalIndex(root)
+        search_local(li, order[0])
+        first = postings(li)
+        search_local(li, order[1])
+        after = postings(li)
+        assert after.keys() == first.keys() and len(after) > 0
+        assert all(len(k) == 3 for k in after)  # ("postings", file, row group)
+        assert all(rg.positional for rg in after.values())
+        assert li.cache.nbytes == sum(n for _, n in li.cache.entries.values())
+        for q, w in zip((ph, orq), want):
+            pd.testing.assert_frame_equal(search_local(li, q), w, check_exact=True)
+
+
+def _held_bytes(value) -> int:
+    """Bytes a cache entry really keeps alive: each numpy buffer it reaches
+    counted once at its owner's size (a view pins its whole base), plus
+    its bytes objects."""
+    seen, total = set(), 0
+
+    def walk(v):
+        nonlocal total
+        if isinstance(v, np.ndarray):
+            while isinstance(v.base, np.ndarray):
+                v = v.base
+            if id(v) not in seen:
+                seen.add(id(v))
+                total += v.nbytes
+        elif isinstance(v, bytes):
+            total += len(v)
+        elif isinstance(v, (tuple, list)):
+            for x in v:
+                walk(x)
+        elif isinstance(v, dict):
+            for x in v.values():
+                walk(x)
+
+    walk(vars(value))
+    return total
+
+
+@pytest.mark.parametrize("bound", [64 << 10, 1 << 20])
+def test_small_bound_never_undercounts_decoded_lists(root, monkeypatch, bound):
+    """Under a small bound, every cached posting list holds at most the
+    bytes it was charged, and the cache never exceeds its bound, after
+    each call of a mixed, shared-term and phrase workload."""
+    monkeypatch.setattr(local, "_DECODED_CACHE_BYTES", bound)
+    li = LocalIndex(root)
+    q = _queries()
+    n_lists = 0
+    for batch in [q.iloc[[i]] for i in range(len(q))] + [q, _shared_batch()]:
+        search_local(li, batch)
+        assert li.cache.nbytes <= bound
+        assert li.cache.nbytes == sum(n for _, n in li.cache.entries.values())
+        for key, (value, charged) in list(li.cache.entries.items()):
+            if key[0] == "list":
+                n_lists += 1
+                assert isinstance(value, kernels.PostingList)
+                assert _held_bytes(value) <= charged, key
+    assert n_lists > 0
+
+
 @pytest.mark.parametrize("bound", [None, 1])
 def test_four_threads_on_one_handle_match_serial(root, monkeypatch, bound):
     if bound is not None:
         monkeypatch.setattr(local, "_DECODED_CACHE_BYTES", bound)
     q = _queries()
-    singles = [q.iloc[[i]] for i in range(len(q))] * 3
+    shared = _shared_batch()
+    singles = ([q.iloc[[i]] for i in range(len(q))] + [shared, q]) * 3
     serial_li = LocalIndex(root)
     serial = [search_local(serial_li, s) for s in singles]
     li = LocalIndex(root)  # cold: the threads race on the first fills
@@ -225,17 +341,21 @@ def test_unsorted_row_group_falls_back_to_membership_filter(tmp_path):
         "block_last": [[int(t), int(t) + 1] for t in tids],
     })
     perm = np.array([4, 0, 5, 2, 1, 3])
+    want = np.array([4, 5, 11, 20], dtype=np.int64)
     rows = {}
     for name, t in (("sorted", table), ("unsorted", table.take(perm))):
         path = tmp_path / name / "shard=2" / "part-0.parquet"
         path.parent.mkdir(parents=True)
         pq.write_table(t, str(path))
         cat = local._PostingsCatalog(str(tmp_path / name), [str(path)], local._DecodedCache())
-        rows[name] = sorted(
-            cat.read([5, 11, 4, 20]), key=lambda r: (r["term_id"], r["df_shard"])
-        )
-        ((rg, _),) = cat.cache.entries.values()
+        lists = cat.read(list(want))
+        assert {pl.row["term_id"] for pl in lists} == {5, 11, 20}
+        ((rg, _),) = [v for k, v in cat.cache.entries.items() if k[0] == "postings"]
         assert rg.sorted == (name == "sorted")
+        rows[name] = sorted(
+            (rg.row(i, 2, False) for i in rg.rows_of(np.unique(want)).tolist()),
+            key=lambda r: (r["term_id"], r["df_shard"]),
+        )
     a, b = rows["sorted"], rows["unsorted"]
     assert [r["term_id"] for r in a] == [5, 5, 11, 20]
     assert all(r["shard"] == 2 for r in a)
