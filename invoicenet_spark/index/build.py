@@ -134,14 +134,11 @@ def committed_postings_files(paths: IndexPaths) -> list[str] | None:
     return sorted(files)
 
 
-def read_postings(
-    spark: SparkSession, paths: IndexPaths, schema: str | None = None
-) -> DataFrame:
+def read_postings(spark: SparkSession, paths: IndexPaths) -> DataFrame:
     """Postings DataFrame from the committed file list (basePath keeps the
     hive `shard=` partition column); directory scan for legacy indexes.
-    schema: an explicit read schema for the committed files
-    (POSTINGS_READ_SCHEMA), which skips Spark's schema-inference job;
-    None infers it."""
+    Committed files are read with their explicit schema
+    (POSTINGS_READ_SCHEMA), so the read starts no schema-inference job."""
     files = committed_postings_files(paths)
     if files is None:
         return spark.read.parquet(paths.postings)
@@ -149,8 +146,11 @@ def read_postings(
         # POSTINGS_SCHEMA already carries `shard` (the encode output schema);
         # appending it again gave an ambiguous duplicate column downstream
         return spark.createDataFrame([], POSTINGS_SCHEMA)
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    return reader.option("basePath", paths.postings).parquet(*files)
+    return (
+        spark.read.schema(POSTINGS_READ_SCHEMA)
+        .option("basePath", paths.postings)
+        .parquet(*files)
+    )
 
 
 def vacuum_postings(paths: IndexPaths) -> list[str]:

@@ -38,7 +38,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from invoicenet_spark.index.build import POSTINGS_READ_SCHEMA, IndexPaths, read_postings
+from invoicenet_spark.index.build import IndexPaths, read_postings
 from invoicenet_spark.index.deletes import list_tombstone_files, read_tombstones_spark
 from invoicenet_spark.query import plan
 
@@ -74,7 +74,7 @@ def load_index(spark: SparkSession, root: str) -> Index:
     # does: its columns vary with the build's options).
     return Index(
         paths=paths,
-        postings=read_postings(spark, paths, POSTINGS_READ_SCHEMA),
+        postings=read_postings(spark, paths),
         docs=spark.read.parquet(paths.docs),
         stats=stats,
         tombstone_files=list_tombstone_files(paths),

@@ -21,6 +21,7 @@ candidate; all decode/score/probe math is vectorized numpy.
 
 from __future__ import annotations
 
+import threading
 from functools import cached_property
 
 import numpy as np
@@ -104,14 +105,14 @@ class PostingList:
     array it hands out is read-only.
 
     plan.run_shard_batch builds one per row per shard for a batch; the
-    serving path keeps them across calls in its handle cache
-    (local._DecodedCache), charged `nbytes`: the row's own bytes plus an
-    upper bound on everything it can decode (24 B per posting for the
-    int64 (docs, tfs, dls), 16 B per block for the float64 bound inputs,
-    and for a positional row 8 B per position-stream byte and per offset).
-    The block cache is dropped once the list is fully decoded, so it never
-    holds both. Concurrent readers may decode the same list twice; the
-    results are equal and the last one is kept."""
+    serving path keeps them across calls inside its cached row groups
+    (local._RowGroup), each charged `decoded_nbytes`: an upper bound on
+    the numpy bytes its decodes can hold (24 B per posting for the int64
+    (docs, tfs, dls), 16 B per block for the float64 bound inputs, and for
+    a positional row 8 B per position-stream byte and per offset). The
+    block cache is dropped once the list is fully decoded, so it never
+    holds both. Decodes run under the list's lock, so concurrent readers
+    decode each block once and keep one copy."""
 
     def __init__(self, row: dict):
         self.row = row
@@ -121,13 +122,10 @@ class PostingList:
         self.full = None  # (docs, tfs, dls) once fully decoded
         self._positions = None
         self._blocks: dict | None = {}
-        own = sum(
-            len(v) if isinstance(v, bytes) else v.nbytes
-            for v in row.values() if isinstance(v, (bytes, np.ndarray))
-        )
+        self._lock = threading.Lock()
         pos = row.get("pos_blob")
-        self.nbytes = (
-            own + 24 * self.df + 16 * self.n_blocks
+        self.decoded_nbytes = (
+            24 * self.df + 16 * self.n_blocks
             + (8 * (len(pos) + self.df + 1) if pos is not None else 0)
         )
 
@@ -141,19 +139,19 @@ class PostingList:
         )
 
     def decode_all(self) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        full = self.full
-        if full is None:
-            full = self.full = _frozen(*decode_posting_list(self.row))
-            self._blocks = None  # the full decode serves every block now
-        return full
+        with self._lock:
+            if self.full is None:
+                self.full = _frozen(*decode_posting_list(self.row))
+                self._blocks = None  # the full decode serves every block now
+            return self.full
 
     def decode_positions(self, tfs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
         """(pos_flat, offsets) of the position stream; tfs is the list's
         full tf array."""
-        pos = self._positions
-        if pos is None:
-            pos = self._positions = _frozen(*decode_positions(self.row, tfs))
-        return pos
+        with self._lock:
+            if self._positions is None:
+                self._positions = _frozen(*decode_positions(self.row, tfs))
+            return self._positions
 
     def blocks(self, needed: np.ndarray) -> list:
         """(docs, tfs, dls) of each needed block (sorted unique block
@@ -161,18 +159,21 @@ class PostingList:
         varbyte call — per-block python decode costs ~0.1 ms of loop overhead
         each, which ties the pruned path with exhaustive instead of beating
         it."""
-        cache = self._blocks
-        if cache is None:
-            cache = {}  # fully decoded meanwhile: these blocks are not kept
         needed = needed.tolist()
-        missing = [j for j in needed if j not in cache]
-        if missing:
-            bd, bt, bl, offs = decode_blocks_batch(self.row, np.array(missing, dtype=np.int64))
-            _frozen(bd, bt, bl)
-            for bi, j in enumerate(missing):
-                sl = slice(offs[bi], offs[bi + 1])
-                cache[j] = (bd[sl], bt[sl], bl[sl])
-        return [cache[j] for j in needed]
+        with self._lock:
+            cache = self._blocks
+            if cache is None:
+                cache = {}  # fully decoded meanwhile: these blocks are not kept
+            missing = [j for j in needed if j not in cache]
+            if missing:
+                bd, bt, bl, offs = decode_blocks_batch(
+                    self.row, np.array(missing, dtype=np.int64)
+                )
+                _frozen(bd, bt, bl)
+                for bi, j in enumerate(missing):
+                    sl = slice(offs[bi], offs[bi + 1])
+                    cache[j] = (bd[sl], bt[sl], bl[sl])
+            return [cache[j] for j in needed]
 
 
 class TermPostings:
@@ -180,12 +181,11 @@ class TermPostings:
     (boost folded in), avgdl (its field's, on a fielded leaf), k1, b and
     the block bounds those give. Decodes go to the shared list, so every
     view over one row reads the same arrays, and the serving cache's bound
-    counts their decoded numpy bytes once, on the list (PostingList.nbytes),
-    not per view. `postings` is a PostingList or a posting row dict
-    (wrapped in a list of its own)."""
+    counts their decoded numpy bytes once, on the list
+    (PostingList.decoded_nbytes), not per view."""
 
-    def __init__(self, postings, idf: float, avgdl: float, k1: float, b: float):
-        self.postings = postings if isinstance(postings, PostingList) else PostingList(postings)
+    def __init__(self, postings: PostingList, idf: float, avgdl: float, k1: float, b: float):
+        self.postings = postings
         self.idf = float(idf)
         self.avgdl = avgdl
         self.k1, self.b = k1, b

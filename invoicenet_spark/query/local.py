@@ -38,10 +38,11 @@ bounded to _DECODED_CACHE_BYTES (64 MiB per handle), which counts Arrow
 nbytes and decoded numpy bytes alike. It holds the postings row groups the
 catalog decoded (one entry per row group, whatever its column set), where
 a term's rows are found by binary search over the row group's term_id
-column; one shared kernels.PostingList per (shard, term_id) row, charged
-its row's bytes plus a bound on the numpy arrays its varbyte decodes fill
-(~24 B per posting), so a warm handle runs no varbyte decode at all; and
-each probed shard's sorted doc_ids with its urls' Arrow string buffers.
+column. Each row group keeps the shared kernels.PostingList of every row
+read from it, built over views of its buffers and charged to its entry a
+bound on the numpy arrays its varbyte decodes fill (~24 B per posting),
+so a warm handle runs no varbyte decode at all. It also holds each probed
+shard's sorted doc_ids with its urls' Arrow string buffers.
 Index files never change within a generation, so re-keying the handle on
 a new generation is the whole invalidation. At most _SERVING_CACHE_MAX
 handles, so 8 × 64 MiB of decoded data, stay live. The gain depends on
@@ -71,9 +72,9 @@ from invoicenet_spark.query import kernels, plan
 _INT64_MIN, _INT64_MAX = -(1 << 63), (1 << 63) - 1
 
 
-# Decoded data one serving handle keeps (postings row groups, shared
-# decoded posting lists and per-shard url arrays), bounded by their Arrow
-# nbytes and decoded numpy bytes. The serve benchmark's whole index takes
+# Decoded data one serving handle keeps (postings row groups with their
+# shared decoded posting lists, and per-shard url arrays), bounded by their
+# Arrow nbytes and decoded numpy bytes. The serve benchmark's whole index takes
 # ~2 MB of row groups, ~0.3 MB of urls and ~12 MB of decoded posting lists.
 _DECODED_CACHE_BYTES = 64 << 20
 
@@ -81,17 +82,16 @@ _DECODED_CACHE_BYTES = 64 << 20
 class _DecodedCache:
     """One handle's LRU of decoded index data, bounded to
     _DECODED_CACHE_BYTES. Keys and what each entry is charged:
-      ("postings", file, row group)  a _RowGroup, its Arrow nbytes; one
-                                     entry whatever its column set
-      ("list", shard, term_id)       a kernels.PostingList, its nbytes: its
-                                     row's bytes plus a bound on the numpy
-                                     arrays it can decode
+      ("postings", file, row group)  a _RowGroup, its Arrow nbytes plus
+                                     the decoded_nbytes of each posting
+                                     list built in it (grow); one entry
+                                     whatever its column set
       ("urls", shard)                sorted doc_ids and url buffers, their
                                      nbytes
-    Entries are looked up, filled and evicted under one lock; two threads
-    that miss the same key both decode it and the first fill is kept,
-    unless the second fill replaces it (a positional entry replacing one
-    without position streams)."""
+    Entries are looked up, filled, grown and evicted under one lock; two
+    threads that miss the same key both decode it and the first fill is
+    kept, unless the second fill replaces it (a positional entry replacing
+    one without position streams)."""
 
     def __init__(self):
         import threading
@@ -119,10 +119,26 @@ class _DecodedCache:
                 self.nbytes += nbytes - (old[1] if old else 0)
             self.entries.move_to_end(key)
             value = self.entries[key][0]
-            while self.entries and self.nbytes > _DECODED_CACHE_BYTES:
-                _, (_, old) = self.entries.popitem(last=False)
-                self.nbytes -= old
+            self._evict()
         return value
+
+    def grow(self, key, value, nbytes: int):
+        """Charge nbytes more to key's entry, when value is still what is
+        cached there (data built inside a cached entry), and evict
+        least-recently-used entries over the bound."""
+        with self._lock:
+            old = self.entries.get(key)
+            if old is None or old[0] is not value:
+                return
+            self.entries[key] = (value, old[1] + nbytes)
+            self.nbytes += nbytes
+            self.entries.move_to_end(key)
+            self._evict()
+
+    def _evict(self):
+        while self.entries and self.nbytes > _DECODED_CACHE_BYTES:
+            _, (_, old) = self.entries.popitem(last=False)
+            self.nbytes -= old
 
 
 def _binary_view(arr) -> tuple[np.ndarray, np.ndarray]:
@@ -137,20 +153,26 @@ _POSITION_COLUMNS = ("pos_blob", "block_pos_off")
 
 
 class _RowGroup:
-    """One decoded postings row group: its Arrow table (what the cache
-    bound counts), its term_id column, and numpy views over the table's
-    buffers, so posting rows are copied out without an Arrow take.
+    """One decoded postings row group of one shard: its Arrow table (what
+    the cache bound counts), its term_id column, numpy views over the
+    table's buffers, so posting rows are sliced out without an Arrow take
+    or a copy, and the shared kernels.PostingList of each row read so far.
     `positional` says whether it holds the position streams. The postings
     schema (build.POSTINGS_SCHEMA) has only non-null integer, binary and
     integer-list columns; anything else raises."""
 
-    def __init__(self, table):
+    def __init__(self, table, shard: int):
+        import threading
+
         import pyarrow as pa
 
         self.table = table
+        self.shard = shard
         self.term_ids = table.column("term_id").to_numpy()
         self.sorted = bool((self.term_ids[1:] >= self.term_ids[:-1]).all())
         self.positional = "pos_blob" in table.column_names
+        self.lists: dict[int, kernels.PostingList] = {}
+        self._lock = threading.Lock()
         self._cols = []
         for name, col in zip(table.column_names, table.columns):
             arr, t = col.combine_chunks(), col.type
@@ -181,32 +203,33 @@ class _RowGroup:
         mask = pc.is_in(self.table.column("term_id"), value_set=pa.array(want))
         return np.flatnonzero(mask.to_numpy(zero_copy_only=False))
 
-    def row(self, i: int, shard: int, positions: bool) -> dict:
-        """Posting row dict of row i, owning its data, so a cached
-        PostingList does not pin this row group's buffers: scalars as
-        Python values, blobs as bytes, list columns as read-only numpy
-        copies, plus the row's `shard`. Position columns only when
-        `positions`."""
+    def row(self, i: int) -> dict:
+        """Posting row dict of row i over this row group's buffers:
+        scalars as Python values, blobs and list columns as read-only
+        numpy views (kernels only read them), plus the row's `shard`."""
         row = {}
         for name, kind, a, b in self._cols:
-            if not positions and name in _POSITION_COLUMNS:
-                continue
-            if kind == "list":
-                v = b[a[i]:a[i + 1]].copy()
-                v.flags.writeable = False
-                row[name] = v
-            elif kind == "bytes":
-                row[name] = b[a[i]:a[i + 1]].tobytes()
-            else:
-                row[name] = a[i].item()
-        row["shard"] = shard
+            row[name] = a[i].item() if kind == "num" else b[a[i]:a[i + 1]]
+        row["shard"] = self.shard
         return row
+
+    def posting_list(self, i: int, cache: _DecodedCache, key: tuple):
+        """The shared kernels.PostingList of row i, built on first use and
+        charged to this row group's cache entry (key) before it is kept,
+        so the entry's charge never falls short of what it holds."""
+        with self._lock:
+            pl = self.lists.get(i)
+            if pl is None:
+                pl = kernels.PostingList(self.row(i))
+                cache.grow(key, self, pl.decoded_nbytes)
+                self.lists[i] = pl
+            return pl
 
 
 class _PostingsCatalog:
     """File-level (term_id min, max, shard) catalog over the postings files;
-    the row groups it decodes and the posting lists it builds go to its
-    handle's _DecodedCache.
+    the row groups it decodes, with the posting lists built in them, go to
+    its handle's _DecodedCache.
 
     A generic dataset scan re-reads every fragment's parquet footer PER
     QUERY to evaluate stats pruning (~0.4 ms × n_files — measured 0.6 s on
@@ -222,8 +245,8 @@ class _PostingsCatalog:
     so a query whose terms sit in cached row groups decodes no parquet; a
     non-positional read takes whichever column set is cached, and a
     positional read replaces a cached entry read without position streams.
-    Each (shard, term_id) row's kernels.PostingList stays there too, so its
-    varbyte decodes happen once per generation. Each term's rows are found
+    Each row's kernels.PostingList stays in its row group, so its varbyte
+    decodes happen once per generation. Each term's rows are found
     by np.searchsorted over the row group's term_id column (sorted by the
     build); a row group whose term_id column is not non-decreasing falls
     back to a pc.is_in filter.
@@ -298,11 +321,11 @@ class _PostingsCatalog:
                 old.close()
         return out
 
-    def _row_groups_for(self, keys: list[tuple], with_positions: bool) -> dict:
-        """The decoded _RowGroup of each ("postings", path, rg) key: hits
-        come from the handle's cache, misses (and, for a positional read,
-        entries without position streams) are decoded serially and put
-        there. A non-positional miss reads no position columns: the
+    def _row_groups_for(self, keys: dict, with_positions: bool) -> dict:
+        """The decoded _RowGroup of each ("postings", path, rg) key of
+        keys ({key: its file's shard}): hits come from the handle's cache,
+        misses (and, for a positional read, entries without position
+        streams) are decoded serially and put there. A non-positional miss reads no position columns: the
         position stream is by far the fattest column (hot terms carry MBs
         of positions) and only proximity queries decode it."""
         out = {key: self.cache.get(key) for key in keys}
@@ -319,14 +342,15 @@ class _PostingsCatalog:
                 _, path, rg = key
                 table = handles[path].read_row_group(rg, columns=columns)
                 out[key] = self.cache.put(
-                    key, _RowGroup(table), table.nbytes, replace=with_positions
+                    key, _RowGroup(table, keys[key]), table.nbytes,
+                    replace=with_positions,
                 )
         return out
 
     def read(self, term_ids: list[int], with_positions: bool = False) -> list:
         """The shared kernels.PostingList of every (shard, term_id) row of
-        the given term_ids, in (file, row group, term_id) order: from the
-        handle's cache, else built from its row group and cached."""
+        the given term_ids, in (file, row group, term_id) order, each kept
+        in its cached row group."""
         tids = np.unique(np.asarray(term_ids, dtype=np.int64))
         work = []
         for path, shard, rgs in self.files:
@@ -334,18 +358,13 @@ class _PostingsCatalog:
                 want = tids[(tids >= lo) & (tids <= hi)]
                 if want.size:
                     work.append((("postings", path, i), shard, want))
-        decoded = self._row_groups_for([key for key, _, _ in work], with_positions)
+        decoded = self._row_groups_for(
+            {key: shard for key, shard, _ in work}, with_positions
+        )
         out = []
-        for key, shard, want in work:
+        for key, _, want in work:
             rg = decoded[key]
-            idx = rg.rows_of(want)
-            for i, tid in zip(idx.tolist(), rg.term_ids[idx].tolist()):
-                lkey = ("list", shard, tid)
-                pl = self.cache.get(lkey)
-                if pl is None or (with_positions and "pos_blob" not in pl.row):
-                    pl = kernels.PostingList(rg.row(i, shard, with_positions))
-                    pl = self.cache.put(lkey, pl, pl.nbytes, replace=with_positions)
-                out.append(pl)
+            out += [rg.posting_list(i, self.cache, key) for i in rg.rows_of(want).tolist()]
         return out
 
 

@@ -345,9 +345,9 @@ def run_shard_batch(
     and leaf of the batch reads the same decode: a row is fully decoded at
     most once per batch whatever the number of queries sharing its term.
     The serving path passes the PostingLists its handle cache keeps
-    across calls (local._DecodedCache, charged their decoded numpy bytes
-    as well as the Arrow bytes of their row groups), so a warm handle
-    decodes nothing."""
+    across calls inside their row groups (local._DecodedCache, charged
+    their decoded numpy bytes as well as the row groups' Arrow bytes), so
+    a warm handle decodes nothing."""
     lists = {
         tid: r if isinstance(r, kernels.PostingList) else kernels.PostingList(r)
         for tid, r in rows.items()

@@ -38,7 +38,7 @@ def _corpus(rng, n_docs, n_terms, block_size):
         row = encode_posting_list(docs, tfs, dls[docs], block_size=block_size)
         row["term_id"] = t
         idf = float(np.log((n_docs - df + 0.5) / (df + 0.5) + 1.0))
-        by_tid[t] = kernels.TermPostings(row, idf=idf, avgdl=avgdl, k1=K1, b=B)
+        by_tid[t] = kernels.TermPostings(kernels.PostingList(row), idf=idf, avgdl=avgdl, k1=K1, b=B)
     return by_tid, avgdl
 
 
@@ -76,7 +76,7 @@ def _flat_exhaustive(tree, by_tid, k, deleted):
     leaf's boost folded into idf and its avgdl override applied."""
     plists = [
         kernels.TermPostings(
-            by_tid[tid].row, idf=by_tid[tid].idf * boost,
+            kernels.PostingList(by_tid[tid].row), idf=by_tid[tid].idf * boost,
             avgdl=by_tid[tid].avgdl if avgdl is None else avgdl, k1=K1, b=B,
         )
         for tid, boost, avgdl in booltree.flatten_or_terms(tree)
@@ -360,7 +360,7 @@ def _positional_corpus(rng, n_docs, vocab_size):
         row["term_id"] = tid
         df = docs.size
         idf = float(np.log((n_docs - df + 0.5) / (df + 0.5) + 1.0))
-        by_tid[tid] = kernels.TermPostings(row, idf=idf, avgdl=avgdl, k1=K1, b=B)
+        by_tid[tid] = kernels.TermPostings(kernels.PostingList(row), idf=idf, avgdl=avgdl, k1=K1, b=B)
     return by_tid, avgdl, vocab_size
 
 

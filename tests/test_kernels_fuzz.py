@@ -25,7 +25,7 @@ def _random_corpus(rng, n_docs, n_terms, block_size):
         row = encode_posting_list(docs, tfs, dls_global[docs], block_size=block_size)
         row["term_id"] = t
         idf = float(np.log((n_docs - df + 0.5) / (df + 0.5) + 1.0))
-        plists.append(kernels.TermPostings(row, idf=idf, avgdl=avgdl, k1=1.2, b=0.75))
+        plists.append(kernels.TermPostings(kernels.PostingList(row), idf=idf, avgdl=avgdl, k1=1.2, b=0.75))
     return plists
 
 
@@ -99,7 +99,7 @@ def test_phrase_and_and_deletion_masking():
         tfs = rng.integers(1, 9, size=n_docs).astype(np.int64)
         row = encode_posting_list(docs, tfs, dls, block_size=bs)
         row["term_id"] = t
-        plists.append(kernels.TermPostings(row, idf=1.0, avgdl=avgdl, k1=1.2, b=0.75))
+        plists.append(kernels.TermPostings(kernels.PostingList(row), idf=1.0, avgdl=avgdl, k1=1.2, b=0.75))
     ad, _ = kernels.score_exhaustive(plists, n_docs, "AND")
     deleted = ad[:3].copy()  # tombstone the top-3 AND results
     deleted.sort()
@@ -129,8 +129,8 @@ def test_blockmax_prunes_stopword_blocks(monkeypatch):
     rare_row["term_id"] = 1
     rare_idf = float(np.log((n_docs - 40 + 0.5) / (40 + 0.5) + 1.0))
 
-    stop_tp = kernels.TermPostings(stop_row, stop_idf, avgdl, 1.2, 0.75)
-    rare_tp = kernels.TermPostings(rare_row, rare_idf, avgdl, 1.2, 0.75)
+    stop_tp = kernels.TermPostings(kernels.PostingList(stop_row), stop_idf, avgdl, 1.2, 0.75)
+    rare_tp = kernels.TermPostings(kernels.PostingList(rare_row), rare_idf, avgdl, 1.2, 0.75)
 
     # every block decode the kernels make, at the shared posting list's two
     # decode sites: the batched block probe, and a full-list decode counted
@@ -238,7 +238,7 @@ def test_phrase_fuzz_vs_token_scan():
             row["term_id"] = vocab.index(term)
             df = darr.size
             idf = float(np.log((n_docs - df + 0.5) / (df + 0.5) + 1.0))
-            plists.append(kernels.TermPostings(row, idf, avgdl, 1.2, 0.75))
+            plists.append(kernels.TermPostings(kernels.PostingList(row), idf, avgdl, 1.2, 0.75))
         if not feasible:
             continue
         got_docs = kernels.phrase_matches(plists, [tp.decode_all() for tp in plists])
@@ -309,7 +309,7 @@ def test_near_fuzz_vs_token_scan():
             row["term_id"] = vocab.index(term)
             df = darr.size
             idf = float(np.log((n_docs - df + 0.5) / (df + 0.5) + 1.0))
-            plists.append(kernels.TermPostings(row, idf, avgdl, 1.2, 0.75))
+            plists.append(kernels.TermPostings(kernels.PostingList(row), idf, avgdl, 1.2, 0.75))
         if not feasible:
             continue
         got_docs = kernels.near_matches(plists, [tp.decode_all() for tp in plists], slop)
@@ -376,7 +376,7 @@ def test_near_unordered_fuzz_vs_selection_scan():
             row["term_id"] = vocab.index(term)
             df = darr.size
             idf = float(np.log((n_docs - df + 0.5) / (df + 0.5) + 1.0))
-            plists.append(kernels.TermPostings(row, idf, avgdl, 1.2, 0.75))
+            plists.append(kernels.TermPostings(kernels.PostingList(row), idf, avgdl, 1.2, 0.75))
         if not feasible or len(plists) < 2:
             continue
         checked += 1

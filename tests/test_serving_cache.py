@@ -1,14 +1,15 @@
 """The per-generation serving cache (query/local.py): one byte-bounded LRU
 per handle holding the catalog's decoded postings row groups (one entry per
-row group), the shared decoded posting lists (one per (shard, term_id) row)
-and urls_for's per-shard (doc_id, url) arrays.
+row group, each with the shared decoded posting lists of the rows read
+from it) and urls_for's per-shard (doc_id, url) arrays.
 
 - Generation contract: a held root string, warmed by search_local, sees
   every index change (update_index, delete_docs, compact_index with purge)
   on its next call, and answers like the Spark path on the same index.
 - The cache bound only trades time for memory: a 1-byte bound evicts
-  every row group, posting list and url array and answers the same, and a
-  small bound never holds more decoded bytes than it was charged.
+  every row group and url array and answers the same, and under a small
+  bound no posting list holds more decoded bytes than it was charged, also
+  with four threads racing on the same lists.
 - A warm handle runs no varbyte decode at all.
 - Concurrent callers on one handle get the serial answers.
 - Result dtypes are pinned for empty, count_only, with_url=False and
@@ -71,7 +72,7 @@ def _shared_batch() -> pd.DataFrame:
     return pd.DataFrame(rows)
 
 
-_ALL_KINDS = {"postings", "list", "urls"}
+_ALL_KINDS = {"postings", "urls"}
 
 
 def _kinds(li: LocalIndex) -> set[str]:
@@ -232,10 +233,10 @@ def test_one_postings_entry_per_row_group(root):
             pd.testing.assert_frame_equal(search_local(li, q), w, check_exact=True)
 
 
-def _held_bytes(value) -> int:
-    """Bytes a cache entry really keeps alive: each numpy buffer it reaches
-    counted once at its owner's size (a view pins its whole base), plus
-    its bytes objects."""
+def _decoded_bytes(pl: kernels.PostingList) -> int:
+    """Bytes a posting list's decodes really keep alive: each numpy buffer
+    reached from its full decode, positions, block cache and bound inputs,
+    counted once at its owner's size (a view pins its whole base)."""
     seen, total = set(), 0
 
     def walk(v):
@@ -246,8 +247,6 @@ def _held_bytes(value) -> int:
             if id(v) not in seen:
                 seen.add(id(v))
                 total += v.nbytes
-        elif isinstance(v, bytes):
-            total += len(v)
         elif isinstance(v, (tuple, list)):
             for x in v:
                 walk(x)
@@ -255,29 +254,88 @@ def _held_bytes(value) -> int:
             for x in v.values():
                 walk(x)
 
-    walk(vars(value))
+    walk([pl.full, pl._positions, pl._blocks, vars(pl).get("bound_inputs")])
     return total
 
 
+@pytest.mark.parametrize("threads", [1, 4])
 @pytest.mark.parametrize("bound", [64 << 10, 1 << 20])
-def test_small_bound_never_undercounts_decoded_lists(root, monkeypatch, bound):
-    """Under a small bound, every cached posting list holds at most the
-    bytes it was charged, and the cache never exceeds its bound, after
-    each call of a mixed, shared-term and phrase workload."""
+def test_small_bound_never_undercounts_decoded_lists(root, monkeypatch, bound, threads):
+    """Under a small bound, every cached row group is charged its Arrow
+    bytes plus each of its posting lists' decode bound, no list holds more
+    decoded bytes than that bound, and the cache stays under its bound,
+    over a mixed, shared-term and phrase workload run serially or by four
+    threads racing on the same cold lists."""
     monkeypatch.setattr(local, "_DECODED_CACHE_BYTES", bound)
     li = LocalIndex(root)
     q = _queries()
+    calls = [q.iloc[[i]] for i in range(len(q))] + [q, _shared_batch()]
     n_lists = 0
-    for batch in [q.iloc[[i]] for i in range(len(q))] + [q, _shared_batch()]:
-        search_local(li, batch)
+
+    def check():
+        nonlocal n_lists
         assert li.cache.nbytes <= bound
         assert li.cache.nbytes == sum(n for _, n in li.cache.entries.values())
-        for key, (value, charged) in list(li.cache.entries.items()):
-            if key[0] == "list":
-                n_lists += 1
-                assert isinstance(value, kernels.PostingList)
-                assert _held_bytes(value) <= charged, key
+        for key, (rg, charged) in list(li.cache.entries.items()):
+            if key[0] != "postings":
+                continue
+            lists = list(rg.lists.values())
+            n_lists += len(lists)
+            assert charged == rg.table.nbytes + sum(pl.decoded_nbytes for pl in lists), key
+            for pl in lists:
+                assert _decoded_bytes(pl) <= pl.decoded_nbytes, key
+
+    if threads == 1:
+        for batch in calls:
+            search_local(li, batch)
+            check()
+    else:
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-5)
+        try:
+            with ThreadPoolExecutor(max_workers=threads) as ex:
+                list(ex.map(lambda b: search_local(li, b), calls * 2, timeout=300))
+        finally:
+            sys.setswitchinterval(interval)
+        check()
     assert n_lists > 0
+
+
+def test_racing_block_probes_keep_one_copy(monkeypatch):
+    """Four threads probing the same blocks of one cold posting list at
+    once decode them once, and the list keeps one copy within its charge.
+    The decode is slowed so that every thread asks before any has
+    stored its blocks."""
+    import threading
+    import time
+
+    rng = np.random.default_rng(3)
+    docs = np.sort(rng.choice(5000, size=800, replace=False)).astype(np.int64)
+    row = codec.encode_posting_list(
+        docs, rng.integers(1, 5, size=800), rng.integers(10, 90, size=800), block_size=16
+    )
+    pl = kernels.PostingList(row)
+    real, calls = kernels.decode_blocks_batch, []
+
+    def slow(row, blocks):
+        calls.append(len(blocks))
+        time.sleep(0.05)
+        return real(row, blocks)
+
+    monkeypatch.setattr(kernels, "decode_blocks_batch", slow)
+    start = threading.Barrier(4)
+
+    def probe(i):
+        start.wait(timeout=60)
+        return pl.blocks(np.arange(i, pl.n_blocks, dtype=np.int64))
+
+    with ThreadPoolExecutor(max_workers=4) as ex:
+        got = list(ex.map(probe, range(4), timeout=120))
+    assert sum(calls) == pl.n_blocks, f"blocks decoded {sum(calls)} times for {pl.n_blocks}"
+    assert _decoded_bytes(pl) <= pl.decoded_nbytes
+    whole = [np.concatenate([b[k] for b in got[0]]) for k in range(3)]
+    for a, b in zip(whole, real(row, np.arange(pl.n_blocks, dtype=np.int64))):
+        np.testing.assert_array_equal(a, b)
 
 
 @pytest.mark.parametrize("bound", [None, 1])
@@ -341,26 +399,24 @@ def test_unsorted_row_group_falls_back_to_membership_filter(tmp_path):
         "block_last": [[int(t), int(t) + 1] for t in tids],
     })
     perm = np.array([4, 0, 5, 2, 1, 3])
-    want = np.array([4, 5, 11, 20], dtype=np.int64)
     rows = {}
     for name, t in (("sorted", table), ("unsorted", table.take(perm))):
         path = tmp_path / name / "shard=2" / "part-0.parquet"
         path.parent.mkdir(parents=True)
         pq.write_table(t, str(path))
         cat = local._PostingsCatalog(str(tmp_path / name), [str(path)], local._DecodedCache())
-        lists = cat.read(list(want))
-        assert {pl.row["term_id"] for pl in lists} == {5, 11, 20}
-        ((rg, _),) = [v for k, v in cat.cache.entries.items() if k[0] == "postings"]
-        assert rg.sorted == (name == "sorted")
         rows[name] = sorted(
-            (rg.row(i, 2, False) for i in rg.rows_of(np.unique(want)).tolist()),
+            (pl.row for pl in cat.read([5, 11, 4, 20])),
             key=lambda r: (r["term_id"], r["df_shard"]),
         )
+        ((rg, _),) = cat.cache.entries.values()
+        assert rg.sorted == (name == "sorted")
     a, b = rows["sorted"], rows["unsorted"]
     assert [r["term_id"] for r in a] == [5, 5, 11, 20]
     assert all(r["shard"] == 2 for r in a)
     for ra, rb in zip(a, b):
         assert ra.keys() == rb.keys()
-        assert ra["doc_blob"] == rb["doc_blob"] and isinstance(ra["doc_blob"], bytes)
+        assert isinstance(ra["doc_blob"], np.ndarray)  # a view, not a copy
+        np.testing.assert_array_equal(ra["doc_blob"], rb["doc_blob"])
         np.testing.assert_array_equal(ra["block_last"], rb["block_last"])
         assert isinstance(ra["block_last"], np.ndarray)
