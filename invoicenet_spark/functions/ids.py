@@ -10,17 +10,24 @@ dense 0..n-1, assigned WITHOUT a single-partition global sort:
      spark_partition_id() are stable across the two jobs below — range
      sampling re-draws, and AQE may renumber physical partitions; both
      corrupted IDs in practice. A value column can't.)
-  2. repartition(P, bucket) + sortWithinPartitions(bucket, key) — all rows
-     of a bucket land in one task, contiguous and key-sorted.
-  3. job 1: count rows per bucket (tiny driver-side dict).
-  4. exclusive prefix-sum over buckets 0..P-1 → per-bucket base offset.
-  5. job 2: mapInPandas assigns base[bucket] + running ordinal per bucket.
+  2. job 1: count rows per bucket (tiny driver-side dict; a partial
+     aggregate, so no full-row shuffle).
+  3. exclusive prefix-sum over buckets 0..P-1 → per-bucket base offset.
+  4. job 2: repartition(P, bucket) + sortWithinPartitions(bucket, key) —
+     all rows of a bucket land in one task, contiguous and key-sorted —
+     then mapInPandas assigns base[bucket] + running ordinal per bucket.
 
 The classic zipWithIndex offset trick in DataFrame/Arrow terms; scales to
 10^12 keys (each task sees only its buckets; the driver holds one long per
 bucket). IDs are dense and deterministic but NOT globally ordered by key —
 no engine invariant needs global order, only a fixed total order for
 tie-breaks, which (bucket, key) provides.
+
+Nothing is persisted here: both jobs read the input's lineage, so a caller
+whose input is costly to recompute persists it around its own write and
+releases it after (build._term_dictionary). A persisted frame left behind
+would not only pin memory: a later frame with the same plan over the same
+path (a rebuild after the files changed) would be served from it.
 """
 
 from __future__ import annotations
@@ -39,29 +46,19 @@ def assign_dense_ids(
 
     Input must already be distinct on ``key`` (caller does .distinct() /
     groupBy first). Deterministic for any partitioning of the input and
-    across re-executions.
+    across re-executions. Lazy: job 2 runs when the result is written.
     """
-    from pyspark.storagelevel import StorageLevel
-
     n_parts = int(
         num_partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
     )
     bucketed = df.withColumn(
         "_bkt", F.pmod(F.xxhash64(F.col(key)), F.lit(n_parts)).cast("int")
     )
-    ranged = (
-        bucketed.repartition(n_parts, F.col("_bkt"))
-        .sortWithinPartitions("_bkt", key)
-        # job 2 below re-reads this exact data; persisting the (usually slim)
-        # keyed projection avoids re-running the upstream lineage — often a
-        # full corpus pass with extraction UDFs — a second time.
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
 
     # Job 1: per-bucket counts (tiny: at most n_parts rows).
     counts = {
         r["_bkt"]: r["cnt"]
-        for r in ranged.groupBy("_bkt").agg(F.count("*").alias("cnt")).collect()
+        for r in bucketed.groupBy("_bkt").agg(F.count("*").alias("cnt")).collect()
     }
     base_arr = np.zeros(n_parts + 1, dtype=np.int64)
     for b in range(n_parts):
@@ -95,4 +92,5 @@ def assign_dense_ids(
             out[id_col] = ids
             yield out
 
+    ranged = bucketed.repartition(n_parts, F.col("_bkt")).sortWithinPartitions("_bkt", key)
     return ranged.mapInPandas(add_ids, schema=out_schema)

@@ -9,7 +9,7 @@ it Spark-first:
         ──analyze ONCE (JVM codegen, persisted)──> token arrays per doc
         ──posexplode──> token rows (term, doc_id, doc_len[, pos])
         ──ONE shuffle: repartitionByRange(term_id, shard) + sortWithinPartitions──>
-        ──mapInArrow vectorized encoder (tf = run length)──> postings rows
+        ──mapInArrow encode kernel (tf = run length; codec.encode_lists)──> postings rows
         ──write parquet partitioned by shard (per-shard commit = lineage)
   terms dictionary + corpus stats aggregated FROM the committed postings
   (df = Σ df_shard), so the build is a single pass over the token stream.
@@ -55,7 +55,12 @@ from invoicenet_spark.config import EngineConfig
 from invoicenet_spark.functions.analyzer import analyze_col
 from invoicenet_spark.functions.extract import extract_pages_arrow
 from invoicenet_spark.functions.ids import assign_dense_ids
-from invoicenet_spark.index.codec import vb_encode
+from invoicenet_spark.index.codec import (
+    BLOB_COLUMNS,
+    POSTINGS_COLUMNS,
+    POSTINGS_SCHEMA,
+    encode_lists,
+)
 from invoicenet_spark.index.shardlog import ShardLog
 
 
@@ -201,13 +206,6 @@ def vacuum_docs_dirs(paths: IndexPaths) -> list[str]:
     return removed
 
 
-POSTINGS_SCHEMA = (
-    "term_id long, shard long, df_shard long, "
-    "doc_blob binary, tf_blob binary, dl_blob binary, pos_blob binary, "
-    "block_last array<long>, block_doc_off array<int>, block_tf_off array<int>, "
-    "block_dl_off array<int>, block_pos_off array<int>, "
-    "block_max_tf array<long>, block_min_dl array<long>"
-)
 # What schema inference gives a committed postings read: the files' own
 # columns, then the hive `shard=` directory key, which partition inference
 # types as int
@@ -217,142 +215,27 @@ POSTINGS_READ_SCHEMA = ", ".join(
 
 
 # ------------------------------------------------------------ encode kernel --
-def _byte_lens(v: np.ndarray) -> np.ndarray:
-    """varbyte byte-length per value (vectorized over byte positions)."""
-    nb = np.ones(v.size, dtype=np.int64)
-    rest = v >> np.uint64(7)
-    while rest.any():
-        nb += (rest > 0).astype(np.int64)
-        rest >>= np.uint64(7)
-    return nb
-
-
-def _encode_plists_arrow(
-    term_ids_g: np.ndarray,
-    shards_g: np.ndarray,
-    docs_p: np.ndarray,
-    tf: np.ndarray,
-    dl_p: np.ndarray,
-    g_start: np.ndarray,
-    block_size: int,
-    pos_flat: np.ndarray | None = None,
-) -> "pa.RecordBatch":
-    """Encode posting-level arrays into one output row per (term_id, shard).
-
-    term_ids_g/shards_g: one entry per GROUP; docs_p/tf/dl_p: posting-level
-    arrays, doc_id ascending within group; g_start: group start offsets into
-    the posting-level arrays.
-
-    Fully vectorized: varbyte over the whole frame in one call; per-group
-    blob slicing expressed as a zero-copy BinaryArray over (offsets, one
-    data buffer); block metadata via reduceat. No per-posting Python.
-    """
+def _posting_batch(term_ids: np.ndarray, shards: np.ndarray, enc: dict) -> "pa.RecordBatch":
+    """One Arrow posting row per list of codec.encode_lists output `enc`:
+    blob columns as binary arrays over (offsets, one data buffer), block
+    columns as list arrays; zero-copy, no per-list Python objects."""
     import pyarrow as pa
 
-    m = docs_p.size
-    g_end = np.append(g_start[1:], m)
-    g_sizes = g_end - g_start
+    def _arrow(col) -> pa.Array:
+        if isinstance(col, np.ndarray):
+            return pa.array(col)
+        offsets, values = col
+        if isinstance(values, bytes):
+            return pa.Array.from_buffers(
+                pa.binary(), offsets.size - 1,
+                [None, pa.py_buffer(offsets), pa.py_buffer(values)],
+            )
+        return pa.ListArray.from_arrays(pa.array(offsets), pa.array(values))
 
-    # --- docID deltas (reset to absolute at group start)
-    deltas = np.diff(docs_p, prepend=np.int64(0))
-    deltas[g_start] = docs_p[g_start]
-    deltas_u = deltas.astype(np.uint64)
-    tf_u = tf.astype(np.uint64)
-    dl_u = dl_p.astype(np.uint64)
-
-    # --- one varbyte call per stream, then slice per group. The per-posting
-    # doc_len stream (≈2 B/posting) makes posting rows SELF-CONTAINED for
-    # BM25 scoring: the query path needs no corpus-wide forward-index join,
-    # which at web scale would read doc_len arrays for every shard.
-    doc_blob_b = vb_encode(deltas_u)
-    tf_blob_b = vb_encode(tf_u)
-    dl_blob_b = vb_encode(dl_u)
-    nb_doc = _byte_lens(deltas_u)
-    nb_tf = _byte_lens(tf_u)
-    nb_dl = _byte_lens(dl_u)
-    doc_ends = np.cumsum(nb_doc)
-    tf_ends = np.cumsum(nb_tf)
-    dl_ends = np.cumsum(nb_dl)
-    doc_starts_b = doc_ends - nb_doc
-    tf_starts_b = tf_ends - nb_tf
-    dl_starts_b = dl_ends - nb_dl
-
-    # --- block structure: ordinal within group, block = ordinal // block_size
-    ordinal = np.arange(m, dtype=np.int64) - np.repeat(g_start, g_sizes)
-    b_start = np.flatnonzero((ordinal % block_size) == 0)
-    b_end = np.append(b_start[1:], m)
-    b_group = np.searchsorted(g_start, b_start, side="right") - 1
-    block_last_all = docs_p[b_end - 1]
-    block_max_tf_all = np.maximum.reduceat(tf, b_start)
-    block_min_dl_all = np.minimum.reduceat(dl_p, b_start)
-    blocks_per_group = np.bincount(b_group, minlength=g_start.size)
-    block_off = np.concatenate(([0], np.cumsum(blocks_per_group))).astype(np.int32)
-
-    block_doc_off_all = (doc_starts_b[b_start] - doc_starts_b[g_start][b_group]).astype(np.int32)
-    block_tf_off_all = (tf_starts_b[b_start] - tf_starts_b[g_start][b_group]).astype(np.int32)
-    block_dl_off_all = (dl_starts_b[b_start] - dl_starts_b[g_start][b_group]).astype(np.int32)
-
-    # --- optional position stream (phrase queries): per-posting ascending
-    # positions, delta-encoded with an absolute restart at each posting
-    # (posting boundaries are recoverable from the tf stream, so no extra
-    # offsets per posting are stored — only per block).
-    if pos_flat is not None:
-        p_cum = np.concatenate(([0], np.cumsum(tf)))  # posting starts in flat
-        pdeltas = np.diff(pos_flat, prepend=np.int64(0))
-        pdeltas[p_cum[:-1]] = pos_flat[p_cum[:-1]]
-        pdeltas_u = pdeltas.astype(np.uint64)
-        pos_blob_b = vb_encode(pdeltas_u)
-        nb_pos = _byte_lens(pdeltas_u)
-        pos_ends = np.cumsum(nb_pos)
-        pos_starts_b = pos_ends - nb_pos
-        # byte offset of posting i's positions = pos_starts_b[p_cum[i]]
-        post_pos_off = np.append(pos_starts_b[p_cum[:-1]], pos_ends[-1])
-    else:
-        pos_blob_b = b""
-        post_pos_off = np.zeros(m + 1, dtype=np.int64)
-
-    # --- assemble Arrow arrays (no per-group Python objects)
-    n_groups = g_start.size
-    g_doc_off = np.append(doc_starts_b[g_start], doc_ends[-1]).astype(np.int32)
-    g_tf_off = np.append(tf_starts_b[g_start], tf_ends[-1]).astype(np.int32)
-    g_dl_off = np.append(dl_starts_b[g_start], dl_ends[-1]).astype(np.int32)
-    g_pos_off = np.append(post_pos_off[g_start], post_pos_off[-1]).astype(np.int32)
-    block_pos_off_all = (post_pos_off[b_start] - post_pos_off[g_start][b_group]).astype(
-        np.int32
+    cols = {"term_id": term_ids.astype(np.int64), "shard": shards.astype(np.int64), **enc}
+    return pa.RecordBatch.from_arrays(
+        [_arrow(cols[c]) for c in POSTINGS_COLUMNS], names=list(POSTINGS_COLUMNS)
     )
-
-    def _binary(offsets: np.ndarray, data: bytes) -> pa.Array:
-        return pa.Array.from_buffers(
-            pa.binary(), n_groups, [None, pa.py_buffer(offsets.tobytes()), pa.py_buffer(data)]
-        )
-
-    def _list(values: np.ndarray, pa_type) -> pa.Array:
-        return pa.ListArray.from_arrays(
-            pa.array(block_off, type=pa.int32()), pa.array(values, type=pa_type)
-        )
-
-    arrays = [
-        pa.array(term_ids_g.astype(np.int64)),
-        pa.array(shards_g.astype(np.int64)),
-        pa.array(g_sizes.astype(np.int64)),
-        _binary(g_doc_off, doc_blob_b),
-        _binary(g_tf_off, tf_blob_b),
-        _binary(g_dl_off, dl_blob_b),
-        _binary(g_pos_off, pos_blob_b),
-        _list(block_last_all.astype(np.int64), pa.int64()),
-        _list(block_doc_off_all, pa.int32()),
-        _list(block_tf_off_all, pa.int32()),
-        _list(block_dl_off_all, pa.int32()),
-        _list(block_pos_off_all, pa.int32()),
-        _list(block_max_tf_all.astype(np.int64), pa.int64()),
-        _list(block_min_dl_all.astype(np.int64), pa.int64()),
-    ]
-    names = [
-        "term_id", "shard", "df_shard", "doc_blob", "tf_blob", "dl_blob", "pos_blob",
-        "block_last", "block_doc_off", "block_tf_off", "block_dl_off", "block_pos_off",
-        "block_max_tf", "block_min_dl",
-    ]
-    return pa.RecordBatch.from_arrays(arrays, names=names)
 
 
 def _encode_partition(batches, block_size: int, shard_size: int):
@@ -423,9 +306,9 @@ def _encode_rows(tbl: "pa.Table", block_size: int, shard_size: int) -> "pa.Recor
     new_group = np.ones(m, dtype=bool)
     new_group[1:] = (tids_p[1:] != tids_p[:-1]) | (shards_p[1:] != shards_p[:-1])
     g_start = np.flatnonzero(new_group)
-    return _encode_plists_arrow(
-        tids_p[g_start], shards_p[g_start], docs_p, tf, dl_p, g_start, block_size,
-        pos_flat=pos_flat,
+    return _posting_batch(
+        tids_p[g_start], shards_p[g_start],
+        encode_lists(docs_p, tf, dl_p, g_start, block_size, positions=pos_flat),
     )
 
 
@@ -884,20 +767,26 @@ def _term_dictionary(spark, tokens: DataFrame, cfg: EngineConfig, paths: IndexPa
     offset comes from footer stats (_dict_next_term_id), so a crashed
     half-applied append is self-healing on retry.
     """
+    from pyspark.storagelevel import StorageLevel
+
     dict_path = os.path.join(paths.root, "term_dict")
     terms = tokens.select("term").distinct()
+    offset, mode = 0, "overwrite"
     if os.path.exists(dict_path):
         old = spark.read.parquet(dict_path)
-        new_terms = terms.join(old.select("term"), "term", "left_anti")
-        offset = _dict_next_term_id(dict_path)
-        new_ids = assign_dense_ids(
-            new_terms, key="term", id_col="term_id", num_partitions=cfg.build_partitions
-        ).withColumn("term_id", F.col("term_id") + F.lit(int(offset)))
-        new_ids.write.mode("append").parquet(dict_path)
-    else:
+        terms = terms.join(old.select("term"), "term", "left_anti")
+        offset, mode = _dict_next_term_id(dict_path), "append"
+    # both id jobs read the new terms: persist them (the token pass behind
+    # them is the costly part) only until the ids are written
+    terms = terms.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
         assign_dense_ids(
             terms, key="term", id_col="term_id", num_partitions=cfg.build_partitions
-        ).write.mode("overwrite").parquet(dict_path)
+        ).withColumn("term_id", F.col("term_id") + F.lit(int(offset))).write.mode(
+            mode
+        ).parquet(dict_path)
+    finally:
+        terms.unpersist()
     return spark.read.parquet(dict_path)
 
 
@@ -1002,7 +891,7 @@ def _finalize(
         .agg(
             F.count("*").alias("n_terms"),
             F.sum("df_shard").alias("n_postings"),
-            F.sum(F.length("doc_blob") + F.length("tf_blob")).alias("bytes"),
+            F.sum(sum(F.length(c) for c in BLOB_COLUMNS)).alias("bytes"),
         )
         .collect()
     ]

@@ -5,19 +5,39 @@ The engine analog of the reference's sparse candidate tensor
 space) — re-expressed as the classic compressed inverted-list layout
 (varbyte/delta per Zobel & Moffat 2006; block-max per Ding & Suel SIGIR'11).
 
-Everything is numpy-vectorized over whole arrays (input_hint: no per-row
-Python): varbyte encode/decode loop over *byte positions* (≤10 iterations),
-never over values.
+This module is the one place that knows the posting-row format: its one
+encoder (encode_lists, for any number of lists) and its decoders
+(decode_rows for a run of rows; decode_blocks_batch for some blocks of a
+row). build.py and maintain.py only wrap these arrays into Arrow and out.
 
-Layout per (term_id, shard) posting row:
-  doc_blob   binary        varbyte of docID deltas (first = delta vs 0)
-  tf_blob    binary        varbyte of term frequencies
-  block_last array<long>   last (max) docID per block — the skip pointer
-  block_doc_off array<int> byte offset of each block in doc_blob
-  block_tf_off  array<int> byte offset of each block in tf_blob
-  block_max_tf  array<int> max tf per block        ┐ exact per-block bound
-  block_min_dl  array<int> min doc_len per block   ┘ inputs (see below)
-  df_shard   int           number of postings in this (term, shard)
+Layout per (term_id, shard) posting row (POSTINGS_SCHEMA, in file order).
+A list's postings are sorted by docID and cut into blocks of block_size
+postings; the last block may be shorter.
+  term_id        long         dictionary id of the term
+  shard          long         docID // shard_size
+  df_shard       long         number of postings in the list
+  doc_blob       binary       varbyte docID deltas; the list's first delta
+                              is its first docID
+  tf_blob        binary       varbyte term frequency per posting
+  dl_blob        binary       varbyte doc length per posting, so BM25
+                              scoring needs no forward-index side input
+  pos_blob       binary       varbyte position deltas: posting i holds
+                              tf_i ascending positions whose first delta is
+                              absolute; empty on a non-positional index
+  block_last     array<long>  last (max) docID per block — the skip pointer
+  block_doc_off  array<int>   byte offset of each block in doc_blob
+  block_tf_off   array<int>   byte offset of each block in tf_blob
+  block_dl_off   array<int>   byte offset of each block in dl_blob
+  block_pos_off  array<int>   byte offset of each block in pos_blob (0 when
+                              empty)
+  block_max_tf   array<long>  max tf per block        ┐ exact per-block bound
+  block_min_dl   array<long>  min doc_len per block   ┘ inputs (see below)
+
+Varbyte stores little-endian 7-bit groups with the high bit set on every
+byte but a value's last. It is self-delimiting, so concatenated byte ranges
+(of blocks, or of whole rows) decode as one stream. A block's first docID
+delta is taken from the previous block's last docID (block_last), which is
+the list-wide delta, so a block decodes on its own.
 
 Block-max design note: instead of storing a baked score bound (which goes
 stale when corpus stats N/avgdl change on incremental builds), each block
@@ -28,6 +48,10 @@ is increasing in tf and decreasing in dl, so
 computed with *current* stats is a valid upper bound for every posting in
 the block — WAND pruning stays lossless across snapshot-incremental index
 updates without re-encoding old segments.
+
+Everything is numpy-vectorized over whole arrays (input_hint: no per-row
+Python): one varbyte call per stream whatever the number of lists, and the
+varbyte loops run over *byte positions* (≤10 iterations), never over values.
 """
 
 from __future__ import annotations
@@ -36,29 +60,45 @@ import numpy as np
 
 BLOCK_SIZE = 128
 
+POSTINGS_SCHEMA = (
+    "term_id long, shard long, df_shard long, "
+    "doc_blob binary, tf_blob binary, dl_blob binary, pos_blob binary, "
+    "block_last array<long>, block_doc_off array<int>, block_tf_off array<int>, "
+    "block_dl_off array<int>, block_pos_off array<int>, "
+    "block_max_tf array<long>, block_min_dl array<long>"
+)
+_FIELDS = [f.split() for f in POSTINGS_SCHEMA.split(", ")]
+POSTINGS_COLUMNS = tuple(name for name, _ in _FIELDS)
+BLOB_COLUMNS = tuple(name for name, t in _FIELDS if t == "binary")
+# the position stream: only phrase/proximity queries read it
+POSITION_COLUMNS = ("pos_blob", "block_pos_off")
+
 
 # ---------------------------------------------------------------- varbyte --
-def vb_encode(values: np.ndarray) -> bytes:
-    """Vectorized varbyte: little-endian 7-bit groups, MSB=1 → more bytes."""
+def _varbyte(values: np.ndarray) -> tuple[bytes, np.ndarray]:
+    """Varbyte bytes of a stream and the byte offset of each value in them
+    (n + 1 offsets, the last one the total)."""
     v = np.ascontiguousarray(values, dtype=np.uint64)
-    if v.size == 0:
-        return b""
     # bytes needed per value (loop over max 10 byte-positions, not values)
     nb = np.ones(v.size, dtype=np.int64)
     rest = v >> np.uint64(7)
     while rest.any():
         nb += (rest > 0).astype(np.int64)
         rest >>= np.uint64(7)
-    ends = np.cumsum(nb)
-    starts = ends - nb
-    out = np.zeros(int(ends[-1]), dtype=np.uint8)
-    max_nb = int(nb.max())
-    for k in range(max_nb):
+    offsets = np.concatenate(([0], np.cumsum(nb)))
+    starts = offsets[:-1]
+    out = np.zeros(int(offsets[-1]), dtype=np.uint8)
+    for k in range(int(nb.max()) if v.size else 0):
         mask = nb > k
         chunk = ((v[mask] >> np.uint64(7 * k)) & np.uint64(0x7F)).astype(np.uint8)
         more = (nb[mask] - 1) > k
         out[starts[mask] + k] = chunk | (more.astype(np.uint8) << 7)
-    return out.tobytes()
+    return out.tobytes(), offsets
+
+
+def vb_encode(values: np.ndarray) -> bytes:
+    """Vectorized varbyte: little-endian 7-bit groups, MSB=1 → more bytes."""
+    return _varbyte(values)[0]
 
 
 def vb_decode(blob: bytes | np.ndarray, count: int | None = None) -> np.ndarray:
@@ -89,82 +129,135 @@ def vb_decode(blob: bytes | np.ndarray, count: int | None = None) -> np.ndarray:
     return values
 
 
+def _restart_deltas(values: np.ndarray, starts: np.ndarray) -> np.ndarray:
+    """Delta stream of values whose segments begin at `starts`: each
+    segment's first delta is its absolute value."""
+    deltas = np.diff(values, prepend=np.int64(0))
+    deltas[starts] = values[starts]
+    return deltas
+
+
+def _restart_cumsum(deltas: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """Inverse of _restart_deltas: prefix sums of a delta stream cut into
+    segments of counts[i] values, restarting at each segment."""
+    cum = np.cumsum(deltas)
+    if counts.size == 1:  # one segment (a whole posting list): no restarts
+        return cum
+    starts = np.cumsum(counts) - counts
+    before = np.zeros(counts.size, dtype=np.int64)  # cum just before each segment
+    inner = starts > 0
+    before[inner] = cum[starts[inner] - 1]
+    return cum - np.repeat(before, counts)
+
+
 # ---------------------------------------------------------- posting lists --
+def encode_lists(
+    docs: np.ndarray,
+    tfs: np.ndarray,
+    dls: np.ndarray,
+    starts: np.ndarray,
+    block_size: int = BLOCK_SIZE,
+    positions: np.ndarray | None = None,
+) -> dict:
+    """Encode many posting lists in one vectorized pass.
+
+    docs/tfs/dls: int64 posting-level arrays of the lists back to back,
+    docIDs ascending within each list; starts: each list's first posting
+    index (starts[0] == 0); positions: the flat position stream, tfs[i]
+    ascending positions per posting (None: empty position streams).
+
+    Returns every posting-row column but term_id and shard: "df_shard"
+    (postings per list) and, for each blob and block column, (offsets,
+    values) — list i's value is values[offsets[i]:offsets[i + 1]], bytes
+    for a blob column and a numpy array for a block column. Offsets are
+    int32, the Arrow binary/list offset type.
+    """
+    docs = np.asarray(docs, dtype=np.int64)
+    tfs = np.asarray(tfs, dtype=np.int64)
+    dls = np.asarray(dls, dtype=np.int64)
+    starts = np.asarray(starts, dtype=np.int64)
+    m = docs.size
+    sizes = np.diff(np.append(starts, m))
+
+    # block structure: ordinal within list, block = ordinal // block_size
+    ordinal = np.arange(m, dtype=np.int64) - np.repeat(starts, sizes)
+    b_start = np.flatnonzero((ordinal % block_size) == 0)
+    b_end = np.append(b_start[1:], m)
+    b_list = np.searchsorted(starts, b_start, side="right") - 1
+    block_off = np.concatenate(
+        ([0], np.cumsum(np.bincount(b_list, minlength=starts.size)))
+    ).astype(np.int32)
+
+    def _stream(values: np.ndarray, first: np.ndarray | None = None):
+        """One varbyte call over the whole stream → the blob column and its
+        block-offset column. first[i]: stream index of posting i's first
+        value (m + 1 entries); None when every posting has one value."""
+        blob, offs = _varbyte(values)
+        post = offs if first is None else offs[first]  # byte offset per posting
+        list_off = post[np.append(starts, m)]
+        block_rel = post[b_start] - list_off[b_list]
+        return (list_off.astype(np.int32), blob), (block_off, block_rel.astype(np.int32))
+
+    out = {"df_shard": sizes}
+    out["doc_blob"], out["block_doc_off"] = _stream(_restart_deltas(docs, starts))
+    out["tf_blob"], out["block_tf_off"] = _stream(tfs)
+    out["dl_blob"], out["block_dl_off"] = _stream(dls)
+    if positions is None:
+        positions = np.zeros(0, dtype=np.int64)
+        first_pos = np.zeros(m + 1, dtype=np.int64)
+    else:
+        first_pos = np.concatenate(([0], np.cumsum(tfs)))
+        positions = _restart_deltas(np.asarray(positions, dtype=np.int64), first_pos[:-1])
+    out["pos_blob"], out["block_pos_off"] = _stream(positions, first_pos)
+    out["block_last"] = (block_off, docs[b_end - 1])
+    out["block_max_tf"] = (block_off, np.maximum.reduceat(tfs, b_start))
+    out["block_min_dl"] = (block_off, np.minimum.reduceat(dls, b_start))
+    return out
+
+
 def encode_posting_list(
     doc_ids: np.ndarray,
     tfs: np.ndarray,
     doc_lens: np.ndarray,
     block_size: int = BLOCK_SIZE,
+    positions: np.ndarray | None = None,
 ) -> dict:
-    """Encode one (term, shard) posting list. Inputs sorted by doc_id asc."""
+    """Encode one (term, shard) posting list (inputs sorted by doc_id asc)
+    into a posting-row dict: bytes blobs, numpy block arrays; the position
+    columns only when positions (tfs[i] ascending per posting) are given."""
     doc_ids = np.asarray(doc_ids, dtype=np.int64)
-    tfs = np.asarray(tfs, dtype=np.int64)
-    doc_lens = np.asarray(doc_lens, dtype=np.int64)
-    n = doc_ids.size
-    if n == 0:
+    if doc_ids.size == 0:
         raise ValueError("empty posting list")
-    deltas = np.diff(doc_ids, prepend=np.int64(0)).astype(np.uint64)
+    enc = encode_lists(doc_ids, tfs, doc_lens, np.zeros(1, dtype=np.int64), block_size, positions)
+    row = {"df_shard": int(doc_ids.size)}
+    for name, col in enc.items():
+        if name != "df_shard" and (positions is not None or name not in POSITION_COLUMNS):
+            row[name] = col[1]
+    return row
 
-    n_blocks = (n + block_size - 1) // block_size
-    bounds = np.minimum(np.arange(1, n_blocks + 1) * block_size, n)
-    starts = np.concatenate(([0], bounds[:-1]))
 
-    doc_parts, tf_parts, dl_parts = [], [], []
-    block_doc_off = np.zeros(n_blocks, dtype=np.int32)
-    block_tf_off = np.zeros(n_blocks, dtype=np.int32)
-    block_dl_off = np.zeros(n_blocks, dtype=np.int32)
-    doc_off = tf_off = dl_off = 0
-    for i, (s, e) in enumerate(zip(starts, bounds)):
-        block_doc_off[i] = doc_off
-        block_tf_off[i] = tf_off
-        block_dl_off[i] = dl_off
-        # Block-local delta base = previous block's last docID (known to the
-        # reader via block_last), which equals the global delta stream — so
-        # blocks decode independently with no special-casing.
-        d = deltas[s:e].copy()
-        d[0] = np.uint64(doc_ids[s]) if i == 0 else np.uint64(doc_ids[s] - doc_ids[s - 1])
-        db = vb_encode(d)
-        tb = vb_encode(tfs[s:e].astype(np.uint64))
-        lb = vb_encode(doc_lens[s:e].astype(np.uint64))
-        doc_parts.append(db)
-        tf_parts.append(tb)
-        dl_parts.append(lb)
-        doc_off += len(db)
-        tf_off += len(tb)
-        dl_off += len(lb)
+def decode_rows(rows: dict, with_positions: bool = False) -> tuple:
+    """Decode a run of posting rows in one varbyte call per stream.
 
-    # reduceat-style block aggregates
-    block_last = doc_ids[bounds - 1]
-    block_max_tf = np.maximum.reduceat(tfs, starts)
-    block_min_dl = np.minimum.reduceat(doc_lens, starts)
-
-    return {
-        "df_shard": int(n),
-        "doc_blob": b"".join(doc_parts),
-        "tf_blob": b"".join(tf_parts),
-        "dl_blob": b"".join(dl_parts),
-        "block_last": block_last.astype(np.int64),
-        "block_doc_off": block_doc_off,
-        "block_tf_off": block_tf_off,
-        "block_dl_off": block_dl_off,
-        "block_max_tf": block_max_tf.astype(np.int64),
-        "block_min_dl": block_min_dl.astype(np.int64),
-    }
+    rows maps "df_shard" to each row's posting count and every blob column
+    to the rows' blobs back to back, in row order (a single posting-row
+    dict is a run of one row). Returns (docs, tfs, dls, positions):
+    posting-level int64 arrays of the rows back to back, positions being
+    the flat position stream (None unless with_positions)."""
+    counts = np.atleast_1d(np.asarray(rows["df_shard"], dtype=np.int64))
+    n = int(counts.sum())
+    docs = _restart_cumsum(vb_decode(rows["doc_blob"], count=n).astype(np.int64), counts)
+    tfs = vb_decode(rows["tf_blob"], count=n).astype(np.int64)
+    dls = vb_decode(rows["dl_blob"], count=n).astype(np.int64)
+    positions = decode_positions(rows, tfs)[0] if with_positions else None
+    return docs, tfs, dls, positions
 
 
 def decode_posting_list(
     row: dict, block_size: int = BLOCK_SIZE
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Full decode of one encoded posting row → (doc_ids, tfs, doc_lens).
-
-    Posting rows are self-contained: doc lengths are stored per posting so
-    BM25 scoring needs no forward-index side input (build.py design note).
-    """
-    deltas = vb_decode(row["doc_blob"], count=row["df_shard"])
-    doc_ids = np.cumsum(deltas.astype(np.int64))
-    tfs = vb_decode(row["tf_blob"], count=row["df_shard"]).astype(np.int64)
-    dls = vb_decode(row["dl_blob"], count=row["df_shard"]).astype(np.int64)
-    return doc_ids, tfs, dls
+    """Full decode of one encoded posting row → (doc_ids, tfs, doc_lens)."""
+    return decode_rows(row)[:3]
 
 
 def decode_positions(row: dict, tfs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -173,16 +266,9 @@ def decode_positions(row: dict, tfs: np.ndarray) -> tuple[np.ndarray, np.ndarray
     Returns (pos_flat, offsets): posting i's positions are
     pos_flat[offsets[i]:offsets[i+1]] (ascending). Requires the tf array
     (posting boundaries are implied by tf, not stored)."""
-    pdeltas = vb_decode(row["pos_blob"]).astype(np.int64)
-    offsets = np.concatenate(([0], np.cumsum(tfs))).astype(np.int64)
-    # positions within posting i = global-cumsum minus the cumsum value just
-    # before the posting's (absolute-restart) first delta
-    cum = np.cumsum(pdeltas)
-    starts = offsets[:-1]
-    base_vals = np.zeros(offsets.size - 1, dtype=np.int64)
-    base_vals[1:] = cum[starts[1:] - 1]
-    base = np.repeat(base_vals, tfs.astype(np.int64))
-    return cum - base, offsets
+    tfs = np.asarray(tfs, dtype=np.int64)
+    deltas = vb_decode(row["pos_blob"], count=int(tfs.sum())).astype(np.int64)
+    return _restart_cumsum(deltas, tfs), np.concatenate(([0], np.cumsum(tfs)))
 
 
 def decode_blocks_batch(
@@ -196,67 +282,27 @@ def decode_blocks_batch(
     loop overhead; batching restores the vectorized decode rate — the
     difference between block-max probing winning or tying exhaustive.
 
-    Works because varbyte is self-delimiting (concatenated block byte ranges
-    decode as one stream) and each block's first doc delta restarts from the
-    previous block's last docID (block_last), so absolute docIDs reconstruct
-    per block from the flat delta cumsum.
+    The blocks' byte ranges, concatenated, are a run of rows to decode_rows
+    whose first docID deltas restart from the previous block's last docID
+    (block_last).
     """
-    doc_off = np.asarray(row["block_doc_off"], dtype=np.int64)
-    tf_off = np.asarray(row["block_tf_off"], dtype=np.int64)
-    dl_off = np.asarray(row["block_dl_off"], dtype=np.int64)
-    n_blocks = doc_off.size
-    doc_buf = np.frombuffer(row["doc_blob"], dtype=np.uint8)
-    tf_buf = np.frombuffer(row["tf_blob"], dtype=np.uint8)
-    dl_buf = np.frombuffer(row["dl_blob"], dtype=np.uint8)
-
-    def _ends(offs, buf):
-        return np.append(offs[1:], buf.size)
-
-    doc_end, tf_end, dl_end = _ends(doc_off, doc_buf), _ends(tf_off, tf_buf), _ends(dl_off, dl_buf)
-
-    def _gather(buf, offs, ends):
-        return np.concatenate([buf[offs[j]:ends[j]] for j in block_idxs])
-
-    doc_cat = _gather(doc_buf, doc_off, doc_end)
-    deltas = vb_decode(doc_cat).astype(np.int64)
-    tfs = vb_decode(_gather(tf_buf, tf_off, tf_end)).astype(np.int64)
-    dls = vb_decode(_gather(dl_buf, dl_off, dl_end)).astype(np.int64)
-
-    # per-block posting counts = varbyte terminators per block's byte range,
-    # summed per segment of the concatenated stream (reduceat, no loop)
-    blens = (doc_end - doc_off)[block_idxs]
-    bstarts = np.concatenate(([0], np.cumsum(blens[:-1])))
-    counts = np.add.reduceat((doc_cat & 0x80) == 0, bstarts).astype(np.int64)
-    offsets = np.concatenate(([0], np.cumsum(counts)))
+    block_idxs = np.asarray(block_idxs, dtype=np.int64)
+    run = {}
+    for blob, off in (
+        ("doc_blob", "block_doc_off"), ("tf_blob", "block_tf_off"), ("dl_blob", "block_dl_off")
+    ):
+        buf = np.frombuffer(row[blob], dtype=np.uint8)
+        starts = np.asarray(row[off], dtype=np.int64)
+        ends = np.append(starts[1:], buf.size)
+        run[blob] = np.concatenate([buf[starts[j]:ends[j]] for j in block_idxs])
+        if blob == "doc_blob":
+            # per-block posting counts = varbyte terminators per block's
+            # byte range, summed per segment of the run (reduceat, no loop)
+            seg = np.concatenate(([0], np.cumsum((ends - starts)[block_idxs])[:-1]))
+            run["df_shard"] = np.add.reduceat((run[blob] & 0x80) == 0, seg).astype(np.int64)
+    docs, tfs, dls, _ = decode_rows(run)
 
     block_last = np.asarray(row["block_last"], dtype=np.int64)
     bases = np.where(block_idxs > 0, block_last[np.maximum(block_idxs - 1, 0)], 0)
-    cum = np.cumsum(deltas)
-    starts = offsets[:-1]
-    base_vals = bases - np.where(starts > 0, cum[np.maximum(starts - 1, 0)], 0)
-    # first block at flat position 0 has no preceding cum to subtract
-    base_vals[starts == 0] = bases[starts == 0]
-    docs = cum + np.repeat(base_vals, counts)
-    return docs, tfs, dls, offsets
-
-
-def decode_block(
-    row: dict, block_idx: int, block_size: int = BLOCK_SIZE
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Decode a single block lazily using the skip offsets (WAND deep-check).
-
-    Reconstructs absolute docIDs from the previous block's last docID.
-    """
-    doc_off = row["block_doc_off"]
-    tf_off = row["block_tf_off"]
-    dl_off = row["block_dl_off"]
-    n_blocks = len(doc_off)
-    d_end = doc_off[block_idx + 1] if block_idx + 1 < n_blocks else len(row["doc_blob"])
-    t_end = tf_off[block_idx + 1] if block_idx + 1 < n_blocks else len(row["tf_blob"])
-    l_end = dl_off[block_idx + 1] if block_idx + 1 < n_blocks else len(row["dl_blob"])
-    d = vb_decode(np.frombuffer(row["doc_blob"], dtype=np.uint8)[doc_off[block_idx] : d_end])
-    t = vb_decode(np.frombuffer(row["tf_blob"], dtype=np.uint8)[tf_off[block_idx] : t_end])
-    l = vb_decode(np.frombuffer(row["dl_blob"], dtype=np.uint8)[dl_off[block_idx] : l_end])
-    base = 0 if block_idx == 0 else int(row["block_last"][block_idx - 1])
-    doc_ids = base + np.cumsum(d.astype(np.int64))
-    return doc_ids, t.astype(np.int64), l.astype(np.int64)
+    docs += np.repeat(bases, run["df_shard"])
+    return docs, tfs, dls, np.concatenate(([0], np.cumsum(run["df_shard"])))

@@ -6,7 +6,7 @@ many small shards, and every query fans its per-(query, shard) kernels
 across all of them. `compact_index` re-shapes the index to a larger
 shard_size WITHOUT touching the raw corpus: posting rows are decoded back
 to (term_id, doc_id, doc_len, tf[, pos]) pair/token rows (lossless —
-codec.decode_posting_list/decode_positions), then flow through the SAME
+codec.decode_rows), then flow through the SAME
 range-partition + sort + vectorized-encode pipeline as a fresh build. The
 result is byte-identical to an index built from scratch at the new
 shard_size (pinned by test), because the encoder is a deterministic
@@ -68,70 +68,30 @@ def _flat_binary(col) -> np.ndarray:
 def _decode_partition(batches, positional: bool):
     """mapInArrow kernel: encoded posting rows → pair rows
     (term_id, doc_id, doc_len, tf) or token rows (…, pos) for positional
-    indexes.
-
-    Fully batch-vectorized: varbyte is self-delimiting and every row's (and
-    posting's) first delta restarts absolutely, so the WHOLE BATCH decodes
-    with ONE vb_decode per stream — the blob columns are flattened zero-copy
-    (Arrow offsets buffer), decoded flat, and per-row absolute docIDs
-    reconstructed by subtracting each row's carried-over cumsum (the same
-    trick codec.decode_blocks_batch uses per block). The previous shape
-    (batch.to_pylist() + one decode call per row) materialized MB-scale
-    blobs as Python bytes AND paid ~60k small-decode overheads per 100k-doc
-    index — measured 6.4x slower on that index's decode stage."""
+    indexes. Each batch is one run of rows for codec.decode_rows, its blob
+    columns flattened zero-copy (Arrow offsets buffer): one varbyte call
+    per stream per batch, no per-row Python objects."""
     import pyarrow as pa
 
-    from invoicenet_spark.index.codec import vb_decode
+    from invoicenet_spark.index.codec import BLOB_COLUMNS, decode_rows
 
     for batch in batches:
         if batch.num_rows == 0:
             continue
-        tid_np = batch.column("term_id").to_numpy()
-        counts = batch.column("df_shard").to_numpy().astype(np.int64)
-        deltas = vb_decode(_flat_binary(batch.column("doc_blob"))).astype(np.int64)
-        tfs = vb_decode(_flat_binary(batch.column("tf_blob"))).astype(np.int64)
-        dls = vb_decode(_flat_binary(batch.column("dl_blob"))).astype(np.int64)
-        n_post = int(counts.sum())
-        if deltas.size != n_post or tfs.size != n_post or dls.size != n_post:
-            raise ValueError(
-                f"decode mismatch: df says {n_post}, streams decode "
-                f"{deltas.size}/{tfs.size}/{dls.size}"
-            )
-        # per-row absolute docIDs from the flat delta cumsum
-        offsets = np.concatenate(([0], np.cumsum(counts)))
-        cum = np.cumsum(deltas)
-        starts = offsets[:-1]
-        base = np.where(starts > 0, cum[np.maximum(starts - 1, 0)], 0)
-        docs = cum - np.repeat(base, counts)
-
+        counts = batch.column("df_shard").to_numpy()
+        run = {"df_shard": counts}
+        run.update((c, _flat_binary(batch.column(c))) for c in BLOB_COLUMNS)
+        docs, tfs, dls, pos = decode_rows(run, with_positions=positional)
+        tids = np.repeat(batch.column("term_id").to_numpy(), counts)
         if positional:
-            pos_deltas = vb_decode(
-                _flat_binary(batch.column("pos_blob"))
-            ).astype(np.int64)
-            # positions restart absolutely per POSTING: same carried-cumsum
-            # reconstruction at posting granularity (boundaries = tf)
-            p_off = np.concatenate(([0], np.cumsum(tfs)))
-            pcum = np.cumsum(pos_deltas)
-            p_starts = p_off[:-1]
-            p_base = np.where(p_starts > 0, pcum[np.maximum(p_starts - 1, 0)], 0)
-            pos_flat = pcum - np.repeat(p_base, tfs)
-            tid_out = np.repeat(np.repeat(tid_np, counts), tfs)
-            arrays = [
-                pa.array(tid_out),
-                pa.array(np.repeat(docs, tfs)),
-                pa.array(np.repeat(dls, tfs).astype(np.int32), type=pa.int32()),
-                pa.array(pos_flat),
-            ]
+            # one token row per position
+            arrays = [np.repeat(tids, tfs), np.repeat(docs, tfs), np.repeat(dls, tfs), pos]
             names = ["term_id", "doc_id", "doc_len", "pos"]
         else:
-            arrays = [
-                pa.array(np.repeat(tid_np, counts)),
-                pa.array(docs),
-                pa.array(dls.astype(np.int32), type=pa.int32()),
-                pa.array(tfs),
-            ]
+            arrays = [tids, docs, dls, tfs]
             names = ["term_id", "doc_id", "doc_len", "tf"]
-        yield pa.RecordBatch.from_arrays(arrays, names=names)
+        arrays[2] = arrays[2].astype(np.int32)
+        yield pa.RecordBatch.from_arrays([pa.array(a) for a in arrays], names=names)
 
 
 def compact_index(

@@ -39,6 +39,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from invoicenet_spark.index.build import IndexPaths, read_postings
+from invoicenet_spark.index.codec import POSITION_COLUMNS
 from invoicenet_spark.index.deletes import list_tombstone_files, read_tombstones_spark
 from invoicenet_spark.query import plan
 
@@ -345,7 +346,7 @@ def search(
     )
     if not positional:
         # the position stream is the fattest column; only proximity reads it
-        probe = probe.drop("pos_blob", "block_pos_off")
+        probe = probe.drop(*POSITION_COLUMNS)
 
     # the mask: (shard, doc_id) rows — the handle's tombstones plus the
     # doc_filter's exclusions — grouped beside each shard's postings, so a

@@ -28,6 +28,7 @@ import numpy as np
 
 from invoicenet_spark.index import bm25
 from invoicenet_spark.index.codec import (
+    POSITION_COLUMNS,
     decode_blocks_batch,
     decode_positions,
     decode_posting_list,
@@ -123,7 +124,7 @@ class PostingList:
         self._positions = None
         self._blocks: dict | None = {}
         self._lock = threading.Lock()
-        pos = row.get("pos_blob")
+        pos = row.get(POSITION_COLUMNS[0])
         self.decoded_nbytes = (
             24 * self.df + 16 * self.n_blocks
             + (8 * (len(pos) + self.df + 1) if pos is not None else 0)

@@ -66,6 +66,7 @@ import pandas as pd
 import pyarrow.dataset as ds
 
 from invoicenet_spark.index.build import IndexPaths, committed_postings_files
+from invoicenet_spark.index.codec import POSITION_COLUMNS
 from invoicenet_spark.query import kernels, plan
 
 
@@ -149,16 +150,13 @@ def _binary_view(arr) -> tuple[np.ndarray, np.ndarray]:
     return offs, np.frombuffer(data, dtype=np.uint8)
 
 
-_POSITION_COLUMNS = ("pos_blob", "block_pos_off")
-
-
 class _RowGroup:
     """One decoded postings row group of one shard: its Arrow table (what
     the cache bound counts), its term_id column, numpy views over the
     table's buffers, so posting rows are sliced out without an Arrow take
     or a copy, and the shared kernels.PostingList of each row read so far.
     `positional` says whether it holds the position streams. The postings
-    schema (build.POSTINGS_SCHEMA) has only non-null integer, binary and
+    schema (codec.POSTINGS_SCHEMA) has only non-null integer, binary and
     integer-list columns; anything else raises."""
 
     def __init__(self, table, shard: int):
@@ -170,7 +168,7 @@ class _RowGroup:
         self.shard = shard
         self.term_ids = table.column("term_id").to_numpy()
         self.sorted = bool((self.term_ids[1:] >= self.term_ids[:-1]).all())
-        self.positional = "pos_blob" in table.column_names
+        self.positional = POSITION_COLUMNS[0] in table.column_names
         self.lists: dict[int, kernels.PostingList] = {}
         self._lock = threading.Lock()
         self._cols = []
@@ -336,7 +334,7 @@ class _PostingsCatalog:
         if missed:
             columns = None
             if not with_positions and self._schema_names:
-                columns = [c for c in self._schema_names if c not in _POSITION_COLUMNS]
+                columns = [c for c in self._schema_names if c not in POSITION_COLUMNS]
             handles = self._handles_for(sorted({key[1] for key in missed}))
             for key in missed:
                 _, path, rg = key

@@ -328,10 +328,8 @@ def test_min_match_or_of_groups_fuzz():
 
 
 def _positional_corpus(rng, n_docs, vocab_size):
-    """Token corpus → positional TermPostings per term (mirrors
+    """Token corpus → positional TermPostings per term (encoded like
     test_kernels_fuzz._encode_positional)."""
-    from invoicenet_spark.index.codec import vb_encode
-
     vocab = [f"t{i}" for i in range(vocab_size)]
     docs_tokens = {
         d: [vocab[i] for i in rng.integers(0, vocab_size, size=rng.integers(3, 40))]
@@ -351,12 +349,9 @@ def _positional_corpus(rng, n_docs, vocab_size):
             continue
         docs = np.array(docs, dtype=np.int64)
         tfs = np.array([len(p) for p in poss], dtype=np.int64)
-        row = encode_posting_list(docs, tfs, dls[docs], block_size=8)
-        pos_flat = np.concatenate(poss).astype(np.int64)
-        p_cum = np.concatenate(([0], np.cumsum(tfs)))
-        pdeltas = np.diff(pos_flat, prepend=np.int64(0))
-        pdeltas[p_cum[:-1]] = pos_flat[p_cum[:-1]]
-        row["pos_blob"] = vb_encode(pdeltas.astype(np.uint64))
+        row = encode_posting_list(
+            docs, tfs, dls[docs], block_size=8, positions=np.concatenate(poss)
+        )
         row["term_id"] = tid
         df = docs.size
         idf = float(np.log((n_docs - df + 0.5) / (df + 0.5) + 1.0))

@@ -219,3 +219,55 @@ def test_load_index_reads_postings_without_a_schema_job(spark, tmp_path, positio
     )
     assert idx.postings.dtypes == inferred.dtypes
     assert idx.postings.count() == inferred.count() > 0
+
+
+def test_build_releases_persisted_frames_and_sees_replaced_files(spark, tmp_path):
+    """build_index leaves no persisted frame behind: the persisted-RDD
+    count returns to where it was, and a rebuild over the same parquet path
+    after its files were replaced indexes the new pages, not frames cached
+    from the first build's plan."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    def write_pages(seed, start):
+        pages = gen_pages_pandas(60, seed=seed, start=start)
+        pq.write_table(pa.Table.from_pandas(pages.drop(columns=["warc_ts"]),
+                                            preserve_index=False),
+                       str(tmp_path / "pages" / "part-0.parquet"))
+        return sorted(pages.loc[pages["lang"] == "en", "url"])
+
+    (tmp_path / "pages").mkdir()
+    cfg = EngineConfig(shard_size=32, block_size=8, build_partitions=2)
+    jsc = spark.sparkContext._jsc.sc()
+    before = jsc.getPersistentRDDs().size()
+    write_pages(seed=1, start=0)
+    build_index(spark, spark.read.parquet(str(tmp_path / "pages")), str(tmp_path / "a"), cfg)
+    assert jsc.getPersistentRDDs().size() == before
+
+    urls = write_pages(seed=2, start=1000)
+    build_index(spark, spark.read.parquet(str(tmp_path / "pages")), str(tmp_path / "b"), cfg)
+    assert jsc.getPersistentRDDs().size() == before
+    docs = load_index(spark, str(tmp_path / "b")).docs
+    assert sorted(r["url"] for r in docs.select("url").collect()) == urls
+
+
+def test_shard_log_bytes_count_every_blob(spark, tmp_path):
+    """Each committed shard's logged `bytes` is the summed length of all
+    four blobs (doc, tf, dl, pos) of its posting rows."""
+    import pyarrow.parquet as pq
+
+    from invoicenet_spark.index.build import IndexPaths, committed_postings_files
+    from invoicenet_spark.index.shardlog import ShardLog
+
+    root = str(tmp_path / "index")
+    cfg = EngineConfig(shard_size=32, block_size=8, build_partitions=2, with_positions=True)
+    build_index(spark, gen_pages_spark(spark, 80, seed=SEED, partitions=2), root, cfg)
+    want = {}
+    for f in committed_postings_files(IndexPaths(root)):
+        shard = int(f.split("shard=")[1].split("/")[0])
+        tbl = pq.read_table(f, columns=["doc_blob", "tf_blob", "dl_blob", "pos_blob"])
+        want[shard] = want.get(shard, 0) + sum(
+            sum(len(v) for v in tbl.column(c).to_pylist()) for c in tbl.column_names
+        )
+    logged = {s: rec["bytes"] for s, rec in ShardLog(root).entries().items()}
+    assert want and logged == want

@@ -191,17 +191,11 @@ def test_shared_decoded_arrays_are_read_only():
 
 
 def _encode_positional(docs, positions_list, dls):
-    """Build a posting row WITH positions (mirrors build.py's pos stream:
-    per-posting delta encoding with an absolute restart at each posting)."""
-    from invoicenet_spark.index.codec import vb_encode
-
+    """Build a posting row WITH positions, through the codec's encoder."""
     tfs = np.array([len(p) for p in positions_list], dtype=np.int64)
-    row = encode_posting_list(docs, tfs, dls, block_size=8)
-    pos_flat = np.concatenate(positions_list).astype(np.int64)
-    p_cum = np.concatenate(([0], np.cumsum(tfs)))
-    pdeltas = np.diff(pos_flat, prepend=np.int64(0))
-    pdeltas[p_cum[:-1]] = pos_flat[p_cum[:-1]]
-    row["pos_blob"] = vb_encode(pdeltas.astype(np.uint64))
+    row = encode_posting_list(
+        docs, tfs, dls, block_size=8, positions=np.concatenate(positions_list)
+    )
     return row, tfs
 
 

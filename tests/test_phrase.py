@@ -8,7 +8,7 @@ import pytest
 from invoicenet_spark.config import EngineConfig
 from invoicenet_spark.fixtures import gen_pages_pandas, gen_pages_spark, gen_queries
 from invoicenet_spark.index.build import build_index
-from invoicenet_spark.index.codec import decode_positions, encode_posting_list, vb_encode
+from invoicenet_spark.index.codec import decode_positions, encode_posting_list
 from invoicenet_spark.oracle.bm25_numpy import NumpyBM25Oracle, tokenize
 from invoicenet_spark.query.exec import load_index, search
 
@@ -18,18 +18,13 @@ N_DOCS = 250
 
 def test_decode_positions_roundtrip():
     # synthetic: 3 postings with tfs 2, 1, 3
-    from invoicenet_spark.index.build import _encode_plists_arrow
-
     tfs = np.array([2, 1, 3], dtype=np.int64)
     pos_flat = np.array([4, 9, 0, 2, 5, 11], dtype=np.int64)  # ascending per posting
-    batch = _encode_plists_arrow(
-        np.array([7]), np.array([0]),
+    row = encode_posting_list(
         np.array([10, 20, 30], dtype=np.int64), tfs,
-        np.array([50, 60, 70], dtype=np.int64),
-        np.array([0]), block_size=2, pos_flat=pos_flat,
+        np.array([50, 60, 70], dtype=np.int64), block_size=2, positions=pos_flat,
     )
-    row = {name: batch.column(i).to_pylist()[0] for i, name in enumerate(batch.schema.names)}
-    row["pos_blob"] = bytes(row["pos_blob"])
+    assert isinstance(row["pos_blob"], bytes)
     got_flat, off = decode_positions(row, tfs)
     assert (got_flat == pos_flat).all()
     assert list(off) == [0, 2, 3, 6]
